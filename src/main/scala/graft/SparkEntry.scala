@@ -150,11 +150,6 @@ object SparkEntry {
     // unrolled 20-step iteration) computes the identical sequence; ranks
     // rounded to 6 dp BEFORE ranking so cross-engine float-sum order can't
     // flip the ordering ----
-    // itersPerStep kept at 1: composing 2/4 iterations per action was A/B'd
-    // round 4 (interleaved 1→2→4→2→1 at sf0.1/32) and LOST — warm walls
-    // 8.6/7.8 s @1 vs 10.9/8.1 @2 vs 21.0 @4: each composed iteration
-    // re-evaluates the previous uncached update (contribs join + dangling
-    // agg), the same recompute tax the SCC hop composition measured.
     "q_pagerank_topk" -> ((s, d) =>
       PageRank.run(s, derivedEdges(s, d), customerVertices(s, d),
         tol = 0.0, maxIter = 20).ranks

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.plans.CheckpointArena
+import graft.plans.{CheckpointArena, Superstep}
 
 /** Result handle for [[LabelProp.run]]: the per-vertex labels plus
   * [[release]] to unpersist the cached blocks backing [[labels]] once
@@ -30,8 +30,8 @@ final class LabelPropRun(val labels: DataFrame, releaseFn: () => Unit) {
   * two-level aggregation (`(dst,label)` count with map-side partials, then
   * arg-max per `dst`) and one co-partitioned join back into the
   * hash(id)-partitioned state. Shuffle bytes per round are O(labeled
-  * out-degree), not O(E); rounds are checkpointed through [[CheckpointArena]]
-  * so lineage stays flat at any iteration count.
+  * out-degree), not O(E); rounds run on [[graft.plans.Superstep]], which
+  * checkpoints each one, so lineage stays flat at any iteration count.
   *
   * Labels must be > Long.MinValue (the min-label tie-break rides a numeric
   * negation inside the arg-max struct).
@@ -60,41 +60,29 @@ object LabelProp {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     val seeds1 = seeds.groupBy("id").agg(min("label").as("seedLabel"))
-    val (st0, stateRows) = arena.freshCounted(
-      verts.select("id")
-        .join(seeds1, Seq("id"), "left")
-        .withColumn("label", col("seedLabel"))
-        .repartition(col("id")))
-    var state = st0
+    val state0 = verts.select("id")
+      .join(seeds1, Seq("id"), "left")
+      .withColumn("label", col("seedLabel"))
+      .repartition(col("id"))
 
-    def loop(): Unit = {
-      for (_ <- 1 to iterations) {
-        val contrib = eBySrc
-          .join(state.filter(col("label").isNotNull)
-            .select(col("id").as("src"), col("label")), Seq("src"))
-          .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("c"))
-          .groupBy("dst")
-          .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
-          .select(col("dst").as("id"), (-col("m.nl")).as("cand"))
-        val next = arena.fresh(
-          state.join(contrib, Seq("id"), "left")
-            .select(col("id"), col("seedLabel"),
-              coalesce(col("seedLabel"), col("cand"), col("label")).as("label")))
-        arena.release(state)
-        state = next
-      }
-    }
-    // Same size-tiered loop policy as Superstep.run (the per-round plan here
-    // touches only the state, its aggregates and the co-partitioned eBySrc —
-    // the PageRank/WCC shape, not SCC's fixed-partitioning BFS): a big state
-    // runs AQE-off (query-stage barriers are pure per-round latency), a tiny
-    // one runs AQE-off with state-sized shuffle partitions (one pipelined
-    // job per round), and mid-sized states keep AQE's runtime choices.
-    if (stateRows >= graft.plans.Superstep.aqeOffMinStateRows)
-      graft.plans.Aqe.off(spark)(loop())
-    else if (stateRows <= graft.plans.Superstep.tinyLoopMaxStateRows)
-      graft.plans.Superstep.withTinyShuffle(spark, stateRows)(loop())
-    else loop()
+    // The per-round plan touches only the state, its aggregates and the
+    // co-partitioned eBySrc — the PageRank/WCC shape, so the tiny-loop
+    // policy applies. Exactly `iterations` rounds: the recurrence has no
+    // convergence test, and only an empty state (nothing to propagate)
+    // stops it earlier.
+    val harness = new Superstep(spark, "labelprop", arena = arena, tinyLoop = true)
+    val (state, _) = harness.run(state0, iterations) { (st, _) =>
+      val contrib = eBySrc
+        .join(st.filter(col("label").isNotNull)
+          .select(col("id").as("src"), col("label")), Seq("src"))
+        .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("c"))
+        .groupBy("dst")
+        .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
+        .select(col("dst").as("id"), (-col("m.nl")).as("cand"))
+      st.join(contrib, Seq("id"), "left")
+        .select(col("id"), col("seedLabel"),
+          coalesce(col("seedLabel"), col("cand"), col("label")).as("label"))
+    } (_.rows)
 
     val out = state.select(col("id"), coalesce(col("label"), lit(-1L)).as("label"))
     eBySrc.unpersist(false)

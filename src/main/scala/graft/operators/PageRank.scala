@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftShims.CountIf
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -36,12 +37,9 @@ final class PageRankRun(
   */
 object PageRank {
 
-  /** `itersPerStep` rank updates run per driver action (checkpoint +
-    * convergence read are the fixed per-action cost). `maxIter` counts
-    * ITERATIONS, not actions: the last action runs a partial batch so the
-    * total is exact (q_pagerank_topk's oracle depends on exactly-20).
-    * Tol-based convergence is checked once per action — at worst
-    * itersPerStep−1 extra (tightening) iterations run.
+  /** One rank update per superstep; `maxIter` bounds the iterations
+    * exactly (q_pagerank_topk's oracle depends on exactly-20), and `tol`
+    * stops earlier once no rank moves by more than it.
     */
   def run(
       spark: SparkSession,
@@ -50,10 +48,7 @@ object PageRank {
       alpha: Double = 0.85,
       tol: Double = 1e-6,
       maxIter: Int = 100,
-      itersPerStep: Int = 1,
       snapshotDir: Option[String] = None): PageRankRun = {
-    require(itersPerStep >= 1)
-
     val n = vertices.count().toDouble
     val arena = new CheckpointArena
 
@@ -126,14 +121,11 @@ object PageRank {
         .drop("prevRank")
     }
 
-    val steps = (maxIter + itersPerStep - 1) / itersPerStep
     val harness = new Superstep(spark, "pagerank", snapshotDir, arena = arena,
       tinyLoop = true)
-    val (converged, metrics) = harness.run(state0, steps, changedCol = Some("changed")) {
-      (state, step) =>
-      val itersThisStep = math.min(itersPerStep, maxIter - step * itersPerStep)
-      (0 until itersThisStep).foldLeft(state)((s, _) => update(s))
-    } { _ => 0L }
+    val (converged, metrics) = harness.run(state0, maxIter, rides = Seq(CountIf("changed"))) {
+      (state, _) => update(state)
+    } (_.rides(0))
 
     edgesBySrc.unpersist(false)
     new PageRankRun(converged.select("id", "rank"), metrics, () => arena.closeExcept())

@@ -3,6 +3,7 @@ package graft.operators
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.GraftShims.{Checkpoint, CountIf, Max, Sum}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -120,9 +121,9 @@ object Scc {
       .agg(sum("d.oc").as("oc"), sum("d.ic").as("ic"))
 
   /** Initial flagged degree frame for [[trimFixpoint]]: verts ⟕ one-pass
-    * [[degreesOf]], `dead` = in- or out-degree 0, checkpointed with the
-    * row/dead counts riding the materialization action. Extra `verts`
-    * columns (e.g. `pivot`) ride along unchanged.
+    * [[degreesOf]], `dead` = in- or out-degree 0. Callers checkpoint it
+    * riding `CountIf("dead")`, so the row/dead counts cost no extra action.
+    * Extra `verts` columns (e.g. `pivot`) ride along unchanged.
     */
   private def trimDegreesPlan(edges: DataFrame, verts: DataFrame): DataFrame = {
     val carry = verts.columns.filter(_ != "id").toSeq
@@ -134,30 +135,11 @@ object Scc {
       .withColumn("dead", col("oc") <= 0 || col("ic") <= 0)
   }
 
-  private def buildTrimDegrees(
-      arena: CheckpointArena, edges: DataFrame, verts: DataFrame): (DataFrame, Long, Long) =
-    arena.freshFlagged(trimDegreesPlan(edges, verts), "dead")
-
-  /** [[buildTrimDegrees]] that also rides the whole-graph phase stats on the
-    * SAME materialization action (accumulators — zero extra jobs): Σoc =
-    * edge total, max(oc)/max(ic) = full-graph max degrees. The previous
-    * separate one-row agg job ran on EVERY components() call (VERDICT r4);
-    * all three values gate heuristics only (local-solve routing, AQE
-    * policy, the salting gate), which is exactly the accumulator retry
-    * contract.
-    */
-  private def buildTrimDegreesWithStats(
-      arena: CheckpointArena, edges: DataFrame, verts: DataFrame):
-      ((DataFrame, Long, Long), (Long, Long, Long)) = {
-    val (df, n, dead, sums, maxes) = arena.freshFlaggedWithLongStats(
-      trimDegreesPlan(edges, verts), "dead", Seq("oc", "ic"))
-    ((df, n, dead), (sums(0), maxes(0), maxes(1)))
-  }
-
   /** Degree-decrement trim-1 fixpoint (`trimming_kernel`/`trimming`,
     * main.cpp:54-63, cuda/scc_operations.cu:89-127) in incremental form:
-    * in/out-degrees come pre-aggregated in `init` (from
-    * [[buildTrimDegrees]] — ONE pass over ONE edge copy); each sweep
+    * in/out-degrees come pre-aggregated in `init` (a [[trimDegreesPlan]]
+    * checkpoint riding `CountIf("dead")` first — ONE pass over ONE edge
+    * copy); each sweep
     * removes the dead vertices (in- or out-degree 0 ⇒ singleton SCC) and
     * only decrements the counters of their neighbors — O(removed·degree)
     * shuffle per sweep instead of a full edges⨝live re-join. ONE Spark
@@ -208,14 +190,16 @@ object Scc {
       arena: CheckpointArena,
       edges: DataFrame,
       edgesByDst: => DataFrame,
-      init: (DataFrame, Long, Long),
+      init: Checkpoint,
       maxSweeps: Int,
       assignedParts: mutable.ArrayBuffer[DataFrame],
       partBacking: mutable.ArrayBuffer[DataFrame],
       compactedParts: mutable.ArrayBuffer[DataFrame],
       capFraction: Double,
       capMinRemaining: Long): (DataFrame, Long, Long, Int, Boolean, Long) = {
-    var (degs, remaining, deadCnt) = init
+    var degs = init.df
+    var remaining = init.rows
+    var deadCnt = init.rides(0)
     val carry = degs.columns.filterNot(Set("id", "oc", "ic", "dead")).toSeq
     def proj(oc: Column, ic: Column): Seq[Column] =
       (col("id") +: carry.map(col)) ++ Seq(oc.as("oc"), ic.as("ic"))
@@ -242,7 +226,7 @@ object Scc {
     var localPendingRows = 0L
     var localCompactedRows = 0L
     def compactLocal(): Unit = if (localParts.size >= compactEvery) {
-      val (compacted, cnt) = arena.freshCounted(
+      val Checkpoint(compacted, _, cnt, _) = arena.checkpoint(
         localParts.reduce(_.unionByName(_)).repartition(col("id")))
       require(cnt == localPendingRows,
         s"trim compaction rows $cnt != pending tally $localPendingRows — trim bug")
@@ -299,19 +283,19 @@ object Scc {
               .select(col("src").as("id"), lit(0L).as("dIn"), lit(1L).as("dOut")))
             .groupBy("id").agg(sum("dIn").as("dIn"), sum("dOut").as("dOut"))
         }
-      val next = arena.freshFlagged(
+      val next = arena.checkpoint(
         degs.filter(!col("dead")).drop("dead")
           .join(dec.hint("shuffle_hash"), Seq("id"), "left")
           .select(proj(col("oc") - coalesce(col("dOut"), lit(0L)),
             col("ic") - coalesce(col("dIn"), lit(0L))): _*)
           .withColumn("dead", col("oc") <= 0 || col("ic") <= 0),
-        "dead")
+        CountIf("dead"))
       // degs NOT released: it backs this sweep's removed fragment (until
       // compactLocal materializes the fragment and frees it)
       removedTotal += deadCnt
-      degs = next._1
-      remaining = next._2
-      deadCnt = next._3
+      degs = next.df
+      remaining = next.rows
+      deadCnt = next.rides(0)
       sweep += 1
       // safe point: `next` is materialized, so every frame in localBacking
       // is superseded except as a fragment backer — exactly what compaction
@@ -421,10 +405,7 @@ object Scc {
     * re-joining edges; convergence counts ride checkpoint accumulators;
     * the relabel flows into the BFS harness's own state0 checkpoint; the
     * recolor checkpoint serves both the finished fragment and the done
-    * count. `hopsPerStep` > 1 composes BFS hops into one action — OFF by
-    * default: the composed plan recomputes the uncached intermediate state
-    * ~3x per extra hop (measured 2.4x slower end-to-end at 2.3M edges), so
-    * it only pays when per-action driver latency dominates per-stage work.
+    * count.
     *
     * When `snapshotDir` is set the outer loop is durable and resumable
     * (see [[Snapshots]]); a fresh call with the same directory continues
@@ -438,7 +419,6 @@ object Scc {
       maxTrimSweeps: Int = 20,
       localSolveEdgeThreshold: Long = 250000,
       hubDegreeThreshold: Long = 2000000,
-      hopsPerStep: Int = 1,
       snapshotDir: Option[String] = None,
       edgesWithinVertices: Boolean = false,
       trimCapFraction: Double = 0.001,
@@ -451,7 +431,6 @@ object Scc {
     // partition is full); small graphs keep AQE's partition coalescing.
     // scoped(): the previous setting is restored even on failure.
     graft.plans.Aqe.scoped(spark) { aqeOffForRun =>
-    require(hopsPerStep >= 1)
     import spark.implicits._
     val arena = new CheckpointArena
 
@@ -556,7 +535,7 @@ object Scc {
     def maybeCompactFragments(): Unit =
       if (assignedParts.size > fragmentCompactionThreshold) {
         val pendingRows = assigned - compactedRows
-        val (compacted, cnt) = arena.freshCounted(
+        val Checkpoint(compacted, _, cnt, _) = arena.checkpoint(
           assignedParts.reduce(_.unionByName(_)).repartition(col("id")))
         require(cnt == pendingRows,
           s"compacted fragment rows $cnt != pending tally $pendingRows — assignment bug")
@@ -614,7 +593,7 @@ object Scc {
         assignedParts ++= parts
         // parquet-footer counts (metadata-only) seed the tally on resume
         assigned = parts.map(_.count()).sum
-        live = arena.fresh(liveDf.repartition(col("id")))
+        live = arena.checkpoint(liveDf.repartition(col("id"))).df
         liveCount = lc
         if (lc >= graft.plans.Superstep.aqeOffMinStateRows) aqeOffForRun()
         liveIdPart = true
@@ -628,13 +607,15 @@ object Scc {
         // one-pass explode degree aggregation ([[degreesOf]]) — the round-3
         // phase paid a separate count job plus the dst copy's full exchange
         // here, the two terms its (8,32) anti-scaling was made of.
-        val (init, degStats) = buildTrimDegreesWithStats(arena, eBySrc, verts)
-        // phase stats rode the materialization accumulators — no separate
+        // The whole-graph phase stats ride the same action — no separate
         // agg job (VERDICT r4 #6): Σoc = edge total; full-graph max degrees
-        // feed the salting gate.
-        numEdges = degStats._1
+        // feed the salting gate. All three gate heuristics only (local-solve
+        // routing, AQE policy, the salting gate).
+        val init = arena.checkpoint(trimDegreesPlan(eBySrc, verts),
+          CountIf("dead"), Sum("oc"), Max("oc"), Max("ic"))
+        numEdges = init.rides(1)
         if (numEdges >= graft.plans.Superstep.aqeOffMinStateRows) aqeOffForRun()
-        fullMaxDegs = Some((degStats._2, degStats._3))
+        fullMaxDegs = Some((init.rides(2), init.rides(3)))
         graft.Log.v(s"scc: edges materialized ($numEdges)")
         wholeGraphLocal = numEdges <= localSolveEdgeThreshold && localSolveEdgeThreshold > 0
         if (wholeGraphLocal) {
@@ -644,10 +625,10 @@ object Scc {
           // pre-partition would only add ~20 driver actions of pure latency.
           // One pivot group (0) routes everything to the local solver.
           preTrimDone = false
-          arena.release(init._1)
-          val lc = arena.freshCounted(verts.select(col("id"), lit(0L).as("pivot")))
-          live = lc._1
-          liveCount = lc._2
+          arena.release(init.df)
+          val lc = arena.checkpoint(verts.select(col("id"), lit(0L).as("pivot")))
+          live = lc.df
+          liveCount = lc.rows
           graft.Log.v(s"scc: $numEdges edges <= localSolveEdgeThreshold — whole-graph local solve")
         } else {
         // src copy's blocks just materialized under the degree action —
@@ -711,17 +692,17 @@ object Scc {
             live = degs
             liveCount = preRemaining
           } else {
-            val lc = arena.freshCounted(
+            val lc = arena.checkpoint(
               degs.select(col("id"), lit(pivot0).as("pivot")))
-            live = lc._1
-            liveCount = lc._2
+            live = lc.df
+            liveCount = lc.rows
             arena.release(degs)
           }
           liveIdPart = true // degs is id-joined throughout trimFixpoint
           singlePivot = true
           singlePivotId = pivot0
         } else {
-          live = arena.fresh(verts.select(col("id"), col("id").as("pivot")).limit(0))
+          live = arena.checkpoint(verts.select(col("id"), col("id").as("pivot")).limit(0)).df
           liveCount = 0L
           arena.release(degs)
         }
@@ -773,12 +754,13 @@ object Scc {
           // (constructed only here: a fast-seeded live frame carries no
           // pivot column, and fast-seed implies skipLe)
           val lp = live.select(col("id"), col("pivot"))
-          arena.freshCounted(
+          val ck = arena.checkpoint(
             eBySrc
               .join(lp.withColumnRenamed("id", "src").withColumnRenamed("pivot", "srcP"), Seq("src"))
               .join(lp.withColumnRenamed("id", "dst").withColumnRenamed("pivot", "dstP"), Seq("dst"))
               .filter(col("srcP") === col("dstP"))
               .select(col("srcP").as("pivot"), col("src"), col("dst")))
+          (ck.df, ck.rows)
         }
 
       // ---- deferred WCC partition refinement (rounds ≥ 1): a recolor can
@@ -796,10 +778,10 @@ object Scc {
       // and each label set is still a union of SCCs.
       if (round >= 1 && leCnt > localSolveEdgeThreshold) {
         val wccRun = Wcc.run(spark, le.select("src", "dst"), live.select("id"))
-        val (nl, _) = arena.freshCounted(
+        val nl = arena.checkpoint(
           live.select("id").join(wccRun.components, Seq("id"))
             .select(col("id"), col("comp").as("pivot"))
-            .repartition(col("id")))
+            .repartition(col("id"))).df
         wccRun.release()
         arena.release(live)
         live = nl
@@ -807,10 +789,10 @@ object Scc {
         singlePivot = false
         // relabel le rather than rebuilding it from eBySrc: srcP === dstP
         // and labels refine partitions, so src's new pivot == dst's.
-        val (nle, _) = arena.freshCounted(
+        val nle = arena.checkpoint(
           le.select("src", "dst")
             .join(nl.select(col("id").as("src"), col("pivot")), Seq("src"))
-            .select(col("pivot"), col("src"), col("dst")))
+            .select(col("pivot"), col("src"), col("dst"))).df
         arena.release(le)
         le = nle
         graft.Log.v(s"scc round $round: WCC-refined remainder " +
@@ -827,18 +809,18 @@ object Scc {
       var localSolved = 0L
       if (localSolveEdgeThreshold > 0 && !skipLe) {
         val groupEdgeCounts = le.groupBy("pivot").agg(count(lit(1)).as("ec"))
-        val (smallPivots, _) = arena.freshCounted(
+        val smallPivots = arena.checkpoint(
           live.select("pivot").distinct()
             .join(groupEdgeCounts, Seq("pivot"), "left")
             .filter(coalesce(col("ec"), lit(0L)) <= localSolveEdgeThreshold)
-            .select("pivot"))
+            .select("pivot")).df
 
         // Records per group: (pivot, a, b) where b = -1 marks a vertex row.
         val vertRecs = live.join(smallPivots, Seq("pivot"), "left_semi")
           .select(col("pivot"), col("id").as("a"), lit(-1L).as("b"))
         val edgeRecs = le.join(smallPivots, Seq("pivot"), "left_semi")
           .select(col("pivot"), col("src").as("a"), col("dst").as("b"))
-        val (solved, solvedCnt) = arena.freshCounted(
+        val Checkpoint(solved, _, solvedCnt, _) = arena.checkpoint(
           vertRecs.unionByName(edgeRecs)
             .as[(Long, Long, Long)]
             .groupByKey(_._1)
@@ -854,10 +836,10 @@ object Scc {
         graft.Log.v(s"scc round $round: local-solved $localSolved rows")
         if (localSolved > 0) {
           assignedParts += solved
-          val nl = arena.freshCounted(live.join(smallPivots, Seq("pivot"), "left_anti"))
+          val nl = arena.checkpoint(live.join(smallPivots, Seq("pivot"), "left_anti"))
           arena.release(live)
-          live = nl._1
-          liveCount = nl._2
+          live = nl.df
+          liveCount = nl.rows
           liveIdPart = false // anti-join may have re-partitioned by pivot
           leLive = le.join(smallPivots, Seq("pivot"), "left_anti")
         } else arena.release(solved)
@@ -879,7 +861,8 @@ object Scc {
         // trickle the cap deliberately left to later rounds.
         if (round > 0 || !preTrimDone) {
           val (degsR, remaining, trimmed, _, _, trimCompacted) = trimFixpoint(
-            arena, leLive, leLive, buildTrimDegrees(arena, leLive, live),
+            arena, leLive, leLive,
+            arena.checkpoint(trimDegreesPlan(leLive, live), CountIf("dead")),
             maxTrimSweeps, assignedParts, partBacking, compactedParts,
             trimCapFraction, trimCapMinRemaining)
           trimmedTotal = trimmed
@@ -902,11 +885,11 @@ object Scc {
         // sharing a vertex would force its in- (resp. out-) degree above 1.
         if (round > 0 && liveCount > 0) {
           val lpT = live.select("id")
-          val (le2, _) = arena.freshCounted(
+          val le2 = arena.checkpoint(
             leLive
               .join(lpT.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
               .join(lpT.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-              .select("src", "dst"))
+              .select("src", "dst")).df
           val mutual = le2.filter(col("src") < col("dst"))
             .join(le2.select(col("dst").as("src"), col("src").as("dst")),
               Seq("src", "dst"), "left_semi")
@@ -915,7 +898,7 @@ object Scc {
           val degs2 = od2.join(id2, Seq("id"), "full")
             .select(col("id"), coalesce(col("od"), lit(0L)).as("od"),
               coalesce(col("idg"), lit(0L)).as("idg"))
-          val (pairs, pairsCnt) = arena.freshCounted(
+          val Checkpoint(pairs, _, pairsCnt, _) = arena.checkpoint(
             mutual
               .join(degs2.select(col("id").as("src"), col("od").as("aOd"),
                 col("idg").as("aId")), Seq("src"))
@@ -931,12 +914,12 @@ object Scc {
               .unionByName(pairs.select(col("dst").as("id"), col("src").as("comp")))
             partBacking += pairs
             assignedParts += pairMembers
-            val nl = arena.freshCounted(
+            val nl = arena.checkpoint(
               live.select("id", "pivot")
                 .join(pairMembers.select("id"), Seq("id"), "left_anti"))
             arena.release(live)
-            live = nl._1
-            liveCount = nl._2
+            live = nl.df
+            liveCount = nl.rows
           } else arena.release(pairs)
           arena.release(le2)
         }
@@ -969,7 +952,7 @@ object Scc {
         // checkpointed row from 7 slots to 3 (64B → 32B): state copy,
         // cache residency, and allocation rate — the measured per-step
         // cost drivers — all drop ~2×. Convergence rides the same
-        // accumulator via a bit mask (changedMask below).
+        // checkpoint as a masked count-if ride (`CountIf("st", 12)` below).
         // Slim single-pivot state: with exactly one pivot (known driver-
         // side) and no trim this round, the pivot column is the same value
         // on every row — drop it from the iterated state ((id, st): 2
@@ -1002,12 +985,8 @@ object Scc {
               when(col("id") === col("pivot"), lit(15)).otherwise(lit(0)))
           }
         val harness = new Superstep(spark, s"scc_bfs_$round", snapshotDir, arena = arena)
-        // One BFS hop: expand the fwNew/bwNew frontier by one edge step.
-        // The superstep runs `hopsPerStep` hops per driver action — the
-        // checkpoint + convergence read are the fixed per-action cost, and
-        // composing hops amortizes it (frontier semantics stay exact: the
-        // next action's frontier is the LAST hop's newly-reached set, and
-        // an empty last hop means the whole reach is complete).
+        // One BFS hop: expand the fwNew/bwNew frontier by one edge step;
+        // an empty hop means the whole reach is complete.
         val hop: DataFrame => DataFrame = { st =>
           // Frontier expansion. Join shapes chosen so the big sides never
           // move: frontier(id) x eBySrc(src) is co-partitioned; fw and bw
@@ -1026,10 +1005,10 @@ object Scc {
           // anti-join chain.
           def hitRows(frontier: DataFrame, eTbl: DataFrame,
               joinOn: String, tgt: String, fwd: Boolean): DataFrame = {
-            // fresh aliases per call: the same edge Dataset appears once per
-            // hop in the composed plan, and dataset-qualified refs would
-            // trip DetectAmbiguousSelfJoin (the re-aliasing projection is a
-            // no-op physically — it collapses into the scan)
+            // fresh aliases per call: dataset-qualified refs to the shared
+            // edge Dataset would trip DetectAmbiguousSelfJoin (the
+            // re-aliasing projection is a no-op physically — it collapses
+            // into the scan)
             val e = eTbl.select(col(joinOn).as("_eFrom"), col(tgt).as("_eTo"))
             val cols =
               if (singlePivot) Seq(col("_eTo").as("id"), lit(fwd).as("_fwd"))
@@ -1107,19 +1086,16 @@ object Scc {
         // reconstructed after convergence as live − still-unsettled.
         // (the settlement argument is pivot-independent, so BOTH paths
         // retire: a settled row is fully classified within its partition)
-        val stepOnce: DataFrame => DataFrame =
-          st => hop(st.filter(col("st") =!= 3))
-        val (reachedSt, bfsMetrics) = harness.run(
-          bfs0, Int.MaxValue, changedCol = Some("st"), changedMask = Some(12)) { (st, _) =>
-          (1 until hopsPerStep).foldLeft(stepOnce(st))((s, _) => hop(s))
-        } { _ => 0L }
+        // Converged when no row carries a new-flag bit (4|8).
+        val (reachedSt, bfsMetrics) = harness.run(bfs0, Int.MaxValue,
+          rides = Seq(CountIf("st", 12)))((st, _) => hop(st.filter(col("st") =!= 3)))(_.rides(0))
         bfsSteps = bfsMetrics.size
 
         if (slim) {
           // Final state: st ∈ {0,1,2} = non-members (never both-reached),
           // st == 3 = members settled in the last steps (not yet dropped);
           // everything dropped earlier is a member too.
-          val (nonMembers, nmCnt) = arena.freshCounted(
+          val Checkpoint(nonMembers, _, nmCnt, _) = arena.checkpoint(
             reachedSt.filter(col("st").bitwiseAND(lit(3)) =!= lit(3))
               .select(col("id"), col("st")))
           arena.release(reachedSt)
@@ -1139,7 +1115,7 @@ object Scc {
             (col("st").bitwiseAND(lit(1)) =!= lit(0)).as("fw"),
             (col("st").bitwiseAND(lit(2)) =!= lit(0)).as("bw"))
           val groupsNm = reachedNm.groupBy("fw", "bw").agg(min("id").as("newPivot"))
-          val (nl, nlCnt) = arena.freshCounted(
+          val Checkpoint(nl, _, nlCnt, _) = arena.checkpoint(
             reachedNm.join(groupsNm, Seq("fw", "bw"))
               .select(col("id"), col("newPivot").as("pivot")))
           // nonMembers backs the lazy members anti-join — retained
@@ -1153,7 +1129,7 @@ object Scc {
           // min member id per pivot group. Grouping by live's PRE-relabel
           // pivot is equivalent: the relabel/WCC maps are 1:1 on groups,
           // and the canonical min-member label is label-independent.
-          val (nonMembers, nmCnt) = arena.freshCounted(
+          val Checkpoint(nonMembers, _, nmCnt, _) = arena.checkpoint(
             reachedSt.filter(col("st").bitwiseAND(lit(3)) =!= lit(3))
               .select(col("id"), col("pivot"), col("st")))
           arena.release(reachedSt)
@@ -1162,7 +1138,7 @@ object Scc {
             val members = live.select("id", "pivot")
               .join(nonMembers.select("id"), Seq("id"), "left_anti")
             val minPerPivot = members.groupBy("pivot").agg(min("id").as("comp"))
-            val (frag, fragCnt) = arena.freshCounted(
+            val Checkpoint(frag, _, fragCnt, _) = arena.checkpoint(
               members.join(minPerPivot, Seq("pivot")).select("id", "comp"))
             require(fragCnt == memberCnt,
               s"done-fragment rows $fragCnt != settled tally $memberCnt")
@@ -1177,7 +1153,7 @@ object Scc {
             (col("st").bitwiseAND(lit(1)) =!= lit(0)).as("fw"),
             (col("st").bitwiseAND(lit(2)) =!= lit(0)).as("bw"))
           val groups = reachedNm.groupBy("pivot", "fw", "bw").agg(min("id").as("newPivot"))
-          val (nl, nlCnt) = arena.freshCounted(
+          val Checkpoint(nl, _, nlCnt, _) = arena.checkpoint(
             reachedNm.join(groups, Seq("pivot", "fw", "bw"))
               .select(col("id"), col("newPivot").as("pivot")))
           arena.release(nonMembers)
@@ -1284,13 +1260,13 @@ object Scc {
       .withColumn("isKilled", lit(true))
 
     val outArena = new CheckpointArena
-    val (out, _) = outArena.freshCounted(withU
+    val out = outArena.checkpoint(withU
       .join(stats, Seq("comp"))
       .join(killed, Seq("comp"), "left")
       .select(
         col("id"), col("comp"),
         (col("sz") >= 2 && col("allU") && coalesce(col("isKilled"), lit(false)) === false)
-          .as("accepted")))
+          .as("accepted"))).df
     withU.unpersist(false)
     run.release() // out is eagerly materialized; the decomposition's blocks are spent
     new SccAcceptedRun(out, () => outArena.closeExcept())

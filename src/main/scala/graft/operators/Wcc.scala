@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftShims.XorSig
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -36,23 +37,15 @@ final class WccRun(
   *
   * Canonical component id = min member id. Convergence is detected by a
   * 64-bit content signature of the link set (xor of row hashes + count) going
-  * stable — one scalar agg per round instead of an except/count.
+  * stable — ridden on each round's checkpoint, so it costs no extra job.
   */
 object Wcc {
 
-  /** `roundsPerStep` large+small-star rounds run per driver action — the
-    * checkpoint materialization and the convergence signature are the fixed
-    * per-action latency, and composing rounds amortizes them (the composite
-    * map has the same fixpoints, so signature-stability still detects
-    * convergence; at worst the final action runs one already-converged
-    * round, which is a no-op).
-    */
   def run(
       spark: SparkSession,
       edges: DataFrame,
       vertices: DataFrame,
       maxIter: Int = 50,
-      roundsPerStep: Int = 1,
       snapshotDir: Option[String] = None): WccRun = {
 
     val arena = new CheckpointArena
@@ -94,31 +87,29 @@ object Wcc {
     var prevSig: Option[(Long, Long)] = None
     var prevState: DataFrame = null
     // The (xor-hash, count) signature rides the checkpoint materialization
-    // (Superstep sigCols path) — round 6 removed the separate full-scan
-    // signature aggregate job this used to cost per round.
-    val (links, metrics) = harness.run(links0, maxIter,
-      sigCols = Some(Seq("u", "v")),
-      sigChanged = { (next, rows, hash) =>
-        val sig = (hash, rows)
-        // The 64-bit signature alone leaves a ~2^-64/round early-termination
-        // window (an xor-hash collision). On FIRST stability, one exact
-        // confirmation closes it: counts already match (part of sig) and both
-        // sides are distinct link sets, so one-direction set difference being
-        // empty proves equality. Cost: one extra job per RUN, not per round.
-        val changed =
-          if (!prevSig.contains(sig)) 1L
-          else if (prevState != null &&
-            !next.select("u", "v").except(prevState.select("u", "v")).isEmpty) {
-            graft.Log.v("wcc: signature collision — exact check forced another round")
-            1L
-          } else 0L
-        graft.Log.v(s"wcc round: links=$rows changed=$changed")
-        prevSig = Some(sig)
-        changed
-      }) { (st, _) =>
+    // — no separate full-scan signature aggregate job per round.
+    val (links, metrics) = harness.run(links0, maxIter, rides = Seq(XorSig(Seq("u", "v")))) {
+      (st, _) =>
       prevState = st
-      (0 until roundsPerStep).foldLeft(st)((s, _) => smallStar(largeStar(s)))
-    } { _ => 0L }
+      smallStar(largeStar(st))
+    } { ck =>
+      val sig = (ck.rides(0), ck.rows)
+      // The 64-bit signature alone leaves a ~2^-64/round early-termination
+      // window (an xor-hash collision). On FIRST stability, one exact
+      // confirmation closes it: counts already match (part of sig) and both
+      // sides are distinct link sets, so one-direction set difference being
+      // empty proves equality. Cost: one extra job per RUN, not per round.
+      val changed =
+        if (!prevSig.contains(sig)) 1L
+        else if (prevState != null &&
+          !ck.df.select("u", "v").except(prevState.select("u", "v")).isEmpty) {
+          graft.Log.v("wcc: signature collision — exact check forced another round")
+          1L
+        } else 0L
+      graft.Log.v(s"wcc round: links=${ck.rows} changed=$changed")
+      prevSig = Some(sig)
+      changed
+    }
     require(metrics.nonEmpty && metrics.last.changed == 0,
       s"WCC did not converge within $maxIter rounds")
 
@@ -131,7 +122,7 @@ object Wcc {
       .join(comps, Seq("id"), "left")
       .select(col("id"), least(col("id"), coalesce(col("mv"), col("id"))).as("comp"))
 
-    val result = arena.fresh(out)
+    val result = arena.checkpoint(out).df
     arena.closeExcept(result)
     new WccRun(result, metrics, () => arena.closeExcept())
   }

@@ -1,91 +1,26 @@
 package graft.plans
 
-import scala.collection.mutable
-
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftShims}
+import org.apache.spark.sql.GraftShims.{Checkpoint, Ride}
 
-/** Tracks the stats-free checkpoints (see [[GraftShims.checkpointFresh]])
-  * an iterative algorithm creates, so superseded superstep states can be
+/** Tracks the stats-free checkpoints (see [[GraftShims.checkpoint]]) an
+  * iterative algorithm creates, so superseded superstep states can be
   * unpersisted promptly and everything else released when the algorithm
   * finishes — the cache-discipline half of SURVEY.md §4(c).
   *
-  * Usage: `fresh(df)` to checkpoint, `release(df)` when a state is
+  * Usage: `checkpoint(df, rides*)` to materialize (the row count and the
+  * rides come back with the frame), `release(df)` when a state is
   * superseded, `closeExcept(result)` at the end (the returned result's
   * blocks must outlive the arena).
   */
 final class CheckpointArena {
   private val backing = new java.util.IdentityHashMap[DataFrame, RDD[_]]()
 
-  def fresh(df: DataFrame): DataFrame = freshCounted(df)._1
-
-  /** Like [[fresh]] but also returns the materialized row count — the
-    * count rides the materialization job instead of costing a second one.
-    */
-  def freshCounted(df: DataFrame): (DataFrame, Long) = {
-    val (out, rdd, n) = GraftShims.checkpointFresh(df)
-    backing.put(out, rdd)
-    (out, n)
-  }
-
-  /** [[freshCounted]] that also counts rows with boolean `flagCol` true in
-    * the same materialization pass: (frame, totalRows, flaggedRows).
-    */
-  def freshFlagged(df: DataFrame, flagCol: String): (DataFrame, Long, Long) = {
-    val (out, rdd, n, flagged) = GraftShims.checkpointFreshFlagged(df, flagCol)
-    backing.put(out, rdd)
-    (out, n, flagged)
-  }
-
-  /** [[freshFlagged]] that also rides sum+max aggregates over the given
-    * LongType columns on the same pass: (frame, rows, flagged, sums, maxes).
-    * Stats gate heuristics only — see the retry contract in
-    * [[GraftShims.checkpointFreshFlaggedWithLongStats]].
-    */
-  def freshFlaggedWithLongStats(
-      df: DataFrame, flagCol: String, statCols: Seq[String]):
-      (DataFrame, Long, Long, Array[Long], Array[Long]) = {
-    val (out, rdd, n, flagged, sums, maxes) =
-      GraftShims.checkpointFreshFlaggedWithLongStats(df, flagCol, statCols)
-    backing.put(out, rdd)
-    (out, n, flagged, sums, maxes)
-  }
-
-  /** [[freshCounted]] that also rides a 64-bit xor content signature of the
-    * given LongType columns on the same materialization pass:
-    * (frame, rows, signature). Zero extra jobs vs a separate signature agg.
-    */
-  def freshHashSig(df: DataFrame, cols: Seq[String]): (DataFrame, Long, Long) = {
-    val (out, rdd, n, sig) = GraftShims.checkpointFreshHashSig(df, cols)
-    backing.put(out, rdd)
-    (out, n, sig)
-  }
-
-  /** [[freshFlagged]] over a bit-packed IntegerType status column: flagged
-    * when `(value & mask) != 0`.
-    */
-  def freshFlaggedMasked(
-      df: DataFrame, flagCol: String, mask: Int): (DataFrame, Long, Long) = {
-    val (out, rdd, n, flagged) = GraftShims.checkpointFreshFlaggedMasked(df, flagCol, mask)
-    backing.put(out, rdd)
-    (out, n, flagged)
-  }
-
-  /** Track a checkpointed frame produced elsewhere (e.g. a sub-algorithm's
-    * result whose own arena kept it alive) so this arena can [[release]]
-    * its cached blocks once consumed. No-op for non-checkpointed frames.
-    * NOTE: under packed checkpoints (GraftShims round 6) the LogicalRDD's
-    * rdd is the derived row view, not the persisted batch handle, so
-    * release-through-adopt only frees legacy-style frames; currently no
-    * caller uses adopt.
-    */
-  def adopt(df: DataFrame): DataFrame = {
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        backing.put(df, lr.rdd)
-      case _ =>
-    }
-    df
+  def checkpoint(df: DataFrame, rides: Ride*): Checkpoint = {
+    val ck = GraftShims.checkpoint(df, rides)
+    backing.put(ck.df, ck.handle)
+    ck
   }
 
   /** Unpersist the blocks behind a superseded state (no-op for unknown). */

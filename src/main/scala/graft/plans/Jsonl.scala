@@ -29,19 +29,27 @@ object Jsonl {
   def repairTornTail(
       p: java.nio.file.Path, parses: String => Boolean): Seq[String] = {
     import scala.jdk.CollectionConverters._
+    val prefix = p.getFileName.toString + ".repair-"
+    // a repair killed between write and move leaves its temp file behind
+    scala.util.Using.resource(java.nio.file.Files.list(p.toAbsolutePath.getParent)) {
+      _.iterator().asScala.filter(_.getFileName.toString.startsWith(prefix))
+        .foreach(java.nio.file.Files.deleteIfExists)
+    }
     val lines = java.nio.file.Files.readAllLines(p).asScala.toSeq
     if (lines.nonEmpty && !parses(lines.last) && lines.init.forall(parses)) {
       graft.Log.v(s"resume: truncating torn final manifest line in $p")
-      // write-to-tmp + atomic rename: a crash mid-repair must never lose the
-      // previously committed lines (an in-place truncate-then-write can)
-      val tmp = p.resolveSibling(
-        p.getFileName.toString + s".repair-${java.util.UUID.randomUUID()}")
-      java.nio.file.Files.write(tmp,
-        lines.init.mkString("", "\n", if (lines.init.isEmpty) "" else "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmp, p,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      // write-to-tmp + atomic rename: a process crash mid-repair never
+      // loses the previously committed lines (an in-place truncate-then-
+      // write can). No fsync, so this is not power-loss durable.
+      val tmp = p.resolveSibling(prefix + java.util.UUID.randomUUID())
+      try {
+        java.nio.file.Files.write(tmp,
+          lines.init.mkString("", "\n", if (lines.init.isEmpty) "" else "\n")
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        java.nio.file.Files.move(tmp, p,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      } finally java.nio.file.Files.deleteIfExists(tmp)
       lines.init
     } else lines
   }

@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftShims.{Checkpoint, Ride}
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /** Per-iteration bookkeeping emitted by the superstep harness — the Spark
@@ -15,9 +16,11 @@ final case class StepMetrics(iter: Int, changed: Long, wallMs: Long)
   *   - **Lineage control**: iterative DataFrame code doubles its logical plan
   *     every superstep unless the plan is cut; we `localCheckpoint(eager)`
   *     each iteration (the #1 failure mode of naive iterative Spark).
-  *   - **Convergence**: one driver action per superstep reads a single scalar
-  *     (the changed-row count), mirroring the reference's per-superstep
-  *     `d_stop` memcpy — never a `collect` of state.
+  *   - **Convergence**: one driver action per superstep — the checkpoint —
+  *     also folds the step's convergence scalar (a changed-row count or a
+  *     content signature, see [[org.apache.spark.sql.GraftShims.Ride]]),
+  *     mirroring the reference's per-superstep `d_stop` memcpy — never a
+  *     `collect` of state.
   *   - **Resumability** (north_rule): when `snapshotDir` is set, every
   *     `snapshotEvery` iterations the state is written as parquet (one file
   *     per partition = per-partition lineage) together with a JSON manifest
@@ -26,7 +29,8 @@ final case class StepMetrics(iter: Int, changed: Long, wallMs: Long)
   */
 /** @param tinyLoop opt-in to the tiny-state shuffle-partition override
   *   (see [[Superstep.withTinyShuffle]]): right for loops whose per-step
-  *   plans touch only the state and its own aggregates (PageRank, WCC);
+  *   plans touch only the state and its own aggregates (PageRank, WCC,
+  *   LabelProp);
   *   WRONG for loops joining large fixed-partitioning caches each step
   *   (SCC's BFS hops against the 2×-partitioned edge tables re-exchanged
   *   the edge side every hop under the override — measured 3× slower at
@@ -44,19 +48,19 @@ final class Superstep(
 
   private def jstr(s: String): String = Jsonl.jstr(s)
 
-  /** Run `step` from `state0` until `changedOf(next)` returns 0 or `maxIter`.
-    * `step` must return the full next state; `changedOf` is evaluated on the
-    * already-checkpointed state so its scan is cheap and never recomputes the
-    * step. Returns the converged state and per-iteration metrics.
+  /** Run `step` from `state0` until `changed` returns 0 or `maxIter`
+    * supersteps have run. Each next state is checkpointed with `rides`
+    * folded into the same materialization job; `changed` reads the
+    * resulting [[Checkpoint]] (its row count, ridden values or the frame
+    * itself) before the previous state is released. Returns the final state
+    * and per-iteration metrics.
     */
-  def run(state0: DataFrame, maxIter: Int, startIter: Int = 0,
-      changedCol: Option[String] = None, changedMask: Option[Int] = None,
-      sigCols: Option[Seq[String]] = None,
-      sigChanged: (DataFrame, Long, Long) => Long = null)(
+  def run(state0: DataFrame, maxIter: Int, startIter: Int = 0, rides: Seq[Ride] = Nil)(
       step: (DataFrame, Int) => DataFrame)(
-      changedOf: DataFrame => Long): (DataFrame, Vector[StepMetrics]) = {
-    val (st0, state0Rows) = arena.freshCounted(state0)
-    var state = st0
+      changed: Checkpoint => Long): (DataFrame, Vector[StepMetrics]) = {
+    val st0 = arena.checkpoint(state0)
+    var state = st0.df
+    val state0Rows = st0.rows
     val metrics = Vector.newBuilder[StepMetrics]
     // Size-aware AQE policy (see [[Aqe]]): on a BIG state every shuffle
     // partition is full, so AQE's per-shuffle query-stage barrier is pure
@@ -68,49 +72,25 @@ final class Superstep(
     val aqeOff = state0Rows >= Superstep.aqeOffMinStateRows
     def loop(): Unit = {
       var iter = startIter
-      var changed = 1L
-      while (changed > 0 && iter < maxIter) {
+      var delta = 1L
+      while (delta > 0 && iter < maxIter) {
       val t0 = System.nanoTime()
-      // When the step exposes a changed-flag column (boolean, or bit-packed
-      // int + changedMask), the convergence count rides the checkpoint
-      // materialization (accumulator) — one driver action per superstep
-      // instead of two.
-      val next = changedCol match {
-        case Some(c) =>
-          val (n, _, flagged) = changedMask match {
-            case Some(m) => arena.freshFlaggedMasked(step(state, iter), c, m)
-            case None => arena.freshFlagged(step(state, iter), c)
-          }
-          changed = flagged
-          n
-        case None => sigCols match {
-          case Some(cols) =>
-            // content-signature convergence (e.g. WCC's link set): the xor
-            // signature rides the checkpoint materialization, so detecting
-            // "state unchanged" costs no extra job per superstep
-            val (n, rows, sig) = arena.freshHashSig(step(state, iter), cols)
-            changed = sigChanged(n, rows, sig)
-            n
-          case None =>
-            val n = arena.fresh(step(state, iter))
-            changed = changedOf(n)
-            n
-        }
-      }
+      val next = arena.checkpoint(step(state, iter), rides: _*)
+      delta = changed(next)
       arena.release(state)
-      state = next
+      state = next.df
       val wallMs = (System.nanoTime() - t0) / 1000000
-      metrics += StepMetrics(iter, changed, wallMs)
-      graft.Log.v(s"superstep $name iter=$iter changed=$changed wallMs=$wallMs")
+      metrics += StepMetrics(iter, delta, wallMs)
+      graft.Log.v(s"superstep $name iter=$iter changed=$delta wallMs=$wallMs")
       snapshotDir.foreach { dir =>
-        val snap = iter % snapshotEvery == 0 || changed == 0
+        val snap = iter % snapshotEvery == 0 || delta == 0
         val snapPath = if (snap) {
           val p = s"$dir/$name.state_$iter"
           state.write.mode("overwrite").parquet(p)
           jstr(p)
         } else "null"
         val line =
-          s"""{"name":${jstr(name)},"iter":$iter,"changed":$changed,"wallMs":$wallMs,"snapshot":$snapPath}\n"""
+          s"""{"name":${jstr(name)},"iter":$iter,"changed":$delta,"wallMs":$wallMs,"snapshot":$snapPath}\n"""
         Files.writeString(
           manifestPath.get, line,
           StandardOpenOption.CREATE, StandardOpenOption.APPEND)

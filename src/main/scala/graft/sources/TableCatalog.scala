@@ -457,6 +457,8 @@ object TableCatalog {
             else
               spark.read.parquet(legacyCarried.head.path).schema.fields.toSeq
                 .map(f => f.name -> f.dataType.catalogString) :+ ("lang" -> "string")
+          // the header written below must reload to these same names
+          fields0.foreach { case (nm, _) => validateColName(nm) }
           (Seq(TableSchema(0, fields0.zipWithIndex.map {
             case ((nm, tp), i) => Field(i + 1, nm, tp)
           })), 0)

@@ -2,9 +2,12 @@ package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.catalyst.expressions.{UnsafeRow, XXH64}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType}
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.Platform
+import org.apache.spark.util.AccumulatorV2
 
 /** Spark-internal access shim (hence the package) for one operation the
   * public Dataset API cannot express: an eager lineage-cutting checkpoint
@@ -29,93 +32,156 @@ import org.apache.spark.unsafe.Platform
   * co-partitioning and skip the exchange — at 10^8-row states that is the
   * difference between O(frontier) and O(state) shuffle bytes per step.
   *
-  * Round-6 storage change (guide §5 — memory pressure is the measured
-  * limiter at bench scale): checkpointed partitions are cached as PACKED
-  * byte batches ([[PackedRowBatch]]) — each batch one contiguous byte
-  * array of concatenated UnsafeRows plus offset/length arrays, rows
-  * re-materialized by `pointTo` into one reused UnsafeRow per scan. The
-  * previous per-row `copy()` cache kept two heap OBJECTS per row (the
-  * UnsafeRow + its byte[]) alive for the checkpoint's lifetime: at the
-  * 61M-edge SCC point that is ~20M rows × 2 objects per superstep state,
-  * and GC was 34% of executor task time. Packing stores the same bytes in
-  * O(1) objects per batch — no serializer, no compression, just memcpy in
-  * and pointer-bumping out. (The earlier MEMORY_AND_DISK_SER A/B paid
-  * JavaSerializer CPU per row and measured 25% slower; this path has no
-  * per-row serialization cost.) Escape hatch: GRAFT_CKPT_PACK=0 restores
-  * the per-row copy cache.
+  * Storage: checkpointed partitions are cached as PACKED byte batches
+  * ([[PackedRowBatch]]) — each batch one contiguous byte array of
+  * concatenated UnsafeRows plus offset/length arrays, rows re-materialized
+  * by `pointTo` into one reused UnsafeRow per scan. A per-row `copy()` cache
+  * keeps two heap OBJECTS per row (the UnsafeRow + its byte[]) alive for the
+  * checkpoint's lifetime: at the 61M-edge SCC point that is ~20M rows × 2
+  * objects per superstep state, and GC was 34% of executor task time.
+  * Packing stores the same bytes in O(1) objects per batch — no serializer,
+  * no compression, just memcpy in and pointer-bumping out.
   */
 object GraftShims {
 
-  /** Storage level for superstep checkpoint blocks (see the object doc;
-    * GRAFT_CKPT_SER=1 additionally stores the legacy row cache serialized —
-    * kept as a diagnostic for memory-constrained deployments).
+  /** A statistic ridden on a checkpoint's materialization pass: computed
+    * once per row as the rows are packed, so it costs no extra job.
     */
-  private val ckptLevel =
-    if (sys.env.get("GRAFT_CKPT_SER").contains("1"))
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+  sealed trait Ride extends Serializable
 
-  private val packEnabled = !sys.env.get("GRAFT_CKPT_PACK").contains("0")
-
-  /** Wrap a raw Catalyst Expression as a user-facing Column (Spark 4 made
-    * Column node-based; the classic converter lives in a private[sql]
-    * package, re-exposed here for graft's native expressions).
+  /** Rows whose column is true — a BooleanType column with `mask = 0`, or
+    * an IntegerType column with `(value & mask) != 0`. Nulls never count.
     */
-  def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
-    classic.ExpressionUtils.column(e)
+  final case class CountIf(col: String, mask: Int = 0) extends Ride
 
-  /** Inverse of [[column]]. */
-  def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
-    classic.ExpressionUtils.expression(c)
+  /** Sum of a LongType column; nulls are skipped. */
+  final case class Sum(col: String) extends Ride
 
-  /** The shared checkpoint core: materialize `df` once (cache + truncate
-    * lineage), calling `observe` exactly once per row DURING the
-    * materialization pass (ResultStage accumulator semantics — see the
-    * exactness note below), and wrap the cached rows in a fresh LogicalRDD
-    * carrying the physical plan's output partitioning/ordering but default
-    * stats. Returns (frame, persisted-rdd-handle, rowCount).
+  /** Max of a LongType column; nulls are skipped, and no non-null value
+    * reads 0.
+    */
+  final case class Max(col: String) extends Ride
+
+  /** Order-free 64-bit content signature of LongType columns: xor over rows
+    * of the seed-42 XXH64 fold of the non-null values (the fold
+    * `xxhash64(cols…)` computes).
+    */
+  final case class XorSig(cols: Seq[String]) extends Ride
+
+  /** A materialized checkpoint: the fresh frame, the persisted RDD behind
+    * it (to `unpersist` once superseded), the exact row count and one value
+    * per requested ride, in order.
+    */
+  final case class Checkpoint(df: DataFrame, handle: RDD[_], rows: Long, rides: IndexedSeq[Long])
+
+  /** The one fold behind every ride: slot 0 counts rows, slot i+1 folds
+    * ride i with + (counts, sums), max or xor — all associative and
+    * commutative, so task partials merge in any order.
+    */
+  private final class RideAccumulator(rides: Array[Ride], idx: Array[Array[Int]])
+      extends AccumulatorV2[InternalRow, Array[Long]] {
+    private val zero = 0L +: rides.map { case _: Max => Long.MinValue; case _ => 0L }
+    private var acc = zero.clone()
+
+    private def fold(slot: Int, a: Long, b: Long): Long =
+      if (slot == 0) a + b
+      else rides(slot - 1) match {
+        case _: Max => math.max(a, b)
+        case _: XorSig => a ^ b
+        case _ => a + b
+      }
+
+    override def isZero: Boolean = acc.sameElements(zero)
+    override def copy(): RideAccumulator = {
+      val a = new RideAccumulator(rides, idx); a.acc = acc.clone(); a
+    }
+    override def reset(): Unit = acc = zero.clone()
+    override def merge(other: AccumulatorV2[InternalRow, Array[Long]]): Unit = {
+      val o = other.value
+      for (s <- acc.indices) acc(s) = fold(s, acc(s), o(s))
+    }
+    override def value: Array[Long] = acc
+
+    override def add(r: InternalRow): Unit = {
+      acc(0) += 1L
+      var i = 0
+      while (i < rides.length) {
+        val c = idx(i)
+        val v = rides(i) match {
+          case CountIf(_, mask) =>
+            if (r.isNullAt(c(0))) 0L
+            else if (if (mask == 0) r.getBoolean(c(0)) else (r.getInt(c(0)) & mask) != 0) 1L
+            else 0L
+          case _: Sum => if (r.isNullAt(c(0))) 0L else r.getLong(c(0))
+          case _: Max => if (r.isNullAt(c(0))) Long.MinValue else r.getLong(c(0))
+          case _: XorSig =>
+            var h = 42L
+            var j = 0
+            while (j < c.length) {
+              if (!r.isNullAt(c(j))) h = XXH64.hashLong(r.getLong(c(j)), h)
+              j += 1
+            }
+            h
+        }
+        acc(i + 1) = fold(i + 1, acc(i + 1), v)
+        i += 1
+      }
+    }
+  }
+
+  /** Resolve each ride's column indexes against `df`'s schema, checking types. */
+  private def bind(df: DataFrame, rides: Seq[Ride]): Array[Array[Int]] =
+    rides.map { ride =>
+      val cols = ride match {
+        case CountIf(c, _) => Seq(c)
+        case Sum(c) => Seq(c)
+        case Max(c) => Seq(c)
+        case XorSig(cs) => cs
+      }
+      val idx = cols.map(df.schema.fieldIndex).toArray
+      val want = ride match {
+        case CountIf(_, 0) => BooleanType
+        case _: CountIf => IntegerType
+        case _ => LongType
+      }
+      idx.foreach { i =>
+        require(df.schema(i).dataType == want,
+          s"$ride: column ${df.schema(i).name} must be $want")
+      }
+      idx
+    }.toArray
+
+  /** Eagerly materialize `df` into a cached, lineage-truncated RDD and wrap
+    * it in a fresh DataFrame with the same schema, output partitioning and
+    * ordering but default (not inherited) stats. The row count and every
+    * ride fold in the same single job.
     *
-    * EXACTNESS of observe-fed accumulators: the observe call sits in the
-    * final map of the one count() below, i.e. inside that job's ResultStage
-    * tasks. Spark's scheduler applies a ResultTask's accumulator updates
-    * only on the FIRST successful completion of each partition (retries of
-    * failed attempts are discarded — countFailedValues=false — and a
-    * speculative duplicate's updates are ignored because the partition is
-    * already finished), so observe-fed counts are exactly-once per
-    * partition even under task retry, stage retry, and speculation — unlike
-    * an accumulator in a ShuffleMapStage, where re-executed map tasks DO
-    * double-count. The other recompute path (a later job re-running this
-    * map after cache eviction) is closed by the localCheckpoint: lineage is
-    * truncated, so Spark reloads blocks or fails — never re-executes.
-    * Callers may therefore use ridden counts as exact tallies (Scc's
-    * fragment-exactness requires do), not just convergence signals.
+    * EXACTNESS of the ridden values: the fold runs in the final map of the
+    * one count() below, i.e. inside that job's ResultStage tasks. Spark's
+    * scheduler applies a ResultTask's accumulator updates only on the FIRST
+    * successful completion of each partition (retries of failed attempts
+    * are discarded — countFailedValues=false — and a speculative
+    * duplicate's updates are ignored because the partition is already
+    * finished), so ridden values are exactly-once per partition even under
+    * task retry, stage retry, and speculation — unlike an accumulator in a
+    * ShuffleMapStage, where re-executed map tasks DO double-count. The
+    * other recompute path (a later job re-running this map after cache
+    * eviction) is closed by the localCheckpoint: lineage is truncated, so
+    * Spark reloads blocks or fails — never re-executes. Callers may
+    * therefore use ridden counts as exact tallies (Scc's fragment
+    * exactness does), not just convergence signals.
     */
-  private def ckptImpl(
-      df: DataFrame, observe: InternalRow => Unit): (DataFrame, RDD[_], Long) = {
+  def checkpoint(df: DataFrame, rides: Seq[Ride]): Checkpoint = {
     val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val qe = df.queryExecution
-    val (handle: RDD[_], rows: RDD[InternalRow], n: Long) =
-      if (packEnabled) {
-        val rowCount = session.sparkContext.longAccumulator("graft.ckpt.rows")
-        val nf = qe.analyzed.output.size
-        val packed = qe.toRdd.mapPartitions { it =>
-          PackedRowBatch.pack(it, nf, r => { observe(r); rowCount.add(1L) })
-        }
-        packed.persist(ckptLevel)
-        packed.localCheckpoint()
-        packed.count()
-        val rowsRdd = packed.mapPartitions(_.flatMap(_.rowIterator),
-          preservesPartitioning = true)
-        (packed, rowsRdd, rowCount.value.longValue)
-      } else {
-        // legacy per-row copy cache (GRAFT_CKPT_PACK=0): toRdd rows are
-        // reused per-partition buffers; copy before caching.
-        val rdd = qe.toRdd.map { r => observe(r); r.copy() }
-        rdd.persist(ckptLevel)
-        rdd.localCheckpoint()
-        val n = rdd.count()
-        (rdd, rdd, n)
-      }
+    val acc = new RideAccumulator(rides.toArray, bind(df, rides))
+    session.sparkContext.register(acc, "graft.ckpt")
+    val nf = qe.analyzed.output.size
+    val packed = qe.toRdd.mapPartitions(it => PackedRowBatch.pack(it, nf, acc.add))
+    packed.persist(StorageLevel.MEMORY_AND_DISK)
+    packed.localCheckpoint()
+    packed.count()
+    val rows = packed.mapPartitions(_.flatMap(_.rowIterator), preservesPartitioning = true)
     // AdaptiveSparkPlanExec reports UnknownPartitioning at the top even
     // after finalization — unwrap to the final physical plan or the
     // partitioning is silently lost and every downstream same-key join
@@ -127,169 +193,24 @@ object GraftShims {
     }
     val logical = LogicalRDD(
       physical.output, rows, physical.outputPartitioning, physical.outputOrdering)(session)
-    (classic.Dataset.ofRows(session, logical), handle, n)
-  }
-
-  /** Eagerly materialize `df` into a cached, lineage-truncated RDD and wrap
-    * it in a fresh DataFrame with the same schema and output partitioning
-    * but default (not inherited) stats. Returns the DataFrame, the backing
-    * RDD handle so callers can `unpersist` once superseded, and the exact
-    * materialized row count.
-    */
-  def checkpointFresh(df: DataFrame): (DataFrame, RDD[_], Long) =
-    ckptImpl(df, _ => ())
-
-  /** [[checkpointFresh]] that additionally counts rows whose boolean column
-    * `flagCol` is true, DURING the materialization pass (via accumulator) —
-    * an iterative algorithm's convergence check then costs zero extra jobs
-    * instead of one count-job per superstep. Returns
-    * (frame, rdd, totalRows, flaggedRows).
-    */
-  def checkpointFreshFlagged(
-      df: DataFrame, flagCol: String): (DataFrame, RDD[_], Long, Long) = {
-    val idx = df.schema.fieldIndex(flagCol)
-    flaggedImpl(df, flagCol, r => !r.isNullAt(idx) && r.getBoolean(idx))
-  }
-
-  /** [[checkpointFreshFlagged]] over a bit-packed IntegerType status column:
-    * a row counts as flagged when `(value & mask) != 0`. Lets an iterative
-    * state pack several boolean flags into one 8-byte UnsafeRow slot and
-    * still ride the convergence count on the materialization pass.
-    */
-  def checkpointFreshFlaggedMasked(
-      df: DataFrame, flagCol: String, mask: Int): (DataFrame, RDD[_], Long, Long) = {
-    val idx = df.schema.fieldIndex(flagCol)
-    flaggedImpl(df, flagCol, r => !r.isNullAt(idx) && (r.getInt(idx) & mask) != 0)
-  }
-
-  /** Max-of-longs accumulator (Spark ships none): retry-safe by idempotence
-    * of max — unlike the sum accumulators, a replayed task cannot change
-    * the result.
-    */
-  private final class MaxAccumulator
-      extends org.apache.spark.util.AccumulatorV2[java.lang.Long, java.lang.Long] {
-    private var _max = Long.MinValue
-    override def isZero: Boolean = _max == Long.MinValue
-    override def copy(): MaxAccumulator = {
-      val a = new MaxAccumulator; a._max = _max; a
+    val folded = acc.value
+    val values = rides.indices.map { i =>
+      val v = folded(i + 1)
+      if (rides(i).isInstanceOf[Max] && v == Long.MinValue) 0L else v
     }
-    override def reset(): Unit = _max = Long.MinValue
-    override def add(v: java.lang.Long): Unit = _max = math.max(_max, v)
-    override def merge(
-        other: org.apache.spark.util.AccumulatorV2[java.lang.Long, java.lang.Long]): Unit =
-      _max = math.max(_max, other.value)
-    override def value: java.lang.Long = _max
+    Checkpoint(classic.Dataset.ofRows(session, logical), packed, folded(0), values)
   }
 
-  /** [[checkpointFreshFlagged]] that ADDITIONALLY rides per-column sum and
-    * max over the given LongType columns on the same materialization pass —
-    * one driver action yields the frame, its row/flagged counts, and the
-    * aggregate stats an algorithm needs to pick its strategy (e.g. SCC's
-    * edge total and full-graph max degrees, previously a separate agg job
-    * on every call). Null column values count as 0 toward the sum and are
-    * skipped for the max. Same exactness argument as the flag accumulator
-    * (see [[ckptImpl]]), so counts/sums are exact too; maxes are
-    * additionally idempotent by construction. Callers here still use the
-    * stats only to pick strategies (thresholds, logging) — results never
-    * depend on them.
-    * Returns (frame, rdd, totalRows, flaggedRows, sums, maxes).
+  /** Wrap a raw Catalyst Expression as a user-facing Column (Spark 4 made
+    * Column node-based; the classic converter lives in a private[sql]
+    * package, re-exposed here for graft's native expressions).
     */
-  def checkpointFreshFlaggedWithLongStats(
-      df: DataFrame, flagCol: String, statCols: Seq[String]):
-      (DataFrame, RDD[_], Long, Long, Array[Long], Array[Long]) = {
-    val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val flagIdx = df.schema.fieldIndex(flagCol)
-    val statIdx = statCols.map(df.schema.fieldIndex).toArray
-    statIdx.foreach { i =>
-      require(df.schema(i).dataType == org.apache.spark.sql.types.LongType,
-        s"stat column ${df.schema(i).name} must be LongType")
-    }
-    val flagAcc = session.sparkContext.longAccumulator(s"graft.flagged.$flagCol")
-    val sumAccs = statCols.map(c =>
-      session.sparkContext.longAccumulator(s"graft.sum.$c")).toArray
-    val maxAccs = statCols.map { c =>
-      val a = new MaxAccumulator
-      session.sparkContext.register(a, s"graft.max.$c")
-      a
-    }.toArray
-    val (out, rdd, n) = ckptImpl(df, { r =>
-      if (!r.isNullAt(flagIdx) && r.getBoolean(flagIdx)) flagAcc.add(1L)
-      var i = 0
-      while (i < statIdx.length) {
-        if (!r.isNullAt(statIdx(i))) {
-          val v = r.getLong(statIdx(i))
-          sumAccs(i).add(v)
-          maxAccs(i).add(v)
-        }
-        i += 1
-      }
-    })
-    (out, rdd, n, flagAcc.value,
-      sumAccs.map(_.value.longValue),
-      maxAccs.map(a => math.max(0L, a.value.longValue)))
-  }
+  def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
+    classic.ExpressionUtils.column(e)
 
-  /** Xor-of-longs accumulator: order-free content signature. Exactly-once
-    * under retry/speculation by the same ResultStage argument as the sum
-    * accumulators (see [[ckptImpl]]); callers additionally treat the
-    * value only as a CONVERGENCE SIGNAL confirmed by an exact set compare
-    * on first stability, so results never depend on it.
-    */
-  private final class XorAccumulator
-      extends org.apache.spark.util.AccumulatorV2[java.lang.Long, java.lang.Long] {
-    private var _x = 0L
-    private var _any = false
-    override def isZero: Boolean = !_any
-    override def copy(): XorAccumulator = {
-      val a = new XorAccumulator; a._x = _x; a._any = _any; a
-    }
-    override def reset(): Unit = { _x = 0L; _any = false }
-    override def add(v: java.lang.Long): Unit = { _x ^= v; _any = true }
-    override def merge(
-        other: org.apache.spark.util.AccumulatorV2[java.lang.Long, java.lang.Long]): Unit = {
-      _x ^= other.value; _any = true
-    }
-    override def value: java.lang.Long = _x
-  }
-
-  /** [[checkpointFresh]] that ADDITIONALLY rides a 64-bit content signature
-    * of the given LongType columns on the materialization pass: xor over
-    * rows of the seed-42 XXH64 fold of the column values (the same fold as
-    * `xxhash64(cols…)`). An iterative algorithm whose convergence test is
-    * "did the state's content change" (WCC's link set) then needs ZERO
-    * extra jobs per superstep — previously a separate full-scan aggregate
-    * job per round. Returns (frame, rdd, rows, signature).
-    */
-  def checkpointFreshHashSig(
-      df: DataFrame, cols: Seq[String]): (DataFrame, RDD[_], Long, Long) = {
-    val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val idx = cols.map(df.schema.fieldIndex).toArray
-    idx.foreach { i =>
-      require(df.schema(i).dataType == org.apache.spark.sql.types.LongType,
-        s"signature column ${df.schema(i).name} must be LongType")
-    }
-    val acc = new XorAccumulator
-    session.sparkContext.register(acc, s"graft.sig.${cols.mkString(",")}")
-    val (out, rdd, n) = ckptImpl(df, { r =>
-      var h = 42L
-      var i = 0
-      while (i < idx.length) {
-        h = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(r.getLong(idx(i)), h)
-        i += 1
-      }
-      acc.add(h)
-    })
-    (out, rdd, n, acc.value.longValue)
-  }
-
-  private def flaggedImpl(
-      df: DataFrame, flagCol: String,
-      flagged: InternalRow => Boolean): (DataFrame, RDD[_], Long, Long) = {
-    val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val acc = session.sparkContext.longAccumulator(s"graft.flagged.$flagCol")
-    val (out, rdd, n) = ckptImpl(df, r => if (flagged(r)) acc.add(1L))
-    (out, rdd, n, acc.value)
-  }
+  /** Inverse of [[column]]. */
+  def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
+    classic.ExpressionUtils.expression(c)
 
   /** Drain the listener bus so a task-metrics snapshot taken right after a
     * timed region includes every stage that completed inside it — stage

@@ -316,6 +316,19 @@ class CatalogSpec extends SparkTest {
     TableCatalog.addColumn(table, "ok_name", "bigint")
   }
 
+  test("a first commit with a header-breaking column name is refused, no manifest written") {
+    val table = freshTable()
+    val base = CodeTable.generate(spark,
+      GraphSpec(numCycles = 4, maxCycleLen = 4, extraArcsPerVertex = 0.2, seed = 36L))
+    // schema 0 is derived from this DataFrame: its names reach the header
+    intercept[IllegalArgumentException](
+      TableCatalog.commitAppend(spark, table, base.withColumn("a]}", lit(1L))))
+    assert(TableCatalog.currentSnapshotId(table) == -1)
+    val metaDir = java.nio.file.Paths.get(table, "metadata")
+    assert(!java.nio.file.Files.exists(metaDir) ||
+      !java.nio.file.Files.list(metaDir).anyMatch(_.getFileName.toString.startsWith("snap-")))
+  }
+
   test("commit type mismatches are refused, not silently cast to null on scan") {
     val table = freshTable()
     val base = CodeTable.generate(spark,

@@ -748,8 +748,8 @@ class SuperstepResumeSpec extends SparkTest {
     def step(st: org.apache.spark.sql.DataFrame, i: Int) =
       st.select(col("id"), greatest(col("value") - 7, lit(0L)).as("value"))
 
-    def changed(st: org.apache.spark.sql.DataFrame) =
-      st.filter(col("value") > 0).count()
+    def changed(ck: org.apache.spark.sql.GraftShims.Checkpoint) =
+      ck.df.filter(col("value") > 0).count()
 
     // run 1: stop after 3 iterations (simulated failure)
     val h1 = new graft.plans.Superstep(spark, "toy", Some(dir), snapshotEvery = 1)
@@ -774,8 +774,8 @@ class SuperstepResumeSpec extends SparkTest {
     val state0 = (0L until 10L).map(v => (v, v)).toDF("id", "value")
     def step(st: org.apache.spark.sql.DataFrame, i: Int) =
       st.select(col("id"), greatest(col("value") - 3, lit(0L)).as("value"))
-    def changed(st: org.apache.spark.sql.DataFrame) =
-      st.filter(col("value") > 0).count()
+    def changed(ck: org.apache.spark.sql.GraftShims.Checkpoint) =
+      ck.df.filter(col("value") > 0).count()
 
     val h = new graft.plans.Superstep(spark, "toy", Some(dir), snapshotEvery = 1)
     h.run(state0, maxIter = 2)(step)(changed)
@@ -806,5 +806,20 @@ class SuperstepResumeSpec extends SparkTest {
       java.nio.file.StandardOpenOption.APPEND)
     val h4 = new graft.plans.Superstep(spark, "toy", Some(dir), snapshotEvery = 1)
     assertThrows[IllegalStateException](h4.resume())
+  }
+
+  test("resume sweeps a stale manifest repair temp file") {
+    val s = spark; import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_resume_tmp").toString
+    val state0 = (0L until 10L).map(v => (v, v)).toDF("id", "value")
+    val h = new graft.plans.Superstep(spark, "toy", Some(dir), snapshotEvery = 1)
+    h.run(state0, maxIter = 2)((st, _) => st)(_.rows)
+    // left by a repair killed between its temp write and the atomic move
+    val stale = java.nio.file.Paths.get(dir, "toy.manifest.jsonl.repair-x")
+    java.nio.file.Files.writeString(stale, "partial")
+    val Some((_, startIter)) =
+      new graft.plans.Superstep(spark, "toy", Some(dir), snapshotEvery = 1).resume()
+    assert(startIter == 2)
+    assert(!java.nio.file.Files.exists(stale))
   }
 }

@@ -78,7 +78,7 @@ class PlanSpec extends SparkTest {
   test("stats-free checkpoint keeps superstep stats bounded") {
     val s = spark; import s.implicits._
     val arena = new graft.plans.CheckpointArena
-    var st = arena.fresh((0L until 100L).map(i => (i, i)).toDF("id", "comp"))
+    var st = arena.checkpoint((0L until 100L).map(i => (i, i)).toDF("id", "comp")).df
     val other = st.select(col("id").as("lid"), col("comp").as("lcomp"))
     // 15 self-join supersteps: with Dataset.localCheckpoint this squares
     // sizeInBytes each step (bitLength doubles); with the shim it stays flat
@@ -87,11 +87,43 @@ class PlanSpec extends SparkTest {
       val next = st.join(labels, st("comp") === labels("lid"), "left")
         .select(st("id"), least(st("comp"), coalesce(col("lcomp"), st("comp"))).as("comp"))
       val prev = st
-      st = arena.fresh(next)
+      st = arena.checkpoint(next).df
       arena.release(prev)
     }
     val bits = st.queryExecution.optimizedPlan.stats.sizeInBytes.bitLength
     assert(bits < 128, s"stats sizeInBytes bitLength=$bits — stats leaking across checkpoints")
+    arena.closeExcept()
+  }
+
+  test("checkpoint rides equal the same aggregates over the checkpointed frame") {
+    import org.apache.spark.sql.GraftShims.{CountIf, Max, Sum, XorSig}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", LongType, false),
+      StructField("v", LongType, true), StructField("flag", BooleanType, true),
+      StructField("st", IntegerType, false)))
+    val rows = Seq(Row(1L, 5L, true, 4), Row(2L, null, null, 12), Row(3L, -9L, false, 1),
+      Row(4L, 40L, true, 8), Row(5L, null, false, 3), Row(6L, 7L, null, 0))
+    // 6 rows in 8 slices: at least two partitions are empty
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 8), schema)
+    assert(df.rdd.mapPartitions(it => Iterator(it.size)).collect().contains(0))
+    val rides = Seq(CountIf("flag"), CountIf("st", 12), CountIf("st", 1),
+      Sum("v"), Max("v"), XorSig(Seq("id", "v")))
+    def aggOf(f: org.apache.spark.sql.DataFrame): Seq[Long] = {
+      val r = f.agg(
+        count(lit(1)),
+        sum(when(col("flag"), 1L).otherwise(0L)),
+        sum(when(col("st").bitwiseAND(12) =!= 0, 1L).otherwise(0L)),
+        sum(when(col("st").bitwiseAND(1) =!= 0, 1L).otherwise(0L)),
+        sum("v"), max("v"), bit_xor(xxhash64(col("id"), col("v")))).head()
+      (0 until 7).map(i => if (r.isNullAt(i)) 0L else r.getLong(i))
+    }
+    val arena = new graft.plans.CheckpointArena
+    // the empty frame reads 0 for every ride, Max included
+    for (frame <- Seq(df, df.filter(lit(false)))) {
+      val ck = arena.checkpoint(frame, rides: _*)
+      assert((ck.rows +: ck.rides) == aggOf(ck.df))
+    }
     arena.closeExcept()
   }
 
@@ -100,7 +132,7 @@ class PlanSpec extends SparkTest {
     val arena = new graft.plans.CheckpointArena
     val base = (0L until 1000L).map(i => (i, i * 2)).toDF("id", "v")
       .repartition(col("id"))
-    val chk = arena.fresh(base)
+    val chk = arena.checkpoint(base).df
     // 1) the checkpoint leaf must CARRY a usable hash partitioning
     val lr = chk.queryExecution.optimizedPlan
       .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
@@ -117,7 +149,7 @@ class PlanSpec extends SparkTest {
       // re-checkpointing `base` would reuse the coalesced first execution
       val base2 = (0L until 1000L).map(i => (i, i * 2)).toDF("id", "v")
         .repartition(col("id"))
-      val chk2 = arena.fresh(base2)
+      val chk2 = arena.checkpoint(base2).df
       val small = (0L until 500L).map(i => (i, "x")).toDF("id", "tag")
         .repartition(col("id"))
       // force a shuffle-requiring join (tiny tables would broadcast)

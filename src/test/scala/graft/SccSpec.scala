@@ -201,16 +201,6 @@ class SccSpec extends SparkTest {
     assert(gotAcc == expectedAcc)
   }
 
-  test("multi-hop BFS (hopsPerStep=2) produces the same decomposition") {
-    val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 4L), (4L, 3L), (2L, 3L))
-    val vertices = Seq(0L, 1L, 2L, 3L, 4L)
-    val run8 = Scc.components(spark, edgesDf(edges), vertsDf(vertices),
-      localSolveEdgeThreshold = 0, hopsPerStep = 2)
-    val got = run8.components
-    assert(got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
-      Oracle.tarjan(vertices, edges))
-  }
-
   test("skewed hub graph takes the salted pivot-set path and stays correct") {
     // TWO disconnected stars with bidirectional spokes: each hub's in/out
     // degree exceeds hubDegreeThreshold, and each star is one SCC. Round 0
