@@ -54,6 +54,29 @@ object SparkEntry {
   private def customerVertices(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "customer").select(col("c_custkey").as("id"))
 
+  /** Deletes the catalog table at `table`, if any: the catalog queries
+    * rebuild theirs from scratch each call, so snapshot 0 is deterministic. */
+  private def dropTable(table: String): Unit = {
+    val dir = java.nio.file.Paths.get(table)
+    if (java.nio.file.Files.exists(dir)) {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+        .iterator().asScala.foreach(java.nio.file.Files.delete)
+    }
+  }
+
+  /** Rebuilds `table` holding `files` as snapshot 0, REBALANCEd before the
+    * write (guide §6): AQE sizes the write partitions by bytes — one
+    * partition for a small table, advisory-sized chunks at scale — so the
+    * commit lands one file per lang instead of one per input partition and
+    * lang, whose per-file open cost dominated every downstream read (stats
+    * agg + manifest scan ran ~260 tasks for ~500 rows at 32 partitions).
+    * Returns the snapshot id. */
+  private[graft] def recreateTable(s: SparkSession, table: String, files: DataFrame): Int = {
+    dropTable(table)
+    graft.sources.TableCatalog.commitOverwrite(s, table, files.hint("rebalance"))
+  }
+
   /** SQL fragment mirroring [[derivedEdges]] exactly. */
   private val edgesSql =
     """edges AS (
@@ -351,20 +374,7 @@ object SparkEntry {
     // committed rows, sha invariant included.
     "q_catalog_scan" -> ((s, _) => {
       val spec = GraphSpec(numCycles = 64, maxCycleLen = 8, extraArcsPerVertex = 0.4, seed = 42L)
-      val dir = java.nio.file.Paths.get(Verify.auxCatalogTablePath)
-      if (java.nio.file.Files.exists(dir)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-      }
-      // REBALANCE before the write (guide §6): AQE sizes the write
-      // partitions by bytes — one partition for this tiny table, advisory-
-      // sized chunks at scale — so the commit lands 4 files (one per lang)
-      // instead of 32 input partitions × 4 langs = 128 tiny files, whose
-      // per-file open cost dominated every downstream read (stats agg +
-      // manifest scan ran ~260 tasks for ~500 rows).
-      graft.sources.TableCatalog.commitOverwrite(s, Verify.auxCatalogTablePath,
-        CodeTable.generate(s, spec).hint("rebalance"))
+      recreateTable(s, Verify.auxCatalogTablePath, CodeTable.generate(s, spec))
       graft.sources.TableCatalog.scan(s, Verify.auxCatalogTablePath,
         langs = Some(Seq("c", "py")))
         .select(col("fileId").as("file_id"), col("lang"), col("sha"))
@@ -381,12 +391,7 @@ object SparkEntry {
     // is a hash mismatch.
     "q_catalog_stats" -> ((s, _) => {
       val spec = GraphSpec(numCycles = 64, maxCycleLen = 8, extraArcsPerVertex = 0.4, seed = 7L)
-      val dir = java.nio.file.Paths.get(Verify.auxStatsTablePath)
-      if (java.nio.file.Files.exists(dir)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-      }
+      dropTable(Verify.auxStatsTablePath)
       graft.sources.TableCatalog.commitOverwrite(s, Verify.auxStatsTablePath,
         CodeTable.generate(s, spec), clusterBy = Seq("fileId"), clusterParts = 8)
       graft.sources.TableCatalog.scan(s, Verify.auxStatsTablePath,
@@ -407,16 +412,9 @@ object SparkEntry {
     // resurrection) is a hash mismatch.
     "q_catalog_evolve" -> ((s, _) => {
       val t = Verify.auxEvolveTablePath
-      val dir = java.nio.file.Paths.get(t)
-      if (java.nio.file.Files.exists(dir)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(java.nio.file.Files.delete)
-      }
       val spec = GraphSpec(numCycles = 64, maxCycleLen = 8, extraArcsPerVertex = 0.4, seed = 42L)
-      // rebalance-before-write on both generations: see q_catalog_scan
-      graft.sources.TableCatalog.commitOverwrite(s, t,
-        CodeTable.generate(s, spec).hint("rebalance"))
+      // rebalance-before-write on both generations: see recreateTable
+      recreateTable(s, t, CodeTable.generate(s, spec))
       graft.sources.TableCatalog.renameColumn(t, "repo", "repository")
       graft.sources.TableCatalog.addColumn(t, "stars", "bigint")
       val batch2 = CodeTable.generate(s,

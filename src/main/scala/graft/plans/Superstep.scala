@@ -75,13 +75,15 @@ final class Superstep(
       var delta = 1L
       while (delta > 0 && iter < maxIter) {
       val t0 = System.nanoTime()
+      val compiled0 = Superstep.classesCompiled
       val next = arena.checkpoint(step(state, iter), rides: _*)
       delta = changed(next)
       arena.release(state)
       state = next.df
       val wallMs = (System.nanoTime() - t0) / 1000000
       metrics += StepMetrics(iter, delta, wallMs)
-      graft.Log.v(s"superstep $name iter=$iter changed=$delta wallMs=$wallMs")
+      graft.Log.v(s"superstep $name iter=$iter changed=$delta wallMs=$wallMs " +
+        s"compiled=${Superstep.classesCompiled - compiled0}")
       snapshotDir.foreach { dir =>
         val snap = iter % snapshotEvery == 0 || delta == 0
         val snapPath = if (snap) {
@@ -141,6 +143,12 @@ final class Superstep(
 }
 
 object Superstep {
+  /** Classes Spark's code generator has compiled in this JVM so far (one per
+    * miss of its compiled-class cache, see [[graft.Sessions]]). A step that
+    * compiles more than a handful is thrashing that cache. */
+  def classesCompiled: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** State-size cutover for the per-loop AQE policy (see [[Superstep.run]]):
     * loops whose initial state has at least this many rows run with AQE off
     * (every shuffle partition is full — query-stage barriers are pure

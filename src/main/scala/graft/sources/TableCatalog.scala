@@ -273,11 +273,21 @@ object TableCatalog {
     id
   }
 
-  def snapshot(table: String, id: Int): Snapshot = {
+  def snapshot(table: String, id: Int): Snapshot =
+    snapshotIfPresent(table, id).getOrElse(throw new IllegalArgumentException(
+      s"table $table has no snapshot $id (expired or never committed)"))
+
+  /** Entries of manifest `id`, or Nil when the manifest does not exist —
+    * including when a concurrent [[expireSnapshots]] deletes it between a
+    * caller's directory listing and this read. */
+  private[graft] def entriesIfPresent(table: String, id: Int): Seq[ManifestEntry] =
+    snapshotIfPresent(table, id).fold(Seq.empty[ManifestEntry])(_.entries)
+
+  private def snapshotIfPresent(table: String, id: Int): Option[Snapshot] = {
     val f = manifestFile(table, id)
-    require(Files.exists(f),
-      s"table $table has no snapshot $id (expired or never committed)")
-    val lines = Files.readAllLines(f).asScala.toSeq.filter(_.nonEmpty)
+    val lines =
+      try Files.readAllLines(f).asScala.toSeq.filter(_.nonEmpty)
+      catch { case _: java.nio.file.NoSuchFileException => return None }
     val (schemas, curSchema, entryLines) = lines.headOption match {
       case Some(headerRe(cur, blob)) =>
         val ss = schemaRe.findAllMatchIn(blob).map { m =>
@@ -289,7 +299,7 @@ object TableCatalog {
         (ss, cur.toInt, lines.tail)
       case _ => (Nil, -1, lines) // legacy manifest: entries only
     }
-    Snapshot(id, entryLines.map {
+    Some(Snapshot(id, entryLines.map {
       case lineRe(p, l, sid, statsBlob) =>
         val stats = Option(statsBlob).toSeq.flatMap { blob =>
           boundsRe.findAllMatchIn(blob).map { m =>
@@ -304,7 +314,7 @@ object TableCatalog {
       // smaller table — fail loudly, never silently scan a subset
       case bad => throw new IllegalStateException(
         s"unparsable manifest entry in $f: $bad")
-    }, schemas, curSchema)
+    }, schemas, curSchema))
   }
 
   /** Append `files` (CodeTable schema) as a new snapshot: new data files
@@ -762,15 +772,11 @@ object TableCatalog {
       else using(Files.list(md))(_.iterator().asScala
         .flatMap(p => snapRe.unapplySeq(p.getFileName.toString).map(_.head.toInt))
         .toSeq)
-    val referenced = ids.flatMap { id =>
-      // a concurrent expireSnapshots may delete a manifest between the
-      // listing above and this read; its references were either re-carried
-      // by a newer snapshot or expired — skip it, don't fail the pass
-      if (!Files.exists(manifestFile(table, id))) Nil
-      else try snapshot(table, id).entries.map(e =>
-        Paths.get(e.path).toAbsolutePath.normalize.toString)
-      catch { case _: java.nio.file.NoSuchFileException => Nil }
-    }.toSet
+    // a concurrent expireSnapshots may delete a manifest between the
+    // listing above and this read; its references were either re-carried
+    // by a newer snapshot or expired — skip it, don't fail the pass
+    val referenced = ids.flatMap(entriesIfPresent(table, _)).map(e =>
+      Paths.get(e.path).toAbsolutePath.normalize.toString).toSet
     val cutoff = System.currentTimeMillis() - olderThanMillis
     val all = using(Files.walk(dataDir))(_.iterator().asScala
       .filter(p => Files.isRegularFile(p)).toSeq) // materialize before mutating

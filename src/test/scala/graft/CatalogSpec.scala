@@ -407,6 +407,38 @@ class CatalogSpec extends SparkTest {
     assert(TableCatalog.removeOrphans(table, olderThanMillis = -60000L) == 0)
   }
 
+  test("a manifest deleted after the listing reads as no entries, not a failure") {
+    val table = freshTable()
+    val gen = CodeTable.generate(spark,
+      GraphSpec(numCycles = 8, maxCycleLen = 4, extraArcsPerVertex = 0.3, seed = 34L))
+    TableCatalog.commitAppend(spark, table, gen)
+    TableCatalog.commitAppend(spark, table, gen)
+    assert(TableCatalog.entriesIfPresent(table, 0).nonEmpty)
+    // what a concurrent expireSnapshots does between removeOrphans' listing
+    // of metadata/ and its read of each listed manifest
+    java.nio.file.Files.delete(java.nio.file.Paths.get(table, "metadata", "snap-0.json"))
+    assert(TableCatalog.entriesIfPresent(table, 0).isEmpty)
+    assert(intercept[IllegalArgumentException](TableCatalog.snapshot(table, 0))
+      .getMessage.contains("no snapshot 0"))
+    // snapshot 1 carries every file of snapshot 0: nothing is orphaned
+    assert(TableCatalog.removeOrphans(table, olderThanMillis = -60000L) == 0)
+    assert(TableCatalog.scan(spark, table).count() == 2 * gen.count())
+  }
+
+  test("recreateTable REBALANCEs before the write: one data file per lang partition") {
+    val table = freshTable()
+    // q_catalog_scan's table, spread over 8 partitions as a table at scale
+    // arrives: written as is, each partition would land its own file per lang
+    val files = CodeTable.generate(spark,
+      GraphSpec(numCycles = 64, maxCycleLen = 8, extraArcsPerVertex = 0.4, seed = 42L))
+      .repartition(8)
+    val id = SparkEntry.recreateTable(spark, table, files)
+    val perLang = TableCatalog.snapshot(table, id).entries
+      .groupBy(_.lang).map { case (lang, es) => lang -> es.size }
+    assert(perLang.size == 4 && perLang.values.forall(_ == 1), s"files per lang: $perLang")
+    assert(TableCatalog.scan(spark, table).count() == files.count())
+  }
+
   test("sha256 row invariant survives the catalog round-trip") {
     val table = freshTable()
     val files = CodeTable.generate(spark,

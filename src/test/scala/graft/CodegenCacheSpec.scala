@@ -1,0 +1,59 @@
+package graft
+
+import org.apache.spark.sql.functions._
+
+import graft.operators.{LabelProp, PageRank, Scc, Triangles, Wcc}
+import graft.plans.Superstep
+
+/** Spark's compiled-class cache holds graft's working set
+  * ([[Sessions.CodegenCacheEntries]]): running the same operators again
+  * reuses the classes the first run compiled. At Spark's default of 100
+  * entries the second run recompiled 596 classes.
+  */
+class CodegenCacheSpec extends SparkTest {
+
+  /** Classes the second run may still compile: 4 to 22 were measured (the
+    * 100-entry default compiled 596). No cache size removes them, since
+    * each is a key the first run never made:
+    *   - AQE re-plans at run time, so a repeated query can pick another
+    *     join, or number its whole-stage stages in another order, and
+    *     `GeneratedIteratorForCodegenStage<N>` carries the number in its
+    *     source;
+    *   - the key includes the thread's context classloader, and executor
+    *     task threads compile an identical source again under a loader no
+    *     earlier compile used. The `linkgraph` benchmark shows the same:
+    *     a `SpecificPredicate`, its columnar-scan iterator, one stage and
+    *     one projection are recompiled this way on every pass.
+    */
+  private val MaxRecompiles = 40
+
+  private def operatorSequence(): Unit = {
+    val (edges, n, _) = fixture("sample_graph8")
+    val e = edgesDf(edges)
+    val v = vertsDf(0L until n)
+    // threshold 0: the FW-BW superstep loop, not the local solve
+    val scc = Scc.components(spark, e, v, localSolveEdgeThreshold = 0)
+    scc.components.collect()
+    scc.release()
+    val pr = PageRank.run(spark, e, v, maxIter = 5)
+    pr.ranks.collect()
+    pr.release()
+    val wcc = Wcc.run(spark, e, v)
+    wcc.components.collect()
+    wcc.release()
+    Triangles.total(spark, e).collect()
+    val seeds = v.filter(col("id") % 5 === 0).select(col("id"), (col("id") % 3).as("label"))
+    val lp = LabelProp.run(spark, e, v, seeds, iterations = 2)
+    lp.labels.collect()
+    lp.release()
+  }
+
+  test("a repeated operator sequence reuses its compiled classes") {
+    operatorSequence()
+    val before = Superstep.classesCompiled
+    operatorSequence()
+    val recompiled = Superstep.classesCompiled - before
+    assert(recompiled <= MaxRecompiles,
+      s"second run compiled $recompiled classes: the codegen cache is thrashing")
+  }
+}

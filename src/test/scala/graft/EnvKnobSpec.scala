@@ -16,8 +16,7 @@ class EnvKnobSpec extends AnyFunSuite {
     "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_BENCH_PAIRS",
     "SPARK_GRAFT_BENCH_4X",
     // library knobs
-    "GRAFT_VERBOSE", "GRAFT_AQE", "GRAFT_PAGE_SIZE", "GRAFT_CACHE_COMPRESS",
-    "GRAFT_AQE_MIN_ROWS", "GRAFT_TINY_LOOP_MAX_ROWS")
+    "GRAFT_VERBOSE", "GRAFT_AQE_MIN_ROWS", "GRAFT_TINY_LOOP_MAX_ROWS")
 
   test("src/main/scala reads exactly the listed env knobs, each by literal name") {
     val root = Paths.get("src/main/scala")
