@@ -26,9 +26,11 @@ final class LabelPropRun(val labels: DataFrame, releaseFn: () => Unit) {
   * reproducible — the driver oracle unrolls the same recurrence in SQL.
   *
   * Scale shape (per round): one join of the edge table against the labeled
-  * state — edges persisted hash(src) so the big side never moves — then a
-  * two-level aggregation (`(dst,label)` count with map-side partials, then
-  * arg-max per `dst`) and one co-partitioned join back into the
+  * state — edges persisted hash(src), but below `autoBroadcastJoinThreshold`
+  * (64 MB) the planner broadcasts the cached edge table against the
+  * default-stats state, one broadcast job per round — then a two-level
+  * aggregation (`(dst,label)` count with map-side partials, then arg-max
+  * per `dst`) and one co-partitioned join back into the
   * hash(id)-partitioned state. Shuffle bytes per round are O(labeled
   * out-degree), not O(E); rounds run on [[graft.plans.Superstep]], which
   * checkpoints each one, so lineage stays flat at any iteration count.

@@ -31,9 +31,12 @@ final class PageRankRun(
   * (north_star: allclose 1e-6 at convergence).
   *
   * Scale notes: contributions aggregate is a map-side-combinable hash agg on
-  * `dst`; the edge table is persisted hash-partitioned on `src` so the
-  * rank⨝edges join reuses one partitioning every superstep; AQE skew-join
-  * handles hub vertices.
+  * `dst`; the edge table is persisted hash-partitioned on `src`, which the
+  * rank⨝edges join reuses only as a shuffle join (the SHUFFLE_HASH hint
+  * above the size gate). Below `autoBroadcastJoinThreshold` (64 MB) the
+  * checkpointed state carries default stats and the planner broadcasts the
+  * cached edge table instead — re-broadcast every iteration: 3 jobs per
+  * iteration, 2 of them broadcasts (edges, dangling mass).
   */
 object PageRank {
 

@@ -2,8 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.GraftShims.XorSig
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.plans.{CheckpointArena, StepMetrics, Superstep}
 
@@ -31,9 +31,11 @@ final class WccRun(
   * — where naive min-label flooding needs O(diameter) supersteps and even
   * flooding + pointer-jumping was measured at 169 supersteps on the
   * reference's 46k-vertex `mid_tests` graph (vs 10 rounds for this).
-  * Each phase is one groupBy + join + distinct on the link set: all
-  * map-side-combinable hash aggregates, no driver data, skew-tolerant
-  * (AQE splits the heavy min-groups).
+  * Each phase takes every vertex's minimum neighbour with a window over
+  * its link rows — one exchange on multi-partition links, none on a single
+  * partition — and only small-star ends in a distinct. No driver data; a
+  * hub's rows form one window group in one task, as they would for an
+  * aggregate.
   *
   * Canonical component id = min member id. Convergence is detected by a
   * 64-bit content signature of the link set (xor of row hashes + count) going
@@ -50,36 +52,35 @@ object Wcc {
 
     val arena = new CheckpointArena
 
-    def largeStar(links: DataFrame): DataFrame = {
-      val sym = links.select(col("u"), col("v"))
-        .unionByName(links.select(col("v").as("u"), col("u").as("v")))
-      val mins = sym.groupBy("u").agg(min("v").as("mv"))
-        .select(col("u"), least(col("u"), col("mv")).as("m"))
-      sym.join(mins, Seq("u"))
+    val byU = Window.partitionBy("u")
+
+    // Every link in both directions; explode keeps the child's
+    // partitioning, a union would not.
+    def both(links: DataFrame): DataFrame =
+      links.select(explode(array(struct(col("u"), col("v")),
+        struct(col("v").as("u"), col("u").as("v")))).as("e")).select("e.*")
+
+    // Each vertex's larger neighbours move to its minimum. Minimums do not
+    // change when rows repeat, so no distinct here.
+    def largeStar(links: DataFrame): DataFrame =
+      both(links)
+        .withColumn("m", least(col("u"), min("v").over(byU)))
         .filter(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-    }
 
-    def smallStar(links: DataFrame): DataFrame = {
-      val oriented = links.select(
-        greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
-      val mins = oriented.groupBy("u").agg(min("v").as("m"))
-      oriented.join(mins, Seq("u"))
-        .select(explode(array(
-          struct(col("v").as("u"), col("m").as("v")),
-          struct(col("u").as("u"), col("m").as("v")))).as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v"))
+    // Input is largeStar's output, already oriented u > v: each u and its
+    // smaller neighbours move to their minimum. The distinct keeps the
+    // checkpointed state a set, which the XorSig + row-count test needs.
+    def smallStar(links: DataFrame): DataFrame =
+      links.withColumn("m", min("v").over(byU))
+        .select(explode(array(col("u"), col("v"))).as("u"), col("m").as("v"))
         .filter(col("u") =!= col("v"))
         .distinct()
-    }
 
     val harness = new Superstep(spark, "wcc", snapshotDir, arena = arena,
       tinyLoop = true)
-    // largeStar's first distinct dedupes anyway; an input distinct here
-    // would be one more full shuffle of the edge table.
+    // smallStar's distinct dedupes the first round anyway; an input
+    // distinct here would be one more full shuffle of the edge table.
     val links0 = edges
       .filter(col("src") =!= col("dst"))
       .select(col("src").as("u"), col("dst").as("v"))
@@ -97,12 +98,12 @@ object Wcc {
       // The 64-bit signature alone leaves a ~2^-64/round early-termination
       // window (an xor-hash collision). On FIRST stability, one exact
       // confirmation closes it: counts already match (part of sig) and both
-      // sides are distinct link sets, so one-direction set difference being
-      // empty proves equality. Cost: one extra job per RUN, not per round.
+      // sides are distinct link sets, so an empty anti-join proves equality.
+      // Cost: one extra job per RUN, not per round.
       val changed =
         if (!prevSig.contains(sig)) 1L
         else if (prevState != null &&
-          !ck.df.select("u", "v").except(prevState.select("u", "v")).isEmpty) {
+          !ck.df.join(prevState, Seq("u", "v"), "left_anti").isEmpty) {
           graft.Log.v("wcc: signature collision — exact check forced another round")
           1L
         } else 0L
@@ -115,9 +116,7 @@ object Wcc {
 
     // At fixpoint every link connects a vertex directly to its component
     // min. comp(v) = min neighbor (or self for roots/isolated vertices).
-    val sym = links.select(col("u"), col("v"))
-      .unionByName(links.select(col("v").as("u"), col("u").as("v")))
-    val comps = sym.groupBy(col("u").as("id")).agg(min("v").as("mv"))
+    val comps = both(links).groupBy(col("u").as("id")).agg(min("v").as("mv"))
     val out = vertices.select("id")
       .join(comps, Seq("id"), "left")
       .select(col("id"), least(col("id"), coalesce(col("mv"), col("id"))).as("comp"))

@@ -74,30 +74,32 @@ final class Superstep(
       var iter = startIter
       var delta = 1L
       while (delta > 0 && iter < maxIter) {
-      val t0 = System.nanoTime()
-      val compiled0 = Superstep.classesCompiled
-      val next = arena.checkpoint(step(state, iter), rides: _*)
-      delta = changed(next)
-      arena.release(state)
-      state = next.df
-      val wallMs = (System.nanoTime() - t0) / 1000000
-      metrics += StepMetrics(iter, delta, wallMs)
-      graft.Log.v(s"superstep $name iter=$iter changed=$delta wallMs=$wallMs " +
-        s"compiled=${Superstep.classesCompiled - compiled0}")
-      snapshotDir.foreach { dir =>
-        val snap = iter % snapshotEvery == 0 || delta == 0
-        val snapPath = if (snap) {
-          val p = s"$dir/$name.state_$iter"
-          state.write.mode("overwrite").parquet(p)
-          jstr(p)
-        } else "null"
-        val line =
-          s"""{"name":${jstr(name)},"iter":$iter,"changed":$delta,"wallMs":$wallMs,"snapshot":$snapPath}\n"""
-        Files.writeString(
-          manifestPath.get, line,
-          StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-      }
-      iter += 1
+        Superstep.labelled(spark, s"graft $name step $iter") {
+          val t0 = System.nanoTime()
+          val compiled0 = Superstep.classesCompiled
+          val next = arena.checkpoint(step(state, iter), rides: _*)
+          delta = changed(next)
+          arena.release(state)
+          state = next.df
+          val wallMs = (System.nanoTime() - t0) / 1000000
+          metrics += StepMetrics(iter, delta, wallMs)
+          graft.Log.v(s"superstep $name iter=$iter changed=$delta wallMs=$wallMs " +
+            s"compiled=${Superstep.classesCompiled - compiled0}")
+          snapshotDir.foreach { dir =>
+            val snap = iter % snapshotEvery == 0 || delta == 0
+            val snapPath = if (snap) {
+              val p = s"$dir/$name.state_$iter"
+              state.write.mode("overwrite").parquet(p)
+              jstr(p)
+            } else "null"
+            val line =
+              s"""{"name":${jstr(name)},"iter":$iter,"changed":$delta,"wallMs":$wallMs,"snapshot":$snapPath}\n"""
+            Files.writeString(
+              manifestPath.get, line,
+              StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+          }
+        }
+        iter += 1
       }
     }
     if (aqeOff) Aqe.off(spark)(loop())
@@ -148,6 +150,22 @@ object Superstep {
     * compiles more than a handful is thrashing that cache. */
   def classesCompiled: Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Spark's call-site properties: when both are set, jobs and stages are
+    * named by them and Spark skips the stack walk (`Utils.getCallSite`) it
+    * otherwise makes for every new RDD and query. */
+  private val CallSiteKeys = Seq("callSite.short", "callSite.long")
+
+  /** Run `f` with both call-site properties set to `label` on this thread
+    * (a superstep labels its jobs `graft <name> step <iter>`); restores the
+    * previous values, also when `f` throws. */
+  private def labelled[T](spark: SparkSession, label: String)(f: => T): T = {
+    val sc = spark.sparkContext
+    val prev = CallSiteKeys.map(sc.getLocalProperty)
+    CallSiteKeys.foreach(sc.setLocalProperty(_, label))
+    try f
+    finally CallSiteKeys.zip(prev).foreach { case (k, v) => sc.setLocalProperty(k, v) }
+  }
 
   /** State-size cutover for the per-loop AQE policy (see [[Superstep.run]]):
     * loops whose initial state has at least this many rows run with AQE off

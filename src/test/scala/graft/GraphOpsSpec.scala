@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Degrees, PageRank, Triangles, Wcc}
+import graft.operators.{Degrees, PageRank, Triangles, Wcc, WccRun}
 import graft.sources.{GraphGen, GraphSpec}
 
 class WccSpec extends SparkTest {
@@ -32,6 +32,85 @@ class WccSpec extends SparkTest {
     val run3 = Wcc.run(spark, GraphGen.edges(spark, spec), GraphGen.vertices(spark, spec))
     val got = run3.components
     assert(got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == expected)
+  }
+
+  private def labels(run: WccRun): Map[Long, Long] =
+    try run.components.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    finally run.release()
+
+  /** Stages of each round's checkpoint job: the first job under each
+    * `graft wcc step <i>` label (the exact-confirmation job of the last
+    * round runs after it under the same label). When each star phase joined
+    * a min-aggregate back and ran a distinct, the 1-partition rounds here
+    * took 9, 9, 7, 9 and 9 stages.
+    */
+  private def stagesPerRound(parts: Int): (Vector[Int], Int) = {
+    val spec = GraphSpec(numCycles = 40, maxCycleLen = 6, extraArcsPerVertex = 1.0, seed = 11L)
+    val edges = GraphGen.edges(spark, spec).repartition(parts)
+    val (run, jobs) = jobsOf(Wcc.run(spark, edges, GraphGen.vertices(spark, spec)))
+    val rounds = run.metrics.size
+    run.release()
+    val steps = jobs.filter(j => j._1 != null && j._1.startsWith("graft wcc step "))
+    (steps.groupBy(_._1).values.map(_.head._2.size).toVector, rounds)
+  }
+
+  test("a wcc round is one stage on one partition and at most four on four") {
+    val (one, rounds1) = stagesPerRound(1)
+    assert(one.size == rounds1 && rounds1 >= 3, s"$rounds1 rounds, step jobs $one")
+    assert(one.forall(_ == 1), s"stages per round at 1 partition: $one")
+    val (four, rounds4) = stagesPerRound(4)
+    assert(four.size == rounds4, s"$rounds4 rounds, step jobs $four")
+    assert(four.forall(_ <= 4), s"stages per round at 4 partitions: $four")
+  }
+
+  /** Random graphs, seeded, against union-find. Each case mixes hub stars
+    * (the skewed groups: one vertex holding most of the rows), a long chain
+    * over shuffled ids, self-loops and duplicated edges in both directions,
+    * any of which may be empty, split over 1, 4 or 8 input partitions.
+    */
+  test("wcc equals union-find on seeded random graphs (ScalaCheck)") {
+    import org.scalacheck.{Gen, Prop, Shrink, Test}
+    import org.scalacheck.rng.Seed
+
+    final case class Case(n: Int, edges: Vector[(Long, Long)], parts: Int)
+    def vertex(n: Int): Gen[Long] = Gen.choose(0L, n - 1L)
+    def star(n: Int): Gen[Vector[(Long, Long)]] = for {
+      hub <- vertex(n)
+      k <- Gen.choose(0, 150)
+      spokes <- Gen.listOfN(k, Gen.zip(vertex(n), Gen.prob(0.5)))
+    } yield spokes.map { case (v, in) => if (in) (v, hub) else (hub, v) }.toVector
+    val caseGen = for {
+      n <- Gen.choose(1, 400)
+      stars <- Gen.listOfN(3, star(n))
+      chainLen <- Gen.choose(0, n)
+      keys <- Gen.listOfN(n, Gen.long)
+      loops <- Gen.listOf(vertex(n).map(v => (v, v)))
+      dups <- Gen.listOf(Gen.zip(vertex(n), vertex(n)))
+      parts <- Gen.oneOf(1, 4, 8)
+    } yield {
+      val chain = (0L until n.toLong).sortBy(i => keys(i.toInt)).take(chainLen)
+      val links = chain.zip(chain.drop(1))
+      Case(n, stars.flatten.toVector ++ links ++ loops ++ dups ++ dups.map(_.swap), parts)
+    }
+    implicit val shrinkCase: Shrink[Case] = Shrink { c =>
+      Shrink.shrinkContainer[Vector, (Long, Long)].shrink(c.edges).map(es => c.copy(edges = es))
+    }
+    val seen = scala.collection.mutable.Set.empty[Int]
+    def check(c: Case): Boolean = {
+      seen += c.parts
+      val got = labels(Wcc.run(spark, edgesDf(c.edges).repartition(c.parts),
+        vertsDf(0L until c.n)))
+      got == Oracle.wcc(0L until c.n, c.edges)
+    }
+    val prop = Prop.forAll(caseGen)(check)
+    val params = Test.Parameters.default.withMinSuccessfulTests(12).withWorkers(1)
+      .withInitialSeed(Seed(20261018L))
+    val result = Test.check(params, prop)
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
+    assert(seen == Set(1, 4, 8), s"partition counts drawn: $seen")
+
+    // no edges at all, at every partition count
+    for (p <- Seq(1, 4, 8)) assert(check(Case(5, Vector.empty, p)), s"empty edges, $p partitions")
   }
 }
 

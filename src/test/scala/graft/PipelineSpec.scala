@@ -808,6 +808,34 @@ class SuperstepResumeSpec extends SparkTest {
     assertThrows[IllegalStateException](h4.resume())
   }
 
+  test("superstep jobs carry a step label; call-site properties restored, also on throw") {
+    val s = spark; import s.implicits._
+    val sc = spark.sparkContext
+    val state0 = (0L until 10L).map(v => (v, v)).toDF("id", "value")
+    val h = new graft.plans.Superstep(spark, "lbl")
+    sc.setLocalProperty("callSite.short", "outer") // callSite.long stays unset
+    try {
+      val (_, jobs) = jobsOf(
+        h.run(state0, maxIter = 2)((st, _) => st.select(col("id"), (col("value") + 1).as("value")))(_.rows))
+      for (i <- 0 until 2) {
+        val step = jobs.filter(_._1 == s"graft lbl step $i")
+        assert(step.nonEmpty && step.forall(_._2.forall(_ == s"graft lbl step $i")), jobs)
+      }
+      assert(sc.getLocalProperty("callSite.short") == "outer")
+      assert(sc.getLocalProperty("callSite.long") == null)
+
+      val boom = intercept[IllegalStateException] {
+        h.run(state0, maxIter = 3) { (st, i) =>
+          assert(sc.getLocalProperty("callSite.long") == s"graft lbl step $i")
+          if (i == 1) throw new IllegalStateException("boom") else st
+        }(_.rows)
+      }
+      assert(boom.getMessage == "boom")
+      assert(sc.getLocalProperty("callSite.short") == "outer")
+      assert(sc.getLocalProperty("callSite.long") == null)
+    } finally sc.setLocalProperty("callSite.short", null)
+  }
+
   test("resume sweeps a stale manifest repair temp file") {
     val s = spark; import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_resume_tmp").toString

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one per JVM). */
@@ -25,6 +26,24 @@ trait SparkTest extends AnyFunSuite {
     val s = spark
     import s.implicits._
     vertices.map(v => (v, u(v))).toDF("id", "isU")
+  }
+
+  /** Run `f` and return, in start order, each job it started as its
+    * `callSite.short` label (null if unset) and the names of its stages. */
+  def jobsOf[T](f: => T): (T, Vector[(String, Seq[String])]) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobs.add((Option(js.properties).map(_.getProperty("callSite.short")).orNull,
+          js.stageInfos.map(_.name)))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = f
+      GraftShims.drainListenerBus(sc)
+      (r, scala.jdk.CollectionConverters.IterableHasAsScala(jobs).asScala.toVector)
+    } finally sc.removeSparkListener(listener)
   }
 
   /** Load a reference-format graph fixture from test resources. */
