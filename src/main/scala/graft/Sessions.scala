@@ -6,6 +6,10 @@ import org.apache.spark.sql.SparkSession
   * gets the same scale-oriented defaults: AQE on (runtime re-plan + skew-join
   * splitting), shuffle partitions sized to the actual core count rather than
   * the 200 default, and UTC so timestamp results match the DuckDB oracle.
+  *
+  * AQE serves one-shot queries only: a checkpoint plans and runs its plan
+  * without it (see [[org.apache.spark.sql.GraftShims]]), so superstep loops
+  * never go through AQE, and graft never changes a session's conf.
   */
 object Sessions {
   /** Entries of Spark's JVM-wide compiled-class cache

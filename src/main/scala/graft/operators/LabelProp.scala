@@ -26,9 +26,9 @@ final class LabelPropRun(val labels: DataFrame, releaseFn: () => Unit) {
   * reproducible — the driver oracle unrolls the same recurrence in SQL.
   *
   * Scale shape (per round): one join of the edge table against the labeled
-  * state — edges persisted hash(src), but below `autoBroadcastJoinThreshold`
-  * (64 MB) the planner broadcasts the cached edge table against the
-  * default-stats state, one broadcast job per round — then a two-level
+  * state — edges persisted hash(src); below `autoBroadcastJoinThreshold`
+  * (64 MB) the checkpointed state's exact statistics make the planner
+  * broadcast the STATE side, one broadcast job per round — then a two-level
   * aggregation (`(dst,label)` count with map-side partials, then arg-max
   * per `dst`) and one co-partitioned join back into the
   * hash(id)-partitioned state. Shuffle bytes per round are O(labeled
@@ -67,12 +67,9 @@ object LabelProp {
       .withColumn("label", col("seedLabel"))
       .repartition(col("id"))
 
-    // The per-round plan touches only the state, its aggregates and the
-    // co-partitioned eBySrc — the PageRank/WCC shape, so the tiny-loop
-    // policy applies. Exactly `iterations` rounds: the recurrence has no
-    // convergence test, and only an empty state (nothing to propagate)
-    // stops it earlier.
-    val harness = new Superstep(spark, "labelprop", arena = arena, tinyLoop = true)
+    // Exactly `iterations` rounds: the recurrence has no convergence test,
+    // and only an empty state (nothing to propagate) stops it earlier.
+    val harness = new Superstep(spark, "labelprop", arena = arena)
     val (state, _) = harness.run(state0, iterations) { (st, _) =>
       val contrib = eBySrc
         .join(st.filter(col("label").isNotNull)

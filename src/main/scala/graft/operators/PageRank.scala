@@ -32,11 +32,10 @@ final class PageRankRun(
   *
   * Scale notes: contributions aggregate is a map-side-combinable hash agg on
   * `dst`; the edge table is persisted hash-partitioned on `src`, which the
-  * rank⨝edges join reuses only as a shuffle join (the SHUFFLE_HASH hint
-  * above the size gate). Below `autoBroadcastJoinThreshold` (64 MB) the
-  * checkpointed state carries default stats and the planner broadcasts the
-  * cached edge table instead — re-broadcast every iteration: 3 jobs per
-  * iteration, 2 of them broadcasts (edges, dangling mass).
+  * rank⨝edges join reuses as a co-partitioned shuffle-hash join at every
+  * size (the SHUFFLE_HASH hints in `update`): no edge broadcast, so an
+  * iteration runs its checkpoint job plus one broadcast job for the 1-row
+  * dangling mass.
   */
 object PageRank {
 
@@ -89,29 +88,25 @@ object PageRank {
       val danglingDf = state.filter(col("outDeg") === 0)
         .agg(coalesce(sum("rank"), lit(0.0)).as("danglingMass"))
 
-      // SHUFFLE_HASH on BIG graphs only (guide §3.1): above the AQE-off
-      // size cutover the checkpointed state carries default stats and the
-      // planner's fallback was sort-merge — re-SORTING the cached edge
-      // table and the state on every iteration; hash-building the state /
-      // contribs side streams the big sides unsorted, and both joins stay
-      // co-partitioned (state hash(id), edges hash(src), contribs hash(id)
-      // from its own aggregation), so no new exchange appears. BELOW the
-      // cutover AQE is on and the forced hint measured 2× SLOWER than
-      // AQE's own broadcast/coalesce choices — so the hint follows the
-      // same size gate as the AQE policy. Float-sum order changes only
-      // within partitions, which the rank outputs already tolerate (ranks
-      // round to 6 dp before ranking; the oracle sums in its own order) —
-      // gated by the hash-exact oracle compare.
-      def sized(df: DataFrame): DataFrame =
-        if (n >= graft.plans.Superstep.aqeOffMinStateRows) df.hint("shuffle_hash") else df
-      val contribs = sized(state)
+      // SHUFFLE_HASH on both joins (guide §3.1): the state is hash(id), the
+      // edges hash(src) and contribs hash(id) from its own aggregation, so
+      // hash-building the state / contribs side keeps both joins
+      // co-partitioned with no new exchange. Unhinted, exact statistics
+      // below `autoBroadcastJoinThreshold` broadcast the cached edge table
+      // again on every iteration (a superstep is a fresh query), and above
+      // it the sort-merge fallback re-sorts the edges and the state every
+      // iteration. Float-sum order changes only within partitions, which
+      // the rank outputs already tolerate (ranks round to 6 dp before
+      // ranking; the oracle sums in its own order) — gated by the
+      // hash-exact oracle compare.
+      val contribs = state.hint("shuffle_hash")
         .join(edgesBySrc, state("id") === edgesBySrc("src"))
         .groupBy(col("dst").as("id"))
         .agg(sum(col("rank") / col("outDeg")).as("contrib"))
 
       state
         .select(col("id"), col("outDeg"), col("rank").as("prevRank"))
-        .join(sized(contribs), Seq("id"), "left")
+        .join(contribs.hint("shuffle_hash"), Seq("id"), "left")
         .crossJoin(broadcast(danglingDf))
         .select(
           col("id"),
@@ -124,8 +119,7 @@ object PageRank {
         .drop("prevRank")
     }
 
-    val harness = new Superstep(spark, "pagerank", snapshotDir, arena = arena,
-      tinyLoop = true)
+    val harness = new Superstep(spark, "pagerank", snapshotDir, arena = arena)
     val (converged, metrics) = harness.run(state0, maxIter, rides = Seq(CountIf("changed"))) {
       (state, _) => update(state)
     } (_.rides(0))

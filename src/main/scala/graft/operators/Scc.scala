@@ -423,14 +423,7 @@ object Scc {
       edgesWithinVertices: Boolean = false,
       trimCapFraction: Double = 0.001,
       trimCapMinRemaining: Long = 1000000L,
-      fragmentCompactionThreshold: Int = 64): SccRun =
-    // Size-aware AQE policy (see [[graft.plans.Aqe]], [[graft.plans.Superstep]]):
-    // once the first materialization reveals a big graph, the whole run —
-    // trim sweeps, pivot election, BFS, epilogue — goes AQE-off (per-shuffle
-    // query-stage barriers are pure serial-floor latency when every
-    // partition is full); small graphs keep AQE's partition coalescing.
-    // scoped(): the previous setting is restored even on failure.
-    graft.plans.Aqe.scoped(spark) { aqeOffForRun =>
+      fragmentCompactionThreshold: Int = 64): SccRun = {
     import spark.implicits._
     val arena = new CheckpointArena
 
@@ -595,7 +588,6 @@ object Scc {
         assigned = parts.map(_.count()).sum
         live = arena.checkpoint(liveDf.repartition(col("id"))).df
         liveCount = lc
-        if (lc >= graft.plans.Superstep.aqeOffMinStateRows) aqeOffForRun()
         liveIdPart = true
         round = r + 1
         preTrimDone = false // conservatively run per-round trims
@@ -609,12 +601,11 @@ object Scc {
         // here, the two terms its (8,32) anti-scaling was made of.
         // The whole-graph phase stats ride the same action — no separate
         // agg job (VERDICT r4 #6): Σoc = edge total; full-graph max degrees
-        // feed the salting gate. All three gate heuristics only (local-solve
-        // routing, AQE policy, the salting gate).
+        // feed the salting gate. Both gate heuristics only (local-solve
+        // routing, the salting gate).
         val init = arena.checkpoint(trimDegreesPlan(eBySrc, verts),
           CountIf("dead"), Sum("oc"), Max("oc"), Max("ic"))
         numEdges = init.rides(1)
-        if (numEdges >= graft.plans.Superstep.aqeOffMinStateRows) aqeOffForRun()
         fullMaxDegs = Some((init.rides(2), init.rides(3)))
         graft.Log.v(s"scc: edges materialized ($numEdges)")
         wholeGraphLocal = numEdges <= localSolveEdgeThreshold && localSolveEdgeThreshold > 0
@@ -1013,14 +1004,15 @@ object Scc {
             val cols =
               if (singlePivot) Seq(col("_eTo").as("id"), lit(fwd).as("_fwd"))
               else Seq(col("_eTo").as("id"), col("pivot"), lit(fwd).as("_fwd"))
-            // SHUFFLE_HASH with the FRONTIER as build side (guide §3.1): the
-            // big-graph path runs AQE-off, where the checkpointed state's
-            // default stats make the planner fall back to sort-merge — which
-            // re-SORTS the cached edge table on every BFS step. Hash-probing
-            // a per-partition frontier map streams the edge partitions
-            // unsorted; both sides stay co-partitioned, so the join still
-            // adds no exchange. Build size is bounded by the frontier's
-            // partition slice (≤ state/numPartitions rows).
+            // SHUFFLE_HASH with the FRONTIER as build side (guide §3.1):
+            // unhinted, the frontier of a small checkpointed state is
+            // broadcast on every hop (the state's exact statistics sit below
+            // the broadcast threshold) and a big one falls back to
+            // sort-merge, which re-SORTS the cached edge table on every BFS
+            // step. Hash-probing a per-partition frontier map streams the
+            // edge partitions unsorted; both sides stay co-partitioned, so
+            // the join adds no exchange. Build size is bounded by the
+            // frontier's partition slice (≤ state/numPartitions rows).
             frontier.hint("shuffle_hash").join(e, col("id") === col("_eFrom"))
               .select(cols: _*)
           }
@@ -1053,8 +1045,9 @@ object Scc {
             val outCols: Seq[Column] =
               if (slim) Seq(col("id")) else Seq(col("id"), col("pivot"))
             // hash-build the hit side (bounded by the frontier's targets):
-            // the AQE-off sort-merge fallback re-sorted the whole state
-            // every step (see the frontier-join note above)
+            // a sort-merge fallback would re-sort the whole state every
+            // step, a broadcast would rebuild every hop (see the
+            // frontier-join note above)
             st.join(hitAgg.hint("shuffle_hash"), Seq("id"), "left")
               .select(outCols :+
                 pack(coalesce(col("hitF"), lit(false)),

@@ -77,8 +77,7 @@ object Wcc {
         .filter(col("u") =!= col("v"))
         .distinct()
 
-    val harness = new Superstep(spark, "wcc", snapshotDir, arena = arena,
-      tinyLoop = true)
+    val harness = new Superstep(spark, "wcc", snapshotDir, arena = arena)
     // smallStar's distinct dedupes the first round anyway; an input
     // distinct here would be one more full shuffle of the edge table.
     val links0 = edges
@@ -99,11 +98,14 @@ object Wcc {
       // window (an xor-hash collision). On FIRST stability, one exact
       // confirmation closes it: counts already match (part of sig) and both
       // sides are distinct link sets, so an empty anti-join proves equality.
-      // Cost: one extra job per RUN, not per round.
+      // Cost: one extra job per RUN, not per round. Both sides are
+      // checkpoints partitioned alike (hash(u, v) from the distinct, or one
+      // partition each), so a hash-built anti-join runs in place; unhinted,
+      // the small previous state is broadcast by a job of its own.
       val changed =
         if (!prevSig.contains(sig)) 1L
         else if (prevState != null &&
-          !ck.df.join(prevState, Seq("u", "v"), "left_anti").isEmpty) {
+          !ck.df.join(prevState.hint("shuffle_hash"), Seq("u", "v"), "left_anti").isEmpty) {
           graft.Log.v("wcc: signature collision — exact check forced another round")
           1L
         } else 0L

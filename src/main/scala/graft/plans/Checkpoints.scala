@@ -4,7 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftShims}
 import org.apache.spark.sql.GraftShims.{Checkpoint, Ride}
 
-/** Tracks the stats-free checkpoints (see [[GraftShims.checkpoint]]) an
+/** Tracks the measured-statistics checkpoints (see [[GraftShims.checkpoint]]) an
   * iterative algorithm creates, so superseded superstep states can be
   * unpersisted promptly and everything else released when the algorithm
   * finishes — the cache-discipline half of SURVEY.md §4(c).

@@ -3,7 +3,8 @@ package org.apache.spark.sql
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{UnsafeRow, XXH64}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.execution.{GraftPlanning, LogicalRDD, SQLExecutionRDD}
 import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.Platform
@@ -11,8 +12,8 @@ import org.apache.spark.util.AccumulatorV2
 
 /** Spark-internal access shim (hence the package) for one operation the
   * public Dataset API cannot express: an eager lineage-cutting checkpoint
-  * that preserves the physical OUTPUT PARTITIONING but does NOT carry the
-  * source plan's estimated statistics forward.
+  * that preserves the physical OUTPUT PARTITIONING and carries the
+  * MEASURED size of what it stored, not the source plan's estimate.
   *
   * Why not `Dataset.localCheckpoint`: it preserves the optimized plan's
   * stats on the resulting `LogicalRDD` (`originStats`). In an iterative
@@ -22,8 +23,17 @@ import org.apache.spark.util.AccumulatorV2
   * `SizeInBytesOnlyStatsPlanVisitor` ends up spending minutes per step in
   * `BigInteger.multiply` (observed via jstack: ~100 s/step by superstep 20
   * on a 50k-row state). Rebuilding from the materialized `InternalRow` RDD
-  * resets the leaf to default stats; AQE re-plans join strategies from
-  * runtime shuffle sizes anyway.
+  * gives the leaf `Statistics(bytes, Some(rows))` counted while the rows
+  * are packed: measured fresh at every checkpoint, so they cannot compound
+  * across supersteps, and exact, so the planner picks joins from true
+  * sizes (a join of two single-partition checkpoints needs no exchange;
+  * default statistics exceed `spark.sql.maxSinglePartitionBytes`).
+  *
+  * Why not AQE: the checkpointed plan is planned and run without adaptive
+  * execution, whatever the session says. Its inputs are checkpoints and
+  * caches whose sizes are known, so re-planning at every shuffle would only
+  * add a query-stage job per exchange per superstep; and the choice is made
+  * here, per plan, so nothing writes the shared session's conf.
   *
   * Why not `createDataFrame(rdd)`: it loses `outputPartitioning`, so every
   * superstep re-shuffles the full state even when the step's joins are on
@@ -74,18 +84,19 @@ object GraftShims {
     */
   final case class Checkpoint(df: DataFrame, handle: RDD[_], rows: Long, rides: IndexedSeq[Long])
 
-  /** The one fold behind every ride: slot 0 counts rows, slot i+1 folds
-    * ride i with + (counts, sums), max or xor — all associative and
-    * commutative, so task partials merge in any order.
+  /** The one fold behind every ride: slot 0 counts rows, slot 1 their
+    * packed bytes, slot i+2 folds ride i with + (counts, sums), max or xor
+    * — all associative and commutative, so task partials merge in any
+    * order.
     */
   private final class RideAccumulator(rides: Array[Ride], idx: Array[Array[Int]])
       extends AccumulatorV2[InternalRow, Array[Long]] {
-    private val zero = 0L +: rides.map { case _: Max => Long.MinValue; case _ => 0L }
+    private val zero = Array(0L, 0L) ++ rides.map { case _: Max => Long.MinValue; case _ => 0L }
     private var acc = zero.clone()
 
     private def fold(slot: Int, a: Long, b: Long): Long =
-      if (slot == 0) a + b
-      else rides(slot - 1) match {
+      if (slot < 2) a + b
+      else rides(slot - 2) match {
         case _: Max => math.max(a, b)
         case _: XorSig => a ^ b
         case _ => a + b
@@ -104,6 +115,11 @@ object GraftShims {
 
     override def add(r: InternalRow): Unit = {
       acc(0) += 1L
+      // a rare non-UnsafeRow row counts as its fixed-width UnsafeRow size
+      acc(1) += (r match {
+        case u: UnsafeRow => u.getSizeInBytes
+        case o => UnsafeRow.calculateBitSetWidthInBytes(o.numFields) + 8 * o.numFields
+      })
       var i = 0
       while (i < rides.length) {
         val c = idx(i)
@@ -123,7 +139,7 @@ object GraftShims {
             }
             h
         }
-        acc(i + 1) = fold(i + 1, acc(i + 1), v)
+        acc(i + 2) = fold(i + 2, acc(i + 2), v)
         i += 1
       }
     }
@@ -153,8 +169,9 @@ object GraftShims {
 
   /** Eagerly materialize `df` into a cached, lineage-truncated RDD and wrap
     * it in a fresh DataFrame with the same schema, output partitioning and
-    * ordering but default (not inherited) stats. The row count and every
-    * ride fold in the same single job.
+    * ordering, and statistics measured on the stored rows (not inherited).
+    * The plan is planned and run without AQE (see the object doc). The row
+    * count, the byte count and every ride fold in the same single job.
     *
     * EXACTNESS of the ridden values: the fold runs in the final map of the
     * one count() below, i.e. inside that job's ResultStage tasks. Spark's
@@ -173,29 +190,24 @@ object GraftShims {
     */
   def checkpoint(df: DataFrame, rides: Seq[Ride]): Checkpoint = {
     val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val qe = df.queryExecution
+    val physical = GraftPlanning.withoutAqe(df.queryExecution)
     val acc = new RideAccumulator(rides.toArray, bind(df, rides))
     session.sparkContext.register(acc, "graft.ckpt")
-    val nf = qe.analyzed.output.size
-    val packed = qe.toRdd.mapPartitions(it => PackedRowBatch.pack(it, nf, acc.add))
+    val nf = physical.output.size
+    // what `QueryExecution.toRdd` does: SQLExecutionRDD carries the SQL conf
+    // to the tasks
+    val packed = new SQLExecutionRDD(physical.execute(), session.sessionState.conf)
+      .mapPartitions(it => PackedRowBatch.pack(it, nf, acc.add))
     packed.persist(StorageLevel.MEMORY_AND_DISK)
     packed.localCheckpoint()
     packed.count()
     val rows = packed.mapPartitions(_.flatMap(_.rowIterator), preservesPartitioning = true)
-    // AdaptiveSparkPlanExec reports UnknownPartitioning at the top even
-    // after finalization — unwrap to the final physical plan or the
-    // partitioning is silently lost and every downstream same-key join
-    // re-exchanges the state (caught by PlanSpec).
-    val physical = qe.executedPlan match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.finalPhysicalPlan
-      case p => p
-    }
-    val logical = LogicalRDD(
-      physical.output, rows, physical.outputPartitioning, physical.outputOrdering)(session)
     val folded = acc.value
+    val logical = LogicalRDD(
+      physical.output, rows, physical.outputPartitioning, physical.outputOrdering)(
+      session, Some(Statistics(sizeInBytes = folded(1), rowCount = Some(folded(0)))))
     val values = rides.indices.map { i =>
-      val v = folded(i + 1)
+      val v = folded(i + 2)
       if (rides(i).isInstanceOf[Max] && v == Long.MinValue) 0L else v
     }
     Checkpoint(classic.Dataset.ofRows(session, logical), packed, folded(0), values)

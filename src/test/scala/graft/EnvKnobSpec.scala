@@ -12,22 +12,26 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class EnvKnobSpec extends AnyFunSuite {
   private val allowed = Set(
-    // harness settings (Bench, BenchExtra, Verify)
+    // harness settings (Bench, Verify)
     "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_BENCH_PAIRS",
     "SPARK_GRAFT_BENCH_4X",
     // library knobs
-    "GRAFT_VERBOSE", "GRAFT_AQE_MIN_ROWS", "GRAFT_TINY_LOOP_MAX_ROWS")
+    "GRAFT_VERBOSE")
 
-  test("src/main/scala reads exactly the listed env knobs, each by literal name") {
+  /** Every source file under src/main/scala with its text. */
+  private def sources: List[(Path, String)] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root (${root.toAbsolutePath})")
+    Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+      .map(f => f -> Files.readString(f))
+  }
+
+  test("src/main/scala reads exactly the listed env knobs, each by literal name") {
     val anyRead = """sys\.env|System\.getenv""".r
     val namedRead =
       """(?:sys\.env(?:\.get|\.getOrElse|\.contains|\.apply)?|System\.getenv)\s*\(\s*"([^"]+)"""".r
-    val files = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toList
-    val read = files.flatMap { f: Path =>
-      val src = Files.readString(f)
+    val read = sources.flatMap { case (f, src) =>
       val names = namedRead.findAllMatchIn(src).map(_.group(1)).toList
       assert(names.size == anyRead.findAllMatchIn(src).size,
         s"$f reads the environment without a literal variable name")
@@ -35,5 +39,16 @@ class EnvKnobSpec extends AnyFunSuite {
     }.toSet
     assert(read == allowed,
       s"unlisted: ${read -- allowed}; listed but no longer read: ${allowed -- read}")
+  }
+
+  /** The library shares its caller's session, and other threads plan in it
+    * concurrently: a save-set-restore of session conf races them (a run
+    * restoring its saved value after another run changed it leaves the
+    * session with the wrong setting). Planning choices are made per plan.
+    */
+  test("src/main/scala never writes session conf") {
+    val write = """conf\.(?:set|unset)""".r
+    val writers = sources.filter { case (_, src) => write.findFirstIn(src).isDefined }.map(_._1)
+    assert(writers.isEmpty, s"session conf written in: ${writers.mkString(", ")}")
   }
 }

@@ -63,6 +63,23 @@ class WccSpec extends SparkTest {
     assert(four.forall(_ <= 4), s"stages per round at 4 partitions: $four")
   }
 
+  /** The exact check that confirms a stable signature anti-joins the last
+    * two states. On one partition both are single-partition checkpoints
+    * whose measured statistics are far below
+    * `spark.sql.maxSinglePartitionBytes`, so the join runs in place: one
+    * job of one stage. With default-statistics checkpoints it exchanged both
+    * sides: one job of 4 stages.
+    */
+  test("wcc's exact confirmation on one partition runs without an exchange") {
+    val spec = GraphSpec(numCycles = 40, maxCycleLen = 6, extraArcsPerVertex = 1.0, seed = 11L)
+    val edges = GraphGen.edges(spark, spec).repartition(1)
+    val (run, jobs) = jobsOf(Wcc.run(spark, edges, GraphGen.vertices(spark, spec)))
+    val last = s"graft wcc step ${run.metrics.last.iter}"
+    run.release()
+    val confirm = jobs.filter(_._1 == last).drop(1).map(_._2.size)
+    assert(confirm == Vector(1), s"stages of the confirmation jobs: $confirm")
+  }
+
   /** Random graphs, seeded, against union-find. Each case mixes hub stars
     * (the skewed groups: one vertex holding most of the rows), a long chain
     * over shuffled ids, self-loops and duplicated edges in both directions,
@@ -115,6 +132,23 @@ class WccSpec extends SparkTest {
 }
 
 class PageRankSpec extends SparkTest {
+  /** A step's jobs: its checkpoint and the broadcast of the 1-row dangling
+    * mass. Both rank joins are co-partitioned shuffle-hash joins against
+    * the cached `src`-partitioned edge table. When the size gate left the
+    * small-graph joins to the planner, the cached edge table was broadcast
+    * again on every step: 3 jobs per step.
+    */
+  test("a pagerank step runs at most two jobs (no per-step edge broadcast)") {
+    val (edges, n, _) = fixture("sample_graph")
+    val (run, jobs) = jobsOf(PageRank.run(spark, edgesDf(edges), vertsDf(0L until n),
+      tol = 0.0, maxIter = 4))
+    run.release()
+    val perStep = jobs.collect { case (l, _) if l != null && l.startsWith("graft pagerank step ") => l }
+      .groupBy(identity).map { case (l, js) => l -> js.size }
+    assert(perStep.size == 4, s"step labels: $perStep")
+    assert(perStep.values.forall(_ <= 2), s"jobs per step: $perStep")
+  }
+
   test("pagerank matches power iteration within 1e-6 and sums to 1") {
     val (edges, n, _) = fixture("sample_graph")
     val expected = Oracle.pagerank(0L until n, edges)
@@ -147,6 +181,44 @@ class PageRankSpec extends SparkTest {
     val am = run7.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val bm = run8.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     for (v <- 0L until n) assert(math.abs(am(v) - bm(v)) < 1e-12, s"vertex $v")
+  }
+}
+
+class SharedSessionSpec extends SparkTest {
+  /** Operators share the caller's session with whatever else runs in it.
+    * Two operators on two threads must plan exactly as they do alone and
+    * leave the session's conf as they found it.
+    */
+  test("wcc and pagerank on two threads of one session equal serial runs, conf untouched") {
+    val spec = GraphSpec(numCycles = 30, maxCycleLen = 8, extraArcsPerVertex = 0.8, seed = 13L)
+    val edges = GraphGen.edges(spark, spec)
+    val verts = GraphGen.vertices(spark, spec)
+    def wcc(): Map[Long, Long] = {
+      val r = Wcc.run(spark, edges, verts)
+      try r.components.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+      finally r.release()
+    }
+    def pagerank(): Map[Long, Double] = {
+      val r = PageRank.run(spark, edges, verts, tol = 0.0, maxIter = 8)
+      try r.ranks.collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
+      finally r.release()
+    }
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    val conf0 = keys.map(spark.conf.get)
+    val (wcc0, pr0) = (wcc(), pagerank())
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      for (round <- 1 to 3) {
+        val w = pool.submit(() => wcc())
+        val p = pool.submit(() => pagerank())
+        assert(w.get() == wcc0, s"round $round: wcc differs from the serial run")
+        val pr = p.get()
+        assert(pr.keySet == pr0.keySet &&
+          pr.forall { case (v, r) => math.abs(r - pr0(v)) < 1e-12 },
+          s"round $round: pagerank differs from the serial run")
+      }
+    } finally pool.shutdown()
+    assert(keys.map(spark.conf.get) == conf0)
   }
 }
 

@@ -95,6 +95,32 @@ class PlanSpec extends SparkTest {
     arena.closeExcept()
   }
 
+  test("checkpoint statistics are its exact rows and packed bytes; single-partition joins stay in place") {
+    val s = spark; import s.implicits._
+    val arena = new graft.plans.CheckpointArena
+    def single(n: Long) =
+      arena.checkpoint((0L until n).map(i => (i, s"v$i")).toDF("id", "v").repartition(1))
+    val a = single(300)
+    val b = single(200)
+    for (ck <- Seq(a, b)) {
+      val stats = ck.df.queryExecution.optimizedPlan.stats
+      assert(stats.rowCount.contains(BigInt(ck.rows)), s"$stats vs ${ck.rows} rows")
+      val packed = ck.df.queryExecution.toRdd
+        .map(_.asInstanceOf[org.apache.spark.sql.catalyst.expressions.UnsafeRow]
+          .getSizeInBytes.toLong)
+        .fold(0L)(_ + _)
+      assert(stats.sizeInBytes == BigInt(packed), s"$stats vs $packed packed bytes")
+    }
+    // the case of WCC's exact confirmation: both sides one partition, so
+    // the join needs no exchange once their sizes are known to fit one
+    // partition (default statistics exceed spark.sql.maxSinglePartitionBytes)
+    val joined = a.df.join(b.df.hint("shuffle_hash"), "id")
+    val plan = joined.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), plan)
+    assert(joined.count() == 200)
+    arena.closeExcept()
+  }
+
   test("checkpoint rides equal the same aggregates over the checkpointed frame") {
     import org.apache.spark.sql.GraftShims.{CountIf, Max, Sum, XorSig}
     import org.apache.spark.sql.Row

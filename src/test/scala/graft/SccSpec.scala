@@ -146,6 +146,43 @@ class SccSpec extends SparkTest {
     }
   }
 
+  /** Jobs of one whole-graph local solve on the `linkgraph` benchmark's
+    * graph (6,000 vertices). Checkpoints plan without AQE, so a plan's
+    * exchanges run as stages of its one job. With AQE on below the old
+    * 1M-row gate, and default-statistics checkpoints, the same run took 24
+    * jobs.
+    */
+  test("whole-graph local solve on the benchmark graph runs at most 13 jobs") {
+    val spec = GraphSpec(numCycles = 1000, maxCycleLen = 6, extraArcsPerVertex = 2.4, seed = 42L)
+    val edges = GraphGen.edges(spark, spec).persist()
+    edges.count()
+    val (run, jobs) = jobsOf(Scc.components(spark, edges, GraphGen.vertices(spark, spec),
+      edgesWithinVertices = true))
+    val rounds = run.metrics.size
+    run.release()
+    edges.unpersist()
+    assert(rounds == 1)
+    assert(jobs.size <= 13, s"${jobs.size} jobs: ${jobs.map(_._1)}")
+  }
+
+  /** Stages per BFS step on the distributed path the benchmark never
+    * reaches (threshold 0; 7 rounds, 106 steps on this graph): a step's
+    * checkpoint plans without AQE, so its exchanges run as stages of one
+    * job. With AQE on in these loops each exchange was a query-stage job
+    * of its own: 11 to 15 stages per step, 1,426 in all.
+    */
+  test("distributed BFS steps run at most 4 stages each") {
+    val spec = GraphSpec(numCycles = 40, maxCycleLen = 8, extraArcsPerVertex = 0.3, seed = 7L)
+    val (run, jobs) = jobsOf(Scc.components(spark, GraphGen.edges(spark, spec),
+      GraphGen.vertices(spark, spec), localSolveEdgeThreshold = 0))
+    val rounds = run.metrics.size
+    run.release()
+    val perStep = jobs.collect { case (l, st) if l != null && l.startsWith("graft scc_bfs_") => l -> st.size }
+      .groupBy(_._1).map { case (l, js) => l -> js.map(_._2).sum }
+    assert(rounds > 1 && perStep.nonEmpty, s"$rounds rounds, steps $perStep")
+    assert(perStep.values.forall(_ <= 4), s"stages per step: $perStep")
+  }
+
   test("generated graph (seeded): decomposition matches Tarjan") {
     val spec = GraphSpec(numCycles = 40, maxCycleLen = 8, extraArcsPerVertex = 0.3, seed = 7L)
     val edges = GraphGen.edges(spark, spec).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
