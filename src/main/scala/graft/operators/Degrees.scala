@@ -10,20 +10,33 @@ import org.apache.spark.sql.functions._
   */
 object Degrees {
 
-  /** (id, outDeg, inDeg, deg) — full outer so zero-degree sides survive. */
-  def all(edges: DataFrame, vertices: DataFrame): DataFrame = {
-    val outD = edges.groupBy(col("src").as("id")).agg(count("*").as("outDeg"))
-    val inD = edges.groupBy(col("dst").as("id")).agg(count("*").as("inDeg"))
+  /** (id, oc, ic): out- and in-degree of every id with an edge, in ONE
+    * pass: each edge row explodes into (src, oc=1, ic=0) and (dst, oc=0,
+    * ic=1) and the hash aggregation combines map-side. One scan + one
+    * exchange of per-partition PARTIALS (≤ 2·distinct ids per partition),
+    * vs. two directional aggregations that each exchange the edge table:
+    * at 61M edges that second exchange was the largest term of Scc's
+    * edge-build + pre-trim phase, the round-3 bench's only anti-scaling
+    * segment (BASELINE.md round-3 size series).
+    */
+  def counts(edges: DataFrame): DataFrame =
+    edges
+      .select(explode(array(
+        struct(col("src").as("id"), lit(1L).as("oc"), lit(0L).as("ic")),
+        struct(col("dst").as("id"), lit(0L).as("oc"), lit(1L).as("ic")))).as("d"))
+      .groupBy(col("d.id").as("id"))
+      .agg(sum("d.oc").as("oc"), sum("d.ic").as("ic"))
+
+  /** (id, outDeg, inDeg, deg) for every vertex; zero where it has no edge. */
+  def all(edges: DataFrame, vertices: DataFrame): DataFrame =
     vertices
       .select("id")
-      .join(outD, Seq("id"), "left")
-      .join(inD, Seq("id"), "left")
+      .join(counts(edges), Seq("id"), "left")
       .select(
         col("id"),
-        coalesce(col("outDeg"), lit(0L)).as("outDeg"),
-        coalesce(col("inDeg"), lit(0L)).as("inDeg"),
-        (coalesce(col("outDeg"), lit(0L)) + coalesce(col("inDeg"), lit(0L))).as("deg"))
-  }
+        coalesce(col("oc"), lit(0L)).as("outDeg"),
+        coalesce(col("ic"), lit(0L)).as("inDeg"),
+        (coalesce(col("oc"), lit(0L)) + coalesce(col("ic"), lit(0L))).as("deg"))
 
   /** Vertices whose total degree exceeds `threshold` — the skew hubs that get
     * salted before high-fanout frontier joins (SURVEY.md §4).

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.plans.{CheckpointArena, Superstep}
+import graft.plans.{CheckpointArena, JobLabel, Superstep}
 
 /** Result handle for [[LabelProp.run]]: the per-vertex labels plus
   * [[release]] to unpersist the cached blocks backing [[labels]] once
@@ -25,15 +25,16 @@ final class LabelPropRun(val labels: DataFrame, releaseFn: () => Unit) {
   * Synchronous rounds + deterministic tie-break make the result exactly
   * reproducible — the driver oracle unrolls the same recurrence in SQL.
   *
-  * Scale shape (per round): one join of the edge table against the labeled
-  * state — edges persisted hash(src); below `autoBroadcastJoinThreshold`
-  * (64 MB) the checkpointed state's exact statistics make the planner
-  * broadcast the STATE side, one broadcast job per round — then a two-level
-  * aggregation (`(dst,label)` count with map-side partials, then arg-max
-  * per `dst`) and one co-partitioned join back into the
-  * hash(id)-partitioned state. Shuffle bytes per round are O(labeled
-  * out-degree), not O(E); rounds run on [[graft.plans.Superstep]], which
-  * checkpoints each one, so lineage stays flat at any iteration count.
+  * Scale shape (per round): one co-partitioned shuffle-hash join of the
+  * edge table (checkpointed hash(src)) against the labeled state
+  * (hash(id)), built on the state — unhinted, the state's exact statistics
+  * below `autoBroadcastJoinThreshold` made the planner broadcast it, one
+  * broadcast job per round — then a two-level aggregation (`(dst,label)`
+  * count with map-side partials, then arg-max per `dst`) and one
+  * co-partitioned shuffle-hash join back into the state, built on the
+  * votes. Shuffle bytes per round are O(labeled out-degree), not O(E);
+  * rounds run on [[graft.plans.Superstep]], which checkpoints each one in
+  * one job, so lineage stays flat at any iteration count.
   *
   * Labels must be > Long.MinValue (the min-label tie-break rides a numeric
   * negation inside the arg-max struct).
@@ -53,17 +54,19 @@ object LabelProp {
       edges: DataFrame,
       verts: DataFrame,
       seeds: DataFrame,
-      iterations: Int): LabelPropRun = {
+      iterations: Int): LabelPropRun = JobLabel(spark, "labelprop", "setup") {
     require(iterations >= 1, "iterations must be >= 1")
     val arena = new CheckpointArena
 
-    val eBySrc = edges.select("src", "dst")
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // A checkpoint, not a persist: a persisted plan is cached through AQE,
+    // whose exchange runs as a query-stage job of its own inside the first
+    // round.
+    val eBySrc = arena.checkpoint(edges.select("src", "dst").repartition(col("src"))).df
 
+    // hinted so the seed labels are not broadcast by a job of their own
     val seeds1 = seeds.groupBy("id").agg(min("label").as("seedLabel"))
     val state0 = verts.select("id")
-      .join(seeds1, Seq("id"), "left")
+      .join(seeds1.hint("shuffle_hash"), Seq("id"), "left")
       .withColumn("label", col("seedLabel"))
       .repartition(col("id"))
 
@@ -73,18 +76,17 @@ object LabelProp {
     val (state, _) = harness.run(state0, iterations) { (st, _) =>
       val contrib = eBySrc
         .join(st.filter(col("label").isNotNull)
-          .select(col("id").as("src"), col("label")), Seq("src"))
+          .select(col("id").as("src"), col("label")).hint("shuffle_hash"), Seq("src"))
         .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("c"))
         .groupBy("dst")
         .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
         .select(col("dst").as("id"), (-col("m.nl")).as("cand"))
-      st.join(contrib, Seq("id"), "left")
+      st.join(contrib.hint("shuffle_hash"), Seq("id"), "left")
         .select(col("id"), col("seedLabel"),
           coalesce(col("seedLabel"), col("cand"), col("label")).as("label"))
     } (_.rows)
 
     val out = state.select(col("id"), coalesce(col("label"), lit(-1L)).as("label"))
-    eBySrc.unpersist(false)
     // state's blocks back `out` lazily; kept alive until the caller's
     // release() (same pattern as Scc's assignedParts).
     arena.closeExcept(state)

@@ -1,11 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.GraftShims.CountIf
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.GraftShims.{CountIf, SumDouble}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.plans.{CheckpointArena, StepMetrics, Superstep}
+import graft.functions.expr.DoubleParam
+import graft.plans.{CheckpointArena, JobLabel, StepMetrics, Superstep}
 
 /** Result handle for [[PageRank.run]]: the per-vertex ranks plus
   * [[release]] to unpersist the cached blocks backing [[ranks]] once
@@ -23,19 +23,20 @@ final class PageRankRun(
   * SURVEY.md §2.3 — reuses the reference's frontier-join shape,
   * `/root/reference/main.cpp:65-87`).
   *
-  * Per iteration (one shuffle for the contribution aggregate, one scalar agg
-  * for the dangling mass — the convergence check rides on the same state):
+  * Per iteration (one shuffle for the contribution aggregate; the dangling
+  * mass and the convergence count ride the same state checkpoint):
   *   rank'(v) = (1-α)/n + α·( Σ_{u→v} rank(u)/outDeg(u) + danglingMass/n )
   *
   * Ranks sum to 1 every iteration; convergence = max |Δrank| < tol
   * (north_star: allclose 1e-6 at convergence).
   *
   * Scale notes: contributions aggregate is a map-side-combinable hash agg on
-  * `dst`; the edge table is persisted hash-partitioned on `src`, which the
+  * `dst`; the edge table is checkpointed hash-partitioned on `src`, which the
   * rank⨝edges join reuses as a co-partitioned shuffle-hash join at every
-  * size (the SHUFFLE_HASH hints in `update`): no edge broadcast, so an
-  * iteration runs its checkpoint job plus one broadcast job for the 1-row
-  * dangling mass.
+  * size (the SHUFFLE_HASH hints in `update`): no edge broadcast, and the
+  * dangling mass of step i rides step i's checkpoint into step i+1's plan,
+  * so an iteration is one job. Setup is three: the edge table, the vertex
+  * out-degrees (whose row count is n) and the first state.
   */
 object PageRank {
 
@@ -50,24 +51,19 @@ object PageRank {
       alpha: Double = 0.85,
       tol: Double = 1e-6,
       maxIter: Int = 100,
-      snapshotDir: Option[String] = None): PageRankRun = {
-    val n = vertices.count().toDouble
+      snapshotDir: Option[String] = None): PageRankRun = JobLabel(spark, "pagerank", "setup") {
     val arena = new CheckpointArena
 
-    val outDeg = edges.groupBy(col("src").as("id")).agg(count("*").as("outDeg"))
-    // NOT persisted: the only consumer is state0, which the harness
-    // checkpoints immediately (update() reads outDeg from the checkpointed
-    // state — see the negative A/B below); caching O(V) rows that are
-    // scanned exactly once would be a pure cache-write tax
-    val verts = vertices
+    val edgesBySrc = arena.checkpoint(edges.select("src", "dst").repartition(col("src"))).df
+    // hash(src) already: the out-degree count needs no exchange, and the
+    // hinted join keeps it from being broadcast by a job of its own
+    val outDeg = edgesBySrc.groupBy(col("src").as("id")).agg(count("*").as("outDeg"))
+    val verts = arena.checkpoint(vertices
       .select("id")
-      .join(outDeg, Seq("id"), "left")
+      .join(outDeg.hint("shuffle_hash"), Seq("id"), "left")
       .select(col("id"), coalesce(col("outDeg"), lit(0L)).as("outDeg"))
-      .repartition(col("id"))
-    val edgesBySrc = edges.select("src", "dst")
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    edgesBySrc.count()
+      .repartition(col("id")))
+    val n = verts.rows.toDouble
 
     // State slimming to (id, rank, changed) with outDeg re-joined per use
     // from the persisted verts was TRIED and MEASURED NEGATIVE (round 3,
@@ -78,16 +74,20 @@ object PageRank {
     // and both scaling legs −38%. The static outDeg column riding the
     // checkpoint is the cheaper carrier at any scale where the join build
     // isn't free.
-    val state0 = verts.select(col("id"), col("outDeg"), lit(1.0 / n).as("rank"),
-      lit(true).as("changed"))
+    // Every state checkpoint rides its changed count and its dangling mass
+    // Σ rank over outDeg = 0, which the next update reads.
+    val rides = Seq(CountIf("changed"), SumDouble("rank", Some("outDeg")))
+    val state0 = arena.checkpoint(
+      verts.df.select(col("id"), col("outDeg"), lit(1.0 / n).as("rank"), lit(true).as("changed")),
+      rides: _*)
+    arena.release(verts.df)
+    var danglingMass = state0.double(1)
 
-    // One rank update. Dangling mass rides the plan as a broadcast 1-row
-    // aggregate — folding it in keeps each update scalar-action-free; a
-    // `.head()` here would add a job per iteration.
+    // One rank update. The dangling mass enters the plan as a DoubleParam:
+    // the generated code reads it from its references, so every step runs
+    // the same compiled classes (an inlined literal would change the source
+    // and compile them anew each step).
     def update(state: DataFrame): DataFrame = {
-      val danglingDf = state.filter(col("outDeg") === 0)
-        .agg(coalesce(sum("rank"), lit(0.0)).as("danglingMass"))
-
       // SHUFFLE_HASH on both joins (guide §3.1): the state is hash(id), the
       // edges hash(src) and contribs hash(id) from its own aggregation, so
       // hash-building the state / contribs side keeps both joins
@@ -107,12 +107,12 @@ object PageRank {
       state
         .select(col("id"), col("outDeg"), col("rank").as("prevRank"))
         .join(contribs.hint("shuffle_hash"), Seq("id"), "left")
-        .crossJoin(broadcast(danglingDf))
         .select(
           col("id"),
           col("outDeg"),
           (lit((1.0 - alpha) / n) +
-            lit(alpha) * (coalesce(col("contrib"), lit(0.0)) + col("danglingMass") / n))
+            lit(alpha) * (coalesce(col("contrib"), lit(0.0)) +
+              GraftShims.column(DoubleParam(danglingMass)) / n))
             .as("rank"),
           col("prevRank"))
         .withColumn("changed", abs(col("rank") - col("prevRank")) > tol)
@@ -120,11 +120,14 @@ object PageRank {
     }
 
     val harness = new Superstep(spark, "pagerank", snapshotDir, arena = arena)
-    val (converged, metrics) = harness.run(state0, maxIter, rides = Seq(CountIf("changed"))) {
+    val (converged, metrics) = harness.run(state0.df, maxIter, rides = rides) {
       (state, _) => update(state)
-    } (_.rides(0))
+    } { ck =>
+      danglingMass = ck.double(1)
+      ck.rides(0)
+    }
 
-    edgesBySrc.unpersist(false)
+    arena.release(edgesBySrc)
     new PageRankRun(converged.select("id", "rank"), metrics, () => arena.closeExcept())
   }
 }

@@ -3,11 +3,11 @@ package graft.operators
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.GraftShims.{Checkpoint, CountIf, Max, Sum}
+import org.apache.spark.sql.GraftShims.{Checkpoint, CountIf, Max}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.plans.{CheckpointArena, Superstep}
+import graft.plans.{CheckpointArena, JobLabel, Superstep}
 
 /** Result handle for [[Scc.components]]:
   *   - [[release]]: unpersist every cached block backing [[components]]
@@ -102,33 +102,15 @@ object Scc {
       round: Int, localSolved: Long, trimmed: Long, pairTrimmed: Long, bfsSteps: Int,
       sccRows: Long, liveRows: Long)
 
-  /** Per-id degrees of one edge copy in ONE pass: each edge row explodes
-    * into (src, oc=1, ic=0) and (dst, oc=0, ic=1) and the hash aggregation
-    * combines map-side — the same shape the sweep decrement below uses.
-    * One scan + one exchange of per-partition PARTIALS (≤ 2·distinct ids
-    * per partition), vs. the two separate directional aggregations that
-    * needed a second full edge exchange (the dst-partitioned copy) just to
-    * stay exchange-free: at 61M edges that exchange was the largest term of
-    * the edge-build + pre-trim phase, the round-3 bench's only
-    * anti-scaling segment (BASELINE.md round-3 size series).
-    */
-  private def degreesOf(edges: DataFrame): DataFrame =
-    edges
-      .select(explode(array(
-        struct(col("src").as("id"), lit(1L).as("oc"), lit(0L).as("ic")),
-        struct(col("dst").as("id"), lit(0L).as("oc"), lit(1L).as("ic")))).as("d"))
-      .groupBy(col("d.id").as("id"))
-      .agg(sum("d.oc").as("oc"), sum("d.ic").as("ic"))
-
   /** Initial flagged degree frame for [[trimFixpoint]]: verts ⟕ one-pass
-    * [[degreesOf]], `dead` = in- or out-degree 0. Callers checkpoint it
+    * [[Degrees.counts]], `dead` = in- or out-degree 0. Callers checkpoint it
     * riding `CountIf("dead")`, so the row/dead counts cost no extra action.
     * Extra `verts` columns (e.g. `pivot`) ride along unchanged.
     */
   private def trimDegreesPlan(edges: DataFrame, verts: DataFrame): DataFrame = {
     val carry = verts.columns.filter(_ != "id").toSeq
     verts
-      .join(degreesOf(edges), Seq("id"), "left")
+      .join(Degrees.counts(edges), Seq("id"), "left")
       .select((col("id") +: carry.map(col)) ++ Seq(
         coalesce(col("oc"), lit(0L)).as("oc"),
         coalesce(col("ic"), lit(0L)).as("ic")): _*)
@@ -423,12 +405,12 @@ object Scc {
       edgesWithinVertices: Boolean = false,
       trimCapFraction: Double = 0.001,
       trimCapMinRemaining: Long = 1000000L,
-      fragmentCompactionThreshold: Int = 64): SccRun = {
+      fragmentCompactionThreshold: Int = 64): SccRun = JobLabel(spark, "scc", "setup") {
     import spark.implicits._
     val arena = new CheckpointArena
 
     val verts = vertices.select("id")
-    // Only edges internal to the vertex set matter for SCCs. Persist BOTH
+    // Only edges internal to the vertex set matter for SCCs. Keep BOTH
     // hash-partitionings (SURVEY.md §7.1): frontier/degree joins on `src`
     // and on `dst` then reuse an existing exchange instead of reshuffling
     // the edge table every superstep — with the partitioning-preserving
@@ -445,14 +427,20 @@ object Scc {
     // pre-trim phase (the round-3 bench's only anti-scaling segment —
     // 39.9 s @8 vs 67.4 s @32 at 61M edges, shuffle-write-bound), and runs
     // whose trims finish the whole graph never pay it at all.
+    // The src copy is a checkpoint, not a persist: a persisted plan is
+    // cached through AQE, whose exchange runs as a query-stage job of its
+    // own, and the checkpoint's row count is the edge total that routes the
+    // whole-graph local solve.
     val base = edges.select("src", "dst").filter(col("src") =!= col("dst"))
     val eClean =
       if (edgesWithinVertices) base
       else base
         .join(verts.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
         .join(verts.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-    val eBySrc = eClean.repartition(col("src")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val eBySrcCk = arena.checkpoint(eClean.repartition(col("src")).distinct())
+    val eBySrc = eBySrcCk.df
+    val numEdges = eBySrcCk.rows
+    graft.Log.v(s"scc: edges materialized ($numEdges)")
     var eByDstCell: Option[DataFrame] = None
     def eByDst: DataFrame = synchronized {
       eByDstCell.getOrElse {
@@ -550,13 +538,6 @@ object Scc {
     // join, so a pre-trim-removed hub is still an aggregation key with its
     // full fan-in (ADVICE r3).
     var fullMaxDegs: Option[(Long, Long)] = None
-    // edge total (Σ out-degree of the pre-trim degree frame — rides the
-    // degree pass instead of a separate full cache-scan count job); -1 on
-    // the durable-resume path, which never reads it
-    var numEdges = -1L
-    // whether the whole-graph local-solve shortcut applies (also excludes
-    // the salting gate: that path never aggregates pivot sets)
-    var wholeGraphLocal = false
     // whether `live` is known hash(id)-partitioned (lets the BFS seed skip
     // an explicit repartition when the relabel pass is also skipped)
     var liveIdPart = false
@@ -593,37 +574,48 @@ object Scc {
         preTrimDone = false // conservatively run per-round trims
         prefetchThread = Some(prefetchEByDst())
 
+      case None if numEdges <= localSolveEdgeThreshold && localSolveEdgeThreshold > 0 =>
+        // ---- whole-graph local solve: the ENTIRE edge set fits one task,
+        // so one Tarjan over every vertex and edge finishes the job — no
+        // degree pass, pre-trim, pivot, live-edge table or routing. The
+        // records reach that task through a coalesce, not an exchange, and
+        // its output is the one fragment: one job after the edge checkpoint.
+        // The task checks that every vertex record got exactly one row.
+        graft.Log.v(s"scc: $numEdges edges <= localSolveEdgeThreshold — whole-graph local solve")
+        // (id, -1) marks a vertex row, (src, dst) an edge
+        val recs = verts.select(col("id").as("a"), lit(-1L).as("b"))
+          .unionByName(eBySrc.select(col("src").as("a"), col("dst").as("b")))
+        val Checkpoint(solved, _, solvedCnt, _) = JobLabel(spark, "scc", "local-solve") {
+          arena.checkpoint(recs.as[(Long, Long)].coalesce(1).mapPartitions { it =>
+            val vs = mutable.ArrayBuffer[Long]()
+            val es = mutable.ArrayBuffer[(Long, Long)]()
+            it.foreach { case (a, b) => if (b == -1L) vs += a else es += ((a, b)) }
+            val out = LocalTarjan.solve(vs.toArray, es.toArray).toArray
+            require(out.length == vs.length,
+              s"local solve assigned ${out.length} rows to ${vs.length} vertices — assignment bug")
+            out.iterator
+          }.toDF("id", "comp"))
+        }
+        assignedParts += solved
+        assigned = solvedCnt
+        metrics += RoundMetrics(round, solvedCnt, 0L, 0L, 0, 0L, 0L)
+        snaps.foreach(_.writeRound(round, verts.select(col("id"), lit(0L).as("pivot")).limit(0),
+          0L, assignedParts.toSeq))
+        round += 1
+
       case None =>
-        // ---- ONE action materializes the edge cache AND the full-graph
-        // degree frame: the src-exchange + dedup flow straight into the
-        // one-pass explode degree aggregation ([[degreesOf]]) — the round-3
+        // ---- ONE action builds the full-graph degree frame with the
+        // one-pass explode aggregation ([[Degrees.counts]]) — the round-3
         // phase paid a separate count job plus the dst copy's full exchange
         // here, the two terms its (8,32) anti-scaling was made of.
-        // The whole-graph phase stats ride the same action — no separate
-        // agg job (VERDICT r4 #6): Σoc = edge total; full-graph max degrees
-        // feed the salting gate. Both gate heuristics only (local-solve
-        // routing, the salting gate).
+        // The full-graph max degrees ride the same action — no separate
+        // agg job (VERDICT r4 #6) — and feed the salting gate.
         val init = arena.checkpoint(trimDegreesPlan(eBySrc, verts),
-          CountIf("dead"), Sum("oc"), Max("oc"), Max("ic"))
-        numEdges = init.rides(1)
-        fullMaxDegs = Some((init.rides(2), init.rides(3)))
-        graft.Log.v(s"scc: edges materialized ($numEdges)")
-        wholeGraphLocal = numEdges <= localSolveEdgeThreshold && localSolveEdgeThreshold > 0
-        if (wholeGraphLocal) {
-          // ---- whole-graph local-solve shortcut: the ENTIRE edge set fits
-          // one task, so round 0's per-group Tarjan will finish the job in a
-          // single shuffle regardless of partitioning — pre-trim and the WCC
-          // pre-partition would only add ~20 driver actions of pure latency.
-          // One pivot group (0) routes everything to the local solver.
-          preTrimDone = false
-          arena.release(init.df)
-          val lc = arena.checkpoint(verts.select(col("id"), lit(0L).as("pivot")))
-          live = lc.df
-          liveCount = lc.rows
-          graft.Log.v(s"scc: $numEdges edges <= localSolveEdgeThreshold — whole-graph local solve")
-        } else {
-        // src copy's blocks just materialized under the degree action —
-        // start the dst-copy exchange now, hidden behind pre-trim + pivot
+          CountIf("dead"), Max("oc"), Max("ic"))
+        fullMaxDegs = Some((init.rides(1), init.rides(2)))
+
+        // the src copy is materialized (its checkpoint) — start the
+        // dst-copy exchange now, hidden behind pre-trim + pivot
         prefetchThread = Some(prefetchEByDst())
         // ---- round -1: GLOBAL trim-1 before anything else (main.cpp:172
         // does the same) — degree-0 peeling needs no partition map and
@@ -697,7 +689,6 @@ object Scc {
           liveCount = 0L
           arena.release(degs)
         }
-        }
     }
     // every vertex is now either in an assigned fragment or live
     expectedTotal = assigned + liveCount
@@ -710,11 +701,10 @@ object Scc {
     // only at the state join), so a trimmed-away hub still bounds fan-in.
     // One one-pass degree aggregation runs only on the rare path that has
     // no degree frame (durable resume). Computed only when a distributed
-    // BFS can happen — the whole-graph local-solve shortcut never
-    // aggregates pivot sets.
-    val useSalting = liveCount > 0 && !wholeGraphLocal && {
+    // BFS can happen (the whole-graph local solve leaves nothing live).
+    val useSalting = liveCount > 0 && {
       val (maxOutDeg, maxInDeg) = fullMaxDegs.getOrElse {
-        val r = degreesOf(eBySrc)
+        val r = Degrees.counts(eBySrc)
           .agg(coalesce(max("oc"), lit(0L)), coalesce(max("ic"), lit(0L))).head()
         (r.getLong(0), r.getLong(1))
       }
@@ -725,7 +715,7 @@ object Scc {
       hot
     }
 
-    while (liveCount > 0 && round < maxOuter) {
+    while (liveCount > 0 && round < maxOuter) JobLabel(spark, "scc", s"round $round") {
       // ---- the round's partition-internal live edge table, built ONCE and
       // reused by local-solve, trim-1 and trim-2 (the round-1 engine
       // re-joined live⨝edges separately for every consumer and every trim
@@ -1180,15 +1170,15 @@ object Scc {
     val result =
       if (allParts.isEmpty) verts.select(col("id"), col("id").as("comp")).limit(0)
       else allParts.reduce(_.unionByName(_))
-    arena.closeExcept((allParts ++ partBacking).toSeq: _*)
     // a prefetch that never got consumed (e.g. trims finished the graph)
-    // must not keep running after we return
+    // must not keep running after we return, nor read the src copy's
+    // blocks once they are released
     prefetchThread.filter(_.isAlive).foreach { t =>
       try spark.sparkContext.cancelJobGroup("graft-scc-prefetch")
       catch { case _: Throwable => () }
       t.join(2000)
     }
-    eBySrc.unpersist(false)
+    arena.closeExcept((allParts ++ partBacking).toSeq: _*)
     eByDstCell.foreach(_.unpersist(false))
     new SccRun(result, metrics.result(), assigned, () => arena.closeExcept())
   }

@@ -1,89 +1,99 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.{functions}
+import org.apache.spark.sql.{DataFrame, GraftShims, Row, SparkSession}
+import org.apache.spark.sql.GraftShims.Sum
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import graft.functions.expr.SortedIntersect
+import graft.plans.JobLabel
 
 /** Triangle counting on the undirected view of a directed edge table
-  * (north-star capability, SURVEY.md §2.3 — absent from the reference).
+  * (north-star capability, SURVEY.md §2.3 — absent from the reference), by
+  * sorted-adjacency intersection (HERO, SIGMOD 2024, PAPERS.md).
   *
-  * Standard two-hop + closing-edge plan with **degree-ordered orientation**
-  * (the classic "count each triangle once and bound wedge fan-out by the
-  * lower-degree endpoint" trick): orient each undirected edge from the
-  * (deg, id)-smaller endpoint to the larger, so every triangle {x,y,z}
-  * is generated exactly once from its smallest-rank vertex, and hub vertices
-  * never fan out — the skew handling that makes this survive power-law
-  * graphs at scale without salting. Both [[total]] and [[perVertex]] run
-  * the same oriented plan; perVertex just counts each found triangle's
-  * three corners instead of the triangle rows.
+  * Each undirected edge is oriented from the (degree, id)-smaller endpoint
+  * to the larger, and N⁺(v) is v's ascending list of higher-ranked
+  * neighbours. A triangle x < y < z (by rank) is then found exactly once,
+  * on its edge x→y, as z ∈ N⁺(x) ∩ N⁺(y): the count is
+  * Σ_{u→v} |N⁺(u) ∩ N⁺(v)|, one merge intersection per oriented edge
+  * ([[SortedIntersect]]). Orientation bounds |N⁺(v)| by √(2m), so a hub
+  * never fans out: its high-ranked neighbours are few.
+  *
+  * The whole plan is one checkpoint job (see [[neighbourPairs]] for its
+  * stages); [[total]] reads its count from a ridden sum and hands back a
+  * driver-side frame, so the caller's `collect` starts no job.
   */
 object Triangles {
 
-  /** Canonical undirected edges (a < b), self-loops dropped, deduped. */
-  def canonicalEdges(edges: DataFrame): DataFrame =
-    edges
-      .filter(col("src") =!= col("dst"))
-      .select(
-        least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
+  /** One row (u, v, nu, nv) per oriented edge u→v whose N⁺(u) = nu and
+    * N⁺(v) = nv are both non-empty. Two sort-based groupings and a
+    * hash join, no broadcast:
+    *   1. every non-loop edge in both directions, grouped by endpoint: the
+    *      distinct neighbours of v (duplicated and reversed edges collapse
+    *      here), each told (w, v, deg v);
+    *   2. grouped by w: w hears every neighbour's degree once, so its own
+    *      degree is the number of rows, and keeps the higher-ranked ones as
+    *      N⁺(w), ascending;
+    *   3. each u→v row of N⁺(u) meets N⁺(v) in a shuffle-hash join on v.
+    */
+  private def neighbourPairs(spark: SparkSession, edges: DataFrame): DataFrame = {
+    import spark.implicits._
+    val both = edges
+      .select(col("src").cast(LongType).as("a"), col("dst").cast(LongType).as("b"))
+      .filter(col("a") =!= col("b"))
+      .select(explode(array(struct(col("a").as("_1"), col("b").as("_2")),
+        struct(col("b").as("_1"), col("a").as("_2")))).as("e"))
+      .select("e.*")
+      .as[(Long, Long)]
 
-  /** Degree-ordered orientation (lo, hi): rank(v) = (deg(v), v)
-    * lexicographic, each canonical edge oriented low-rank → high-rank. */
-  private def orient(canon: DataFrame): DataFrame = {
-    val deg = canon.select(col("a").as("id"))
-      .unionByName(canon.select(col("b").as("id")))
-      .groupBy("id").agg(functions.count("*").as("deg"))
-    canon
-      .join(deg.withColumnRenamed("id", "a").withColumnRenamed("deg", "degA"), Seq("a"))
-      .join(deg.withColumnRenamed("id", "b").withColumnRenamed("deg", "degB"), Seq("b"))
-      .select(
-        when(col("degA") < col("degB") || (col("degA") === col("degB") && col("a") < col("b")),
-          col("a")).otherwise(col("b")).as("lo"),
-        when(col("degA") < col("degB") || (col("degA") === col("degB") && col("a") < col("b")),
-          col("b")).otherwise(col("a")).as("hi"))
+    val told = both.groupByKey(_._1).flatMapGroups { (v, rows) =>
+      val ns = rows.map(_._2).toArray
+      java.util.Arrays.sort(ns)
+      var d = 0
+      for (i <- ns.indices) if (i == 0 || ns(i) != ns(i - 1)) { ns(d) = ns(i); d += 1 }
+      Iterator.tabulate(d)(i => (ns(i), v, d.toLong))
+    }
+
+    val up = told.groupByKey(_._1).flatMapGroups { (w, rows) =>
+      val heard = rows.toArray
+      val dw = heard.length.toLong
+      val hi = heard.collect { case (_, v, dv) if dv > dw || (dv == dw && v > w) => v }
+      java.util.Arrays.sort(hi)
+      if (hi.isEmpty) Iterator.empty else Iterator.single((w, hi))
+    }.toDF("v", "up")
+
+    up.select(col("v").as("u"), explode(col("up")).as("v"), col("up").as("nu"))
+      .join(up.select(col("v"), col("up").as("nv")).hint("shuffle_hash"), Seq("v"))
   }
 
-  /** One row (x, y, z) per triangle, generated from its min-rank corner x:
-    * wedges fan out from the LOW-rank endpoint only (a degree-d hub
-    * generates wedges bounded by its lower-ranked neighborhood, not d²),
-    * closed by an oriented edge between y and z in either direction. */
-  private def triangleRows(oriented: DataFrame): DataFrame = {
-    val e1 = oriented.select(col("lo").as("x"), col("hi").as("y"))
-    val e2 = oriented.select(col("lo").as("x"), col("hi").as("z"))
-    val wedges = e1.join(e2, Seq("x")).filter(col("y") < col("z"))
-    val closing = oriented.select(col("lo").as("cy"), col("hi").as("cz"))
-      .unionByName(oriented.select(col("hi").as("cy"), col("lo").as("cz")))
-    wedges.join(closing, col("y") === col("cy") && col("z") === col("cz"), "left_semi")
-  }
+  /** N⁺(u) ∩ N⁺(v) of a [[neighbourPairs]] row: its triangles' third corners. */
+  private def corners = GraftShims.column(
+    SortedIntersect(GraftShims.expression(col("nu")), GraftShims.expression(col("nv"))))
 
-  /** Total triangle count (1-row DataFrame: triangles: long). */
-  def total(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val canon = canonicalEdges(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    val oriented = orient(canon).persist(StorageLevel.MEMORY_AND_DISK)
-    val result = triangleRows(oriented).agg(functions.count("*").as("triangles"))
-    val out = result.localCheckpoint(true)
-    canon.unpersist(false)
-    oriented.unpersist(false)
-    out
+  /** Total triangle count (1-row DataFrame: triangles: long), held on the
+    * driver. */
+  def total(spark: SparkSession, edges: DataFrame): DataFrame = JobLabel(spark, "triangles", "total") {
+    val ck = GraftShims.checkpoint(
+      neighbourPairs(spark, edges)
+        .select(size(corners).cast(LongType).as("t"))
+        .filter(col("t") > 0),
+      Seq(Sum("t")))
+    ck.handle.unpersist(false)
+    spark.createDataFrame(java.util.List.of(Row(ck.rides(0))),
+      StructType(Seq(StructField("triangles", LongType, nullable = false))))
   }
 
   /** Per-vertex triangle participation count (id, triangles): each found
     * triangle contributes one to all three corners. Vertices in no triangle
-    * are absent. */
-  def perVertex(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val canon = canonicalEdges(edges).persist(StorageLevel.MEMORY_AND_DISK)
-    val oriented = orient(canon).persist(StorageLevel.MEMORY_AND_DISK)
-    // explode the three corners in ONE pass over the triangle rows (a
-    // 3-way union of selects over `tri` would re-run the wedge join per
-    // branch)
-    val out = triangleRows(oriented)
-      .select(explode(array(col("x"), col("y"), col("z"))).as("id"))
-      .groupBy("id").agg(functions.count("*").as("triangles"))
-      .localCheckpoint(true)
-    canon.unpersist(false)
-    oriented.unpersist(false)
-    out
-  }
+    * are absent. Materialized by one checkpoint job. */
+  def perVertex(spark: SparkSession, edges: DataFrame): DataFrame =
+    JobLabel(spark, "triangles", "per-vertex") {
+      GraftShims.checkpoint(
+        neighbourPairs(spark, edges)
+          .select(col("u"), col("v"), explode(corners).as("w"))
+          .select(explode(array(col("u"), col("v"), col("w"))).as("id"))
+          .groupBy("id").agg(count("*").as("triangles")),
+        Nil).df
+    }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.GraftShims.XorSig
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.plans.{CheckpointArena, StepMetrics, Superstep}
+import graft.plans.{CheckpointArena, JobLabel, StepMetrics, Superstep}
 
 /** Result handle for [[Wcc.run]]: the per-vertex components plus
   * [[release]] to unpersist the cached blocks backing [[components]] once
@@ -48,7 +48,7 @@ object Wcc {
       edges: DataFrame,
       vertices: DataFrame,
       maxIter: Int = 50,
-      snapshotDir: Option[String] = None): WccRun = {
+      snapshotDir: Option[String] = None): WccRun = JobLabel(spark, "wcc", "setup") {
 
     val arena = new CheckpointArena
 
@@ -123,7 +123,7 @@ object Wcc {
       .join(comps, Seq("id"), "left")
       .select(col("id"), least(col("id"), coalesce(col("mv"), col("id"))).as("comp"))
 
-    val result = arena.checkpoint(out).df
+    val result = JobLabel(spark, "wcc", "finish")(arena.checkpoint(out).df)
     arena.closeExcept(result)
     new WccRun(result, metrics, () => arena.closeExcept())
   }

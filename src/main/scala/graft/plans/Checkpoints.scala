@@ -23,6 +23,9 @@ final class CheckpointArena {
     ck
   }
 
+  /** Whether `df` is a checkpoint this arena made and still holds. */
+  def holds(df: DataFrame): Boolean = backing.containsKey(df)
+
   /** Unpersist the blocks behind a superseded state (no-op for unknown). */
   def release(df: DataFrame): Unit = {
     val rdd = backing.remove(df)

@@ -14,8 +14,9 @@ final case class StepMetrics(iter: Int, changed: Long, wallMs: Long)
   *
   * Responsibilities:
   *   - **Lineage control**: iterative DataFrame code doubles its logical plan
-  *     every superstep unless the plan is cut; we `localCheckpoint(eager)`
-  *     each iteration (the #1 failure mode of naive iterative Spark).
+  *     every superstep unless the plan is cut; each iteration's state is
+  *     materialized by [[CheckpointArena.checkpoint]] (the #1 failure mode of
+  *     naive iterative Spark).
   *   - **Convergence**: one driver action per superstep — the checkpoint —
   *     also folds the step's convergence scalar (a changed-row count or a
   *     content signature, see [[org.apache.spark.sql.GraftShims.Ride]]),
@@ -47,18 +48,20 @@ final class Superstep(
     * supersteps have run. Each next state is checkpointed with `rides`
     * folded into the same materialization job; `changed` reads the
     * resulting [[Checkpoint]] (its row count, ridden values or the frame
-    * itself) before the previous state is released. Returns the final state
-    * and per-iteration metrics.
+    * itself) before the previous state is released. A `state0` that is
+    * already one of the arena's checkpoints is used as it is; any other is
+    * checkpointed first, under the caller's job label. Returns the final
+    * state and per-iteration metrics.
     */
   def run(state0: DataFrame, maxIter: Int, startIter: Int = 0, rides: Seq[Ride] = Nil)(
       step: (DataFrame, Int) => DataFrame)(
       changed: Checkpoint => Long): (DataFrame, Vector[StepMetrics]) = {
-    var state = arena.checkpoint(state0).df
+    var state = if (arena.holds(state0)) state0 else arena.checkpoint(state0).df
     val metrics = Vector.newBuilder[StepMetrics]
     var iter = startIter
     var delta = 1L
     while (delta > 0 && iter < maxIter) {
-      Superstep.labelled(spark, s"graft $name step $iter") {
+      JobLabel(spark, name, s"step $iter") {
         val t0 = System.nanoTime()
         val compiled0 = Superstep.classesCompiled
         val next = arena.checkpoint(step(state, iter), rides: _*)
@@ -129,20 +132,4 @@ object Superstep {
     * compiles more than a handful is thrashing that cache. */
   def classesCompiled: Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-
-  /** Spark's call-site properties: when both are set, jobs and stages are
-    * named by them and Spark skips the stack walk (`Utils.getCallSite`) it
-    * otherwise makes for every new RDD and query. */
-  private val CallSiteKeys = Seq("callSite.short", "callSite.long")
-
-  /** Run `f` with both call-site properties set to `label` on this thread
-    * (a superstep labels its jobs `graft <name> step <iter>`); restores the
-    * previous values, also when `f` throws. */
-  private def labelled[T](spark: SparkSession, label: String)(f: => T): T = {
-    val sc = spark.sparkContext
-    val prev = CallSiteKeys.map(sc.getLocalProperty)
-    CallSiteKeys.foreach(sc.setLocalProperty(_, label))
-    try f
-    finally CallSiteKeys.zip(prev).foreach { case (k, v) => sc.setLocalProperty(k, v) }
-  }
 }

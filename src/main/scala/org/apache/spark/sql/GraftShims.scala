@@ -1,11 +1,12 @@
 package org.apache.spark.sql
 
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{UnsafeRow, XXH64}
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.execution.{GraftPlanning, LogicalRDD, SQLExecutionRDD}
-import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType}
+import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, IntegerType, LongType}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.util.AccumulatorV2
@@ -78,42 +79,73 @@ object GraftShims {
     */
   final case class XorSig(cols: Seq[String]) extends Ride
 
+  /** Sum of a DoubleType column over the rows whose LongType `zeroCol` is 0
+    * (every row when None); nulls are skipped. The value comes back as the
+    * double's raw bits ([[Checkpoint.double]] reads it). Partition partials
+    * add up in partition order, so equal inputs give equal doubles on every
+    * run, whatever order the tasks finish in.
+    */
+  final case class SumDouble(col: String, zeroCol: Option[String] = None) extends Ride
+
   /** A materialized checkpoint: the fresh frame, the persisted RDD behind
     * it (to `unpersist` once superseded), the exact row count and one value
     * per requested ride, in order.
     */
-  final case class Checkpoint(df: DataFrame, handle: RDD[_], rows: Long, rides: IndexedSeq[Long])
+  final case class Checkpoint(df: DataFrame, handle: RDD[_], rows: Long, rides: IndexedSeq[Long]) {
+    /** Ride `i` read as a double (a [[SumDouble]]). */
+    def double(i: Int): Double = java.lang.Double.longBitsToDouble(rides(i))
+  }
 
   /** The one fold behind every ride: slot 0 counts rows, slot 1 their
-    * packed bytes, slot i+2 folds ride i with + (counts, sums), max or xor
-    * — all associative and commutative, so task partials merge in any
-    * order.
+    * packed bytes, slot i+2 folds ride i with + (counts, sums), max, xor or
+    * a double + on raw bits. Each task's fold is kept by its partition and
+    * the partials are folded in partition order, which makes the double
+    * sums deterministic (the others are order-free anyway).
     */
   private final class RideAccumulator(rides: Array[Ride], idx: Array[Array[Int]])
       extends AccumulatorV2[InternalRow, Array[Long]] {
     private val zero = Array(0L, 0L) ++ rides.map { case _: Max => Long.MinValue; case _ => 0L }
     private var acc = zero.clone()
+    // the partition a task-side copy folded (-1 until its first row)
+    private var part = -1
+    // driver side: the merged task folds by partition
+    private var parts = scala.collection.immutable.TreeMap.empty[Int, Array[Long]]
 
     private def fold(slot: Int, a: Long, b: Long): Long =
       if (slot < 2) a + b
       else rides(slot - 2) match {
         case _: Max => math.max(a, b)
         case _: XorSig => a ^ b
+        case _: SumDouble => java.lang.Double.doubleToRawLongBits(
+          java.lang.Double.longBitsToDouble(a) + java.lang.Double.longBitsToDouble(b))
         case _ => a + b
       }
 
-    override def isZero: Boolean = acc.sameElements(zero)
+    private def foldInto(into: Array[Long], o: Array[Long]): Unit =
+      for (s <- into.indices) into(s) = fold(s, into(s), o(s))
+
+    override def isZero: Boolean = acc.sameElements(zero) && parts.isEmpty
     override def copy(): RideAccumulator = {
-      val a = new RideAccumulator(rides, idx); a.acc = acc.clone(); a
+      val a = new RideAccumulator(rides, idx)
+      a.acc = acc.clone(); a.part = part; a.parts = parts
+      a
     }
-    override def reset(): Unit = acc = zero.clone()
-    override def merge(other: AccumulatorV2[InternalRow, Array[Long]]): Unit = {
-      val o = other.value
-      for (s <- acc.indices) acc(s) = fold(s, acc(s), o(s))
+    override def reset(): Unit = { acc = zero.clone(); part = -1; parts = parts.empty }
+    override def merge(other: AccumulatorV2[InternalRow, Array[Long]]): Unit = other match {
+      case o: RideAccumulator if o.part >= 0 =>
+        val mine = parts.get(o.part).map(_.clone()).getOrElse(zero.clone())
+        foldInto(mine, o.value)
+        parts = parts.updated(o.part, mine)
+      case o => foldInto(acc, o.value)
     }
-    override def value: Array[Long] = acc
+    override def value: Array[Long] = {
+      val out = acc.clone()
+      parts.valuesIterator.foreach(foldInto(out, _))
+      out
+    }
 
     override def add(r: InternalRow): Unit = {
+      if (part < 0) part = Option(TaskContext.get()).map(_.partitionId()).getOrElse(0)
       acc(0) += 1L
       // a rare non-UnsafeRow row counts as its fixed-width UnsafeRow size
       acc(1) += (r match {
@@ -130,6 +162,9 @@ object GraftShims {
             else 0L
           case _: Sum => if (r.isNullAt(c(0))) 0L else r.getLong(c(0))
           case _: Max => if (r.isNullAt(c(0))) Long.MinValue else r.getLong(c(0))
+          case _: SumDouble =>
+            if (r.isNullAt(c(0)) || (c.length > 1 && (r.isNullAt(c(1)) || r.getLong(c(1)) != 0L))) 0L
+            else java.lang.Double.doubleToRawLongBits(r.getDouble(c(0)))
           case _: XorSig =>
             var h = 42L
             var j = 0
@@ -148,23 +183,19 @@ object GraftShims {
   /** Resolve each ride's column indexes against `df`'s schema, checking types. */
   private def bind(df: DataFrame, rides: Seq[Ride]): Array[Array[Int]] =
     rides.map { ride =>
-      val cols = ride match {
-        case CountIf(c, _) => Seq(c)
-        case Sum(c) => Seq(c)
-        case Max(c) => Seq(c)
-        case XorSig(cs) => cs
+      val cols: Seq[(String, DataType)] = ride match {
+        case CountIf(c, 0) => Seq(c -> BooleanType)
+        case CountIf(c, _) => Seq(c -> IntegerType)
+        case Sum(c) => Seq(c -> LongType)
+        case Max(c) => Seq(c -> LongType)
+        case XorSig(cs) => cs.map(_ -> LongType)
+        case SumDouble(c, z) => (c -> DoubleType) +: z.toSeq.map(_ -> LongType)
       }
-      val idx = cols.map(df.schema.fieldIndex).toArray
-      val want = ride match {
-        case CountIf(_, 0) => BooleanType
-        case _: CountIf => IntegerType
-        case _ => LongType
-      }
-      idx.foreach { i =>
-        require(df.schema(i).dataType == want,
-          s"$ride: column ${df.schema(i).name} must be $want")
-      }
-      idx
+      cols.map { case (c, want) =>
+        val i = df.schema.fieldIndex(c)
+        require(df.schema(i).dataType == want, s"$ride: column $c must be $want")
+        i
+      }.toArray
     }.toArray
 
   /** Eagerly materialize `df` into a cached, lineage-truncated RDD and wrap

@@ -41,6 +41,18 @@ class EnvKnobSpec extends AnyFunSuite {
       s"unlisted: ${read -- allowed}; listed but no longer read: ${allowed -- read}")
   }
 
+  /** `Dataset.localCheckpoint` keeps the source plan's statistics and runs
+    * through AQE, a query-stage job per exchange; `GraftShims.checkpoint`
+    * (through `CheckpointArena`) is graft's one checkpoint.
+    */
+  test("src/main/scala checkpoints only through GraftShims") {
+    val call = """localCheckpoint\(""".r
+    val callers = sources.filter { case (f, src) =>
+      f.getFileName.toString != "GraftShims.scala" && call.findFirstIn(src).isDefined
+    }.map(_._1)
+    assert(callers.isEmpty, s"localCheckpoint called in: ${callers.mkString(", ")}")
+  }
+
   /** The library shares its caller's session, and other threads plan in it
     * concurrently: a save-set-restore of session conf races them (a run
     * restoring its saved value after another run changed it leaves the

@@ -132,13 +132,15 @@ class WccSpec extends SparkTest {
 }
 
 class PageRankSpec extends SparkTest {
-  /** A step's jobs: its checkpoint and the broadcast of the 1-row dangling
-    * mass. Both rank joins are co-partitioned shuffle-hash joins against
-    * the cached `src`-partitioned edge table. When the size gate left the
-    * small-graph joins to the planner, the cached edge table was broadcast
-    * again on every step: 3 jobs per step.
+  /** A step is its checkpoint job alone: both rank joins are
+    * co-partitioned shuffle-hash joins against the `src`-partitioned edge
+    * checkpoint, and the dangling mass it reads rode the previous step's
+    * checkpoint. Setup is three checkpoints (edges, out-degrees, first
+    * state). When each step broadcast its 1-row dangling-mass aggregate
+    * this run took 2 jobs per step and 16 in all (setup 8: the vertex
+    * `count()` and the edge table's `persist` + `count()` ran through AQE).
     */
-  test("a pagerank step runs at most two jobs (no per-step edge broadcast)") {
+  test("a pagerank step runs one job and a four-step run at most eight") {
     val (edges, n, _) = fixture("sample_graph")
     val (run, jobs) = jobsOf(PageRank.run(spark, edgesDf(edges), vertsDf(0L until n),
       tol = 0.0, maxIter = 4))
@@ -146,7 +148,8 @@ class PageRankSpec extends SparkTest {
     val perStep = jobs.collect { case (l, _) if l != null && l.startsWith("graft pagerank step ") => l }
       .groupBy(identity).map { case (l, js) => l -> js.size }
     assert(perStep.size == 4, s"step labels: $perStep")
-    assert(perStep.values.forall(_ <= 2), s"jobs per step: $perStep")
+    assert(perStep.values.forall(_ <= 1), s"jobs per step: $perStep")
+    assert(jobs.size <= 8, s"${jobs.size} jobs: ${jobs.map(_._1)}")
   }
 
   test("pagerank matches power iteration within 1e-6 and sums to 1") {
@@ -267,9 +270,10 @@ class TrianglesSpec extends SparkTest {
     // Star hub 0 ↔ spokes 1..n plus a consecutive spoke chain: one triangle
     // {0, i, i+1} per adjacent spoke pair. The degree-n hub is the HIGHEST-
     // rank endpoint of every star edge under degree-ordered orientation, so
-    // wedges fan out only from the degree-≤3 spokes — O(1) rows per spoke
-    // instead of the O(n²) wedge blow-up the unoriented plan generated
-    // (the round-2 perVertex defect this test pins).
+    // its higher-ranked neighbour list is empty and each spoke's holds at
+    // most 3 ids — O(1) intersection work per spoke instead of the O(n²)
+    // wedge blow-up an unoriented plan generates (the round-2 perVertex
+    // defect this test pins).
     val n = 1000L
     val edges = (1L to n).map(i => (0L, i)) ++ (1L until n).map(i => (i, i + 1))
     val got = Triangles.perVertex(spark, edgesDf(edges))
@@ -279,6 +283,91 @@ class TrianglesSpec extends SparkTest {
     }).filter(_._2 > 0)
     assert(got == expected)
     assert(Triangles.total(spark, edgesDf(edges)).head().getLong(0) == n - 1)
+  }
+
+  /** Triangles on the benchmark graph (6,000 vertices, 18,465 edges) is
+    * one checkpoint job: `total` hands back a driver-side frame, so its
+    * `collect` starts none, and `perVertex`'s result is the checkpoint, so
+    * one caller action is one more. The wedge plan ended in
+    * `Dataset.localCheckpoint`, which ran through AQE with a query-stage
+    * job per exchange: `total(…).collect()` took 15 jobs, and so did
+    * `perVertex` with one `collect`.
+    */
+  test("triangles: total(…).collect() and perVertex plus one action run at most 2 jobs") {
+    val spec = GraphSpec(numCycles = 1000, maxCycleLen = 6, extraArcsPerVertex = 2.4, seed = 42L)
+    val edges = GraphGen.edges(spark, spec).persist()
+    val local = edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val (total, totalJobs) = jobsOf(Triangles.total(spark, edges).collect()(0).getLong(0))
+    val (per, perJobs) = jobsOf(Triangles.perVertex(spark, edges).collect())
+    edges.unpersist()
+    assert(total == Oracle.triangles(local))
+    assert(per.map(_.getLong(1)).sum == 3 * total)
+    assert(totalJobs.size <= 2, s"total: ${totalJobs.size} jobs: ${totalJobs.map(_._1)}")
+    assert(perJobs.size <= 2, s"perVertex: ${perJobs.size} jobs: ${perJobs.map(_._1)}")
+  }
+
+  /** Random graphs, seeded, against brute force for both `total` and
+    * `perVertex`. Each case mixes hub stars (one vertex in most edges),
+    * cliques, self-loops, duplicated and reversed edges, any of which may
+    * be empty, split over 1, 4 or 8 input partitions.
+    */
+  test("triangles equal brute force on seeded random graphs (ScalaCheck)") {
+    import org.scalacheck.{Gen, Prop, Shrink, Test}
+    import org.scalacheck.rng.Seed
+
+    final case class Case(edges: Vector[(Long, Long)], parts: Int)
+    def vertex(n: Int): Gen[Long] = Gen.choose(0L, n - 1L)
+    def star(n: Int): Gen[Vector[(Long, Long)]] = for {
+      hub <- vertex(n)
+      k <- Gen.choose(0, 120)
+      spokes <- Gen.listOfN(k, Gen.zip(vertex(n), Gen.prob(0.5)))
+    } yield spokes.map { case (v, in) => if (in) (v, hub) else (hub, v) }.toVector
+    def clique(n: Int): Gen[Vector[(Long, Long)]] = for {
+      k <- Gen.choose(0, 9)
+      members <- Gen.listOfN(k, vertex(n))
+    } yield (for (a <- members; b <- members if a < b) yield (a, b)).toVector
+    val caseGen = for {
+      n <- Gen.choose(1, 150)
+      stars <- Gen.listOfN(2, star(n))
+      cliques <- Gen.listOfN(2, clique(n))
+      rand <- Gen.listOf(Gen.zip(vertex(n), vertex(n)))
+      loops <- Gen.listOf(vertex(n).map(v => (v, v)))
+      dups <- Gen.listOf(Gen.oneOf(stars.flatten ++ cliques.flatten ++ rand :+ ((0L, 0L))))
+      parts <- Gen.oneOf(1, 4, 8)
+    } yield Case((stars.flatten ++ cliques.flatten ++ rand ++ loops ++ dups ++ dups.map(_.swap))
+      .toVector, parts)
+    implicit val shrinkCase: Shrink[Case] = Shrink { c =>
+      Shrink.shrinkContainer[Vector, (Long, Long)].shrink(c.edges).map(es => c.copy(edges = es))
+    }
+
+    def perVertexOracle(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      val und = edges.collect { case (a, b) if a != b => (math.min(a, b), math.max(a, b)) }.toSet
+      val nbrs = und.toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+        .groupBy(_._1).map { case (v, xs) => v -> xs.map(_._2).toSet }
+      und.toSeq.flatMap { case (a, b) =>
+        nbrs(a).toSeq.filter(c => c > b && nbrs(b)(c)).flatMap(c => Seq(a, b, c))
+      }.groupBy(identity).map { case (v, xs) => v -> xs.size.toLong }
+    }
+    val seen = scala.collection.mutable.Set.empty[Int]
+    def check(c: Case): Boolean = {
+      seen += c.parts
+      val e = edgesDf(c.edges).repartition(c.parts)
+      val total = Triangles.total(spark, e).collect()(0).getLong(0)
+      val per = Triangles.perVertex(spark, e).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      total == Oracle.triangles(c.edges) && per == perVertexOracle(c.edges)
+    }
+    val prop = Prop.forAll(caseGen)(check)
+    val params = Test.Parameters.default.withMinSuccessfulTests(12).withWorkers(1)
+      .withInitialSeed(Seed(20261019L))
+    val result = Test.check(params, prop)
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
+    assert(seen == Set(1, 4, 8), s"partition counts drawn: $seen")
+
+    // no edges at all, and only self-loops, at every partition count
+    for (p <- Seq(1, 4, 8)) {
+      assert(check(Case(Vector.empty, p)), s"empty edges, $p partitions")
+      assert(check(Case(Vector((3L, 3L), (3L, 3L)), p)), s"self-loops only, $p partitions")
+    }
   }
 }
 
@@ -349,6 +438,25 @@ class LabelPropSpec extends SparkTest {
       seedsDf(seeds.toSeq), iterations = iters)
       .labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == expected)
+  }
+
+  /** A round is its checkpoint job alone: the edge table (hash(src)) joins
+    * the checkpointed state (hash(id)) in place, built on the state. Left
+    * to the planner, the state's exact statistics made it broadcast the
+    * state every round: 3 jobs in round 0 and 2 in round 1 on this graph
+    * (the benchmark's, 6,000 vertices).
+    */
+  test("a labelprop round runs one job (no state broadcast)") {
+    val spec = GraphSpec(numCycles = 1000, maxCycleLen = 6, extraArcsPerVertex = 2.4, seed = 42L)
+    val verts = GraphGen.vertices(spark, spec)
+    val seeds = verts.filter(col("id") % 10 === 0).select(col("id"), (col("id") % 4).as("label"))
+    val (run, jobs) = jobsOf(LabelProp.run(spark, GraphGen.edges(spark, spec),
+      verts.select("id"), seeds, iterations = 2))
+    run.release()
+    val perStep = jobs.collect { case (l, _) if l != null && l.startsWith("graft labelprop step ") => l }
+      .groupBy(identity).map { case (l, js) => l -> js.size }
+    assert(perStep.size == 2, s"step labels: $perStep")
+    assert(perStep.values.forall(_ <= 1), s"jobs per step: $perStep")
   }
 
   test("duplicate seed ids resolve to the min label (no state-row multiplication)") {

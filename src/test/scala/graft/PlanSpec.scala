@@ -153,6 +153,35 @@ class PlanSpec extends SparkTest {
     arena.closeExcept()
   }
 
+  /** A double sum depends on its order of addition. The ride adds each
+    * partition's rows in order and then the partition partials in
+    * partition order, whatever order the tasks finish in, so it equals
+    * that fold computed here, bit for bit, on every run.
+    */
+  test("a double-sum ride adds partition partials in partition order, every run") {
+    import org.apache.spark.sql.GraftShims.SumDouble
+    val s = spark; import s.implicits._
+    val rows = (0 until 2000).map(i => (i.toLong, 1.0 / (i + 3), (i % 3).toLong))
+    val df = spark.createDataset(rows).toDF("id", "x", "k").repartition(8, col("id"))
+      .sortWithinPartitions("id")
+    def fold(zeroOnly: Boolean): Double =
+      df.rdd.mapPartitions { it =>
+        var p = 0.0
+        it.foreach(r => if (!zeroOnly || r.getLong(2) == 0L) p += r.getDouble(1))
+        Iterator(p)
+      }.collect().foldLeft(0.0)(_ + _)
+    val want = (fold(false), fold(true))
+    val arena = new graft.plans.CheckpointArena
+    for (_ <- 1 to 3) {
+      val ck = arena.checkpoint(df, SumDouble("x"), SumDouble("x", Some("k")))
+      assert((ck.double(0), ck.double(1)) == want)
+      arena.release(ck.df)
+    }
+    val empty = arena.checkpoint(df.filter(lit(false)), SumDouble("x", Some("k")))
+    assert(empty.double(0) == 0.0)
+    arena.closeExcept()
+  }
+
   test("checkpoint preserves hash partitioning (no re-exchange on same-key join)") {
     val s = spark; import s.implicits._
     val arena = new graft.plans.CheckpointArena
