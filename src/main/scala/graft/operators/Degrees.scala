@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 /** Degree statistics over an edge table — the building block the reference's
   * trimming pass computes implicitly per CSR row
   * (`/root/reference/cuda/scc_operations.cu:104-118`).
-  * Also used for hub detection (degree > τ → salted joins).
   */
 object Degrees {
 
@@ -37,10 +36,4 @@ object Degrees {
         coalesce(col("oc"), lit(0L)).as("outDeg"),
         coalesce(col("ic"), lit(0L)).as("inDeg"),
         (coalesce(col("oc"), lit(0L)) + coalesce(col("ic"), lit(0L))).as("deg"))
-
-  /** Vertices whose total degree exceeds `threshold` — the skew hubs that get
-    * salted before high-fanout frontier joins (SURVEY.md §4).
-    */
-  def hubs(edges: DataFrame, vertices: DataFrame, threshold: Long): DataFrame =
-    all(edges, vertices).filter(col("deg") > threshold).select("id", "deg")
 }

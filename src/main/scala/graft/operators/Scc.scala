@@ -5,7 +5,6 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.GraftShims.{Checkpoint, CountIf, Max}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.plans.{CheckpointArena, JobLabel, Superstep}
 
@@ -74,13 +73,14 @@ final class SccAcceptedRun(val accepted: DataFrame, releaseFn: () => Unit) {
   *     v6/v7 (`cuda/sccv6_optreach.cu:270-293`) — and in ONE exchange per
   *     step: both frontiers' hits union with a direction flag into a
   *     single per-target aggregation and a single state-rewrite join.
-  *   - **Packed status, specialized round 0**: the BFS state carries its
-  *     four reach flags bit-packed in one int (the reference's packed
-  *     status byte, `utils/is_checked.cu:22-46`), and the single-pivot
-  *     round 0 — 80-95% of all work on web-shaped graphs — aggregates two
-  *     boolean hit flags per target instead of pivot-set arrays, skips
-  *     pivot re-election when no trim removed vertices, and skips the
-  *     round's live-edge materialization outright (no consumer needs it).
+  *   - **Packed status, boolean hits for one pivot**: the BFS state carries
+  *     its four reach flags bit-packed in one int (the reference's packed
+  *     status byte, `utils/is_checked.cu:22-46`), and a round whose live
+  *     rows share one pivot — round 0, 80-95% of all work on web-shaped
+  *     graphs — aggregates two boolean hit flags per target instead of
+  *     pivot-set arrays. Pivots are re-elected only when a trim removed
+  *     vertices, and a round builds its live-edge table only when one of
+  *     its phases reads it.
   *
   * Semantics note (SURVEY.md §5.3): `components` decomposes whatever
   * (vertices, edges) it is given. The reference *engine* computes SCCs of
@@ -102,193 +102,124 @@ object Scc {
       round: Int, localSolved: Long, trimmed: Long, pairTrimmed: Long, bfsSteps: Int,
       sccRows: Long, liveRows: Long)
 
-  /** Initial flagged degree frame for [[trimFixpoint]]: verts ⟕ one-pass
-    * [[Degrees.counts]], `dead` = in- or out-degree 0. Callers checkpoint it
-    * riding `CountIf("dead")`, so the row/dead counts cost no extra action.
-    * Extra `verts` columns (e.g. `pivot`) ride along unchanged.
+  private def roundStart(round: Int): RoundMetrics = RoundMetrics(round, 0L, 0L, 0L, 0, 0L, 0L)
+
+  /** Finished (id, comp) fragments. `pending` holds materialized frames and
+    * lazy filters over the checkpoints in `backing`; `compacted` holds
+    * self-contained id-partitioned frames with their row counts. The
+    * answer is one lazy union over both — never re-materialized per round,
+    * which would be O(V · rounds) writes. `assigned` is the exact row total,
+    * tallied from the counts that rode each fragment's materialization (the
+    * round-2 bench spent ~14% of its wall re-counting cached fragments).
+    */
+  private final case class Fragments(
+      pending: Vector[DataFrame] = Vector.empty,
+      backing: Vector[DataFrame] = Vector.empty,
+      compacted: Vector[(DataFrame, Long)] = Vector.empty,
+      assigned: Long = 0L) {
+
+    def add(part: DataFrame, rows: Long, backers: DataFrame*): Fragments =
+      copy(pending = pending :+ part, backing = backing ++ backers, assigned = assigned + rows)
+
+    def all: Vector[DataFrame] = compacted.map(_._1) ++ pending
+
+    /** Fragment compaction (VERDICT r4 #8), run after every trim sweep and
+      * every round: a chain-of-SCCs graph legitimately runs many rounds and
+      * sweeps, each appending a fragment — O(rounds + sweeps) plan width —
+      * and each lazy trim fragment pins the O(remaining) survivor frame it
+      * filters. Once more than `threshold` fragments are pending they union
+      * into ONE id-partitioned checkpoint and their backers are released.
+      * The newest compacted frames no larger than the new one fold into it,
+      * so sizes at least double down the list: O(log V) compacted frames,
+      * each row re-shuffled O(log V) times. The checkpoint's ridden count
+      * must equal the tallied rows it replaces.
+      */
+    def compact(arena: CheckpointArena, threshold: Int): Fragments =
+      if (pending.size <= threshold) this
+      else {
+        var keep = compacted
+        var rows = assigned - compacted.map(_._2).sum
+        while (keep.nonEmpty && keep.last._2 <= rows) {
+          rows += keep.last._2
+          keep = keep.init
+        }
+        val merged = compacted.drop(keep.size).map(_._1) ++ pending
+        val Checkpoint(frame, _, cnt, _) = arena.checkpoint(
+          merged.reduce(_.unionByName(_)).repartition(col("id")))
+        require(cnt == rows,
+          s"compacted fragment rows $cnt != pending tally $rows — assignment bug")
+        (merged ++ backing).foreach(arena.release)
+        graft.Log.v(s"scc: compacted ${merged.size} fragments into one frame ($cnt rows)")
+        Fragments(compacted = keep :+ (frame -> cnt), assigned = assigned)
+      }
+  }
+
+  /** The decomposition between two phases; every phase takes one and
+    * returns the next.
+    *   - `live`: the (id, pivot) rows not yet assigned, an arena checkpoint
+    *     (a trim's oc/ic/dead counters ride along unused; no pivot before
+    *     [[Decomposition.electPivot]]); `liveCount` its exact row count.
+    *   - `onePivot`: every live row carries the same pivot (round 0 until a
+    *     WCC refinement or recolor), so a BFS hit is membership.
+    *   - `idPart`: `live` is known hash(id)-partitioned.
+    *   - `trimDone`: trim-1 would be a no-op on `live` — the global trim
+    *     reached its fixpoint (edges never cross partitions, and local
+    *     solve removes whole partitions) or its adaptive cap, which leaves
+    *     the trickle to later rounds on purpose. A recolor clears it.
+    *   - `le`: the round's partition-internal edge table (pivot, src, dst)
+    *     over the rows live when it was built, made only when a phase reads
+    *     it; `leCount` the live-edge count when known (trim counters or
+    *     `le`).
+    *   - `salted`: a hub's full-graph degree exceeds `hubDegreeThreshold`.
+    *   - `reached`: the converged BFS state, from reach to retire.
+    *   - `frags`: the finished fragments; `tally` this round's metrics,
+    *     `done` the finished rounds'.
+    */
+  private final case class SccState(
+      live: DataFrame,
+      liveCount: Long,
+      onePivot: Boolean,
+      idPart: Boolean,
+      trimDone: Boolean,
+      salted: Boolean,
+      frags: Fragments,
+      tally: RoundMetrics,
+      done: Vector[RoundMetrics] = Vector.empty,
+      le: Option[DataFrame] = None,
+      leCount: Option[Long] = None,
+      reached: Option[DataFrame] = None) {
+    def round: Int = tally.round
+  }
+
+  /** [[LocalTarjan]] over one task's (a, b) records — b = -1 marks vertex
+    * a, any other b an edge a→b — checking that every vertex record got
+    * exactly one row. */
+  private def solveRecords(recs: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    val vs = mutable.ArrayBuffer[Long]()
+    val es = mutable.ArrayBuffer[(Long, Long)]()
+    recs.foreach { case (a, b) => if (b == -1L) vs += a else es += ((a, b)) }
+    val out = LocalTarjan.solve(vs.toArray, es.toArray).toArray
+    require(out.length == vs.length,
+      s"local solve assigned ${out.length} rows to ${vs.length} vertices — assignment bug")
+    out.iterator
+  }
+
+  /** Initial flagged degree frame for [[Decomposition.trimFixpoint]]: verts
+    * ⟕ one-pass [[Degrees.counts]], `dead` = in- or out-degree 0. Callers
+    * checkpoint it riding `CountIf("dead")`, so the row/dead counts cost no
+    * extra action. Extra `verts` columns (e.g. `pivot`) ride along
+    * unchanged. The join is hash-built on the degree frame and
+    * co-partitioned by `id`: unhinted, the planner broadcasts the degree
+    * frame in a job of its own before the checkpoint's.
     */
   private def trimDegreesPlan(edges: DataFrame, verts: DataFrame): DataFrame = {
     val carry = verts.columns.filter(_ != "id").toSeq
     verts
-      .join(Degrees.counts(edges), Seq("id"), "left")
+      .join(Degrees.counts(edges).hint("shuffle_hash"), Seq("id"), "left")
       .select((col("id") +: carry.map(col)) ++ Seq(
         coalesce(col("oc"), lit(0L)).as("oc"),
         coalesce(col("ic"), lit(0L)).as("ic")): _*)
       .withColumn("dead", col("oc") <= 0 || col("ic") <= 0)
-  }
-
-  /** Degree-decrement trim-1 fixpoint (`trimming_kernel`/`trimming`,
-    * main.cpp:54-63, cuda/scc_operations.cu:89-127) in incremental form:
-    * in/out-degrees come pre-aggregated in `init` (a [[trimDegreesPlan]]
-    * checkpoint riding `CountIf("dead")` first — ONE pass over ONE edge
-    * copy); each sweep
-    * removes the dead vertices (in- or out-degree 0 ⇒ singleton SCC) and
-    * only decrements the counters of their neighbors — O(removed·degree)
-    * shuffle per sweep instead of a full edges⨝live re-join. ONE Spark
-    * action per sweep (the counter update, whose dead-count rides the
-    * checkpoint accumulator; the removed set is a lazy filter).
-    *
-    * `edges` is scanned once per sweep; `edgesByDst` (same rows,
-    * dst-partitioned) is BY-NAME and only forced by the rare huge sweep
-    * (> 5M removed at once) whose decrement can't broadcast — every other
-    * path leaves the dst copy unbuilt. Removed vertices are appended to
-    * `assignedParts`
-    * as (id, comp = id) fragments — LAZY filters over the sweep's already-
-    * materialized degree frame, which backs them instead of being
-    * released: one driver action per sweep, not two. Retention is BOUNDED
-    * (not just deferred): every `compactEvery` sweeps the pending
-    * fragments union into one compact frame (delivered via
-    * `compactedParts` so the round-level compactor never re-shuffles it)
-    * and their O(remaining)
-    * backers are freed, so a peel-heavy graph below `capMinRemaining` —
-    * where the adaptive cap never engages and ~maxSweeps sweeps are
-    * legitimate — holds at most `compactEvery` survivor frames at a time
-    * instead of one per sweep.
-    *
-    * Adaptive sweep cap (the measured serial floor of the sf0.1 bench run
-    * was this loop — 29% of wall, mostly tail sweeps removing a trickle):
-    * each sweep costs a full edge-table pass + an O(remaining) state
-    * rewrite regardless of how little it removes, so once a sweep would
-    * remove < `capFraction` (default 0.1%) of the remaining vertices the
-    * loop stops and leaves the
-    * stragglers flagged-but-live — trim is an accelerator, not a
-    * correctness requirement; FW-BW classifies the leftovers as trivial
-    * SCCs in later rounds at O(leftover) cost (in practice the post-giant
-    * local-solve mop-up). Only active above `capMinRemaining` (default 1M)
-    * remaining vertices so small graphs and every fixture test still reach
-    * the exact fixpoint; the knobs exist so the cap path itself is
-    * unit-testable at fixture size.
-    *
-    * Returns (survivors frame — arena-owned, schema = verts ++ oc/ic/dead —
-    * remaining row count, removed total, sweeps run, done, compacted rows).
-    * `done` = the trim phase is complete (fixpoint reached or adaptively
-    * capped); false only when the hard `maxSweeps` cap interrupted real
-    * progress. `compacted rows` = rows this call appended to the caller's
-    * `compactedParts` (already-compact frames, never re-shuffled by the
-    * round-level compactor) — the caller must credit them to its
-    * compacted-rows tally alongside `assigned += removed total`.
-    */
-  private def trimFixpoint(
-      arena: CheckpointArena,
-      edges: DataFrame,
-      edgesByDst: => DataFrame,
-      init: Checkpoint,
-      maxSweeps: Int,
-      assignedParts: mutable.ArrayBuffer[DataFrame],
-      partBacking: mutable.ArrayBuffer[DataFrame],
-      compactedParts: mutable.ArrayBuffer[DataFrame],
-      capFraction: Double,
-      capMinRemaining: Long): (DataFrame, Long, Long, Int, Boolean, Long) = {
-    var degs = init.df
-    var remaining = init.rows
-    var deadCnt = init.rides(0)
-    val carry = degs.columns.filterNot(Set("id", "oc", "ic", "dead")).toSeq
-    def proj(oc: Column, ic: Column): Seq[Column] =
-      (col("id") +: carry.map(col)) ++ Seq(oc.as("oc"), ic.as("ic"))
-    var removedTotal = 0L
-    var sweep = 0
-    var capped = false
-    // Sweep-local fragment buffers with their own compaction guard (VERDICT
-    // r4): each sweep's lazy `removed` fragment pins the FULL O(remaining)
-    // survivor frame it filters, and a peel-heavy graph BELOW
-    // `capMinRemaining` (where the adaptive cap never engages) legitimately
-    // runs many sweeps — up to maxSweeps × O(V) cached rows if retention
-    // waited for the caller's round-level compaction. Every `compactEvery`
-    // sweeps the pending fragments union into ONE compact (id, comp) frame
-    // (rows ≤ removed-so-far, usually ≪ V) and the heavyweight backers are
-    // released. Compacted frames flow to the caller's round-level
-    // `compactedParts` (credited via the returned compacted-rows count), so
-    // neither compactor ever re-shuffles them — routing them through
-    // `assignedParts` instead would have the round-level compactor union +
-    // repartition the already-settled rows a second time.
-    val compactEvery = 8
-    val localParts = mutable.ArrayBuffer[DataFrame]()
-    val localBacking = mutable.ArrayBuffer[DataFrame]()
-    val localCompacted = mutable.ArrayBuffer[DataFrame]()
-    var localPendingRows = 0L
-    var localCompactedRows = 0L
-    def compactLocal(): Unit = if (localParts.size >= compactEvery) {
-      val Checkpoint(compacted, _, cnt, _) = arena.checkpoint(
-        localParts.reduce(_.unionByName(_)).repartition(col("id")))
-      require(cnt == localPendingRows,
-        s"trim compaction rows $cnt != pending tally $localPendingRows — trim bug")
-      localBacking.foreach(arena.release)
-      localParts.clear()
-      localBacking.clear()
-      localCompacted += compacted
-      localCompactedRows += cnt
-      localPendingRows = 0L
-      graft.Log.v(s"trim: compacted $cnt removed rows into one frame")
-    }
-    while (deadCnt > 0 && sweep < maxSweeps && !capped) {
-      graft.Log.v(s"trim sweep $sweep: dead=$deadCnt remaining=$remaining")
-      if (remaining > capMinRemaining && deadCnt < remaining * capFraction) {
-        capped = true
-      } else {
-      // removed rides the already-materialized degs frame: a lazy filter
-      // (no extra driver action); degs itself becomes the fragment backing.
-      val removed = degs.filter(col("dead")).select("id")
-      localBacking += degs
-      localParts += removed.select(col("id"), col("id").as("comp"))
-      localPendingRows += deadCnt
-      // Decrement counters of the removed set's neighbors. Typical sweep:
-      // removed is small → ONE pass over one edge copy with two broadcast
-      // hash probes emits both decrement directions (the naive form scanned
-      // the edge table twice per sweep — measured as the bulk of pre-trim
-      // wall). Huge sweep (first sweep of a peel-heavy graph at scale):
-      // broadcasting `removed` would not fit — fall back to two semi-joins
-      // that each reuse an existing edge partitioning, shuffling only
-      // `removed`.
-      val dec =
-        if (deadCnt <= 5000000L) {
-          val remSrc = broadcast(removed.select(col("id").as("src"), lit(1).as("_rs")))
-          val remDst = broadcast(removed.select(col("id").as("dst"), lit(1).as("_rd")))
-          edges
-            .join(remSrc, Seq("src"), "left")
-            .join(remDst, Seq("dst"), "left")
-            .filter(col("_rs").isNotNull || col("_rd").isNotNull)
-            .select(explode(array(
-              when(col("_rs").isNotNull,
-                struct(col("dst").as("id"), lit(1L).as("dIn"), lit(0L).as("dOut"))),
-              when(col("_rd").isNotNull,
-                struct(col("src").as("id"), lit(0L).as("dIn"), lit(1L).as("dOut")))))
-              .as("e"))
-            .filter(col("e").isNotNull)
-            .select(col("e.id").as("id"), col("e.dIn").as("dIn"), col("e.dOut").as("dOut"))
-            .groupBy("id").agg(sum("dIn").as("dIn"), sum("dOut").as("dOut"))
-        } else {
-          edges
-            .join(removed.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-            .select(col("dst").as("id"), lit(1L).as("dIn"), lit(0L).as("dOut"))
-            .unionByName(edgesByDst
-              .join(removed.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-              .select(col("src").as("id"), lit(0L).as("dIn"), lit(1L).as("dOut")))
-            .groupBy("id").agg(sum("dIn").as("dIn"), sum("dOut").as("dOut"))
-        }
-      val next = arena.checkpoint(
-        degs.filter(!col("dead")).drop("dead")
-          .join(dec.hint("shuffle_hash"), Seq("id"), "left")
-          .select(proj(col("oc") - coalesce(col("dOut"), lit(0L)),
-            col("ic") - coalesce(col("dIn"), lit(0L))): _*)
-          .withColumn("dead", col("oc") <= 0 || col("ic") <= 0),
-        CountIf("dead"))
-      // degs NOT released: it backs this sweep's removed fragment (until
-      // compactLocal materializes the fragment and frees it)
-      removedTotal += deadCnt
-      degs = next.df
-      remaining = next.rows
-      deadCnt = next.rides(0)
-      sweep += 1
-      // safe point: `next` is materialized, so every frame in localBacking
-      // is superseded except as a fragment backer — exactly what compaction
-      // removes the need for
-      compactLocal()
-      }
-    }
-    compactedParts ++= localCompacted
-    assignedParts ++= localParts
-    partBacking ++= localBacking
-    (degs, remaining, removedTotal, sweep, deadCnt == 0 || capped, localCompactedRows)
   }
 
   /** Outer-loop durability (north_rule "resumable from checkpoint with
@@ -369,6 +300,29 @@ object Scc {
     }
   }
 
+  /** Edge layout: only edges internal to the vertex set matter for SCCs.
+    * Self-loops and duplicates are dropped, and the rest is ONE hash(src)
+    * checkpoint whose row count is the edge total that routes the
+    * whole-graph local solve. The dedup folds into the src repartition
+    * (hash(src) co-locates equal (src,dst) pairs, so the distinct
+    * aggregation adds no exchange), and the defensive endpoint semi-joins
+    * are skipped when the caller guarantees closure
+    * (`edgesWithinVertices` — generated graphs, `% m n` files whose ids are
+    * dense by format). A checkpoint, not a persist: a persisted plan is
+    * cached through AQE, whose exchange runs as a query-stage job of its
+    * own. The hash(dst) copy is [[Decomposition.eByDst]].
+    */
+  private def layoutEdges(arena: CheckpointArena, edges: DataFrame, verts: DataFrame,
+      edgesWithinVertices: Boolean): Checkpoint = {
+    val base = edges.select("src", "dst").filter(col("src") =!= col("dst"))
+    val clean =
+      if (edgesWithinVertices) base
+      else base
+        .join(verts.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
+        .join(verts.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
+    arena.checkpoint(clean.repartition(col("src")).distinct())
+  }
+
   /** Full SCC decomposition. Returns (id, comp) for every vertex, with
     * comp = min member id (canonical), plus per-round metrics.
     *
@@ -382,12 +336,12 @@ object Scc {
     *
     * Per-round job budget (the sandbox superstep-latency floor is the
     * binding constraint; see BASELINE.md): the live partition-internal edge
-    * table is materialized ONCE per round and shared by local-solve /
-    * trim-1 / trim-2; trim sweeps decrement degree counters instead of
-    * re-joining edges; convergence counts ride checkpoint accumulators;
-    * the relabel flows into the BFS harness's own state0 checkpoint; the
-    * recolor checkpoint serves both the finished fragment and the done
-    * count.
+    * table is materialized at most ONCE per round and shared by WCC
+    * refinement, local-solve, trim-1 and trim-2; trim sweeps decrement
+    * degree counters instead of re-joining edges; convergence counts ride
+    * checkpoint accumulators; the relabel flows into the BFS harness's own
+    * state0 checkpoint; the recolor checkpoint serves both the finished
+    * fragment and the done count.
     *
     * When `snapshotDir` is set the outer loop is durable and resumable
     * (see [[Snapshots]]); a fresh call with the same directory continues
@@ -405,309 +359,83 @@ object Scc {
       edgesWithinVertices: Boolean = false,
       trimCapFraction: Double = 0.001,
       trimCapMinRemaining: Long = 1000000L,
-      fragmentCompactionThreshold: Int = 64): SccRun = JobLabel(spark, "scc", "setup") {
-    import spark.implicits._
+      fragmentCompactionThreshold: Int = 64): SccRun = {
     val arena = new CheckpointArena
-
     val verts = vertices.select("id")
-    // Only edges internal to the vertex set matter for SCCs. Keep BOTH
-    // hash-partitionings (SURVEY.md §7.1): frontier/degree joins on `src`
-    // and on `dst` then reuse an existing exchange instead of reshuffling
-    // the edge table every superstep — with the partitioning-preserving
-    // checkpoint (GraftShims) the per-step shuffle is O(frontier), not
-    // O(edges + state).
-    // Build cost BEFORE the first BFS hop is kept at ONE edge exchange: the
-    // dedup folds into the src-repartition (hash(src) co-locates equal
-    // (src,dst) pairs, so the distinct aggregation adds no exchange), the
-    // defensive endpoint semi-joins are skipped when the caller guarantees
-    // closure (`edgesWithinVertices` — generated graphs, `% m n` files
-    // whose ids are dense by format), and the dst copy is built LAZILY off
-    // the cached src copy: nothing before the first backward BFS hop reads
-    // it, so its full-table exchange no longer sits in the edge-build +
-    // pre-trim phase (the round-3 bench's only anti-scaling segment —
-    // 39.9 s @8 vs 67.4 s @32 at 61M edges, shuffle-write-bound), and runs
-    // whose trims finish the whole graph never pay it at all.
-    // The src copy is a checkpoint, not a persist: a persisted plan is
-    // cached through AQE, whose exchange runs as a query-stage job of its
-    // own, and the checkpoint's row count is the edge total that routes the
-    // whole-graph local solve.
-    val base = edges.select("src", "dst").filter(col("src") =!= col("dst"))
-    val eClean =
-      if (edgesWithinVertices) base
-      else base
-        .join(verts.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-        .join(verts.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-    val eBySrcCk = arena.checkpoint(eClean.repartition(col("src")).distinct())
-    val eBySrc = eBySrcCk.df
-    val numEdges = eBySrcCk.rows
-    graft.Log.v(s"scc: edges materialized ($numEdges)")
-    var eByDstCell: Option[DataFrame] = None
-    def eByDst: DataFrame = synchronized {
-      eByDstCell.getOrElse {
-        val d = eBySrc.repartition(col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
-        eByDstCell = Some(d)
-        d
-      }
+    val (d, start) = JobLabel(spark, "scc", "setup") {
+      val eBySrc = layoutEdges(arena, edges, verts, edgesWithinVertices)
+      graft.Log.v(s"scc: edges materialized (${eBySrc.rows})")
+      val d = new Decomposition(spark, arena, verts, eBySrc.df, maxTrimSweeps,
+        localSolveEdgeThreshold, hubDegreeThreshold, snapshotDir, trimCapFraction,
+        trimCapMinRemaining, fragmentCompactionThreshold)
+      (d, d.resumed().getOrElse(
+        if (localSolveEdgeThreshold > 0 && eBySrc.rows <= localSolveEdgeThreshold)
+          d.localSolveAll(eBySrc.rows)
+        else d.electPivot(d.preTrim())))
     }
-    // Background prefetch of the dst partitioning (guide §2.6 — overlap
-    // independent jobs): the first BACKWARD BFS hop forces the dst copy's
-    // full-table exchange (~4.7 s of the 36 s wall at the 15.3M-edge point,
-    // all of it inside BFS step 0), yet nothing between the edge
-    // materialization and that hop needs it — pre-trim decrements broadcast,
-    // pivot election reads the degree frame. Kicking the exchange off on a
-    // daemon thread right after the src copy materializes hides it behind
-    // those phases; Spark's scheduler back-fills the cores its tasks need
-    // between the driver-latency gaps of the small pre-trim jobs. Safe:
-    // both threads act on the SAME persisted DataFrame (synchronized cell),
-    // so concurrent actions share cached blocks — worst case a partition is
-    // computed twice, never wrong. The job group lets components() cancel a
-    // still-running prefetch at exit (e.g. a run whose trims finish the
-    // whole graph) instead of leaving a stray job burning the cluster.
-    def prefetchEByDst(): Thread = {
-      val t = new Thread(() => {
-        try {
-          spark.sparkContext.setJobGroup("graft-scc-prefetch",
-            "scc: dst edge partitioning prefetch", interruptOnCancel = true)
-          eByDst.write.format("noop").mode("overwrite").save()
-        } catch { case _: Throwable => () }
-      }, "graft-scc-dst-prefetch")
-      t.setDaemon(true)
-      t.start()
-      t
-    }
-    var prefetchThread: Option[Thread] = None
+    // every vertex is now either in a finished fragment or live
+    val expectedTotal = start.frags.assigned + start.liveCount
+    val end = Iterator.iterate(start)(d.nextRound)
+      .find(s => s.liveCount == 0 || s.round >= maxOuter).get
+    require(end.liveCount == 0, s"SCC did not converge in $maxOuter rounds (${end.liveCount} live)")
+    // Exactness guarantee for assignedCount: every vertex ended up in
+    // exactly one fragment, with all counts ridden on materialization
+    // actions — a union re-count would scan the same cached blocks to
+    // learn the same number.
+    require(end.frags.assigned == expectedTotal,
+      s"fragment tally ${end.frags.assigned} != vertex total $expectedTotal — assignment bug")
 
-    // Finished (id, comp) fragments; each is independently materialized (or
-    // a lazy filter over a materialized backing frame), the final answer is
-    // one lazy union over them (never re-materialized per round — that
-    // would be O(V * rounds) writes).
-    val assignedParts = mutable.ArrayBuffer[DataFrame]()
-    // checkpointed pieces backing lazy (id, comp) fragments — must outlive
-    // the arena alongside the fragments themselves
-    val partBacking = mutable.ArrayBuffer[DataFrame]()
-    // COMPACTED fragment frames (each one self-contained and bounded to
-    // shuffle-partition width) — see maybeCompactFragments below
-    val compactedParts = mutable.ArrayBuffer[DataFrame]()
-    val metrics = Vector.newBuilder[RoundMetrics]
-    val snaps = snapshotDir.map(new Snapshots(spark, _))
+    // The parts are already materialized; the result is their lazy union —
+    // re-checkpointing it here would be one more full O(V) pass for nothing.
+    val parts = end.frags.all
+    val result =
+      if (parts.isEmpty) verts.select(col("id"), col("id").as("comp")).limit(0)
+      else parts.reduce(_.unionByName(_))
+    arena.closeExcept(parts ++ end.frags.backing: _*)
+    new SccRun(result, end.done, end.frags.assigned, () => arena.closeExcept())
+  }
 
-    var live: DataFrame = null
-    var liveCount = 0L
-    var round = 0
-    // Exact running tally of assigned (id, comp) rows — every fragment's
-    // count rode its own materialization action, so the total needs no
-    // re-scan of the fragment union (the round-2 bench spent ~14% of its
-    // wall re-counting already-cached fragments). Checked against the
-    // input vertex count before returning.
-    var assigned = 0L
-    var expectedTotal = 0L
-    // ---- fragment compaction (VERDICT r4 #8): a chain-of-SCCs-shaped graph
-    // can legitimately run many rounds/sweeps, each appending fragments, and
-    // the result is their lazy union — O(rounds + sweeps) plan width. Once
-    // the PENDING list exceeds the threshold, union+checkpoint it into ONE
-    // id-partitioned frame (bounded to shuffle-partition width) and release
-    // the lazy fragments' backing frames; compacted frames accumulate in
-    // `compactedParts` and are never re-compacted (re-shuffling already-
-    // settled rows every trigger would cost O(V · rounds/threshold) total),
-    // so the final plan stays O(threshold + rounds/threshold) wide. The
-    // exactness tally is re-asserted per compaction: the checkpoint's ridden
-    // count must equal the pending fragments' tallied rows.
-    var compactedRows = 0L
-    def maybeCompactFragments(): Unit =
-      if (assignedParts.size > fragmentCompactionThreshold) {
-        val pendingRows = assigned - compactedRows
-        val Checkpoint(compacted, _, cnt, _) = arena.checkpoint(
-          assignedParts.reduce(_.unionByName(_)).repartition(col("id")))
-        require(cnt == pendingRows,
-          s"compacted fragment rows $cnt != pending tally $pendingRows — assignment bug")
-        (assignedParts ++ partBacking).foreach(arena.release)
-        assignedParts.clear()
-        partBacking.clear()
-        compactedParts += compacted
-        compactedRows = assigned
-        graft.Log.v(s"scc: compacted fragments into frame ${compactedParts.size} " +
-          s"($cnt rows)")
-      }
-    // whether the global trim phase is complete (fixpoint or adaptive cap)
-    // — used to skip the then-redundant round-0 trim, see below
-    var preTrimDone = true
-    // full-graph max out/in degree, captured from the pre-trim degree frame
-    // — feeds the salting gate without re-aggregating the edge table. FULL
-    // graph, not live: BFS hit aggregation joins the frontier against the
-    // full edge tables and masks dead targets only afterwards at the state
-    // join, so a pre-trim-removed hub is still an aggregation key with its
-    // full fan-in (ADVICE r3).
-    var fullMaxDegs: Option[(Long, Long)] = None
-    // whether `live` is known hash(id)-partitioned (lets the BFS seed skip
-    // an explicit repartition when the relabel pass is also skipped)
-    var liveIdPart = false
-    // whether the CURRENT round's live state is known to carry exactly one
-    // pivot (the round-0 degree-product seed): the BFS hop then replaces
-    // the per-target pivot-set (collect_set array) aggregation with a
-    // boolean hit-flag aggregation — shuffle rows shrink to (id, dir) and
-    // no arrays are built or compared. On web-shaped graphs that round
-    // carries 80-95% of all BFS work. Trims/relabel preserve the property
-    // (one group maps to one group); WCC refinement and recolor clear it.
-    var singlePivot = false
-    // the single pivot's id when known driver-side (round-0 election) —
-    // lets the single-pivot BFS drop the constant pivot column from its
-    // iterated state entirely; -1 when unknown (e.g. post-trim relabel)
-    var singlePivotId = -1L
-    // live-subgraph edge count at the round-0 seed (from the trim-fixpoint
-    // degree counters; -1 = unknown)
-    var liveEdges0 = -1L
+  /** The phases of one [[Scc.components]] call over its hash(src) edge
+    * checkpoint `eBySrc`: setup either solves a graph whose whole edge set
+    * fits one task in one Tarjan, or runs the global trim and elects the
+    * round-0 pivot; each round then refines its partitions by WCC,
+    * local-solves the small ones, runs trim-1 and trim-2, reaches forward
+    * and backward from every pivot and retires the settled SCCs,
+    * recoloring the rest. Each phase takes the [[SccState]] the previous
+    * one returned and returns the next; the class holds only the call's
+    * parameters, its arena and the edge layout.
+    */
+  private final class Decomposition(
+      spark: SparkSession,
+      arena: CheckpointArena,
+      verts: DataFrame,
+      eBySrc: DataFrame,
+      maxTrimSweeps: Int,
+      localSolveEdgeThreshold: Long,
+      hubDegreeThreshold: Long,
+      snapshotDir: Option[String],
+      trimCapFraction: Double,
+      trimCapMinRemaining: Long,
+      fragmentCompactionThreshold: Int) {
+    import spark.implicits._
 
-    snaps.flatMap(_.resume()) match {
-      case Some((liveDf, parts, r, lc)) =>
-        // Durable restart: completed fragments come back as parquet scans
-        // (no arena backing needed), the live state is re-materialized
-        // id-partitioned, and the loop re-enters after round r. Pre-trim
-        // and WCC are never recomputed.
-        graft.Log.v(s"scc: resuming after round $r (live=$lc, parts=${parts.size})")
-        assignedParts ++= parts
-        // parquet-footer counts (metadata-only) seed the tally on resume
-        assigned = parts.map(_.count()).sum
-        live = arena.checkpoint(liveDf.repartition(col("id"))).df
-        liveCount = lc
-        liveIdPart = true
-        round = r + 1
-        preTrimDone = false // conservatively run per-round trims
-        prefetchThread = Some(prefetchEByDst())
+    private val snaps = snapshotDir.map(new Snapshots(spark, _))
 
-      case None if numEdges <= localSolveEdgeThreshold && localSolveEdgeThreshold > 0 =>
-        // ---- whole-graph local solve: the ENTIRE edge set fits one task,
-        // so one Tarjan over every vertex and edge finishes the job — no
-        // degree pass, pre-trim, pivot, live-edge table or routing. The
-        // records reach that task through a coalesce, not an exchange, and
-        // its output is the one fragment: one job after the edge checkpoint.
-        // The task checks that every vertex record got exactly one row.
-        graft.Log.v(s"scc: $numEdges edges <= localSolveEdgeThreshold — whole-graph local solve")
-        // (id, -1) marks a vertex row, (src, dst) an edge
-        val recs = verts.select(col("id").as("a"), lit(-1L).as("b"))
-          .unionByName(eBySrc.select(col("src").as("a"), col("dst").as("b")))
-        val Checkpoint(solved, _, solvedCnt, _) = JobLabel(spark, "scc", "local-solve") {
-          arena.checkpoint(recs.as[(Long, Long)].coalesce(1).mapPartitions { it =>
-            val vs = mutable.ArrayBuffer[Long]()
-            val es = mutable.ArrayBuffer[(Long, Long)]()
-            it.foreach { case (a, b) => if (b == -1L) vs += a else es += ((a, b)) }
-            val out = LocalTarjan.solve(vs.toArray, es.toArray).toArray
-            require(out.length == vs.length,
-              s"local solve assigned ${out.length} rows to ${vs.length} vertices — assignment bug")
-            out.iterator
-          }.toDF("id", "comp"))
-        }
-        assignedParts += solved
-        assigned = solvedCnt
-        metrics += RoundMetrics(round, solvedCnt, 0L, 0L, 0, 0L, 0L)
-        snaps.foreach(_.writeRound(round, verts.select(col("id"), lit(0L).as("pivot")).limit(0),
-          0L, assignedParts.toSeq))
-        round += 1
+    /** The hash(dst) edge copy the backward BFS hop (and a pre-trim sweep
+      * too big to broadcast) joins on: ONE arena checkpoint, built the
+      * first time a phase reads it — [[reach]] forces it before its
+      * superstep loop, so no BFS step pays the full-table exchange — and
+      * never on a run that needs no BFS.
+      */
+    private lazy val eByDst: DataFrame = arena.checkpoint(eBySrc.repartition(col("dst"))).df
 
-      case None =>
-        // ---- ONE action builds the full-graph degree frame with the
-        // one-pass explode aggregation ([[Degrees.counts]]) — the round-3
-        // phase paid a separate count job plus the dst copy's full exchange
-        // here, the two terms its (8,32) anti-scaling was made of.
-        // The full-graph max degrees ride the same action — no separate
-        // agg job (VERDICT r4 #6) — and feed the salting gate.
-        val init = arena.checkpoint(trimDegreesPlan(eBySrc, verts),
-          CountIf("dead"), Max("oc"), Max("ic"))
-        fullMaxDegs = Some((init.rides(1), init.rides(2)))
-
-        // the src copy is materialized (its checkpoint) — start the
-        // dst-copy exchange now, hidden behind pre-trim + pivot
-        prefetchThread = Some(prefetchEByDst())
-        // ---- round -1: GLOBAL trim-1 before anything else (main.cpp:172
-        // does the same) — degree-0 peeling needs no partition map and
-        // shrinks the first FW-BW round.
-        val (degs, preRemaining, preTrimmed, preSweeps, preDone, preCompacted) =
-          trimFixpoint(
-            arena, eBySrc, eByDst, init, maxTrimSweeps, assignedParts, partBacking,
-            compactedParts, trimCapFraction, trimCapMinRemaining)
-        preTrimDone = preDone
-        assigned += preTrimmed
-        compactedRows += preCompacted
-        graft.Log.v(s"scc: global pre-trim removed $preTrimmed in $preSweeps sweeps" +
-          (if (preDone) "" else " (maxTrimSweeps cap hit)"))
-        // a peel-heavy graph can exceed the fragment threshold (and retain
-        // one O(V) survivor frame per sweep) inside the pre-trim alone
-        maybeCompactFragments()
-
-        // Round-0 pivot: the live vertex maximizing live-degree product
-        // (in×out), ties to min id — the standard FW-BW pivot heuristic
-        // (Hong et al., PPoPP'13): it lands inside the giant SCC with high
-        // probability, so round 0 extracts the giant component directly.
-        // The WCC pre-partition that used to run here is DEFERRED to the
-        // post-giant remainder (see the in-loop refinement below): on
-        // web-shaped graphs the giant weak component is most of the graph,
-        // and a full-graph WCC (O(E) shuffles × its own superstep rounds)
-        // bought nothing that one FW-BW round doesn't — measured 138 s of
-        // a 418 s convergence at the 15.3M-edge bench point.
-        // degs still carries the trim fixpoint's live oc/ic counters, so
-        // the argmax is one small agg on the already-materialized frame —
-        // and sum(oc) in the same pass IS the live-subgraph edge count
-        // (each oc counts out-edges to live endpoints at fixpoint), which
-        // lets round 0 skip building `le` entirely (see skipLe below).
-        // The same one-pass agg also captures max live out/in degree for the
-        // salting gate (reusing the trim counters saves two full-edge
-        // aggregations per call) and orders the degree product in
-        // decimal(38,0) so extreme hub-degree products can't overflow Long
-        // and misorder the argmax.
-        val pivotRow = degs
-          .agg(max(struct(
-              (col("oc").cast("decimal(19,0)") * col("ic")).as("p"),
-              (-col("id")).as("negId"))),
-            sum(col("oc")))
-          .head()
-        if (!pivotRow.isNullAt(0)) {
-          val pivot0 = -pivotRow.getStruct(0).getLong(1)
-          liveEdges0 = if (pivotRow.isNullAt(1)) 0L else pivotRow.getLong(1)
-          graft.Log.v(s"scc: round-0 pivot $pivot0 by degree product ($liveEdges0 live edges)")
-          // Fast seed: when round 0 is certain to take the slim le-skip
-          // path (same predicate as skipLe below), nothing in that round
-          // reads a pivot column from the live frame — the trim survivors
-          // frame IS the round-0 live state (degree counters ride along
-          // unused), its row count is already known, and the O(V) seed
-          // re-materialization job disappears.
-          val fastSeed = preTrimDone && localSolveEdgeThreshold > 0 &&
-            liveEdges0 > localSolveEdgeThreshold
-          if (fastSeed) {
-            live = degs
-            liveCount = preRemaining
-          } else {
-            val lc = arena.checkpoint(
-              degs.select(col("id"), lit(pivot0).as("pivot")))
-            live = lc.df
-            liveCount = lc.rows
-            arena.release(degs)
-          }
-          liveIdPart = true // degs is id-joined throughout trimFixpoint
-          singlePivot = true
-          singlePivotId = pivot0
-        } else {
-          live = arena.checkpoint(verts.select(col("id"), col("id").as("pivot")).limit(0)).df
-          liveCount = 0L
-          arena.release(degs)
-        }
-    }
-    // every vertex is now either in an assigned fragment or live
-    expectedTotal = assigned + liveCount
-
-    // ---- skew gate: when a hub vertex exceeds the threshold, the BFS
-    // pivot-set aggregation switches to the two-level salted build
-    // (Salting.saltedDirectionalCollectSet). The max FULL-GRAPH degrees
-    // come for free from the pre-trim degree pass — full-graph, because the
-    // BFS aggregates hits over the full edge tables (dead targets masked
-    // only at the state join), so a trimmed-away hub still bounds fan-in.
-    // One one-pass degree aggregation runs only on the rare path that has
-    // no degree frame (durable resume). Computed only when a distributed
-    // BFS can happen (the whole-graph local solve leaves nothing live).
-    val useSalting = liveCount > 0 && {
-      val (maxOutDeg, maxInDeg) = fullMaxDegs.getOrElse {
-        val r = Degrees.counts(eBySrc)
-          .agg(coalesce(max("oc"), lit(0L)), coalesce(max("ic"), lit(0L))).head()
-        (r.getLong(0), r.getLong(1))
-      }
+    /** Skew gate: the BFS pivot-set aggregation switches to the two-level
+      * salted build ([[Salting.saltedDirectionalCollectSet]]) when a
+      * FULL-graph degree exceeds the threshold — full-graph, because the
+      * BFS aggregates hits over the full edge tables and masks dead targets
+      * only at the state join, so a trimmed-away hub still bounds fan-in
+      * (ADVICE r3). */
+    private def hubs(maxOutDeg: Long, maxInDeg: Long): Boolean = {
       val hot = maxOutDeg > hubDegreeThreshold || maxInDeg > hubDegreeThreshold
       if (hot)
         graft.Log.v(s"scc: hub degree ${math.max(maxInDeg, maxOutDeg)} > " +
@@ -715,89 +443,180 @@ object Scc {
       hot
     }
 
-    while (liveCount > 0 && round < maxOuter) JobLabel(spark, "scc", s"round $round") {
-      // ---- the round's partition-internal live edge table, built ONCE and
-      // reused by local-solve, trim-1 and trim-2 (the round-1 engine
-      // re-joined live⨝edges separately for every consumer and every trim
-      // sweep — at 100 TB each of those was a full O(E) shuffle).
-      // SKIPPED in the common giant-component round 0: with one pivot, a
-      // fixpointed pre-trim and a remainder too big to local-solve, every
-      // le consumer is a no-op this round (the BFS reads the original edge
-      // partitionings directly, masking dead targets at the state join) —
-      // and the live edge count that decides "too big" is already known
-      // from the trim degree counters (liveEdges0), so the whole O(E)
-      // double join + cache is dead weight.
-      val skipLe = round == 0 && singlePivot && preTrimDone &&
-        localSolveEdgeThreshold > 0 && liveEdges0 > localSolveEdgeThreshold
-      var (le, leCnt) =
-        if (skipLe) (null: DataFrame, liveEdges0)
-        else {
-          // (constructed only here: a fast-seeded live frame carries no
-          // pivot column, and fast-seed implies skipLe)
-          val lp = live.select(col("id"), col("pivot"))
-          val ck = arena.checkpoint(
-            eBySrc
-              .join(lp.withColumnRenamed("id", "src").withColumnRenamed("pivot", "srcP"), Seq("src"))
-              .join(lp.withColumnRenamed("id", "dst").withColumnRenamed("pivot", "dstP"), Seq("dst"))
-              .filter(col("srcP") === col("dstP"))
-              .select(col("srcP").as("pivot"), col("src"), col("dst")))
-          (ck.df, ck.rows)
-        }
+    /** Durable restart: completed fragments come back as parquet scans (no
+      * arena backing needed, parquet-footer counts seed the tally), the
+      * live state is re-materialized id-partitioned, and the loop re-enters
+      * after the newest durable round. Pre-trim and WCC are never
+      * recomputed; per-round trims run, and the full-graph degree maxima
+      * cost one aggregation. */
+    def resumed(): Option[SccState] = snaps.flatMap(_.resume()).map { case (liveDf, parts, r, lc) =>
+      graft.Log.v(s"scc: resuming after round $r (live=$lc, parts=${parts.size})")
+      val salted = lc > 0 && {
+        val m = Degrees.counts(eBySrc)
+          .agg(coalesce(max("oc"), lit(0L)), coalesce(max("ic"), lit(0L))).head()
+        hubs(m.getLong(0), m.getLong(1))
+      }
+      SccState(arena.checkpoint(liveDf.repartition(col("id"))).df, lc,
+        onePivot = false, idPart = true, trimDone = false, salted,
+        Fragments(pending = parts.toVector, assigned = parts.map(_.count()).sum),
+        roundStart(r + 1))
+    }
 
-      // ---- deferred WCC partition refinement (rounds ≥ 1): a recolor can
-      // leave one partition holding MANY weak components (all of "neither"
-      // after the giant SCC is cut out), which pure FW-BW then processes one
-      // pivot at a time — the serialization the reference suffers from its
-      // single global pivot. Refining the partition map with WCC labels of
-      // the partition-INTERNAL live subgraph gives every weak component its
-      // own pivot, at a cost proportional to the REMAINDER, not the input
-      // graph (the round-1 remainder of a web-shaped graph is the ~1% that
-      // isn't the giant component). Skipped while the remainder fits one
-      // local-solve task — Tarjan finishes it cheaper than WCC would.
-      // Labels refine (never merge) partitions: le edges satisfy
-      // srcP === dstP, so a weak component of le stays inside one partition,
-      // and each label set is still a union of SCCs.
-      if (round >= 1 && leCnt > localSolveEdgeThreshold) {
-        val wccRun = Wcc.run(spark, le.select("src", "dst"), live.select("id"))
-        val nl = arena.checkpoint(
-          live.select("id").join(wccRun.components, Seq("id"))
-            .select(col("id"), col("comp").as("pivot"))
-            .repartition(col("id"))).df
-        wccRun.release()
-        arena.release(live)
-        live = nl
-        liveIdPart = true
-        singlePivot = false
-        // relabel le rather than rebuilding it from eBySrc: srcP === dstP
-        // and labels refine partitions, so src's new pivot == dst's.
-        val nle = arena.checkpoint(
-          le.select("src", "dst")
-            .join(nl.select(col("id").as("src"), col("pivot")), Seq("src"))
-            .select(col("pivot"), col("src"), col("dst"))).df
-        arena.release(le)
-        le = nle
-        graft.Log.v(s"scc round $round: WCC-refined remainder " +
-          s"($liveCount rows, $leCnt edges) in ${wccRun.metrics.size} supersteps")
+    /** Whole-graph local solve: the ENTIRE edge set fits one task, so one
+      * Tarjan over every vertex and edge finishes the job — no degree pass,
+      * pre-trim, pivot, live-edge table or routing. The records reach that
+      * task through a coalesce, not an exchange, and its output is the one
+      * fragment: one job after the edge checkpoint. The task checks that
+      * every vertex record got exactly one row. */
+    def localSolveAll(numEdges: Long): SccState = {
+      graft.Log.v(s"scc: $numEdges edges <= localSolveEdgeThreshold — whole-graph local solve")
+      val recs = verts.select(col("id").as("a"), lit(-1L).as("b"))
+        .unionByName(eBySrc.select(col("src").as("a"), col("dst").as("b")))
+      val Checkpoint(solved, _, solvedCnt, _) = JobLabel(spark, "scc", "local-solve") {
+        arena.checkpoint(
+          recs.as[(Long, Long)].coalesce(1).mapPartitions(solveRecords).toDF("id", "comp"))
+      }
+      closeRound(SccState(verts.select(col("id"), col("id").as("pivot")).limit(0), 0L,
+        onePivot = false, idPart = false, trimDone = true, salted = false,
+        Fragments().add(solved, solvedCnt), roundStart(0).copy(localSolved = solvedCnt)))
+    }
+
+    /** Round -1: GLOBAL trim-1 before anything else (main.cpp:172 does the
+      * same) — degree-0 peeling needs no partition map and shrinks the
+      * first FW-BW round. ONE action builds the full-graph degree frame
+      * with the one-pass explode aggregation ([[Degrees.counts]]), and the
+      * full-graph max degrees that feed the salting gate ride it (VERDICT
+      * r4 #6). Returns the survivors with their live degree counters and
+      * no pivot yet. */
+    def preTrim(): SccState = {
+      val init = arena.checkpoint(trimDegreesPlan(eBySrc, verts),
+        CountIf("dead"), Max("oc"), Max("ic"))
+      val s0 = SccState(verts, init.rows, onePivot = true, idPart = false, trimDone = false,
+        hubs(init.rides(1), init.rides(2)), Fragments(), roundStart(0))
+      val s = trimFixpoint(s0, init, eBySrc, eByDst)
+      graft.Log.v(s"scc: global pre-trim removed ${s.frags.assigned} vertices" +
+        (if (s.trimDone) "" else " (maxTrimSweeps cap hit)"))
+      s
+    }
+
+    /** Round-0 pivot: the live vertex maximizing live-degree product
+      * (in×out), ties to min id — the standard FW-BW pivot heuristic (Hong
+      * et al., PPoPP'13): it lands inside the giant SCC with high
+      * probability, so round 0 extracts the giant component directly. The
+      * WCC pre-partition is DEFERRED to the post-giant remainder (see
+      * [[refineByWcc]]): on web-shaped graphs the giant weak component is
+      * most of the graph, and a full-graph WCC bought nothing that one
+      * FW-BW round doesn't — measured 138 s of a 418 s convergence at the
+      * 15.3M-edge bench point. The trim survivors still carry their live
+      * oc/ic counters, so the argmax is one small aggregation, and sum(oc)
+      * in the same pass IS the live-subgraph edge count (each oc counts
+      * out-edges to live endpoints). The degree product is ordered in
+      * decimal(38,0) so extreme hub products can't overflow Long.
+      */
+    def electPivot(s: SccState): SccState =
+      if (s.liveCount == 0) s
+      else {
+        val pivotRow = s.live
+          .agg(max(struct(
+              (col("oc").cast("decimal(19,0)") * col("ic")).as("p"),
+              (-col("id")).as("negId"))),
+            sum(col("oc")))
+          .head()
+        val pivot = -pivotRow.getStruct(0).getLong(1)
+        val edgeCount = if (pivotRow.isNullAt(1)) 0L else pivotRow.getLong(1)
+        graft.Log.v(s"scc: round-0 pivot $pivot by degree product ($edgeCount live edges)")
+        // (the select keeps the trim frame's hash(id) partitioning)
+        val seeded = arena.checkpoint(s.live.select(col("id"), lit(pivot).as("pivot")))
+        arena.release(s.live)
+        s.copy(live = seeded.df, liveCount = seeded.rows, leCount = Some(edgeCount))
       }
 
-      // logically-current view of le; narrowed as pivots retire within the
-      // round (le itself stays immutable; the filters are broadcast
-      // anti-joins against small materialized frames)
-      var leLive = le
+    /** One FW-BW round, its jobs labelled `graft scc round <r>`. */
+    def nextRound(s: SccState): SccState = JobLabel(spark, "scc", s"round ${s.round}") {
+      val s1 = trim2(trim1(localSolve(refineByWcc(s))))
+      closeRound(if (s1.liveCount > 0) retire(reach(s1)) else s1)
+    }
 
-      // ---- local-solve routing: partitions small enough for one task are
-      // finished right here by a per-group Tarjan (one shuffle on pivot).
-      var localSolved = 0L
-      if (localSolveEdgeThreshold > 0 && !skipLe) {
+    /** The round's partition-internal live edge table (pivot, src, dst),
+      * materialized ONCE and shared by WCC refinement, local solve, trim-1
+      * and trim-2 (at 100 TB each re-join is a full O(E) shuffle). Phases
+      * call it only when they read the table, so
+      * the common giant-component round 0 — one pivot, trims at their
+      * fixpoint, a remainder too big to local-solve — never builds it: the
+      * BFS reads the original edge partitionings directly, masking dead
+      * targets at the state join.
+      */
+    private def liveEdges(s: SccState): SccState =
+      if (s.le.isDefined) s
+      else {
+        val lp = s.live.select(col("id"), col("pivot"))
+        val ck = arena.checkpoint(
+          eBySrc
+            .join(lp.withColumnRenamed("id", "src").withColumnRenamed("pivot", "srcP"), Seq("src"))
+            .join(lp.withColumnRenamed("id", "dst").withColumnRenamed("pivot", "dstP"), Seq("dst"))
+            .filter(col("srcP") === col("dstP"))
+            .select(col("srcP").as("pivot"), col("src"), col("dst")))
+        s.copy(le = Some(ck.df), leCount = Some(ck.rows))
+      }
+
+    /** Deferred WCC partition refinement (rounds ≥ 1): a recolor can leave
+      * one partition holding MANY weak components (all of "neither" after
+      * the giant SCC is cut out), which pure FW-BW then processes one pivot
+      * at a time — the serialization the reference suffers from its single
+      * global pivot. Refining the partition map with WCC labels of the
+      * partition-INTERNAL live subgraph gives every weak component its own
+      * pivot, at a cost proportional to the REMAINDER (the round-1
+      * remainder of a web-shaped graph is the ~1% that isn't the giant
+      * component). Skipped while the remainder fits one local-solve task —
+      * Tarjan finishes it cheaper than WCC would. Labels refine (never
+      * merge) partitions: le edges satisfy srcP === dstP, so a weak
+      * component of le stays inside one partition, and each label set is
+      * still a union of SCCs.
+      */
+    private def refineByWcc(s0: SccState): SccState =
+      if (s0.round == 0) s0
+      else {
+        val s = liveEdges(s0)
+        val le = s.le.get
+        if (s.leCount.get <= localSolveEdgeThreshold) s
+        else {
+          // one WCC row per live id: its label is the row's new pivot
+          val wccRun = Wcc.run(spark, le.select("src", "dst"), s.live.select("id"))
+          val live = arena.checkpoint(
+            wccRun.components.select(col("id"), col("comp").as("pivot"))
+              .repartition(col("id"))).df
+          wccRun.release()
+          arena.release(s.live)
+          // relabel le rather than rebuilding it from eBySrc: srcP === dstP
+          // and labels refine partitions, so src's new pivot == dst's.
+          val relabelled = arena.checkpoint(
+            le.select("src", "dst")
+              .join(live.select(col("id").as("src"), col("pivot")), Seq("src"))
+              .select(col("pivot"), col("src"), col("dst"))).df
+          arena.release(le)
+          graft.Log.v(s"scc round ${s.round}: WCC-refined remainder " +
+            s"(${s.liveCount} rows, ${s.leCount.get} edges) in ${wccRun.metrics.size} supersteps")
+          s.copy(live = live, onePivot = false, idPart = true, le = Some(relabelled))
+        }
+      }
+
+    /** Local-solve routing: partitions small enough for one task are
+      * finished right here by a per-group Tarjan (one shuffle on pivot).
+      * A round with one pivot and a known live-edge count above the
+      * threshold has nothing to route. */
+    private def localSolve(s0: SccState): SccState =
+      if (localSolveEdgeThreshold <= 0 ||
+          s0.onePivot && s0.leCount.exists(_ > localSolveEdgeThreshold)) s0
+      else {
+        val s = liveEdges(s0)
+        val le = s.le.get
         val groupEdgeCounts = le.groupBy("pivot").agg(count(lit(1)).as("ec"))
         val smallPivots = arena.checkpoint(
-          live.select("pivot").distinct()
+          s.live.select("pivot").distinct()
             .join(groupEdgeCounts, Seq("pivot"), "left")
             .filter(coalesce(col("ec"), lit(0L)) <= localSolveEdgeThreshold)
             .select("pivot")).df
-
-        // Records per group: (pivot, a, b) where b = -1 marks a vertex row.
-        val vertRecs = live.join(smallPivots, Seq("pivot"), "left_semi")
+        val vertRecs = s.live.join(smallPivots, Seq("pivot"), "left_semi")
           .select(col("pivot"), col("id").as("a"), lit(-1L).as("b"))
         val edgeRecs = le.join(smallPivots, Seq("pivot"), "left_semi")
           .select(col("pivot"), col("src").as("a"), col("dst").as("b"))
@@ -805,384 +624,392 @@ object Scc {
           vertRecs.unionByName(edgeRecs)
             .as[(Long, Long, Long)]
             .groupByKey(_._1)
-            .flatMapGroups { (_, it) =>
-              val vs = mutable.ArrayBuffer[Long]()
-              val es = mutable.ArrayBuffer[(Long, Long)]()
-              it.foreach { case (_, a, b) => if (b == -1L) vs += a else es += ((a, b)) }
-              LocalTarjan.solve(vs.toArray, es.toArray)
-            }
+            .flatMapGroups((_, it) => solveRecords(it.map(r => (r._2, r._3))))
             .toDF("id", "comp"))
-        localSolved = solvedCnt
-        assigned += solvedCnt
-        graft.Log.v(s"scc round $round: local-solved $localSolved rows")
-        if (localSolved > 0) {
-          assignedParts += solved
-          val nl = arena.checkpoint(live.join(smallPivots, Seq("pivot"), "left_anti"))
-          arena.release(live)
-          live = nl.df
-          liveCount = nl.rows
-          liveIdPart = false // anti-join may have re-partitioned by pivot
-          leLive = le.join(smallPivots, Seq("pivot"), "left_anti")
-        } else arena.release(solved)
+        graft.Log.v(s"scc round ${s.round}: local-solved $solvedCnt rows")
+        val out =
+          if (solvedCnt == 0) {
+            arena.release(solved)
+            s
+          } else {
+            // le keeps the solved partitions' edges: every later reader
+            // joins it with the live rows, which no longer include them
+            val live = arena.checkpoint(s.live.join(smallPivots, Seq("pivot"), "left_anti"))
+            arena.release(s.live)
+            s.copy(live = live.df, liveCount = live.rows, idPart = false,
+              frags = s.frags.add(solved, solvedCnt))
+          }
+        arena.release(smallPivots)
+        out.copy(tally = out.tally.copy(localSolved = solvedCnt))
       }
 
-      var trimmedTotal = 0L
-      var pairTrimmed = 0L
-      var bfsSteps = 0
-      var sccRows = 0L
-      if (liveCount > 0) {
-        // ---- trim-1 fixpoint: peel vertices with no live in- or out-edges
-        // within their partition — singleton SCCs (main.cpp:54-63), via the
-        // same incremental degree-decrement helper as the global pre-trim.
-        // Skipped in round 0 when the global trim phase completed: at
-        // fixpoint it is provably a no-op (edges never cross WCC
-        // partitions, so per-partition degrees equal live-graph degrees,
-        // and local-solve only removes whole partitions); after an
-        // adaptive cap it would only re-run the same below-threshold
-        // trickle the cap deliberately left to later rounds.
-        if (round > 0 || !preTrimDone) {
-          val (degsR, remaining, trimmed, _, _, trimCompacted) = trimFixpoint(
-            arena, leLive, leLive,
-            arena.checkpoint(trimDegreesPlan(leLive, live), CountIf("dead")),
-            maxTrimSweeps, assignedParts, partBacking, compactedParts,
-            trimCapFraction, trimCapMinRemaining)
-          trimmedTotal = trimmed
-          assigned += trimmed
-          compactedRows += trimCompacted
-          if (trimmed > 0) {
-            arena.release(live)
-            live = degsR // (id, pivot) survivors; oc/ic/dead ride along unused
-            liveCount = remaining
-            liveIdPart = true
-          } else arena.release(degsR)
-        }
+    /** Trim-1 fixpoint within each partition: peel vertices with no live
+      * in- or out-edges inside it — singleton SCCs (main.cpp:54-63) — with
+      * the same degree-decrement loop as the global pre-trim. Skipped while
+      * `trimDone`. */
+    private def trim1(s0: SccState): SccState =
+      if (s0.trimDone || s0.liveCount == 0) s0
+      else {
+        val s = liveEdges(s0)
+        val le = s.le.get
+        val init = arena.checkpoint(trimDegreesPlan(le, s.live.select("id", "pivot")),
+          CountIf("dead"))
+        val t = trimFixpoint(s, init, le, le)
+        t.copy(tally = t.tally.copy(trimmed = s.liveCount - t.liveCount))
+      }
 
-        // ---- trim-2 (round > 0 only: on the full graph its mutual-pair
-        // scan costs more than the pairs it removes save; on the post-giant
-        // remainder it is cheap mop-up): mutual pair (a,b) where either
-        // both vertices' only live in-edges, or both vertices' only live
-        // out-edges, are each other => {a,b} is a size-2 SCC (north-star
-        // extension). Pairs qualifying under either variant cannot overlap:
-        // sharing a vertex would force its in- (resp. out-) degree above 1.
-        if (round > 0 && liveCount > 0) {
-          val lpT = live.select("id")
-          val le2 = arena.checkpoint(
-            leLive
-              .join(lpT.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-              .join(lpT.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-              .select("src", "dst")).df
-          val mutual = le2.filter(col("src") < col("dst"))
-            .join(le2.select(col("dst").as("src"), col("src").as("dst")),
-              Seq("src", "dst"), "left_semi")
-          val od2 = le2.groupBy(col("src").as("id")).agg(count(lit(1)).as("od"))
-          val id2 = le2.groupBy(col("dst").as("id")).agg(count(lit(1)).as("idg"))
-          val degs2 = od2.join(id2, Seq("id"), "full")
-            .select(col("id"), coalesce(col("od"), lit(0L)).as("od"),
-              coalesce(col("idg"), lit(0L)).as("idg"))
-          val Checkpoint(pairs, _, pairsCnt, _) = arena.checkpoint(
-            mutual
-              .join(degs2.select(col("id").as("src"), col("od").as("aOd"),
-                col("idg").as("aId")), Seq("src"))
-              .join(degs2.select(col("id").as("dst"), col("od").as("bOd"),
-                col("idg").as("bId")), Seq("dst"))
-              .filter((col("aId") === 1 && col("bId") === 1) ||
-                (col("aOd") === 1 && col("bOd") === 1))
-              .select(col("src"), col("dst")))
-          pairTrimmed = 2 * pairsCnt
-          assigned += pairTrimmed
-          if (pairsCnt > 0) {
+    /** Degree-decrement trim-1 fixpoint (`trimming_kernel`/`trimming`,
+      * main.cpp:54-63, cuda/scc_operations.cu:89-127) in incremental form:
+      * in/out-degrees come pre-aggregated in `init` (a [[trimDegreesPlan]]
+      * checkpoint of `s.live` riding `CountIf("dead")` first — ONE pass
+      * over ONE edge copy); each sweep removes the dead vertices (in- or
+      * out-degree 0 ⇒ singleton SCC) and only decrements the counters of
+      * their neighbors — O(removed·degree) shuffle per sweep instead of a
+      * full edges⨝live re-join. ONE Spark action per sweep (the counter
+      * update, whose dead-count rides the checkpoint accumulator; the
+      * removed set is a lazy filter).
+      *
+      * `edges` is scanned once per sweep; `edgesByDst` (same rows,
+      * dst-partitioned) is BY-NAME and only forced by the rare huge sweep
+      * (> 5M removed at once) whose decrement can't broadcast. Removed
+      * vertices become (id, comp = id) fragments — LAZY filters over the
+      * sweep's already-materialized degree frame, which backs them until
+      * the next compaction (one driver action per sweep, not two).
+      *
+      * Adaptive sweep cap (the measured serial floor of the sf0.1 bench run
+      * was this loop — 29% of wall, mostly tail sweeps removing a trickle):
+      * each sweep costs a full edge-table pass + an O(remaining) state
+      * rewrite regardless of how little it removes, so once a sweep would
+      * remove < `trimCapFraction` (default 0.1%) of the remaining vertices
+      * the loop stops and leaves the stragglers flagged-but-live — trim is
+      * an accelerator, not a correctness requirement; FW-BW classifies the
+      * leftovers as trivial SCCs in later rounds at O(leftover) cost. Only
+      * active above `trimCapMinRemaining` (default 1M) remaining vertices
+      * so small graphs and every fixture test still reach the exact
+      * fixpoint; the knobs exist so the cap path itself is unit-testable at
+      * fixture size.
+      *
+      * Returns `s` with the survivors (schema = `s.live` ++ oc/ic/dead,
+      * id-partitioned) as its live frame and `trimDone` = the fixpoint was
+      * reached or the loop adaptively capped; false only when the hard
+      * `maxTrimSweeps` cap interrupted real progress.
+      */
+    private def trimFixpoint(s: SccState, init: Checkpoint, edges: DataFrame,
+        edgesByDst: => DataFrame): SccState = {
+      var degs = init.df
+      var remaining = init.rows
+      var deadCnt = init.rides(0)
+      var frags = s.frags
+      val carry = degs.columns.filterNot(Set("id", "oc", "ic", "dead")).toSeq
+      def proj(oc: Column, ic: Column): Seq[Column] =
+        (col("id") +: carry.map(col)) ++ Seq(oc.as("oc"), ic.as("ic"))
+      var sweep = 0
+      var capped = false
+      while (deadCnt > 0 && sweep < maxTrimSweeps && !capped) {
+        graft.Log.v(s"trim sweep $sweep: dead=$deadCnt remaining=$remaining")
+        if (remaining > trimCapMinRemaining && deadCnt < remaining * trimCapFraction) {
+          capped = true
+        } else {
+          val removed = degs.filter(col("dead")).select("id")
+          // Decrement counters of the removed set's neighbors. Typical
+          // sweep: removed is small → ONE pass over one edge copy with two
+          // broadcast hash probes emits both decrement directions (the
+          // naive form scanned the edge table twice per sweep — measured as
+          // the bulk of pre-trim wall). Huge sweep (first sweep of a
+          // peel-heavy graph at scale): broadcasting `removed` would not
+          // fit — fall back to two semi-joins that each reuse an existing
+          // edge partitioning, shuffling only `removed`.
+          val dec =
+            if (deadCnt <= 5000000L) {
+              val remSrc = broadcast(removed.select(col("id").as("src"), lit(1).as("_rs")))
+              val remDst = broadcast(removed.select(col("id").as("dst"), lit(1).as("_rd")))
+              edges
+                .join(remSrc, Seq("src"), "left")
+                .join(remDst, Seq("dst"), "left")
+                .filter(col("_rs").isNotNull || col("_rd").isNotNull)
+                .select(explode(array(
+                  when(col("_rs").isNotNull,
+                    struct(col("dst").as("id"), lit(1L).as("dIn"), lit(0L).as("dOut"))),
+                  when(col("_rd").isNotNull,
+                    struct(col("src").as("id"), lit(0L).as("dIn"), lit(1L).as("dOut")))))
+                  .as("e"))
+                .filter(col("e").isNotNull)
+                .select(col("e.id").as("id"), col("e.dIn").as("dIn"), col("e.dOut").as("dOut"))
+                .groupBy("id").agg(sum("dIn").as("dIn"), sum("dOut").as("dOut"))
+            } else {
+              edges
+                .join(removed.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
+                .select(col("dst").as("id"), lit(1L).as("dIn"), lit(0L).as("dOut"))
+                .unionByName(edgesByDst
+                  .join(removed.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
+                  .select(col("src").as("id"), lit(0L).as("dIn"), lit(1L).as("dOut")))
+                .groupBy("id").agg(sum("dIn").as("dIn"), sum("dOut").as("dOut"))
+            }
+          val next = arena.checkpoint(
+            degs.filter(!col("dead")).drop("dead")
+              .join(dec.hint("shuffle_hash"), Seq("id"), "left")
+              .select(proj(col("oc") - coalesce(col("dOut"), lit(0L)),
+                col("ic") - coalesce(col("dIn"), lit(0L))): _*)
+              .withColumn("dead", col("oc") <= 0 || col("ic") <= 0),
+            CountIf("dead"))
+          // degs backs this sweep's lazy fragment; `next` is materialized,
+          // so a compaction here may release it
+          frags = frags.add(removed.select(col("id"), col("id").as("comp")), deadCnt, degs)
+            .compact(arena, fragmentCompactionThreshold)
+          degs = next.df
+          remaining = next.rows
+          deadCnt = next.rides(0)
+          sweep += 1
+        }
+      }
+      arena.release(s.live)
+      s.copy(live = degs, liveCount = remaining, idPart = true,
+        trimDone = deadCnt == 0 || capped, frags = frags)
+    }
+
+    /** Trim-2 (rounds ≥ 1 only: on the full graph its mutual-pair scan
+      * costs more than the pairs it removes save; on the post-giant
+      * remainder it is cheap mop-up): mutual pair (a,b) where either both
+      * vertices' only live in-edges, or both vertices' only live
+      * out-edges, are each other => {a,b} is a size-2 SCC (north-star
+      * extension). Pairs qualifying under either variant cannot overlap:
+      * sharing a vertex would force its in- (resp. out-) degree above 1.
+      */
+    private def trim2(s0: SccState): SccState =
+      if (s0.round == 0 || s0.liveCount == 0) s0
+      else {
+        val s = liveEdges(s0)
+        val lpT = s.live.select("id")
+        val le2 = arena.checkpoint(
+          s.le.get
+            .join(lpT.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
+            .join(lpT.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
+            .select("src", "dst")).df
+        val mutual = le2.filter(col("src") < col("dst"))
+          .join(le2.select(col("dst").as("src"), col("src").as("dst")),
+            Seq("src", "dst"), "left_semi")
+        val degs2 = Degrees.counts(le2)
+        val Checkpoint(pairs, _, pairsCnt, _) = arena.checkpoint(
+          mutual
+            .join(degs2.select(col("id").as("src"), col("oc").as("aOd"),
+              col("ic").as("aId")), Seq("src"))
+            .join(degs2.select(col("id").as("dst"), col("oc").as("bOd"),
+              col("ic").as("bId")), Seq("dst"))
+            .filter((col("aId") === 1 && col("bId") === 1) ||
+              (col("aOd") === 1 && col("bOd") === 1))
+            .select(col("src"), col("dst")))
+        arena.release(le2)
+        val out =
+          if (pairsCnt == 0) {
+            arena.release(pairs)
+            s
+          } else {
             val pairMembers = pairs.select(col("src").as("id"), col("src").as("comp"))
               .unionByName(pairs.select(col("dst").as("id"), col("src").as("comp")))
-            partBacking += pairs
-            assignedParts += pairMembers
-            val nl = arena.checkpoint(
-              live.select("id", "pivot")
+            val live = arena.checkpoint(
+              s.live.select("id", "pivot")
                 .join(pairMembers.select("id"), Seq("id"), "left_anti"))
-            arena.release(live)
-            live = nl.df
-            liveCount = nl.rows
-          } else arena.release(pairs)
-          arena.release(le2)
-        }
+            arena.release(s.live)
+            s.copy(live = live.df, liveCount = live.rows,
+              frags = s.frags.add(pairMembers, 2 * pairsCnt, pairs))
+          }
+        out.copy(tally = out.tally.copy(pairTrimmed = 2 * pairsCnt))
       }
 
-      if (liveCount > 0) {
-        // ---- fw+bw reach from each partition's pivot, restricted to the
-        // partition (reach_kernel, main.cpp:65-87; both directions in one
-        // DAG = the v7 shape).
-        // If a trim removed vertices THIS round, re-elect each group's pivot
-        // as its min live id: the old pivot may be gone, which would leave
-        // the group seedless. When nothing was removed since pivots were
-        // elected (pivot0 / WCC label / recolor newPivot — all live members
-        // by construction), the O(live) groupBy+join re-election pass is
-        // skipped entirely — on a giant-component round 0 that pass was
-        // ~10% of wall, and skipping it is also what lets the round-0
-        // degree-product pivot actually seed the reach (canonical comp
-        // labels no longer depend on the seed: emission uses newPivot).
-        // The seeded state is NOT separately checkpointed — it flows lazily
-        // into the superstep harness's own state0 checkpoint (one action
-        // instead of two); hash(id)-partitioning is ensured here (relabel
-        // join output is pivot-partitioned: giant-component skew AND a
-        // step-1 re-exchange; recolor output likewise) unless the live
-        // frame is already known id-partitioned.
-        // BFS state = (id, pivot, st) with the four reach flags bit-packed
-        // into ONE IntegerType column (1=fw, 2=bw, 4=fwNew, 8=bwNew) — the
-        // Spark analog of the reference's packed status byte
-        // (utils/is_checked.cu:22-46). Separate Boolean columns each burn a
-        // full 8-byte UnsafeRow slot, so packing shrinks the per-step
-        // checkpointed row from 7 slots to 3 (64B → 32B): state copy,
-        // cache residency, and allocation rate — the measured per-step
-        // cost drivers — all drop ~2×. Convergence rides the same
-        // checkpoint as a masked count-if ride (`CountIf("st", 12)` below).
-        // Slim single-pivot state: with exactly one pivot (known driver-
-        // side) and no trim this round, the pivot column is the same value
-        // on every row — drop it from the iterated state ((id, st): 2
-        // UnsafeRow slots instead of 3) and re-attach it as a literal at
-        // recolor. ~30% less checkpoint copy/allocation/cache in the round
-        // that carries 80-95% of BFS work.
-        val slim = singlePivot && trimmedTotal == 0 && pairTrimmed == 0 &&
-          singlePivotId >= 0
-        val bfs0 =
-          if (slim) {
-            // (the fast-seeded live frame may carry no pivot column — slim
-            // mode never reads one; the pivot is the driver-side literal)
-            val base = live.select("id")
-            (if (liveIdPart) base else base.repartition(col("id")))
-              .select(col("id"),
-                when(col("id") === lit(singlePivotId), lit(15)).otherwise(lit(0)).as("st"))
-          } else {
-            val seeded =
-              if (trimmedTotal == 0 && pairTrimmed == 0) {
-                val base = live.select("id", "pivot")
-                if (liveIdPart) base else base.repartition(col("id"))
-              } else {
-                val relabel = live.groupBy("pivot").agg(min("id").as("newP"))
-                live.select("id", "pivot")
-                  .join(relabel, Seq("pivot"))
-                  .select(col("id"), col("newP").as("pivot"))
-                  .repartition(col("id"))
-              }
-            seeded.withColumn("st",
-              when(col("id") === col("pivot"), lit(15)).otherwise(lit(0)))
-          }
-        val harness = new Superstep(spark, s"scc_bfs_$round", snapshotDir, arena = arena)
-        // One BFS hop: expand the fwNew/bwNew frontier by one edge step;
-        // an empty hop means the whole reach is complete.
-        val hop: DataFrame => DataFrame = { st =>
-          // Frontier expansion. Join shapes chosen so the big sides never
-          // move: frontier(id) x eBySrc(src) is co-partitioned; fw and bw
-          // hits are unioned with a direction flag and aggregated by id in
-          // ONE exchange (`collect_set` skips the nulls `when(dir, pivot)`
-          // produces for the other direction — map-side partial collect_set
-          // still combines hub targets before the shuffle), then joined
-          // back to the id-partitioned state once — per-step shuffle bytes
-          // are O(frontier degree), and the fixed per-step cost is one
-          // shuffle stage + one state-rewrite join instead of two of each
-          // (the fixed per-step cost is the scaling-efficiency limiter at
-          // sandbox sizes; BASELINE.md). A visited-set/frontier-piece
-          // representation was measured SLOWER here: once the giant
-          // component is most of the state, scanning the visited pieces
-          // each step costs what the state rewrite costs, plus a per-step
-          // anti-join chain.
-          def hitRows(frontier: DataFrame, eTbl: DataFrame,
-              joinOn: String, tgt: String, fwd: Boolean): DataFrame = {
-            // fresh aliases per call: dataset-qualified refs to the shared
-            // edge Dataset would trip DetectAmbiguousSelfJoin (the
-            // re-aliasing projection is a no-op physically — it collapses
-            // into the scan)
-            val e = eTbl.select(col(joinOn).as("_eFrom"), col(tgt).as("_eTo"))
-            val cols =
-              if (singlePivot) Seq(col("_eTo").as("id"), lit(fwd).as("_fwd"))
-              else Seq(col("_eTo").as("id"), col("pivot"), lit(fwd).as("_fwd"))
-            // SHUFFLE_HASH with the FRONTIER as build side (guide §3.1):
-            // unhinted, the frontier of a small checkpointed state is
-            // broadcast on every hop (the state's exact statistics sit below
-            // the broadcast threshold) and a big one falls back to
-            // sort-merge, which re-SORTS the cached edge table on every BFS
-            // step. Hash-probing a per-partition frontier map streams the
-            // edge partitions unsorted; both sides stay co-partitioned, so
-            // the join adds no exchange. Build size is bounded by the
-            // frontier's partition slice (≤ state/numPartitions rows).
-            frontier.hint("shuffle_hash").join(e, col("id") === col("_eFrom"))
-              .select(cols: _*)
-          }
-          // single-pivot frontiers don't need the pivot column at all (the
-          // hit is membership); in slim mode the state doesn't carry it
-          val fCols: Seq[Column] =
-            if (singlePivot) Seq(col("id")) else Seq(col("id"), col("pivot"))
-          val hits = hitRows(
-            st.filter(col("st").bitwiseAND(lit(4)) =!= lit(0))
-              .select(fCols: _*),
-            eBySrc, "src", "dst", fwd = true)
-            .unionByName(hitRows(
-              st.filter(col("st").bitwiseAND(lit(8)) =!= lit(0))
-                .select(fCols: _*),
-              eByDst, "dst", "src", fwd = false))
-          val oldFw = col("st").bitwiseAND(lit(1)) =!= lit(0)
-          val oldBw = col("st").bitwiseAND(lit(2)) =!= lit(0)
-          def pack(hitF: Column, hitB: Column): Column =
-            ((oldFw || hitF).cast("int")
-              + (oldBw || hitB).cast("int") * 2
-              + (!oldFw && hitF).cast("int") * 4
-              + (!oldBw && hitB).cast("int") * 8).as("st")
-          if (singlePivot) {
-            // One active pivot ⇒ a hit IS membership: aggregate two boolean
-            // flags per target (map-side combine collapses hub fan-in) —
-            // no arrays built, shuffled, or probed. Salting is moot: the
-            // partial aggregation state per key is two booleans.
-            val hitAgg = hits.groupBy("id").agg(
-              max(col("_fwd")).as("hitF"), max(!col("_fwd")).as("hitB"))
-            val outCols: Seq[Column] =
-              if (slim) Seq(col("id")) else Seq(col("id"), col("pivot"))
-            // hash-build the hit side (bounded by the frontier's targets):
-            // a sort-merge fallback would re-sort the whole state every
-            // step, a broadcast would rebuild every hop (see the
-            // frontier-join note above)
-            st.join(hitAgg.hint("shuffle_hash"), Seq("id"), "left")
-              .select(outCols :+
-                pack(coalesce(col("hitF"), lit(false)),
-                  coalesce(col("hitB"), lit(false))): _*)
-          } else {
-            val pivotSets =
-              if (useSalting)
-                Salting.saltedDirectionalCollectSet(hits, "id", "pivot", "_fwd", "fwPs", "bwPs")
-              else hits.groupBy("id").agg(
-                collect_set(when(col("_fwd"), col("pivot"))).as("fwPs"),
-                collect_set(when(!col("_fwd"), col("pivot"))).as("bwPs"))
-            st.join(pivotSets.hint("shuffle_hash"), Seq("id"), "left")
-              .select(col("id"), col("pivot"),
-                pack(
-                  coalesce(array_contains(col("fwPs"), col("pivot")), lit(false)),
-                  coalesce(array_contains(col("bwPs"), col("pivot")), lit(false))))
-          }
-        }
-        // In slim mode, rows that SETTLED (both waves arrived, nothing new:
-        // st == 3 exactly) leave the iterated state before the next hop —
-        // the per-step scan/rewrite then tracks the wave BOUNDARY, not the
-        // whole component (the reference's kernels likewise skip visited
-        // vertices; on the giant-SCC round most members settle mid-wave and
-        // the tail steps stop re-copying them). Correct because state rows
-        // influence each other only through frontier expansion, which
-        // requires a new-flag bit settled rows by definition lack; a row
-        // settles only AFTER its one expansion as frontier (new flags set
-        // at discovery, cleared the following step). Membership is
-        // reconstructed after convergence as live − still-unsettled.
-        // (the settlement argument is pivot-independent, so BOTH paths
-        // retire: a settled row is fully classified within its partition)
-        // Converged when no row carries a new-flag bit (4|8).
-        val (reachedSt, bfsMetrics) = harness.run(bfs0, Int.MaxValue,
-          rides = Seq(CountIf("st", 12)))((st, _) => hop(st.filter(col("st") =!= 3)))(_.rides(0))
-        bfsSteps = bfsMetrics.size
-
-        if (slim) {
-          // Final state: st ∈ {0,1,2} = non-members (never both-reached),
-          // st == 3 = members settled in the last steps (not yet dropped);
-          // everything dropped earlier is a member too.
-          val Checkpoint(nonMembers, _, nmCnt, _) = arena.checkpoint(
-            reachedSt.filter(col("st").bitwiseAND(lit(3)) =!= lit(3))
-              .select(col("id"), col("st")))
-          arena.release(reachedSt)
-          val memberCnt = liveCount - nmCnt
-          // canonical comp = min member id: one agg over the lazy
-          // anti-join (live is cached; nonMembers is the small side)
-          val memberIds = live.select("id")
-            .join(nonMembers.select("id"), Seq("id"), "left_anti")
-          val minId = memberIds.agg(min("id")).head().getLong(0)
-          partBacking += live // backs the lazy members fragment
-          assignedParts += memberIds.select(col("id"), lit(minId).as("comp"))
-          sccRows = memberCnt
-          assigned += memberCnt
-          // recolor the non-members (no done rows among them by
-          // construction): min-id pivot per (fw, bw) group, as ever
-          val reachedNm = nonMembers.select(col("id"),
-            (col("st").bitwiseAND(lit(1)) =!= lit(0)).as("fw"),
-            (col("st").bitwiseAND(lit(2)) =!= lit(0)).as("bw"))
-          val groupsNm = reachedNm.groupBy("fw", "bw").agg(min("id").as("newPivot"))
-          val Checkpoint(nl, _, nlCnt, _) = arena.checkpoint(
-            reachedNm.join(groupsNm, Seq("fw", "bw"))
-              .select(col("id"), col("newPivot").as("pivot")))
-          // nonMembers backs the lazy members anti-join — retained
-          partBacking += nonMembers
-          live = nl
-          liveCount = nlCnt
+    /** fw+bw reach from each partition's pivot, restricted to the partition
+      * (reach_kernel, main.cpp:65-87; both directions in one DAG = the v7
+      * shape). If a trim removed vertices THIS round, each group's pivot is
+      * re-elected as its min live id: the old pivot may be gone, which
+      * would leave the group seedless. Otherwise the pivots (pivot0, WCC
+      * labels, recolor newPivots — all live members by construction) seed
+      * the reach as they are, skipping an O(live) groupBy+join (~10% of a
+      * giant-component round 0's wall); canonical labels don't depend on
+      * the seed, since retirement emits min member ids. The seeded state
+      * flows lazily into the superstep harness's own state0 checkpoint
+      * (one action instead of two), hash(id)-partitioned unless `live`
+      * already is (a relabel or recolor join leaves it pivot-partitioned:
+      * giant-component skew AND a step-1 re-exchange).
+      *
+      * BFS state = (id, pivot, st) with the four reach flags bit-packed into
+      * ONE IntegerType column (1=fw, 2=bw, 4=fwNew, 8=bwNew) — the Spark
+      * analog of the reference's packed status byte
+      * (utils/is_checked.cu:22-46). Separate Boolean columns each burn a
+      * full 8-byte UnsafeRow slot, so packing shrinks the per-step
+      * checkpointed row from 7 slots to 3 (64B → 32B): state copy, cache
+      * residency and allocation rate — the measured per-step cost drivers —
+      * all drop ~2×.
+      *
+      * Rows that SETTLED (both waves arrived, nothing new: st == 3 exactly)
+      * leave the iterated state before the next hop — the per-step
+      * scan/rewrite then tracks the wave BOUNDARY, not the whole component
+      * (the reference's kernels likewise skip visited vertices). Correct
+      * because state rows influence each other only through frontier
+      * expansion, which requires a new-flag bit settled rows by definition
+      * lack; a row settles only AFTER its one expansion as frontier.
+      * [[retire]] reconstructs the members as live − still-unsettled.
+      * Converged when no row carries a new-flag bit (4|8), counted by a
+      * masked count-if ride on each step's checkpoint.
+      */
+    private def reach(s: SccState): SccState = {
+      val byDst = eByDst
+      val seeded =
+        if (s.tally.trimmed == 0 && s.tally.pairTrimmed == 0) {
+          val base = s.live.select("id", "pivot")
+          if (s.idPart) base else base.repartition(col("id"))
         } else {
-          // ---- multi-pivot retirement + recolor (main.cpp:105-163): the
-          // settled (= done) rows left the iterated state per step, so the
-          // done fragment reconstructs as live − still-unsettled, labeled
-          // min member id per pivot group. Grouping by live's PRE-relabel
-          // pivot is equivalent: the relabel/WCC maps are 1:1 on groups,
-          // and the canonical min-member label is label-independent.
-          val Checkpoint(nonMembers, _, nmCnt, _) = arena.checkpoint(
-            reachedSt.filter(col("st").bitwiseAND(lit(3)) =!= lit(3))
-              .select(col("id"), col("pivot"), col("st")))
-          arena.release(reachedSt)
-          val memberCnt = liveCount - nmCnt
-          if (memberCnt > 0) {
-            val members = live.select("id", "pivot")
-              .join(nonMembers.select("id"), Seq("id"), "left_anti")
-            val minPerPivot = members.groupBy("pivot").agg(min("id").as("comp"))
-            val Checkpoint(frag, _, fragCnt, _) = arena.checkpoint(
-              members.join(minPerPivot, Seq("pivot")).select("id", "comp"))
-            require(fragCnt == memberCnt,
-              s"done-fragment rows $fragCnt != settled tally $memberCnt")
-            assignedParts += frag
-            sccRows = memberCnt
-            assigned += memberCnt
-          }
-          arena.release(live)
-          // recolor the non-members: 4-way split per pivot by (fw, bw)
-          // (no done rows among them by construction), min-id pivots
-          val reachedNm = nonMembers.select(col("id"), col("pivot"),
-            (col("st").bitwiseAND(lit(1)) =!= lit(0)).as("fw"),
-            (col("st").bitwiseAND(lit(2)) =!= lit(0)).as("bw"))
-          val groups = reachedNm.groupBy("pivot", "fw", "bw").agg(min("id").as("newPivot"))
-          val Checkpoint(nl, _, nlCnt, _) = arena.checkpoint(
-            reachedNm.join(groups, Seq("pivot", "fw", "bw"))
-              .select(col("id"), col("newPivot").as("pivot")))
-          arena.release(nonMembers)
-          live = nl
-          liveCount = nlCnt
+          val relabel = s.live.groupBy("pivot").agg(min("id").as("newP"))
+          s.live.select("id", "pivot")
+            .join(relabel, Seq("pivot"))
+            .select(col("id"), col("newP").as("pivot"))
+            .repartition(col("id"))
         }
-        liveIdPart = false // recolor join leaves non-id partitioning
-        singlePivot = false
+      val bfs0 = seeded.withColumn("st",
+        when(col("id") === col("pivot"), lit(15)).otherwise(lit(0)))
+      val harness = new Superstep(spark, s"scc_bfs_${s.round}", snapshotDir, arena = arena)
+      val (reached, steps) = harness.run(bfs0, Int.MaxValue, rides = Seq(CountIf("st", 12)))(
+        (st, _) => hop(st.filter(col("st") =!= 3), byDst, s))(_.rides(0))
+      s.copy(reached = Some(reached), tally = s.tally.copy(bfsSteps = steps.size))
+    }
+
+    /** One BFS hop: expand the fwNew/bwNew frontier by one edge step; an
+      * empty hop means the whole reach is complete.
+      *
+      * Join shapes are chosen so the big sides never move: frontier(id) x
+      * eBySrc(src) is co-partitioned; fw and bw hits are unioned with a
+      * direction flag and aggregated by id in ONE exchange, then joined
+      * back to the id-partitioned state once — per-step shuffle bytes are
+      * O(frontier degree), and the fixed per-step cost is one shuffle stage
+      * + one state-rewrite join instead of two of each (the fixed per-step
+      * cost is the scaling-efficiency limiter at sandbox sizes;
+      * BASELINE.md). A visited-set/frontier-piece representation was
+      * measured SLOWER here: once the giant component is most of the state,
+      * scanning the visited pieces each step costs what the state rewrite
+      * costs, plus a per-step anti-join chain.
+      */
+    private def hop(st: DataFrame, byDst: DataFrame, s: SccState): DataFrame = {
+      def hitRows(frontier: DataFrame, eTbl: DataFrame,
+          joinOn: String, tgt: String, fwd: Boolean): DataFrame = {
+        // fresh aliases per call: dataset-qualified refs to the shared
+        // edge Dataset would trip DetectAmbiguousSelfJoin (the re-aliasing
+        // projection is a no-op physically — it collapses into the scan)
+        val e = eTbl.select(col(joinOn).as("_eFrom"), col(tgt).as("_eTo"))
+        val cols =
+          if (s.onePivot) Seq(col("_eTo").as("id"), lit(fwd).as("_fwd"))
+          else Seq(col("_eTo").as("id"), col("pivot"), lit(fwd).as("_fwd"))
+        // SHUFFLE_HASH with the FRONTIER as build side (guide §3.1):
+        // unhinted, the frontier of a small checkpointed state is
+        // broadcast on every hop (the state's exact statistics sit below
+        // the broadcast threshold) and a big one falls back to sort-merge,
+        // which re-SORTS the cached edge table on every BFS step.
+        // Hash-probing a per-partition frontier map streams the edge
+        // partitions unsorted; both sides stay co-partitioned, so the join
+        // adds no exchange. Build size is bounded by the frontier's
+        // partition slice (≤ state/numPartitions rows).
+        frontier.hint("shuffle_hash").join(e, col("id") === col("_eFrom"))
+          .select(cols: _*)
       }
-      if (le != null) arena.release(le)
-      graft.Log.v(s"scc round $round: local=$localSolved trimmed=$trimmedTotal " +
-        s"pair=$pairTrimmed bfs=$bfsSteps sccRows=$sccRows live=$liveCount")
-      metrics += RoundMetrics(round, localSolved, trimmedTotal, pairTrimmed, bfsSteps,
-        sccRows, liveCount)
-      maybeCompactFragments()
-      snaps.foreach(_.writeRound(round, live.select("id", "pivot"), liveCount,
-        (compactedParts ++ assignedParts).toSeq))
-      round += 1
+      // one-pivot frontiers don't need the pivot column: a hit is membership
+      val fCols: Seq[Column] =
+        if (s.onePivot) Seq(col("id")) else Seq(col("id"), col("pivot"))
+      val hits = hitRows(
+        st.filter(col("st").bitwiseAND(lit(4)) =!= lit(0)).select(fCols: _*),
+        eBySrc, "src", "dst", fwd = true)
+        .unionByName(hitRows(
+          st.filter(col("st").bitwiseAND(lit(8)) =!= lit(0)).select(fCols: _*),
+          byDst, "dst", "src", fwd = false))
+      val oldFw = col("st").bitwiseAND(lit(1)) =!= lit(0)
+      val oldBw = col("st").bitwiseAND(lit(2)) =!= lit(0)
+      def pack(hitF: Column, hitB: Column): Column =
+        ((oldFw || hitF).cast("int")
+          + (oldBw || hitB).cast("int") * 2
+          + (!oldFw && hitF).cast("int") * 4
+          + (!oldBw && hitB).cast("int") * 8).as("st")
+      if (s.onePivot) {
+        // One active pivot ⇒ a hit IS membership: aggregate two boolean
+        // flags per target (map-side combine collapses hub fan-in) — no
+        // arrays built, shuffled, or probed. Salting is moot: the partial
+        // aggregation state per key is two booleans. The hit side is
+        // hash-built (bounded by the frontier's targets): a sort-merge
+        // fallback would re-sort the whole state every step, a broadcast
+        // would rebuild every hop.
+        val hitAgg = hits.groupBy("id").agg(
+          max(col("_fwd")).as("hitF"), max(!col("_fwd")).as("hitB"))
+        st.join(hitAgg.hint("shuffle_hash"), Seq("id"), "left")
+          .select(col("id"), col("pivot"),
+            pack(coalesce(col("hitF"), lit(false)), coalesce(col("hitB"), lit(false))))
+      } else {
+        // `collect_set` skips the nulls `when(dir, pivot)` produces for the
+        // other direction; map-side partial collect_set still combines hub
+        // targets before the shuffle
+        val pivotSets =
+          if (s.salted)
+            Salting.saltedDirectionalCollectSet(hits, "id", "pivot", "_fwd", "fwPs", "bwPs")
+          else hits.groupBy("id").agg(
+            collect_set(when(col("_fwd"), col("pivot"))).as("fwPs"),
+            collect_set(when(!col("_fwd"), col("pivot"))).as("bwPs"))
+        st.join(pivotSets.hint("shuffle_hash"), Seq("id"), "left")
+          .select(col("id"), col("pivot"),
+            pack(
+              coalesce(array_contains(col("fwPs"), col("pivot")), lit(false)),
+              coalesce(array_contains(col("bwPs"), col("pivot")), lit(false))))
+      }
     }
-    require(liveCount == 0, s"SCC did not converge in $maxOuter rounds ($liveCount live)")
-    // Exactness guarantee for assignedCount: every vertex ended up in
-    // exactly one fragment, with all counts ridden on materialization
-    // actions — a union re-count would scan the same cached blocks to
-    // learn the same number.
-    require(assigned == expectedTotal,
-      s"fragment tally $assigned != vertex total $expectedTotal — assignment bug")
 
-    // The parts are already materialized; the result is their lazy union —
-    // re-checkpointing it here would be one more full O(V) pass for nothing.
-    val allParts = (compactedParts ++ assignedParts).toSeq
-    val result =
-      if (allParts.isEmpty) verts.select(col("id"), col("id").as("comp")).limit(0)
-      else allParts.reduce(_.unionByName(_))
-    // a prefetch that never got consumed (e.g. trims finished the graph)
-    // must not keep running after we return, nor read the src copy's
-    // blocks once they are released
-    prefetchThread.filter(_.isAlive).foreach { t =>
-      try spark.sparkContext.cancelJobGroup("graft-scc-prefetch")
-      catch { case _: Throwable => () }
-      t.join(2000)
+    /** Retirement + recolor (main.cpp:105-163): the settled (= done) rows
+      * left the iterated state step by step, so the done fragment
+      * reconstructs as live − still-unsettled, labeled min member id per
+      * pivot group. Grouping by live's PRE-relabel pivot is equivalent: the
+      * relabel/WCC maps are 1:1 on groups, and the canonical min-member
+      * label is label-independent. The non-members (no done rows among
+      * them) recolor 4-way per pivot by (fw, bw), with min-id pivots, in a
+      * join that leaves `live` without a hash(id) partitioning.
+      */
+    private def retire(s: SccState): SccState = {
+      val Checkpoint(nonMembers, _, nmCnt, _) = arena.checkpoint(
+        s.reached.get.filter(col("st").bitwiseAND(lit(3)) =!= lit(3))
+          .select(col("id"), col("pivot"), col("st")))
+      arena.release(s.reached.get)
+      val memberCnt = s.liveCount - nmCnt
+      val frags =
+        if (memberCnt == 0) s.frags
+        else {
+          val members = s.live.select("id", "pivot")
+            .join(nonMembers.select("id"), Seq("id"), "left_anti")
+          val minPerPivot = members.groupBy("pivot").agg(min("id").as("comp"))
+          val Checkpoint(frag, _, fragCnt, _) = arena.checkpoint(
+            members.join(minPerPivot, Seq("pivot")).select("id", "comp"))
+          require(fragCnt == memberCnt,
+            s"done-fragment rows $fragCnt != settled tally $memberCnt")
+          s.frags.add(frag, memberCnt)
+        }
+      arena.release(s.live)
+      val reachedNm = nonMembers.select(col("id"), col("pivot"),
+        (col("st").bitwiseAND(lit(1)) =!= lit(0)).as("fw"),
+        (col("st").bitwiseAND(lit(2)) =!= lit(0)).as("bw"))
+      val groups = reachedNm.groupBy("pivot", "fw", "bw").agg(min("id").as("newPivot"))
+      val Checkpoint(live, _, liveCount, _) = arena.checkpoint(
+        reachedNm.join(groups, Seq("pivot", "fw", "bw"))
+          .select(col("id"), col("newPivot").as("pivot")))
+      arena.release(nonMembers)
+      s.copy(live = live, liveCount = liveCount, onePivot = false, idPart = false,
+        trimDone = false, frags = frags, reached = None,
+        tally = s.tally.copy(sccRows = memberCnt))
     }
-    arena.closeExcept((allParts ++ partBacking).toSeq: _*)
-    eByDstCell.foreach(_.unpersist(false))
-    new SccRun(result, metrics.result(), assigned, () => arena.closeExcept())
+
+    /** Round end: release the round's live-edge table, record its metrics,
+      * compact the fragments and, with `snapshotDir`, make the round
+      * durable. */
+    private def closeRound(s: SccState): SccState = {
+      s.le.foreach(arena.release)
+      val m = s.tally.copy(liveRows = s.liveCount)
+      graft.Log.v(s"scc round ${m.round}: local=${m.localSolved} trimmed=${m.trimmed} " +
+        s"pair=${m.pairTrimmed} bfs=${m.bfsSteps} sccRows=${m.sccRows} live=${m.liveRows}")
+      val frags = s.frags.compact(arena, fragmentCompactionThreshold)
+      snaps.foreach(_.writeRound(m.round, s.live.select("id", "pivot"), s.liveCount, frags.all))
+      s.copy(frags = frags, le = None, leCount = None, done = s.done :+ m,
+        tally = roundStart(m.round + 1))
+    }
   }
-
 
   /** [[acceptedRun]]'s result frame without the release handle — for
     * short-lived sessions (the CLI, single-query runs) where the session's
@@ -1224,9 +1051,11 @@ object Scc {
           .join(uVerts.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
         components(spark, uEdges, uVerts)
     }
-    val withU = run.components.join(vertices, Seq("id"), "left")
-      .select(col("id"), col("comp"), coalesce(col("isU"), lit(false)).as("isU"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val outArena = new CheckpointArena
+    // co-partitioned by id: unhinted, the vertices are broadcast by a job of their own
+    val withU = outArena.checkpoint(run.components
+      .join(vertices.hint("shuffle_hash"), Seq("id"), "left")
+      .select(col("id"), col("comp"), coalesce(col("isU"), lit(false)).as("isU"))).df
 
     val stats = withU.groupBy("comp").agg(
       count("*").as("sz"),
@@ -1242,7 +1071,6 @@ object Scc {
       .select(col("dstComp").as("comp")).distinct()
       .withColumn("isKilled", lit(true))
 
-    val outArena = new CheckpointArena
     val out = outArena.checkpoint(withU
       .join(stats, Seq("comp"))
       .join(killed, Seq("comp"), "left")
@@ -1250,7 +1078,7 @@ object Scc {
         col("id"), col("comp"),
         (col("sz") >= 2 && col("allU") && coalesce(col("isKilled"), lit(false)) === false)
           .as("accepted"))).df
-    withU.unpersist(false)
+    outArena.release(withU)
     run.release() // out is eagerly materialized; the decomposition's blocks are spent
     new SccAcceptedRun(out, () => outArena.closeExcept())
   }

@@ -7,8 +7,7 @@ import org.apache.spark.sql.SparkSession
   * finish and one-shot phases — through Spark's call-site properties: jobs
   * and stages take their names from them, and when both are set Spark
   * skips the stack walk (`Utils.getCallSite`) it otherwise makes for every
-  * new RDD and query. Spark copies local properties to the threads a call
-  * starts, so a prefetch thread carries its creator's label.
+  * new RDD and query.
   */
 object JobLabel {
   private val CallSiteKeys = Seq("callSite.short", "callSite.long")

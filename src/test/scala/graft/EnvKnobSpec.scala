@@ -53,6 +53,18 @@ class EnvKnobSpec extends AnyFunSuite {
     assert(callers.isEmpty, s"localCheckpoint called in: ${callers.mkString(", ")}")
   }
 
+  /** A persisted plan with an exchange is cached through AQE, a query-stage
+    * job per exchange, where a `CheckpointArena` checkpoint is one job; and
+    * an operator's jobs run on its caller's thread, under its phase label.
+    */
+  test("src/main/scala/graft/operators neither persists nor starts threads") {
+    val call = """\bpersist\(|\bnew Thread\b""".r
+    val callers = sources.filter { case (f, src) =>
+      f.startsWith(Paths.get("src/main/scala/graft/operators")) && call.findFirstIn(src).isDefined
+    }.map(_._1)
+    assert(callers.isEmpty, s"persist( or new Thread in: ${callers.mkString(", ")}")
+  }
+
   /** The library shares its caller's session, and other threads plan in it
     * concurrently: a save-set-restore of session conf races them (a run
     * restoring its saved value after another run changed it leaves the

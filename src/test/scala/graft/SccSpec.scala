@@ -12,8 +12,9 @@ class SccSpec extends SparkTest {
     */
   /** threshold=250000 → hybrid/local-Tarjan routing (the default);
     * threshold=0 → pure distributed FW-BW; threshold=1 → distributed with
-    * the round-0 `le`-skip active (liveEdges0 > 1 on any nontrivial graph,
-    * so round 0 runs straight off the original edge partitionings).
+    * round 0's local solve skipped on its known live-edge count (> 1 on any
+    * nontrivial graph), so after a complete pre-trim round 0 builds no
+    * live-edge table and runs straight off the original edge partitionings.
     */
   private def checkDecomposition(edges: Seq[(Long, Long)], vertices: Seq[Long]): Unit = {
     val expected = Oracle.tarjan(vertices, edges)
@@ -185,6 +186,142 @@ class SccSpec extends SparkTest {
     assert(perStep.values.forall(_ <= 4), s"stages per step: $perStep")
   }
 
+  /** (jobs, stages) per `graft scc …` label of one call: `setup`, each
+    * `round <r>`, and every `scc_bfs_*` step summed under "steps". */
+  private def sccJobs(jobs: Vector[(String, Seq[String])]): Map[String, (Int, Int)] =
+    jobs.collect {
+      case (l, st) if l != null && l.startsWith("graft scc_bfs_") => ("steps", st.size)
+      case (l, st) if l != null && l.startsWith("graft scc ") => (l.stripPrefix("graft scc "), st.size)
+    }.groupBy(_._1).map { case (l, js) => l -> (js.size, js.map(_._2).sum) }
+
+  private def assertWithin(got: Map[String, (Int, Int)], bound: Map[String, (Int, Int)]): Unit = {
+    assert(got.keySet == bound.keySet, s"labels $got vs $bound")
+    for ((l, (j, s)) <- got)
+      assert(j <= bound(l)._1 && s <= bound(l)._2, s"$l: $j jobs / $s stages > ${bound(l)}; all: $got")
+  }
+
+  /** Jobs and stages per phase on the distributed path (threshold 0). The
+    * bounds are the counts since `components` became named phases; before,
+    * with the dst edge copy persisted by a prefetch thread and the degree
+    * frame broadcast by a job of its own, they were (jobs, stages): on the
+    * seeded graph (7 rounds, 106 steps) setup (17, 25), rounds 0–6
+    * (10, 12), (27, 33), (27, 33), (28, 35), (24, 29), (24, 29), (24, 29),
+    * steps (106, 318); on the 80-vertex two-cycle graph setup (10, 15),
+    * round 0 (10, 12), round 1 (24, 29), steps (81, 246); killed after
+    * round 0 with snapshots, setup (10, 15), round 0 (13, 15), steps
+    * (46, 131), and resumed, setup (13, 21), round 1 (26, 31), steps
+    * (45, 125).
+    */
+  test("distributed path: jobs and stages per phase stay within their budget") {
+    val spec = GraphSpec(numCycles = 40, maxCycleLen = 8, extraArcsPerVertex = 0.3, seed = 7L)
+    val (run, jobs) = jobsOf(Scc.components(spark, GraphGen.edges(spark, spec),
+      GraphGen.vertices(spark, spec), localSolveEdgeThreshold = 0))
+    assert(run.metrics.size == 7 && run.metrics.map(_.bfsSteps).sum == 106, run.metrics.toString)
+    run.release()
+    assertWithin(sccJobs(jobs), Map("setup" -> (13, 19), "round 0" -> (9, 12),
+      "round 1" -> (25, 31), "round 2" -> (25, 31), "round 3" -> (26, 33),
+      "round 4" -> (22, 27), "round 5" -> (22, 27), "round 6" -> (22, 27),
+      "steps" -> (106, 212)))
+
+    val edges = (0L until 40L).map(i => (i, (i + 1) % 40)) ++
+      (40L until 80L).map(i => (i, if (i == 79) 40L else i + 1)) :+ (7L, 44L)
+    val (run2, jobs2) = jobsOf(Scc.components(spark, edgesDf(edges), vertsDf(0L until 80L),
+      localSolveEdgeThreshold = 0))
+    run2.release()
+    assertWithin(sccJobs(jobs2), Map("setup" -> (6, 10), "round 0" -> (9, 12),
+      "round 1" -> (22, 27), "steps" -> (81, 162)))
+
+    val dir = java.nio.file.Files.createTempDirectory("scc_jobs_").toString
+    val (_, killed) = jobsOf(intercept[IllegalArgumentException] {
+      Scc.components(spark, edgesDf(edges), vertsDf(0L until 80L), maxOuter = 1,
+        localSolveEdgeThreshold = 0, snapshotDir = Some(dir))
+    })
+    assertWithin(sccJobs(killed), Map("setup" -> (6, 10), "round 0" -> (11, 14),
+      "steps" -> (46, 87)))
+    val (run3, resumed) = jobsOf(Scc.components(spark, edgesDf(edges), vertsDf(0L until 80L),
+      localSolveEdgeThreshold = 0, snapshotDir = Some(dir)))
+    run3.release()
+    assertWithin(sccJobs(resumed), Map("setup" -> (10, 16), "round 1" -> (25, 31),
+      "steps" -> (45, 85)))
+  }
+
+  /** Random graphs, seeded, against Tarjan and the acceptance oracles. Each
+    * case mixes hub stars (one vertex holding most of the rows), a long
+    * chain over shuffled ids closed into a cycle or not, self-loops and
+    * duplicated edges in both directions, any of which may be empty, split
+    * over 1, 4 or 8 input partitions; thresholds 0 and 1 run the trim,
+    * pivot and BFS phases, the default the whole-graph local solve.
+    */
+  test("components and accepted equal the oracles on seeded random graphs (ScalaCheck)") {
+    import org.scalacheck.{Gen, Prop, Shrink, Test}
+    import org.scalacheck.rng.Seed
+
+    final case class Case(n: Int, edges: Vector[(Long, Long)], u: Set[Long], parts: Int)
+    def vertex(n: Int): Gen[Long] = Gen.choose(0L, n - 1L)
+    def star(n: Int): Gen[Vector[(Long, Long)]] = for {
+      hub <- vertex(n)
+      k <- Gen.choose(0, 25)
+      spokes <- Gen.listOfN(k, Gen.zip(vertex(n), Gen.oneOf(0, 1, 2)))
+    } yield spokes.toVector.flatMap {
+      case (v, 0) => Vector((v, hub))
+      case (v, 1) => Vector((hub, v))
+      case (v, _) => Vector((v, hub), (hub, v))
+    }
+    val caseGen = for {
+      n <- Gen.choose(1, 50)
+      stars <- Gen.listOfN(2, star(n))
+      chainLen <- Gen.choose(0, n)
+      closed <- Gen.prob(0.5)
+      keys <- Gen.listOfN(n, Gen.long)
+      loops <- Gen.listOf(vertex(n).map(v => (v, v)))
+      dups <- Gen.listOfN(5, Gen.zip(vertex(n), vertex(n)))
+      inU <- Gen.listOfN(n, Gen.prob(0.7))
+      parts <- Gen.oneOf(1, 4, 8)
+    } yield {
+      val chain = (0L until n.toLong).sortBy(i => keys(i.toInt)).take(chainLen)
+      val links = chain.zip(chain.drop(1)) ++
+        (if (closed && chain.size > 1) Seq((chain.last, chain.head)) else Nil)
+      val u = (0L until n.toLong).filter(i => inU(i.toInt)).toSet
+      Case(n, stars.flatten.toVector ++ links ++ loops ++ dups ++ dups.map(_.swap), u, parts)
+    }
+    implicit val shrinkCase: Shrink[Case] = Shrink { c =>
+      Shrink.shrinkContainer[Vector, (Long, Long)].shrink(c.edges).map(es => c.copy(edges = es))
+    }
+    val seen = scala.collection.mutable.Set.empty[Int]
+    def check(c: Case): Boolean = {
+      seen += c.parts
+      val vertices = 0L until c.n
+      val e = edgesDf(c.edges).repartition(c.parts)
+      val expected = Oracle.tarjan(vertices, c.edges)
+      val comps = Seq(0L, 1L, 250000L).forall { threshold =>
+        val run = Scc.components(spark, e, vertsDf(vertices).repartition(c.parts),
+          localSolveEdgeThreshold = threshold)
+        val got = run.components.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        run.release()
+        got == expected
+      }
+      def accepted(mode: Scc.SccMode): Set[Long] = {
+        val run = Scc.acceptedRun(spark, e, vertsDf(vertices, c.u), mode)
+        val got = run.accepted.filter(col("accepted")).select("comp").distinct()
+          .collect().map(_.getLong(0)).toSet
+        run.release()
+        got
+      }
+      comps && accepted(Scc.FullGraph) == Oracle.acceptedComps(vertices, c.edges, c.u) &&
+        accepted(Scc.InducedU) == Oracle.acceptedCompsInduced(vertices, c.edges, c.u)
+    }
+    val prop = Prop.forAll(caseGen)(check)
+    val params = Test.Parameters.default.withMinSuccessfulTests(6).withWorkers(1)
+      .withInitialSeed(Seed(20261022L))
+    val result = Test.check(params, prop)
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
+    assert(seen == Set(1, 4, 8), s"partition counts drawn: $seen")
+
+    // no edges at all, and no vertices either, at every partition count
+    for (p <- Seq(1, 4, 8); n <- Seq(0, 5))
+      assert(check(Case(n, Vector.empty, Set(0L, 1L), p)), s"$n vertices, no edges, $p partitions")
+  }
+
   test("generated graph (seeded): decomposition matches Tarjan") {
     val spec = GraphSpec(numCycles = 40, maxCycleLen = 8, extraArcsPerVertex = 0.3, seed = 7L)
     val edges = GraphGen.edges(spark, spec).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -297,7 +434,7 @@ class SccSpec extends SparkTest {
     // 6-cycle + two pendant sources feeding it. With capFraction=0.9 and
     // no size floor, the pre-trim caps IMMEDIATELY (2 dead of 8 < 0.9·8),
     // so the pendants ride into the BFS flagged-but-live: round 0 extracts
-    // the cycle (slim single-pivot path), the recolored pendant remainder
+    // the cycle (single-pivot path), the recolored pendant remainder
     // is finished by the round-1 trim (2 dead of 2 ≥ 0.9·2 → cap inactive).
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 0L),
       (6L, 0L), (7L, 3L))
