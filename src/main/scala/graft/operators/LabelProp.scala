@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 import graft.plans.{CheckpointArena, JobLabel, Superstep}
 
@@ -22,24 +23,37 @@ final class LabelPropRun(val labels: DataFrame, releaseFn: () => Unit) {
   * in-neighbors'** current labels (ties broken toward the smallest label);
   * vertices with a seed label are clamped to it (semi-supervised LPA);
   * vertices that no labeled vertex has reached keep their previous label.
+  * Every edge row is a vote: duplicates and self-loops count, an edge from
+  * an id outside `verts` votes nothing and a vote for one is lost.
   * Synchronous rounds + deterministic tie-break make the result exactly
   * reproducible — the driver oracle unrolls the same recurrence in SQL.
   *
-  * Scale shape (per round): one co-partitioned shuffle-hash join of the
-  * edge table (checkpointed hash(src)) against the labeled state
-  * (hash(id)), built on the state — unhinted, the state's exact statistics
-  * below `autoBroadcastJoinThreshold` made the planner broadcast it, one
-  * broadcast job per round — then a two-level aggregation (`(dst,label)`
-  * count with map-side partials, then arg-max per `dst`) and one
-  * co-partitioned shuffle-hash join back into the state, built on the
-  * votes. Shuffle bytes per round are O(labeled out-degree), not O(E);
-  * rounds run on [[graft.plans.Superstep]], which checkpoints each one in
-  * one job, so lineage stays flat at any iteration count.
-  *
-  * Labels must be > Long.MinValue (the min-label tie-break rides a numeric
-  * negation inside the arg-max struct).
+  * Scale shape: the edge table is checkpointed hash(src) first, and its
+  * exact row count routes the call. Up to [[LocalGraph.EdgeThreshold]]
+  * edges, one task runs the recurrence over arrays
+  * ([[LocalGraph.labelPropRows]]) in one job. Above it, each round is one
+  * checkpoint job: a co-partitioned shuffle-hash join of the edge table
+  * against the labeled state (hash(id)), built on the state — unhinted,
+  * the state's exact statistics below `autoBroadcastJoinThreshold` made
+  * the planner broadcast it, one broadcast job per round — then ONE
+  * hash(dst) exchange, after which the `(dst, label)` vote count, the
+  * arg-max per `dst` (both hash aggregations) and the co-partitioned
+  * shuffle-hash join back into the state all run in place. Shuffle bytes
+  * per round are O(labeled out-degree), not O(E); rounds run on
+  * [[graft.plans.Superstep]], so lineage stays flat at any iteration count.
   */
 object LabelProp {
+
+  /** Ordering key of a (count, label) vote tally as one decimal:
+    * `c·2^64 + (2^63 - 1 - label)`, larger for more votes and then for the
+    * smaller label. A max over it is a hash aggregation, where a
+    * (count, -label) struct max plans as a sort aggregation. Exact for
+    * every Long label and any count below 5·10^18. */
+  private val VoteKey = DecimalType(38, 0)
+
+  private def voteKey(c: Column, label: Column): Column =
+    c.cast(VoteKey) * lit(BigDecimal(2).pow(64).bigDecimal).cast(VoteKey) +
+      (lit(Long.MaxValue).cast(VoteKey) - label.cast(VoteKey))
 
   /** @param edges (src, dst) directed edges; labels flow src → dst
     * @param verts (id) full vertex set
@@ -54,15 +68,36 @@ object LabelProp {
       edges: DataFrame,
       verts: DataFrame,
       seeds: DataFrame,
-      iterations: Int): LabelPropRun = JobLabel(spark, "labelprop", "setup") {
+      iterations: Int): LabelPropRun =
+    run(spark, edges, verts, seeds, iterations, LocalGraph.EdgeThreshold)
+
+  /** [[run]] routed by `localSolveEdgeThreshold` (see [[LocalGraph.fits]]). */
+  private[graft] def run(
+      spark: SparkSession,
+      edges: DataFrame,
+      verts: DataFrame,
+      seeds: DataFrame,
+      iterations: Int,
+      localSolveEdgeThreshold: Long): LabelPropRun = JobLabel(spark, "labelprop", "setup") {
     require(iterations >= 1, "iterations must be >= 1")
     val arena = new CheckpointArena
 
     // A checkpoint, not a persist: a persisted plan is cached through AQE,
     // whose exchange runs as a query-stage job of its own inside the first
     // round.
-    val eBySrc = arena.checkpoint(edges.select("src", "dst").repartition(col("src"))).df
+    val eBySrc = arena.checkpoint(edges.select("src", "dst").repartition(col("src")))
+    if (LocalGraph.fits(eBySrc.rows, localSolveEdgeThreshold)) {
+      import spark.implicits._
+      val solved = LocalGraph.solve(arena, "labelprop",
+        LocalGraph.records(verts, eBySrc.df, Some(seeds)), "id", "label")(
+        LocalGraph.labelPropRows(_, iterations))
+      arena.closeExcept(solved.df)
+      new LabelPropRun(solved.df, () => arena.closeExcept())
+    } else supersteps(spark, arena, eBySrc.df, verts, seeds, iterations)
+  }
 
+  private def supersteps(spark: SparkSession, arena: CheckpointArena, eBySrc: DataFrame,
+      verts: DataFrame, seeds: DataFrame, iterations: Int): LabelPropRun = {
     // hinted so the seed labels are not broadcast by a job of their own
     val seeds1 = seeds.groupBy("id").agg(min("label").as("seedLabel"))
     val state0 = verts.select("id")
@@ -74,13 +109,17 @@ object LabelProp {
     // and only an empty state (nothing to propagate) stops it earlier.
     val harness = new Superstep(spark, "labelprop", arena = arena)
     val (state, _) = harness.run(state0, iterations) { (st, _) =>
+      // the one exchange of the round: the vote count groups by
+      // (dst, label), which hash(dst) already clusters, and so does the
+      // arg-max after it
       val contrib = eBySrc
         .join(st.filter(col("label").isNotNull)
           .select(col("id").as("src"), col("label")).hint("shuffle_hash"), Seq("src"))
+        .repartition(col("dst"))
         .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("c"))
         .groupBy("dst")
-        .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
-        .select(col("dst").as("id"), (-col("m.nl")).as("cand"))
+        .agg(max_by(col("label"), voteKey(col("c"), col("label"))).as("cand"))
+        .select(col("dst").as("id"), col("cand"))
       st.join(contrib.hint("shuffle_hash"), Seq("id"), "left")
         .select(col("id"), col("seedLabel"),
           coalesce(col("seedLabel"), col("cand"), col("label")).as("label"))

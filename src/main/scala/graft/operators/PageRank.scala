@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.GraftShims.{CountIf, SumDouble}
 import org.apache.spark.sql.functions._
@@ -30,13 +32,23 @@ final class PageRankRun(
   * Ranks sum to 1 every iteration; convergence = max |Δrank| < tol
   * (north_star: allclose 1e-6 at convergence).
   *
-  * Scale notes: contributions aggregate is a map-side-combinable hash agg on
-  * `dst`; the edge table is checkpointed hash-partitioned on `src`, which the
-  * rank⨝edges join reuses as a co-partitioned shuffle-hash join at every
-  * size (the SHUFFLE_HASH hints in `update`): no edge broadcast, and the
+  * Scale shape: the edge table is checkpointed hash-partitioned on `src`
+  * first, and its exact row count routes the call. Up to
+  * [[LocalGraph.EdgeThreshold]] edges, one task runs the same power
+  * iteration over arrays ([[LocalGraph.pageRank]]): two jobs in all, with
+  * each iteration's exact changed count (and its wall time in the task)
+  * coming back in `metrics` through an accumulator of that job's result
+  * task. Above it, the superstep path: the contributions aggregate is a
+  * map-side-combinable hash agg on `dst`, the rank⨝edges join reuses the
+  * `src` partitioning as a co-partitioned shuffle-hash join at every size
+  * (the SHUFFLE_HASH hints in `update`): no edge broadcast, and the
   * dangling mass of step i rides step i's checkpoint into step i+1's plan,
-  * so an iteration is one job. Setup is three: the edge table, the vertex
-  * out-degrees (whose row count is n) and the first state.
+  * so an iteration is one job. Its setup is three jobs: the edge table,
+  * the vertex out-degrees (whose row count is n) and the first state.
+  *
+  * Every edge row counts in its source's out-degree (duplicates,
+  * self-loops and edges to ids outside `vertices` alike); an edge from an
+  * id outside `vertices` carries nothing, and mass sent to one is lost.
   */
 object PageRank {
 
@@ -51,10 +63,49 @@ object PageRank {
       alpha: Double = 0.85,
       tol: Double = 1e-6,
       maxIter: Int = 100,
-      snapshotDir: Option[String] = None): PageRankRun = JobLabel(spark, "pagerank", "setup") {
-    val arena = new CheckpointArena
+      snapshotDir: Option[String] = None): PageRankRun =
+    run(spark, edges, vertices, alpha, tol, maxIter, snapshotDir, LocalGraph.EdgeThreshold)
 
-    val edgesBySrc = arena.checkpoint(edges.select("src", "dst").repartition(col("src"))).df
+  /** [[run]] routed by `localSolveEdgeThreshold` (see [[LocalGraph.fits]]). */
+  private[graft] def run(
+      spark: SparkSession,
+      edges: DataFrame,
+      vertices: DataFrame,
+      alpha: Double,
+      tol: Double,
+      maxIter: Int,
+      snapshotDir: Option[String],
+      localSolveEdgeThreshold: Long): PageRankRun = JobLabel(spark, "pagerank", "setup") {
+    val arena = new CheckpointArena
+    val edgesBySrc = arena.checkpoint(edges.select("src", "dst").repartition(col("src")))
+    if (LocalGraph.fits(edgesBySrc.rows, localSolveEdgeThreshold))
+      localSolve(spark, arena, edgesBySrc.df, vertices, alpha, tol, maxIter)
+    else supersteps(spark, arena, edgesBySrc.df, vertices, alpha, tol, maxIter, snapshotDir)
+  }
+
+  /** The whole edge table fits one task: power iteration over arrays in
+    * one job. Its result task hands back each iteration's (changed, wall
+    * ms), which Spark applies exactly once per partition (see
+    * [[org.apache.spark.sql.GraftShims.checkpoint]]). */
+  private def localSolve(spark: SparkSession, arena: CheckpointArena, edgesBySrc: DataFrame,
+      vertices: DataFrame, alpha: Double, tol: Double, maxIter: Int): PageRankRun = {
+    import spark.implicits._
+    val steps = spark.sparkContext.collectionAccumulator[(Long, Long)]("graft.pagerank.steps")
+    val solved = LocalGraph.solve(arena, "pagerank",
+      LocalGraph.records(vertices, edgesBySrc), "id", "rank") { g =>
+      val rank = LocalGraph.pageRank(g, alpha, tol, maxIter, (c, ms) => steps.add((c, ms)))
+      g.vertices.iterator.map(v => (g.ids(v), rank(v)))
+    }
+    val metrics = steps.value.asScala.toVector.zipWithIndex
+      .map { case ((changed, ms), i) => StepMetrics(i, changed, ms) }
+    graft.Log.v(s"pagerank: local solve of ${solved.rows} vertices, ${metrics.size} iterations")
+    arena.closeExcept(solved.df)
+    new PageRankRun(solved.df, metrics, () => arena.closeExcept())
+  }
+
+  private def supersteps(spark: SparkSession, arena: CheckpointArena, edgesBySrc: DataFrame,
+      vertices: DataFrame, alpha: Double, tol: Double, maxIter: Int,
+      snapshotDir: Option[String]): PageRankRun = {
     // hash(src) already: the out-degree count needs no exchange, and the
     // hinted join keeps it from being broadcast by a job of its own
     val outDeg = edgesBySrc.groupBy(col("src").as("id")).agg(count("*").as("outDeg"))

@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.GraftShims.{Checkpoint, CountIf, Max}
 import org.apache.spark.sql.functions._
@@ -191,19 +189,6 @@ object Scc {
     def round: Int = tally.round
   }
 
-  /** [[LocalTarjan]] over one task's (a, b) records — b = -1 marks vertex
-    * a, any other b an edge a→b — checking that every vertex record got
-    * exactly one row. */
-  private def solveRecords(recs: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
-    val vs = mutable.ArrayBuffer[Long]()
-    val es = mutable.ArrayBuffer[(Long, Long)]()
-    recs.foreach { case (a, b) => if (b == -1L) vs += a else es += ((a, b)) }
-    val out = LocalTarjan.solve(vs.toArray, es.toArray).toArray
-    require(out.length == vs.length,
-      s"local solve assigned ${out.length} rows to ${vs.length} vertices — assignment bug")
-    out.iterator
-  }
-
   /** Initial flagged degree frame for [[Decomposition.trimFixpoint]]: verts
     * ⟕ one-pass [[Degrees.counts]], `dead` = in- or out-degree 0. Callers
     * checkpoint it riding `CountIf("dead")`, so the row/dead counts cost no
@@ -326,13 +311,16 @@ object Scc {
   /** Full SCC decomposition. Returns (id, comp) for every vertex, with
     * comp = min member id (canonical), plus per-round metrics.
     *
-    * Hybrid execution (see [[LocalTarjan]]): every round, partitions whose
-    * internal edge count fits one task (`localSolveEdgeThreshold`) are
-    * finished by a per-group sequential Tarjan in a single shuffle, so only
-    * partitions too big for any single machine pay the superstep loop. At
-    * 100 TB that means the giant component runs distributed FW-BW while the
-    * million-small-component tail costs O(1) jobs total. Set the threshold
-    * to 0 to force the pure distributed path (used by tests to cover it).
+    * Hybrid execution (see [[LocalGraph]]): a graph whose whole edge set
+    * fits one task (`localSolveEdgeThreshold`) is solved by one array
+    * Tarjan in one job; otherwise every round, partitions whose internal
+    * edge count fits one task are finished by a per-group sequential
+    * Tarjan in a single shuffle, so only partitions too big for any single
+    * machine pay the superstep loop. At 100 TB that means the giant
+    * component runs distributed FW-BW while the million-small-component
+    * tail costs O(1) jobs total. Set the threshold to 0 to force the pure
+    * distributed path (used by tests to cover it); the WCC refinement of a
+    * remainder routes by the same threshold.
     *
     * Per-round job budget (the sandbox superstep-latency floor is the
     * binding constraint; see BASELINE.md): the live partition-internal edge
@@ -353,7 +341,7 @@ object Scc {
       vertices: DataFrame,
       maxOuter: Int = 100,
       maxTrimSweeps: Int = 20,
-      localSolveEdgeThreshold: Long = 250000,
+      localSolveEdgeThreshold: Long = LocalGraph.EdgeThreshold,
       hubDegreeThreshold: Long = 2000000,
       snapshotDir: Option[String] = None,
       edgesWithinVertices: Boolean = false,
@@ -369,8 +357,7 @@ object Scc {
         localSolveEdgeThreshold, hubDegreeThreshold, snapshotDir, trimCapFraction,
         trimCapMinRemaining, fragmentCompactionThreshold)
       (d, d.resumed().getOrElse(
-        if (localSolveEdgeThreshold > 0 && eBySrc.rows <= localSolveEdgeThreshold)
-          d.localSolveAll(eBySrc.rows)
+        if (LocalGraph.fits(eBySrc.rows, localSolveEdgeThreshold)) d.localSolveAll(eBySrc.rows)
         else d.electPivot(d.preTrim())))
     }
     // every vertex is now either in a finished fragment or live
@@ -444,11 +431,12 @@ object Scc {
     }
 
     /** Durable restart: completed fragments come back as parquet scans (no
-      * arena backing needed, parquet-footer counts seed the tally), the
-      * live state is re-materialized id-partitioned, and the loop re-enters
-      * after the newest durable round. Pre-trim and WCC are never
-      * recomputed; per-round trims run, and the full-graph degree maxima
-      * cost one aggregation. */
+      * arena backing needed; one count over all fragment files, which reads
+      * only their parquet footers, seeds the tally), the live state is
+      * re-materialized id-partitioned, and the loop re-enters after the
+      * newest durable round. Pre-trim and WCC are never recomputed;
+      * per-round trims run, and the full-graph degree maxima cost one
+      * aggregation. */
     def resumed(): Option[SccState] = snaps.flatMap(_.resume()).map { case (liveDf, parts, r, lc) =>
       graft.Log.v(s"scc: resuming after round $r (live=$lc, parts=${parts.size})")
       val salted = lc > 0 && {
@@ -458,24 +446,20 @@ object Scc {
       }
       SccState(arena.checkpoint(liveDf.repartition(col("id"))).df, lc,
         onePivot = false, idPart = true, trimDone = false, salted,
-        Fragments(pending = parts.toVector, assigned = parts.map(_.count()).sum),
+        Fragments(pending = parts.toVector,
+          assigned = if (parts.isEmpty) 0L else parts.map(_.select()).reduce(_.union(_)).count()),
         roundStart(r + 1))
     }
 
     /** Whole-graph local solve: the ENTIRE edge set fits one task, so one
-      * Tarjan over every vertex and edge finishes the job — no degree pass,
-      * pre-trim, pivot, live-edge table or routing. The records reach that
-      * task through a coalesce, not an exchange, and its output is the one
-      * fragment: one job after the edge checkpoint. The task checks that
-      * every vertex record got exactly one row. */
+      * array Tarjan ([[LocalGraph.scc]]) over every vertex and edge finishes
+      * the job — no degree pass, pre-trim, pivot, live-edge table or
+      * routing. Its output, one row per vertex record, is the one fragment:
+      * one job after the edge checkpoint. */
     def localSolveAll(numEdges: Long): SccState = {
       graft.Log.v(s"scc: $numEdges edges <= localSolveEdgeThreshold — whole-graph local solve")
-      val recs = verts.select(col("id").as("a"), lit(-1L).as("b"))
-        .unionByName(eBySrc.select(col("src").as("a"), col("dst").as("b")))
-      val Checkpoint(solved, _, solvedCnt, _) = JobLabel(spark, "scc", "local-solve") {
-        arena.checkpoint(
-          recs.as[(Long, Long)].coalesce(1).mapPartitions(solveRecords).toDF("id", "comp"))
-      }
+      val Checkpoint(solved, _, solvedCnt, _) = LocalGraph.solve(arena, "scc",
+        LocalGraph.records(verts, eBySrc), "id", "comp")(LocalGraph.sccRows)
       closeRound(SccState(verts.select(col("id"), col("id").as("pivot")).limit(0), 0L,
         onePivot = false, idPart = false, trimDone = true, salted = false,
         Fragments().add(solved, solvedCnt), roundStart(0).copy(localSolved = solvedCnt)))
@@ -581,7 +565,8 @@ object Scc {
         if (s.leCount.get <= localSolveEdgeThreshold) s
         else {
           // one WCC row per live id: its label is the row's new pivot
-          val wccRun = Wcc.run(spark, le.select("src", "dst"), s.live.select("id"))
+          val wccRun = Wcc.run(spark, le.select("src", "dst"), s.live.select("id"),
+            maxIter = 50, snapshotDir = None, localSolveEdgeThreshold)
           val live = arena.checkpoint(
             wccRun.components.select(col("id"), col("comp").as("pivot"))
               .repartition(col("id"))).df
@@ -616,15 +601,14 @@ object Scc {
             .join(groupEdgeCounts, Seq("pivot"), "left")
             .filter(coalesce(col("ec"), lit(0L)) <= localSolveEdgeThreshold)
             .select("pivot")).df
-        val vertRecs = s.live.join(smallPivots, Seq("pivot"), "left_semi")
-          .select(col("pivot"), col("id").as("a"), lit(-1L).as("b"))
-        val edgeRecs = le.join(smallPivots, Seq("pivot"), "left_semi")
-          .select(col("pivot"), col("src").as("a"), col("dst").as("b"))
+        val recs = LocalGraph.records(
+          s.live.join(smallPivots, Seq("pivot"), "left_semi"),
+          le.join(smallPivots, Seq("pivot"), "left_semi"), group = Some("pivot"))
         val Checkpoint(solved, _, solvedCnt, _) = arena.checkpoint(
-          vertRecs.unionByName(edgeRecs)
-            .as[(Long, Long, Long)]
+          recs.as[(Long, Int, Long, Long)]
             .groupByKey(_._1)
-            .flatMapGroups((_, it) => solveRecords(it.map(r => (r._2, r._3))))
+            .flatMapGroups((_, it) =>
+              LocalGraph.sccRows(LocalGraph.Graph(it.map(r => (r._2, r._3, r._4)))))
             .toDF("id", "comp"))
         graft.Log.v(s"scc round ${s.round}: local-solved $solvedCnt rows")
         val out =
@@ -712,29 +696,25 @@ object Scc {
         } else {
           val removed = degs.filter(col("dead")).select("id")
           // Decrement counters of the removed set's neighbors. Typical
-          // sweep: removed is small → ONE pass over one edge copy with two
-          // broadcast hash probes emits both decrement directions (the
-          // naive form scanned the edge table twice per sweep — measured as
-          // the bulk of pre-trim wall). Huge sweep (first sweep of a
+          // sweep: removed is small → ONE pass over one edge copy emits
+          // each edge from both ends, keyed by the end that may have been
+          // removed, and ONE broadcast semi-join keeps the rows whose key
+          // was (the naive form scanned the edge table twice per sweep —
+          // measured as the bulk of pre-trim wall — and a probe per end
+          // broadcast the removed set twice). Huge sweep (first sweep of a
           // peel-heavy graph at scale): broadcasting `removed` would not
           // fit — fall back to two semi-joins that each reuse an existing
           // edge partitioning, shuffling only `removed`.
           val dec =
             if (deadCnt <= 5000000L) {
-              val remSrc = broadcast(removed.select(col("id").as("src"), lit(1).as("_rs")))
-              val remDst = broadcast(removed.select(col("id").as("dst"), lit(1).as("_rd")))
               edges
-                .join(remSrc, Seq("src"), "left")
-                .join(remDst, Seq("dst"), "left")
-                .filter(col("_rs").isNotNull || col("_rd").isNotNull)
                 .select(explode(array(
-                  when(col("_rs").isNotNull,
-                    struct(col("dst").as("id"), lit(1L).as("dIn"), lit(0L).as("dOut"))),
-                  when(col("_rd").isNotNull,
-                    struct(col("src").as("id"), lit(0L).as("dIn"), lit(1L).as("dOut")))))
-                  .as("e"))
-                .filter(col("e").isNotNull)
-                .select(col("e.id").as("id"), col("e.dIn").as("dIn"), col("e.dOut").as("dOut"))
+                  struct(col("src").as("key"), col("dst").as("id"),
+                    lit(1L).as("dIn"), lit(0L).as("dOut")),
+                  struct(col("dst").as("key"), col("src").as("id"),
+                    lit(0L).as("dIn"), lit(1L).as("dOut")))).as("e"))
+                .select("e.*")
+                .join(broadcast(removed.select(col("id").as("key"))), Seq("key"), "left_semi")
                 .groupBy("id").agg(sum("dIn").as("dIn"), sum("dOut").as("dOut"))
             } else {
               edges
@@ -1033,14 +1013,15 @@ object Scc {
     * [[components]] (the `% m n` file format implies it — the reference's
     * loader indexes arrays by edge endpoint without bounds checks, so
     * trusting the header matches reference behavior; InducedU re-derives
-    * its own closed subset and ignores the flag).
+    * its own closed subset and ignores the flag). Jobs outside the
+    * decomposition's own phases are labelled `graft scc accepted`.
     */
   def acceptedRun(
       spark: SparkSession,
       edges: DataFrame,
       vertices: DataFrame,
       mode: SccMode = FullGraph,
-      edgesWithinVertices: Boolean = false): SccAcceptedRun = {
+      edgesWithinVertices: Boolean = false): SccAcceptedRun = JobLabel(spark, "scc", "accepted") {
     val run = mode match {
       case FullGraph => components(spark, edges, vertices.select("id"),
         edgesWithinVertices = edgesWithinVertices)

@@ -37,21 +37,65 @@ final class WccRun(
   * hub's rows form one window group in one task, as they would for an
   * aggregate.
   *
-  * Canonical component id = min member id. Convergence is detected by a
-  * 64-bit content signature of the link set (xor of row hashes + count) going
-  * stable — ridden on each round's checkpoint, so it costs no extra job.
+  * Canonical component id = min member id; an id that only an edge names
+  * joins components and may be their id. Self-loops are dropped.
+  * Convergence is detected by a 64-bit content signature of the link set
+  * (xor of row hashes + count) going stable — ridden on each round's
+  * checkpoint, so it costs no extra job.
+  *
+  * Scale shape: the link set is checkpointed first, and its exact row
+  * count routes the call. Up to [[LocalGraph.EdgeThreshold]] links, one
+  * union-find task ([[LocalGraph]]) solves the whole graph: two jobs, one
+  * reported round with `changed = 0`. Above it, the star rounds run one
+  * checkpoint job each, plus the exact confirmation and the finish.
   */
 object Wcc {
 
+  /** @param snapshotDir per-round state snapshots of the superstep path */
   def run(
       spark: SparkSession,
       edges: DataFrame,
       vertices: DataFrame,
       maxIter: Int = 50,
-      snapshotDir: Option[String] = None): WccRun = JobLabel(spark, "wcc", "setup") {
+      snapshotDir: Option[String] = None): WccRun =
+    run(spark, edges, vertices, maxIter, snapshotDir, LocalGraph.EdgeThreshold)
 
+  /** [[run]] routed by `localSolveEdgeThreshold` (see [[LocalGraph.fits]]). */
+  private[graft] def run(
+      spark: SparkSession,
+      edges: DataFrame,
+      vertices: DataFrame,
+      maxIter: Int,
+      snapshotDir: Option[String],
+      localSolveEdgeThreshold: Long): WccRun = JobLabel(spark, "wcc", "setup") {
     val arena = new CheckpointArena
+    // smallStar's distinct dedupes the first round anyway; an input
+    // distinct here would be one more full shuffle of the edge table.
+    val links0 = arena.checkpoint(edges
+      .filter(col("src") =!= col("dst"))
+      .select(col("src").as("u"), col("dst").as("v")))
+    if (LocalGraph.fits(links0.rows, localSolveEdgeThreshold))
+      localSolve(spark, arena, links0.df, vertices)
+    else supersteps(spark, arena, links0.df, vertices, maxIter, snapshotDir)
+  }
 
+  /** The whole link set fits one task: union-find over it in one job,
+    * reported as one round that changed nothing. */
+  private def localSolve(spark: SparkSession, arena: CheckpointArena, links0: DataFrame,
+      vertices: DataFrame): WccRun = {
+    import spark.implicits._
+    val t0 = System.nanoTime()
+    val solved = LocalGraph.solve(arena, "wcc",
+      LocalGraph.records(vertices, links0.select(col("u").as("src"), col("v").as("dst"))),
+      "id", "comp")(LocalGraph.wccRows)
+    graft.Log.v(s"wcc: local solve of ${solved.rows} vertices")
+    arena.closeExcept(solved.df)
+    new WccRun(solved.df, Vector(StepMetrics(0, 0L, (System.nanoTime() - t0) / 1000000)),
+      () => arena.closeExcept())
+  }
+
+  private def supersteps(spark: SparkSession, arena: CheckpointArena, links0: DataFrame,
+      vertices: DataFrame, maxIter: Int, snapshotDir: Option[String]): WccRun = {
     val byU = Window.partitionBy("u")
 
     // Every link in both directions; explode keeps the child's
@@ -78,11 +122,6 @@ object Wcc {
         .distinct()
 
     val harness = new Superstep(spark, "wcc", snapshotDir, arena = arena)
-    // smallStar's distinct dedupes the first round anyway; an input
-    // distinct here would be one more full shuffle of the edge table.
-    val links0 = edges
-      .filter(col("src") =!= col("dst"))
-      .select(col("src").as("u"), col("dst").as("v"))
 
     var prevSig: Option[(Long, Long)] = None
     var prevState: DataFrame = null

@@ -1,7 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{Degrees, PageRank, Triangles, Wcc, WccRun}
+import graft.operators.{Degrees, PageRank, PageRankRun, Triangles, Wcc, WccRun}
 import graft.sources.{GraphGen, GraphSpec}
 
 class WccSpec extends SparkTest {
@@ -18,7 +19,7 @@ class WccSpec extends SparkTest {
   test("wcc on a long path converges in O(log) rounds, not O(diameter) supersteps") {
     val edges = (0L until 200L).map(i => (i, i + 1))
     val expected = Oracle.wcc(0L to 200L, edges)
-    val run2 = Wcc.run(spark, edgesDf(edges), vertsDf(0L to 200L))
+    val run2 = distributed(edgesDf(edges), vertsDf(0L to 200L))
     val got = run2.components
     val metrics = run2.metrics
     assert(got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == expected)
@@ -38,6 +39,28 @@ class WccSpec extends SparkTest {
     try run.components.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     finally run.release()
 
+  /** The superstep path, whatever the graph's size. */
+  private def distributed(edges: DataFrame, vertices: DataFrame): WccRun =
+    Wcc.run(spark, edges, vertices, maxIter = 50, snapshotDir = None, localSolveEdgeThreshold = 0L)
+
+  /** The `linkgraph` benchmark's graph (6,000 vertices, 18,465 edges) fits
+    * one task: the link checkpoint and one union-find job, one round that
+    * changed nothing. Its five large-star/small-star rounds took 9 jobs:
+    * the link checkpoint, a job per round, the exact confirmation and the
+    * finish. */
+  test("wcc on a graph that fits one task runs 2 jobs and reports one round") {
+    val spec = GraphSpec(numCycles = 1000, maxCycleLen = 6, extraArcsPerVertex = 2.4, seed = 42L)
+    val edges = GraphGen.edges(spark, spec).persist()
+    val local = edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val (run, jobs) = jobsOf(Wcc.run(spark, edges, GraphGen.vertices(spark, spec)))
+    val metrics = run.metrics
+    val got = labels(run)
+    edges.unpersist()
+    assert(got == Oracle.wcc(0L until spec.numVertices, local))
+    assert(jobs.map(_._1) == Vector("graft wcc setup", "graft wcc local-solve"), jobs.toString)
+    assert(metrics == Vector(graft.plans.StepMetrics(0, 0L, metrics.head.wallMs)), metrics.toString)
+  }
+
   /** Stages of each round's checkpoint job: the first job under each
     * `graft wcc step <i>` label (the exact-confirmation job of the last
     * round runs after it under the same label). When each star phase joined
@@ -47,7 +70,7 @@ class WccSpec extends SparkTest {
   private def stagesPerRound(parts: Int): (Vector[Int], Int) = {
     val spec = GraphSpec(numCycles = 40, maxCycleLen = 6, extraArcsPerVertex = 1.0, seed = 11L)
     val edges = GraphGen.edges(spark, spec).repartition(parts)
-    val (run, jobs) = jobsOf(Wcc.run(spark, edges, GraphGen.vertices(spark, spec)))
+    val (run, jobs) = jobsOf(distributed(edges, GraphGen.vertices(spark, spec)))
     val rounds = run.metrics.size
     run.release()
     val steps = jobs.filter(j => j._1 != null && j._1.startsWith("graft wcc step "))
@@ -73,65 +96,37 @@ class WccSpec extends SparkTest {
   test("wcc's exact confirmation on one partition runs without an exchange") {
     val spec = GraphSpec(numCycles = 40, maxCycleLen = 6, extraArcsPerVertex = 1.0, seed = 11L)
     val edges = GraphGen.edges(spark, spec).repartition(1)
-    val (run, jobs) = jobsOf(Wcc.run(spark, edges, GraphGen.vertices(spark, spec)))
+    val (run, jobs) = jobsOf(distributed(edges, GraphGen.vertices(spark, spec)))
     val last = s"graft wcc step ${run.metrics.last.iter}"
     run.release()
     val confirm = jobs.filter(_._1 == last).drop(1).map(_._2.size)
     assert(confirm == Vector(1), s"stages of the confirmation jobs: $confirm")
   }
 
-  /** Random graphs, seeded, against union-find. Each case mixes hub stars
-    * (the skewed groups: one vertex holding most of the rows), a long chain
-    * over shuffled ids, self-loops and duplicated edges in both directions,
-    * any of which may be empty, split over 1, 4 or 8 input partitions.
-    */
+  /** Random graphs, seeded, against union-find, on the local solve and on
+    * the superstep path: see [[GraphCases]]. An endpoint outside the
+    * vertices joins components and may label them. */
   test("wcc equals union-find on seeded random graphs (ScalaCheck)") {
-    import org.scalacheck.{Gen, Prop, Shrink, Test}
-    import org.scalacheck.rng.Seed
-
-    final case class Case(n: Int, edges: Vector[(Long, Long)], parts: Int)
-    def vertex(n: Int): Gen[Long] = Gen.choose(0L, n - 1L)
-    def star(n: Int): Gen[Vector[(Long, Long)]] = for {
-      hub <- vertex(n)
-      k <- Gen.choose(0, 150)
-      spokes <- Gen.listOfN(k, Gen.zip(vertex(n), Gen.prob(0.5)))
-    } yield spokes.map { case (v, in) => if (in) (v, hub) else (hub, v) }.toVector
-    val caseGen = for {
-      n <- Gen.choose(1, 400)
-      stars <- Gen.listOfN(3, star(n))
-      chainLen <- Gen.choose(0, n)
-      keys <- Gen.listOfN(n, Gen.long)
-      loops <- Gen.listOf(vertex(n).map(v => (v, v)))
-      dups <- Gen.listOf(Gen.zip(vertex(n), vertex(n)))
-      parts <- Gen.oneOf(1, 4, 8)
-    } yield {
-      val chain = (0L until n.toLong).sortBy(i => keys(i.toInt)).take(chainLen)
-      val links = chain.zip(chain.drop(1))
-      Case(n, stars.flatten.toVector ++ links ++ loops ++ dups ++ dups.map(_.swap), parts)
+    GraphCases.check(20261018L, maxN = 400, maxSpokes = 150) { c =>
+      val e = edgesDf(c.edges).repartition(c.parts)
+      val v = vertsDf(0L until c.n)
+      val want = Oracle.wcc(0L until c.n, c.edges)
+      labels(Wcc.run(spark, e, v)) == want && labels(distributed(e, v)) == want
     }
-    implicit val shrinkCase: Shrink[Case] = Shrink { c =>
-      Shrink.shrinkContainer[Vector, (Long, Long)].shrink(c.edges).map(es => c.copy(edges = es))
-    }
-    val seen = scala.collection.mutable.Set.empty[Int]
-    def check(c: Case): Boolean = {
-      seen += c.parts
-      val got = labels(Wcc.run(spark, edgesDf(c.edges).repartition(c.parts),
-        vertsDf(0L until c.n)))
-      got == Oracle.wcc(0L until c.n, c.edges)
-    }
-    val prop = Prop.forAll(caseGen)(check)
-    val params = Test.Parameters.default.withMinSuccessfulTests(12).withWorkers(1)
-      .withInitialSeed(Seed(20261018L))
-    val result = Test.check(params, prop)
-    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
-    assert(seen == Set(1, 4, 8), s"partition counts drawn: $seen")
-
-    // no edges at all, at every partition count
-    for (p <- Seq(1, 4, 8)) assert(check(Case(5, Vector.empty, p)), s"empty edges, $p partitions")
   }
 }
 
 class PageRankSpec extends SparkTest {
+  private def ranks(run: PageRankRun): Map[Long, Double] =
+    try run.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    finally run.release()
+
+  /** The superstep path, whatever the graph's size. */
+  private def distributed(edges: DataFrame, vertices: DataFrame, tol: Double,
+      maxIter: Int): PageRankRun =
+    PageRank.run(spark, edges, vertices, alpha = 0.85, tol = tol, maxIter = maxIter,
+      snapshotDir = None, localSolveEdgeThreshold = 0L)
+
   /** A step is its checkpoint job alone: both rank joins are
     * co-partitioned shuffle-hash joins against the `src`-partitioned edge
     * checkpoint, and the dangling mass it reads rode the previous step's
@@ -142,8 +137,7 @@ class PageRankSpec extends SparkTest {
     */
   test("a pagerank step runs one job and a four-step run at most eight") {
     val (edges, n, _) = fixture("sample_graph")
-    val (run, jobs) = jobsOf(PageRank.run(spark, edgesDf(edges), vertsDf(0L until n),
-      tol = 0.0, maxIter = 4))
+    val (run, jobs) = jobsOf(distributed(edgesDf(edges), vertsDf(0L until n), tol = 0.0, maxIter = 4))
     run.release()
     val perStep = jobs.collect { case (l, _) if l != null && l.startsWith("graft pagerank step ") => l }
       .groupBy(identity).map { case (l, js) => l -> js.size }
@@ -184,6 +178,57 @@ class PageRankSpec extends SparkTest {
     val am = run7.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val bm = run8.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     for (v <- 0L until n) assert(math.abs(am(v) - bm(v)) < 1e-12, s"vertex $v")
+  }
+
+  /** The `linkgraph` benchmark's graph fits one task: the edge checkpoint
+    * and one power-iteration job, with every iteration's metrics. Its four
+    * steps took 7 jobs: three setup checkpoints and one per step. */
+  test("pagerank on a graph that fits one task runs 2 jobs and reports every iteration") {
+    val spec = GraphSpec(numCycles = 1000, maxCycleLen = 6, extraArcsPerVertex = 2.4, seed = 42L)
+    val edges = GraphGen.edges(spark, spec).persist()
+    val local = edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val (run, jobs) = jobsOf(PageRank.run(spark, edges, GraphGen.vertices(spark, spec),
+      tol = 0.0, maxIter = 4))
+    val metrics = run.metrics
+    val got = ranks(run)
+    edges.unpersist()
+    assert(jobs.map(_._1) == Vector("graft pagerank setup", "graft pagerank local-solve"),
+      jobs.toString)
+    assert(metrics.map(_.iter) == (0 until 4), metrics.toString)
+    val want = Oracle.pagerank(0L until spec.numVertices, local, tol = 0.0, maxIter = 4)
+    assert(got.keySet == want.keySet && got.forall { case (v, r) => math.abs(r - want(v)) < 1e-10 })
+  }
+
+  /** Both paths stop on the same rule and report the same iterations, each
+    * with its exact changed count (a tolerance far above the float noise
+    * between their summation orders). */
+  test("local and distributed pagerank report the same iterations and changed counts") {
+    for (name <- Seq("sample_graph", "sample_graph5", "sample_graph8")) {
+      val (edges, n, _) = fixture(name)
+      def steps(run: PageRankRun): Vector[(Int, Long)] =
+        try run.metrics.map(m => (m.iter, m.changed)) finally run.release()
+      val local = steps(PageRank.run(spark, edgesDf(edges), vertsDf(0L until n), tol = 1e-3))
+      val dist = steps(distributed(edgesDf(edges), vertsDf(0L until n), tol = 1e-3, maxIter = 100))
+      assert(local == dist, name)
+      assert(local.last._2 == 0 && local.size > 1, s"$name: $local")
+    }
+  }
+
+  /** Random graphs, seeded, against power iteration at `tol = 0` on both
+    * paths: see [[GraphCases]]. Duplicates and self-loops count; an edge
+    * from outside the vertices carries nothing, one into it loses its mass.
+    */
+  test("pagerank equals power iteration on seeded random graphs (ScalaCheck)") {
+    GraphCases.check(20261020L, maxN = 200, maxSpokes = 100) { c =>
+      val e = edgesDf(c.edges).repartition(c.parts)
+      val v = vertsDf(0L until c.n)
+      val iters = 1 + c.n % 5
+      val want = Oracle.pagerank(0L until c.n, c.edges, tol = 0.0, maxIter = iters)
+      def close(got: Map[Long, Double]): Boolean =
+        got.keySet == want.keySet && got.forall { case (id, r) => math.abs(r - want(id)) < 1e-10 }
+      close(ranks(PageRank.run(spark, e, v, tol = 0.0, maxIter = iters))) &&
+        close(ranks(distributed(e, v, tol = 0.0, maxIter = iters)))
+    }
   }
 }
 
@@ -382,12 +427,21 @@ class DegreesSpec extends SparkTest {
 }
 
 class LabelPropSpec extends SparkTest {
-  import graft.operators.LabelProp
+  import graft.operators.{LabelProp, LabelPropRun}
 
   private def seedsDf(seeds: Seq[(Long, Long)]) = {
     import spark.implicits._
     seeds.toDF("id", "label")
   }
+
+  private def labels(run: LabelPropRun): Map[Long, Long] =
+    try run.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    finally run.release()
+
+  /** The superstep path, whatever the graph's size. */
+  private def distributed(edges: DataFrame, verts: DataFrame, seeds: DataFrame,
+      iterations: Int): LabelPropRun =
+    LabelProp.run(spark, edges, verts, seeds, iterations, localSolveEdgeThreshold = 0L)
 
   test("clamping, majority vote, min-label tie-break, multi-hop, unreached") {
     // seeds: 0->5, 1->7, 5->7. Vertex 2's in-labels {5,7} tie -> min 5;
@@ -450,13 +504,63 @@ class LabelPropSpec extends SparkTest {
     val spec = GraphSpec(numCycles = 1000, maxCycleLen = 6, extraArcsPerVertex = 2.4, seed = 42L)
     val verts = GraphGen.vertices(spark, spec)
     val seeds = verts.filter(col("id") % 10 === 0).select(col("id"), (col("id") % 4).as("label"))
-    val (run, jobs) = jobsOf(LabelProp.run(spark, GraphGen.edges(spark, spec),
+    val (run, jobs) = jobsOf(distributed(GraphGen.edges(spark, spec),
       verts.select("id"), seeds, iterations = 2))
     run.release()
     val perStep = jobs.collect { case (l, _) if l != null && l.startsWith("graft labelprop step ") => l }
       .groupBy(identity).map { case (l, js) => l -> js.size }
     assert(perStep.size == 2, s"step labels: $perStep")
     assert(perStep.values.forall(_ <= 1), s"jobs per step: $perStep")
+  }
+
+  /** A round's job is two stages around its one hash(dst) exchange: the
+    * edge⨝state join, then the vote count, the arg-max and the join back
+    * into the state. When the arg-max was a `max(struct(c, -label))` sort
+    * aggregation, each round ran 3 stages: one exchange for the
+    * (dst, label) count and another, plus a sort, for the arg-max. */
+  test("a labelprop round runs one exchange: two stages per step") {
+    val spec = GraphSpec(numCycles = 1000, maxCycleLen = 6, extraArcsPerVertex = 2.4, seed = 42L)
+    val verts = GraphGen.vertices(spark, spec)
+    val seeds = verts.filter(col("id") % 10 === 0).select(col("id"), (col("id") % 4).as("label"))
+    val (run, jobs) = jobsOf(distributed(GraphGen.edges(spark, spec),
+      verts.select("id"), seeds, iterations = 3))
+    run.release()
+    val perStep = jobs.collect { case (l, st) if l != null && l.startsWith("graft labelprop step ") =>
+      l -> st.size }
+    assert(perStep.size == 3 && perStep.forall(_._2 == 2), s"stages per step: $perStep")
+  }
+
+  /** The `linkgraph` benchmark's graph fits one task: the edge checkpoint
+    * and the solve, then one caller action on the result. Its two rounds
+    * took 4 jobs before that action: the edge table, the first state and
+    * one per round. */
+  test("labelprop on a graph that fits one task runs 2 jobs") {
+    val spec = GraphSpec(numCycles = 1000, maxCycleLen = 6, extraArcsPerVertex = 2.4, seed = 42L)
+    val edges = GraphGen.edges(spark, spec).persist()
+    val local = edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val verts = GraphGen.vertices(spark, spec).select("id")
+    val seeds = verts.filter(col("id") % 10 === 0).select(col("id"), (col("id") % 4).as("label"))
+    val (run, jobs) = jobsOf(LabelProp.run(spark, edges, verts, seeds, iterations = 2))
+    val got = labels(run)
+    edges.unpersist()
+    assert(jobs.map(_._1) == Vector("graft labelprop setup", "graft labelprop local-solve"),
+      jobs.toString)
+    val ids = 0L until spec.numVertices
+    assert(got == Oracle.labelProp(ids, local, ids.filter(_ % 10 == 0).map(v => v -> v % 4), 2))
+  }
+
+  /** Random graphs, seeded, against the sequential recurrence on both
+    * paths: see [[GraphCases]]. Seeds include repeated ids and ids outside
+    * the vertices. */
+  test("labelprop equals the sequential recurrence on seeded random graphs (ScalaCheck)") {
+    GraphCases.check(20261021L, maxN = 200, maxSpokes = 100) { c =>
+      val e = edgesDf(c.edges).repartition(c.parts)
+      val v = vertsDf(0L until c.n)
+      val rounds = 1 + c.n % 3
+      val want = Oracle.labelProp(0L until c.n, c.edges, c.seeds, rounds)
+      labels(LabelProp.run(spark, e, v, seedsDf(c.seeds), rounds)) == want &&
+        labels(distributed(e, v, seedsDf(c.seeds), rounds)) == want
+    }
   }
 
   test("duplicate seed ids resolve to the min label (no state-row multiplication)") {

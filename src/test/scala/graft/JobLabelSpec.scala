@@ -16,13 +16,24 @@ class JobLabelSpec extends SparkTest {
     edges.count()
     val verts = GraphGen.vertices(spark, spec).select("id")
     val seeds = verts.filter(col("id") % 10 === 0).select(col("id"), (col("id") % 4).as("label"))
+    val withU = verts.withColumn("isU", col("id") % 3 =!= 0)
     val calls: Seq[(String, () => Unit)] = Seq(
       "scc local solve" -> (() => Scc.components(spark, edges, verts).release()),
       "scc distributed" -> (() =>
         Scc.components(spark, edges, verts, localSolveEdgeThreshold = 0).release()),
-      "pagerank" -> (() => PageRank.run(spark, edges, verts, tol = 0.0, maxIter = 3).release()),
-      "wcc" -> (() => Wcc.run(spark, edges, verts).release()),
-      "labelprop" -> (() => LabelProp.run(spark, edges, verts, seeds, iterations = 2).release()),
+      "scc accepted full graph" -> (() =>
+        Scc.acceptedRun(spark, edges, withU, Scc.FullGraph).release()),
+      "scc accepted induced" -> (() =>
+        Scc.acceptedRun(spark, edges, withU, Scc.InducedU).release()),
+      "pagerank local" -> (() => PageRank.run(spark, edges, verts, tol = 0.0, maxIter = 3).release()),
+      "pagerank distributed" -> (() => PageRank.run(spark, edges, verts, alpha = 0.85, tol = 0.0,
+        maxIter = 3, snapshotDir = None, localSolveEdgeThreshold = 0L).release()),
+      "wcc local" -> (() => Wcc.run(spark, edges, verts).release()),
+      "wcc distributed" -> (() => Wcc.run(spark, edges, verts, maxIter = 50, snapshotDir = None,
+        localSolveEdgeThreshold = 0L).release()),
+      "labelprop local" -> (() => LabelProp.run(spark, edges, verts, seeds, iterations = 2).release()),
+      "labelprop distributed" -> (() => LabelProp.run(spark, edges, verts, seeds, iterations = 2,
+        localSolveEdgeThreshold = 0L).release()),
       "triangles total" -> (() => Triangles.total(spark, edges)),
       "triangles perVertex" -> (() => Triangles.perVertex(spark, edges)))
     try {

@@ -97,9 +97,12 @@ object Oracle {
     }.toSet
   }
 
-  /** Union-find WCC: id -> min member id of its weak component. */
+  /** Union-find WCC: id -> min member id of its weak component. An edge
+    * endpoint outside `vertices` still joins components, and may be the
+    * min member. */
   def wcc(vertices: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
-    val parent = mutable.Map[Long, Long]() ++ vertices.map(v => v -> v)
+    val parent = mutable.Map[Long, Long]() ++
+      (vertices ++ edges.flatMap(e => Seq(e._1, e._2))).map(v => v -> v)
     def find(x: Long): Long = {
       var r = x
       while (parent(r) != r) r = parent(r)
@@ -114,7 +117,9 @@ object Oracle {
     vertices.map(v => v -> find(v)).toMap
   }
 
-  /** Power iteration PageRank with dangling redistribution. */
+  /** Power iteration PageRank with dangling redistribution. Every edge
+    * counts in its source's out-degree; an edge from an id outside
+    * `vertices` contributes nothing. */
   def pagerank(
       vertices: Seq[Long], edges: Seq[(Long, Long)],
       alpha: Double = 0.85, tol: Double = 1e-6, maxIter: Int = 200): Map[Long, Double] = {
@@ -127,7 +132,8 @@ object Oracle {
     while (delta > tol && it < maxIter) {
       val dangling = vertices.collect { case v if !out.contains(v) => rank(v) }.sum
       val next = vertices.map { v =>
-        val contrib = in.getOrElse(v, Seq.empty).map { case (s, _) => rank(s) / out(s) }.sum
+        val contrib = in.getOrElse(v, Seq.empty)
+          .collect { case (s, _) if rank.contains(s) => rank(s) / out(s) }.sum
         v -> ((1 - alpha) / n + alpha * (contrib + dangling / n))
       }.toMap
       delta = vertices.map(v => math.abs(next(v) - rank(v))).max
@@ -135,6 +141,36 @@ object Oracle {
       it += 1
     }
     rank
+  }
+
+  /** Seeded synchronous label propagation, `rounds` rounds: a seeded
+    * vertex keeps its smallest seed label; any other vertex takes the label
+    * most of its in-edges from labelled vertices carry (each edge one vote,
+    * ties to the smallest label), and keeps its label when no vote arrives.
+    * Seeds and votes from ids outside `vertices` are ignored. Returns
+    * id -> label, -1 for a vertex no label reached.
+    */
+  def labelProp(vertices: Seq[Long], edges: Seq[(Long, Long)], seeds: Seq[(Long, Long)],
+      rounds: Int): Map[Long, Long] = {
+    val vs = vertices.toSet
+    val clamp = seeds.filter(s => vs(s._1)).groupBy(_._1).map { case (v, ls) => v -> ls.map(_._2).min }
+    val voters = edges.filter(e => vs(e._1) && vs(e._2)).groupBy(_._2)
+      .map { case (d, es) => d -> es.map(_._1) }
+    var label: Map[Long, Option[Long]] = vs.map(v => v -> clamp.get(v)).toMap
+    for (_ <- 0 until rounds) {
+      label = vs.map { v =>
+        val votes = voters.getOrElse(v, Nil).flatMap(label(_))
+        v -> (clamp.get(v) match {
+          case Some(l) => Some(l)
+          case None if votes.isEmpty => label(v)
+          case None =>
+            val tally = votes.groupBy(identity).map { case (l, ls) => l -> ls.size }
+            val most = tally.values.max
+            Some(tally.collect { case (l, c) if c == most => l }.min)
+        })
+      }.toMap
+    }
+    label.map { case (v, l) => v -> l.getOrElse(-1L) }
   }
 
   /** Brute-force triangle count over the undirected simple graph. */

@@ -201,16 +201,18 @@ class SccSpec extends SparkTest {
   }
 
   /** Jobs and stages per phase on the distributed path (threshold 0). The
-    * bounds are the counts since `components` became named phases; before,
-    * with the dst edge copy persisted by a prefetch thread and the degree
-    * frame broadcast by a job of its own, they were (jobs, stages): on the
-    * seeded graph (7 rounds, 106 steps) setup (17, 25), rounds 0–6
-    * (10, 12), (27, 33), (27, 33), (28, 35), (24, 29), (24, 29), (24, 29),
-    * steps (106, 318); on the 80-vertex two-cycle graph setup (10, 15),
-    * round 0 (10, 12), round 1 (24, 29), steps (81, 246); killed after
-    * round 0 with snapshots, setup (10, 15), round 0 (13, 15), steps
-    * (46, 131), and resumed, setup (13, 21), round 1 (26, 31), steps
-    * (45, 125).
+    * bounds are the counts since a trim sweep broadcasts its removed set
+    * once: on the seeded graph the pre-trim's two sweeps and round 3's one
+    * each broadcast it twice before, setup (13, 19) and round 3 (26, 33).
+    * Before `components` became named phases, with the dst edge copy
+    * persisted by a prefetch thread and the degree frame broadcast by a job
+    * of its own, they were (jobs, stages): on the seeded graph (7 rounds,
+    * 106 steps) setup (17, 25), rounds 0–6 (10, 12), (27, 33), (27, 33),
+    * (28, 35), (24, 29), (24, 29), (24, 29), steps (106, 318); on the
+    * 80-vertex two-cycle graph setup (10, 15), round 0 (10, 12), round 1
+    * (24, 29), steps (81, 246); killed after round 0 with snapshots, setup
+    * (10, 15), round 0 (13, 15), steps (46, 131), and resumed, setup
+    * (13, 21), round 1 (26, 31), steps (45, 125).
     */
   test("distributed path: jobs and stages per phase stay within their budget") {
     val spec = GraphSpec(numCycles = 40, maxCycleLen = 8, extraArcsPerVertex = 0.3, seed = 7L)
@@ -218,8 +220,8 @@ class SccSpec extends SparkTest {
       GraphGen.vertices(spark, spec), localSolveEdgeThreshold = 0))
     assert(run.metrics.size == 7 && run.metrics.map(_.bfsSteps).sum == 106, run.metrics.toString)
     run.release()
-    assertWithin(sccJobs(jobs), Map("setup" -> (13, 19), "round 0" -> (9, 12),
-      "round 1" -> (25, 31), "round 2" -> (25, 31), "round 3" -> (26, 33),
+    assertWithin(sccJobs(jobs), Map("setup" -> (11, 17), "round 0" -> (9, 12),
+      "round 1" -> (25, 31), "round 2" -> (25, 31), "round 3" -> (25, 32),
       "round 4" -> (22, 27), "round 5" -> (22, 27), "round 6" -> (22, 27),
       "steps" -> (106, 212)))
 
