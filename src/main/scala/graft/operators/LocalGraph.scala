@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoder}
+import org.apache.spark.sql.{Column, DataFrame, Encoder}
 import org.apache.spark.sql.GraftShims.Checkpoint
 import org.apache.spark.sql.functions._
 
@@ -45,18 +45,35 @@ object LocalGraph {
   private val VertexRec = 0
   private val EdgeRec = 1
   private val SeedRec = 2
+  /** A vertex row whose id is null: a vertex that no edge or seed names. */
+  private val NullVertexRec = 3
+  /** An edge row whose dst is null: it counts in its source's out-degree
+    * and reaches no vertex. */
+  private val NullDstRec = 4
 
   /** One task's input as (kind, a, b) records: vertex `a` from each
     * `vertices` row (id), edge a→b from each `edges` row (src, dst) and
     * seed label b of vertex a from each `seeds` row (id, label). A `group`
-    * column of every input leads each record, for a solve per group. */
+    * column of every input leads each record, for a solve per group.
+    *
+    * Nulls mean what they mean to the distributed joins, where a null key
+    * matches nothing: a null vertex id is a vertex of its own that comes
+    * out with a null id, an edge with a null src carries nothing, one with
+    * a null dst still counts in its source's out-degree, and a seed with a
+    * null id or label is no seed. */
   def records(vertices: DataFrame, edges: DataFrame, seeds: Option[DataFrame] = None,
       group: Option[String] = None): DataFrame = {
-    def rec(df: DataFrame, kind: Int, a: String, b: Option[String]): DataFrame =
-      df.select(group.map(col).toSeq ++ Seq(lit(kind).as("k"), col(a).cast("long").as("a"),
-        b.fold(lit(0L))(col(_).cast("long")).as("b")): _*)
-    (Seq(rec(vertices, VertexRec, "id", None), rec(edges, EdgeRec, "src", Some("dst"))) ++
-      seeds.map(rec(_, SeedRec, "id", Some("label")))).reduce(_.unionByName(_))
+    def rec(df: DataFrame, kind: Column, a: Column, b: Column): DataFrame =
+      df.select(group.map(col).toSeq ++
+        Seq(kind.as("k"), coalesce(a, lit(0L)).as("a"), coalesce(b, lit(0L)).as("b")): _*)
+    def long(c: String): Column = col(c).cast("long")
+    val vs = rec(vertices, when(long("id").isNull, NullVertexRec).otherwise(VertexRec),
+      long("id"), lit(0L))
+    val es = rec(edges.filter(long("src").isNotNull),
+      when(long("dst").isNull, NullDstRec).otherwise(EdgeRec), long("src"), long("dst"))
+    val ss = seeds.map(df => rec(df.filter(long("id").isNotNull && long("label").isNotNull),
+      lit(SeedRec), long("id"), long("label")))
+    (Seq(vs, es) ++ ss).reduce(_.unionByName(_))
   }
 
   /** Run `kernel` over every record of `recs` in one task and checkpoint its
@@ -92,21 +109,25 @@ object LocalGraph {
     }
   }
 
-  /** One task's graph. `ids` holds every vertex id and edge endpoint,
-    * sorted and distinct, so index order is id order; `vertices` the index
-    * of each vertex record in record order (an id repeated in the vertex
-    * input repeats here, as it repeats in the distributed state); `src` and
-    * `dst` every edge record; `seedAt`/`seedLabel` the seed records whose id
-    * is a vertex.
+  /** One task's graph over `size` dense indexes. `ids` holds every vertex
+    * id and edge endpoint, sorted and distinct, so index order is id order;
+    * the indexes past it stand for null ids, one per null-id vertex record
+    * and one per null dst, so that no two of them meet. `vertices` is the
+    * index of each vertex record (an id repeated in the vertex input
+    * repeats here, as it repeats in the distributed state); `src` and `dst`
+    * every edge record; `seedAt`/`seedLabel` the seed records whose id is
+    * a vertex.
     */
   final class Graph(
       val ids: Array[Long],
+      val size: Int,
       val vertices: Array[Int],
       val src: Array[Int],
       val dst: Array[Int],
       val seedAt: Array[Int],
       val seedLabel: Array[Long]) {
-    def size: Int = ids.length
+    /** The id of index `v`; None for a null id. */
+    def id(v: Int): Option[Long] = if (v < ids.length) Some(ids(v)) else None
     lazy val out: Csr = Csr(size, src, dst)
     lazy val in: Csr = Csr(size, dst, src)
     /** Vertex records per index: 0 for an id only an edge names. */
@@ -124,16 +145,17 @@ object LocalGraph {
       val ed = new scala.collection.mutable.ArrayBuilder.ofLong
       val ss = new scala.collection.mutable.ArrayBuilder.ofLong
       val sl = new scala.collection.mutable.ArrayBuilder.ofLong
+      val nullDstSrc = new scala.collection.mutable.ArrayBuilder.ofLong
+      var nullVertices = 0
       recs.foreach { case (k, a, b) =>
         if (k == VertexRec) vs += a
         else if (k == EdgeRec) { es += a; ed += b }
-        else { ss += a; sl += b }
+        else if (k == SeedRec) { ss += a; sl += b }
+        else if (k == NullVertexRec) nullVertices += 1
+        else nullDstSrc += a
       }
-      val (v, s, d) = (vs.result(), es.result(), ed.result())
-      val all = new Array[Long](v.length + s.length + d.length)
-      System.arraycopy(v, 0, all, 0, v.length)
-      System.arraycopy(s, 0, all, v.length, s.length)
-      System.arraycopy(d, 0, all, v.length + s.length, d.length)
+      val (v, s, d, ns) = (vs.result(), es.result(), ed.result(), nullDstSrc.result())
+      val all = Array.concat(v, s, d, ns)
       java.util.Arrays.sort(all)
       var n = 0
       var i = 0
@@ -142,15 +164,17 @@ object LocalGraph {
         i += 1
       }
       val ids = java.util.Arrays.copyOf(all, n)
+      val size = n + nullVertices + ns.length
       def index(xs: Array[Long]): Array[Int] = xs.map(java.util.Arrays.binarySearch(ids, _))
-      val vIdx = index(v)
-      val isVertex = new Array[Boolean](n)
+      val vIdx = Array.concat(index(v), Array.range(n, n + nullVertices))
+      val isVertex = new Array[Boolean](size)
       vIdx.foreach(isVertex(_) = true)
       // a seed whose id is no vertex is dropped, as the vertex ⟕ seeds join drops it
       val sIdx = index(ss.result())
       val keep = sIdx.indices.filter(j => sIdx(j) >= 0 && isVertex(sIdx(j))).toArray
       val labels = sl.result()
-      new Graph(ids, vIdx, index(s), index(d), keep.map(sIdx), keep.map(labels))
+      new Graph(ids, size, vIdx, Array.concat(index(s), index(ns)),
+        Array.concat(index(d), Array.range(n + nullVertices, size)), keep.map(sIdx), keep.map(labels))
     }
   }
 
@@ -210,9 +234,9 @@ object LocalGraph {
   }
 
   /** (id, comp) per vertex record: its SCC's minimum member id. */
-  def sccRows(g: Graph): Iterator[(Long, Long)] = {
+  def sccRows(g: Graph): Iterator[(Option[Long], Option[Long])] = {
     val comp = scc(g)
-    g.vertices.iterator.map(v => (g.ids(v), g.ids(comp(v))))
+    g.vertices.iterator.map(v => (g.id(v), g.id(comp(v))))
   }
 
   /** Union-find over every edge (a self-loop is a no-op): each index
@@ -236,9 +260,9 @@ object LocalGraph {
   }
 
   /** (id, comp) per vertex record: its weak component's minimum id. */
-  def wccRows(g: Graph): Iterator[(Long, Long)] = {
+  def wccRows(g: Graph): Iterator[(Option[Long], Option[Long])] = {
     val comp = wcc(g)
-    g.vertices.iterator.map(v => (g.ids(v), g.ids(comp(v))))
+    g.vertices.iterator.map(v => (g.id(v), g.id(comp(v))))
   }
 
   /** PageRank power iteration with the distributed update, term for term:
@@ -300,7 +324,7 @@ object LocalGraph {
     * ties go to the smallest label) and keeps its label when no vote
     * arrives; a seeded vertex keeps its minimum seed label. Returns each
     * vertex record's (id, label), -1 where no label arrived. */
-  def labelPropRows(g: Graph, rounds: Int): Iterator[(Long, Long)] = {
+  def labelPropRows(g: Graph, rounds: Int): Iterator[(Option[Long], Long)] = {
     val in = g.in
     val mult = g.mult
     val seeded = new Array[Boolean](g.size)
@@ -352,6 +376,6 @@ object LocalGraph {
       has = nextHas
       label = next
     }
-    g.vertices.iterator.map(v => (g.ids(v), if (has(v)) label(v) else -1L))
+    g.vertices.iterator.map(v => (g.id(v), if (has(v)) label(v) else -1L))
   }
 }

@@ -55,6 +55,9 @@ object PageRank {
   /** One rank update per superstep; `maxIter` bounds the iterations
     * exactly (q_pagerank_topk's oracle depends on exactly-20), and `tol`
     * stops earlier once no rank moves by more than it.
+    * @param snapshotDir per-step state snapshots of the superstep path; a
+    *   graph that fits one task ([[LocalGraph.EdgeThreshold]] edges or
+    *   fewer) is solved in one job and writes none
     */
   def run(
       spark: SparkSession,
@@ -94,7 +97,7 @@ object PageRank {
     val solved = LocalGraph.solve(arena, "pagerank",
       LocalGraph.records(vertices, edgesBySrc), "id", "rank") { g =>
       val rank = LocalGraph.pageRank(g, alpha, tol, maxIter, (c, ms) => steps.add((c, ms)))
-      g.vertices.iterator.map(v => (g.ids(v), rank(v)))
+      g.vertices.iterator.map(v => (g.id(v), rank(v)))
     }
     val metrics = steps.value.asScala.toVector.zipWithIndex
       .map { case ((changed, ms), i) => StepMetrics(i, changed, ms) }

@@ -51,7 +51,10 @@ final class WccRun(
   */
 object Wcc {
 
-  /** @param snapshotDir per-round state snapshots of the superstep path */
+  /** @param snapshotDir per-round state snapshots of the superstep path; a
+    *   graph that fits one task ([[LocalGraph.EdgeThreshold]] links or
+    *   fewer) is solved in one job and writes none
+    */
   def run(
       spark: SparkSession,
       edges: DataFrame,

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{LabelProp, PageRank, Scc, Triangles, Wcc}
+import graft.operators.{LabelProp, LocalGraph, PageRank, Scc, Triangles, Wcc}
 import graft.plans.Superstep
 
 /** Spark's compiled-class cache holds graft's working set
@@ -35,17 +35,22 @@ class CodegenCacheSpec extends SparkTest {
     val scc = Scc.components(spark, e, v, localSolveEdgeThreshold = 0)
     scc.components.collect()
     scc.release()
-    val pr = PageRank.run(spark, e, v, maxIter = 5)
-    pr.ranks.collect()
-    pr.release()
-    val wcc = Wcc.run(spark, e, v)
-    wcc.components.collect()
-    wcc.release()
-    Triangles.total(spark, e).collect()
     val seeds = v.filter(col("id") % 5 === 0).select(col("id"), (col("id") % 3).as("label"))
-    val lp = LabelProp.run(spark, e, v, seeds, iterations = 2)
-    lp.labels.collect()
-    lp.release()
+    // the superstep loops, then the one-task solves
+    for (threshold <- Seq(0L, LocalGraph.EdgeThreshold)) {
+      val pr = PageRank.run(spark, e, v, alpha = 0.85, tol = 1e-6, maxIter = 5, snapshotDir = None,
+        localSolveEdgeThreshold = threshold)
+      pr.ranks.collect()
+      pr.release()
+      val wcc = Wcc.run(spark, e, v, maxIter = 50, snapshotDir = None,
+        localSolveEdgeThreshold = threshold)
+      wcc.components.collect()
+      wcc.release()
+      val lp = LabelProp.run(spark, e, v, seeds, iterations = 2, localSolveEdgeThreshold = threshold)
+      lp.labels.collect()
+      lp.release()
+    }
+    Triangles.total(spark, e).collect()
   }
 
   test("a repeated operator sequence reuses its compiled classes") {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{Degrees, PageRank, PageRankRun, Triangles, Wcc, WccRun}
+import graft.operators.{Degrees, LocalGraph, PageRank, PageRankRun, Triangles, Wcc, WccRun}
 import graft.sources.{GraphGen, GraphSpec}
 
 class WccSpec extends SparkTest {
@@ -35,8 +35,11 @@ class WccSpec extends SparkTest {
     assert(got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == expected)
   }
 
-  private def labels(run: WccRun): Map[Long, Long] =
-    try run.components.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  private def labels(run: WccRun): Map[Long, Long] = rows(run).toMap
+
+  /** (id, comp) per row, a null as [[GraphCases.NullId]]. */
+  private def rows(run: WccRun): Seq[(Long, Long)] =
+    try run.components.collect().map(r => GraphCases.long(r, 0) -> GraphCases.long(r, 1)).toSeq
     finally run.release()
 
   /** The superstep path, whatever the graph's size. */
@@ -105,20 +108,25 @@ class WccSpec extends SparkTest {
 
   /** Random graphs, seeded, against union-find, on the local solve and on
     * the superstep path: see [[GraphCases]]. An endpoint outside the
-    * vertices joins components and may label them. */
+    * vertices joins components and may label them; a repeated id repeats
+    * its row; a null id is a vertex of its own, labelled null, and a link
+    * with a null end joins nothing. */
   test("wcc equals union-find on seeded random graphs (ScalaCheck)") {
     GraphCases.check(20261018L, maxN = 400, maxSpokes = 150) { c =>
-      val e = edgesDf(c.edges).repartition(c.parts)
-      val v = vertsDf(0L until c.n)
-      val want = Oracle.wcc(0L until c.n, c.edges)
-      labels(Wcc.run(spark, e, v)) == want && labels(distributed(e, v)) == want
+      val (e, v, _) = c.frames(spark)
+      val want = Oracle.wcc(c.oracleVertices, c.oracleEdges)
+      GraphCases.matches(c, rows(Wcc.run(spark, e, v)), want)() &&
+        GraphCases.matches(c, rows(distributed(e, v)), want)()
     }
   }
 }
 
 class PageRankSpec extends SparkTest {
-  private def ranks(run: PageRankRun): Map[Long, Double] =
-    try run.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+  private def ranks(run: PageRankRun): Map[Long, Double] = rankRows(run).toMap
+
+  /** (id, rank) per row, a null id as [[GraphCases.NullId]]. */
+  private def rankRows(run: PageRankRun): Seq[(Long, Double)] =
+    try run.ranks.collect().map(r => GraphCases.long(r, 0) -> r.getDouble(1)).toSeq
     finally run.release()
 
   /** The superstep path, whatever the graph's size. */
@@ -170,14 +178,17 @@ class PageRankSpec extends SparkTest {
 
   test("tol = 0 runs exactly maxIter iterations, reproducibly (oracle-critical)") {
     val (edges, n, _) = fixture("sample_graph")
-    val run7 = PageRank.run(spark, edgesDf(edges), vertsDf(0L until n),
-      tol = 0.0, maxIter = 5)
-    assert(run7.metrics.size == 5)
-    val run8 = PageRank.run(spark, edgesDf(edges), vertsDf(0L until n),
-      tol = 0.0, maxIter = 5)
-    val am = run7.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val bm = run8.ranks.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    for (v <- 0L until n) assert(math.abs(am(v) - bm(v)) < 1e-12, s"vertex $v")
+    // the one-task solve, then the superstep path
+    for (threshold <- Seq(LocalGraph.EdgeThreshold, 0L)) {
+      def run(): PageRankRun = PageRank.run(spark, edgesDf(edges), vertsDf(0L until n),
+        alpha = 0.85, tol = 0.0, maxIter = 5, snapshotDir = None, localSolveEdgeThreshold = threshold)
+      val run7 = run()
+      assert(run7.metrics.size == 5, s"threshold $threshold")
+      val am = ranks(run7)
+      val bm = ranks(run())
+      for (v <- 0L until n)
+        assert(math.abs(am(v) - bm(v)) < 1e-12, s"threshold $threshold, vertex $v")
+    }
   }
 
   /** The `linkgraph` benchmark's graph fits one task: the edge checkpoint
@@ -216,18 +227,19 @@ class PageRankSpec extends SparkTest {
 
   /** Random graphs, seeded, against power iteration at `tol = 0` on both
     * paths: see [[GraphCases]]. Duplicates and self-loops count; an edge
-    * from outside the vertices carries nothing, one into it loses its mass.
+    * from outside the vertices (or from a null id) carries nothing, one
+    * into it (or to a null id) loses its mass; a repeated id is that many
+    * vertices sharing one rank; a null id is a vertex of its own.
     */
   test("pagerank equals power iteration on seeded random graphs (ScalaCheck)") {
     GraphCases.check(20261020L, maxN = 200, maxSpokes = 100) { c =>
-      val e = edgesDf(c.edges).repartition(c.parts)
-      val v = vertsDf(0L until c.n)
+      val (e, v, _) = c.frames(spark)
       val iters = 1 + c.n % 5
-      val want = Oracle.pagerank(0L until c.n, c.edges, tol = 0.0, maxIter = iters)
-      def close(got: Map[Long, Double]): Boolean =
-        got.keySet == want.keySet && got.forall { case (id, r) => math.abs(r - want(id)) < 1e-10 }
-      close(ranks(PageRank.run(spark, e, v, tol = 0.0, maxIter = iters))) &&
-        close(ranks(distributed(e, v, tol = 0.0, maxIter = iters)))
+      val want = Oracle.pagerank(c.oracleVertices, c.oracleEdges, tol = 0.0, maxIter = iters)
+      def close(run: PageRankRun): Boolean =
+        GraphCases.matches(c, rankRows(run), want)((a, b) => math.abs(a - b) < 1e-10)
+      close(PageRank.run(spark, e, v, tol = 0.0, maxIter = iters)) &&
+        close(distributed(e, v, tol = 0.0, maxIter = iters))
     }
   }
 }
@@ -241,29 +253,34 @@ class SharedSessionSpec extends SparkTest {
     val spec = GraphSpec(numCycles = 30, maxCycleLen = 8, extraArcsPerVertex = 0.8, seed = 13L)
     val edges = GraphGen.edges(spark, spec)
     val verts = GraphGen.vertices(spark, spec)
-    def wcc(): Map[Long, Long] = {
-      val r = Wcc.run(spark, edges, verts)
+    def wcc(threshold: Long): Map[Long, Long] = {
+      val r = Wcc.run(spark, edges, verts, maxIter = 50, snapshotDir = None,
+        localSolveEdgeThreshold = threshold)
       try r.components.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
       finally r.release()
     }
-    def pagerank(): Map[Long, Double] = {
-      val r = PageRank.run(spark, edges, verts, tol = 0.0, maxIter = 8)
+    def pagerank(threshold: Long): Map[Long, Double] = {
+      val r = PageRank.run(spark, edges, verts, alpha = 0.85, tol = 0.0, maxIter = 8,
+        snapshotDir = None, localSolveEdgeThreshold = threshold)
       try r.ranks.collect().map(x => x.getLong(0) -> x.getDouble(1)).toMap
       finally r.release()
     }
     val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
     val conf0 = keys.map(spark.conf.get)
-    val (wcc0, pr0) = (wcc(), pagerank())
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     try {
-      for (round <- 1 to 3) {
-        val w = pool.submit(() => wcc())
-        val p = pool.submit(() => pagerank())
-        assert(w.get() == wcc0, s"round $round: wcc differs from the serial run")
-        val pr = p.get()
-        assert(pr.keySet == pr0.keySet &&
-          pr.forall { case (v, r) => math.abs(r - pr0(v)) < 1e-12 },
-          s"round $round: pagerank differs from the serial run")
+      // the superstep paths, then the one-task solves
+      for (threshold <- Seq(0L, LocalGraph.EdgeThreshold)) {
+        val (wcc0, pr0) = (wcc(threshold), pagerank(threshold))
+        for (round <- 1 to 3) {
+          val w = pool.submit(() => wcc(threshold))
+          val p = pool.submit(() => pagerank(threshold))
+          assert(w.get() == wcc0, s"threshold $threshold, round $round: wcc differs from the serial run")
+          val pr = p.get()
+          assert(pr.keySet == pr0.keySet &&
+            pr.forall { case (v, r) => math.abs(r - pr0(v)) < 1e-12 },
+            s"threshold $threshold, round $round: pagerank differs from the serial run")
+        }
       }
     } finally pool.shutdown()
     assert(keys.map(spark.conf.get) == conf0)
@@ -434,8 +451,11 @@ class LabelPropSpec extends SparkTest {
     seeds.toDF("id", "label")
   }
 
-  private def labels(run: LabelPropRun): Map[Long, Long] =
-    try run.labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  private def labels(run: LabelPropRun): Map[Long, Long] = rows(run).toMap
+
+  /** (id, label) per row, a null id as [[GraphCases.NullId]]. */
+  private def rows(run: LabelPropRun): Seq[(Long, Long)] =
+    try run.labels.collect().map(r => GraphCases.long(r, 0) -> r.getLong(1)).toSeq
     finally run.release()
 
   /** The superstep path, whatever the graph's size. */
@@ -551,15 +571,15 @@ class LabelPropSpec extends SparkTest {
 
   /** Random graphs, seeded, against the sequential recurrence on both
     * paths: see [[GraphCases]]. Seeds include repeated ids and ids outside
-    * the vertices. */
+    * the vertices; a seed with a null id or label is no seed, a repeated
+    * vertex id votes once per row, and a null vertex id reads -1. */
   test("labelprop equals the sequential recurrence on seeded random graphs (ScalaCheck)") {
     GraphCases.check(20261021L, maxN = 200, maxSpokes = 100) { c =>
-      val e = edgesDf(c.edges).repartition(c.parts)
-      val v = vertsDf(0L until c.n)
+      val (e, v, s) = c.frames(spark)
       val rounds = 1 + c.n % 3
-      val want = Oracle.labelProp(0L until c.n, c.edges, c.seeds, rounds)
-      labels(LabelProp.run(spark, e, v, seedsDf(c.seeds), rounds)) == want &&
-        labels(distributed(e, v, seedsDf(c.seeds), rounds)) == want
+      val want = Oracle.labelProp(c.oracleVertices, c.oracleEdges, c.seeds, rounds)
+      GraphCases.matches(c, rows(LabelProp.run(spark, e, v, s, rounds)), want)() &&
+        GraphCases.matches(c, rows(distributed(e, v, s, rounds)), want)()
     }
   }
 

@@ -119,11 +119,14 @@ object Oracle {
 
   /** Power iteration PageRank with dangling redistribution. Every edge
     * counts in its source's out-degree; an edge from an id outside
-    * `vertices` contributes nothing. */
+    * `vertices` contributes nothing. An id repeated in `vertices` is that
+    * many vertices sharing one rank: each counts in n and in the dangling
+    * mass, and each sends the rank along the id's out-edges. */
   def pagerank(
       vertices: Seq[Long], edges: Seq[(Long, Long)],
       alpha: Double = 0.85, tol: Double = 1e-6, maxIter: Int = 200): Map[Long, Double] = {
     val n = vertices.size
+    val mult = vertices.groupBy(identity).map { case (v, vs) => v -> vs.size }
     val out = edges.groupBy(_._1).map { case (s, es) => s -> es.size }
     val in = edges.groupBy(_._2)
     var rank = vertices.map(_ -> 1.0 / n).toMap
@@ -133,7 +136,7 @@ object Oracle {
       val dangling = vertices.collect { case v if !out.contains(v) => rank(v) }.sum
       val next = vertices.map { v =>
         val contrib = in.getOrElse(v, Seq.empty)
-          .collect { case (s, _) if rank.contains(s) => rank(s) / out(s) }.sum
+          .collect { case (s, _) if rank.contains(s) => rank(s) / out(s) * mult(s) }.sum
         v -> ((1 - alpha) / n + alpha * (contrib + dangling / n))
       }.toMap
       delta = vertices.map(v => math.abs(next(v) - rank(v))).max
@@ -147,19 +150,21 @@ object Oracle {
     * vertex keeps its smallest seed label; any other vertex takes the label
     * most of its in-edges from labelled vertices carry (each edge one vote,
     * ties to the smallest label), and keeps its label when no vote arrives.
-    * Seeds and votes from ids outside `vertices` are ignored. Returns
-    * id -> label, -1 for a vertex no label reached.
+    * Seeds and votes from ids outside `vertices` are ignored; an id
+    * repeated in `vertices` votes once per repeat. Returns id -> label, -1
+    * for a vertex no label reached.
     */
   def labelProp(vertices: Seq[Long], edges: Seq[(Long, Long)], seeds: Seq[(Long, Long)],
       rounds: Int): Map[Long, Long] = {
-    val vs = vertices.toSet
+    val mult = vertices.groupBy(identity).map { case (v, vs) => v -> vs.size }
+    val vs = mult.keySet
     val clamp = seeds.filter(s => vs(s._1)).groupBy(_._1).map { case (v, ls) => v -> ls.map(_._2).min }
     val voters = edges.filter(e => vs(e._1) && vs(e._2)).groupBy(_._2)
       .map { case (d, es) => d -> es.map(_._1) }
     var label: Map[Long, Option[Long]] = vs.map(v => v -> clamp.get(v)).toMap
     for (_ <- 0 until rounds) {
       label = vs.map { v =>
-        val votes = voters.getOrElse(v, Nil).flatMap(label(_))
+        val votes = voters.getOrElse(v, Nil).flatMap(u => label(u).toSeq.flatMap(Seq.fill(mult(u))(_)))
         v -> (clamp.get(v) match {
           case Some(l) => Some(l)
           case None if votes.isEmpty => label(v)
