@@ -28,10 +28,11 @@ final class LabelPropRun(val labels: DataFrame, releaseFn: () => Unit) {
   * Synchronous rounds + deterministic tie-break make the result exactly
   * reproducible — the driver oracle unrolls the same recurrence in SQL.
   *
-  * Scale shape: the edge table is checkpointed hash(src) first, and its
-  * exact row count routes the call. Up to [[LocalGraph.EdgeThreshold]]
-  * edges, one task runs the recurrence over arrays
-  * ([[LocalGraph.labelPropRows]]) in one job. Above it, each round is one
+  * Scale shape: one capped attempt ([[LocalGraph.attempt]]) first reads
+  * the edges in one task and stops past [[LocalGraph.EdgeThreshold]]. An
+  * edge table that fits is solved in that job by the recurrence over
+  * arrays ([[LocalGraph.labelPropRows]]). Above it, the edge table is
+  * checkpointed hash(src), and each round is one
   * checkpoint job: a co-partitioned shuffle-hash join of the edge table
   * against the labeled state (hash(id)), built on the state — unhinted,
   * the state's exact statistics below `autoBroadcastJoinThreshold` made
@@ -71,7 +72,8 @@ object LabelProp {
       iterations: Int): LabelPropRun =
     run(spark, edges, verts, seeds, iterations, LocalGraph.EdgeThreshold)
 
-  /** [[run]] routed by `localSolveEdgeThreshold` (see [[LocalGraph.fits]]). */
+  /** [[run]] with the one-task attempt capped at `localSolveEdgeThreshold`
+    * edges (see [[LocalGraph.attempt]]; 0 runs the superstep path alone). */
   private[graft] def run(
       spark: SparkSession,
       edges: DataFrame,
@@ -80,20 +82,20 @@ object LabelProp {
       iterations: Int,
       localSolveEdgeThreshold: Long): LabelPropRun = JobLabel(spark, "labelprop", "setup") {
     require(iterations >= 1, "iterations must be >= 1")
+    import spark.implicits._
     val arena = new CheckpointArena
-
-    // A checkpoint, not a persist: a persisted plan is cached through AQE,
-    // whose exchange runs as a query-stage job of its own inside the first
-    // round.
-    val eBySrc = arena.checkpoint(edges.select("src", "dst").repartition(col("src")))
-    if (LocalGraph.fits(eBySrc.rows, localSolveEdgeThreshold)) {
-      import spark.implicits._
-      val solved = LocalGraph.solve(arena, "labelprop",
-        LocalGraph.records(verts, eBySrc.df, Some(seeds)), "id", "label")(
-        LocalGraph.labelPropRows(_, iterations))
-      arena.closeExcept(solved.df)
-      new LabelPropRun(solved.df, () => arena.closeExcept())
-    } else supersteps(spark, arena, eBySrc.df, verts, seeds, iterations)
+    LocalGraph.attempt(arena, "labelprop", LocalGraph.records(edges, Some(verts), Some(seeds)),
+        localSolveEdgeThreshold, Seq("id", "label"))(LocalGraph.labelPropRows(_, iterations)) match {
+      case Some(solved) =>
+        arena.closeExcept(solved.df)
+        new LabelPropRun(solved.df, () => arena.closeExcept())
+      case None =>
+        // A checkpoint, not a persist: a persisted plan is cached through
+        // AQE, whose exchange runs as a query-stage job of its own inside
+        // the first round.
+        val eBySrc = arena.checkpoint(edges.select("src", "dst").repartition(col("src")))
+        supersteps(spark, arena, eBySrc.df, verts, seeds, iterations)
+    }
   }
 
   private def supersteps(spark: SparkSession, arena: CheckpointArena, eBySrc: DataFrame,

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Encoder}
-import org.apache.spark.sql.GraftShims.Checkpoint
+import org.apache.spark.sql.GraftShims.{Checkpoint, Ride}
 import org.apache.spark.sql.functions._
 
 import graft.plans.{CheckpointArena, JobLabel}
@@ -14,36 +14,37 @@ import graft.plans.{CheckpointArena, JobLabel}
   * standard production structure for distributed SCC (FW-BW for the giant
   * component, sequential Tarjan for the long tail of small ones — Slota et
   * al., "BFS and Coloring-Based Parallel Algorithms for Strongly Connected
-  * Components", IPDPS'14), applied here to WCC, PageRank and label
-  * propagation as well.
+  * Components", IPDPS'14), applied here to WCC, PageRank, label
+  * propagation and triangle counting as well.
   *
-  * One `coalesce(1)` task reads typed records (`records`): a vertex, an
-  * edge or a seed label each. It maps every id by binary search into a
+  * One `coalesce(1)` task reads typed records (`records`): an edge, a
+  * vertex or a seed label each. It maps every id by binary search into a
   * sorted, distinct `Long` id array and builds compressed adjacency arrays
   * over those dense indexes (dense-key arrays instead of hash tables, as in
   * "Accelerating Joins and Aggregations on the Oracle In-Memory Database",
-  * ICDE 2018). Four kernels run on them: an iterative Tarjan, union-find,
-  * PageRank power iteration and the synchronous label-propagation
-  * recurrence. Each operator writes its kernel's rows into one arena
-  * checkpoint labelled `graft <op> local-solve`, so a graph that fits costs
-  * its operator two jobs: the edge checkpoint whose exact row count routes
-  * it, and the solve.
+  * ICDE 2018). Five kernels run on them: an iterative Tarjan, union-find,
+  * PageRank power iteration, the synchronous label-propagation recurrence
+  * and a sorted merge intersection that counts triangles (HERO, SIGMOD
+  * 2024).
   *
-  * Routing reads edge rows only: a vertex-heavy, edge-light input lands in
-  * one task too.
+  * Routing is the solve itself ([[attempt]]): the task reads the records,
+  * edge records first, and stops at edge record `threshold + 1`. A graph
+  * that fits costs its operator one job, `graft <op> local-solve`, which
+  * runs the kernel and checkpoints its rows; one that does not costs that
+  * job and then the operator's distributed path. The cap counts the edge
+  * records the task reads, after the operator's own filter (self-loops
+  * dropped for SCC, WCC and triangles), not distinct edges, and no vertex
+  * records: a vertex-heavy, edge-light input lands in one task too.
   */
 object LocalGraph {
 
-  /** Edge rows up to which an operator solves the whole graph in one task
-    * (each operator's default; `Scc.components` takes it as a parameter). */
+  /** Edge records up to which an operator solves the whole graph in one
+    * task (each operator's default; `Scc.components` takes it as a
+    * parameter). */
   val EdgeThreshold: Long = 250000L
 
-  /** Whether `edgeRows` edges take the local solve; a threshold of 0 or
-    * less always runs the distributed path. */
-  def fits(edgeRows: Long, threshold: Long): Boolean = threshold > 0 && edgeRows <= threshold
-
-  private val VertexRec = 0
-  private val EdgeRec = 1
+  private[graft] val VertexRec = 0
+  private[graft] val EdgeRec = 1
   private val SeedRec = 2
   /** A vertex row whose id is null: a vertex that no edge or seed names. */
   private val NullVertexRec = 3
@@ -51,43 +52,67 @@ object LocalGraph {
     * and reaches no vertex. */
   private val NullDstRec = 4
 
-  /** One task's input as (kind, a, b) records: vertex `a` from each
-    * `vertices` row (id), edge a→b from each `edges` row (src, dst) and
-    * seed label b of vertex a from each `seeds` row (id, label). A `group`
-    * column of every input leads each record, for a solve per group.
+  /** One task's input as (kind, a, b) records: edge a→b from each `edges`
+    * row (src, dst), vertex `a` from each `vertices` row (id) and seed
+    * label b of vertex a from each `seeds` row (id, label), in that order,
+    * so that a task reading them meets every edge record before the
+    * others. A `group` column of every input leads each record, for a
+    * solve per group.
     *
     * Nulls mean what they mean to the distributed joins, where a null key
     * matches nothing: a null vertex id is a vertex of its own that comes
     * out with a null id, an edge with a null src carries nothing, one with
     * a null dst still counts in its source's out-degree, and a seed with a
     * null id or label is no seed. */
-  def records(vertices: DataFrame, edges: DataFrame, seeds: Option[DataFrame] = None,
+  def records(edges: DataFrame, vertices: Option[DataFrame], seeds: Option[DataFrame] = None,
       group: Option[String] = None): DataFrame = {
     def rec(df: DataFrame, kind: Column, a: Column, b: Column): DataFrame =
       df.select(group.map(col).toSeq ++
         Seq(kind.as("k"), coalesce(a, lit(0L)).as("a"), coalesce(b, lit(0L)).as("b")): _*)
     def long(c: String): Column = col(c).cast("long")
-    val vs = rec(vertices, when(long("id").isNull, NullVertexRec).otherwise(VertexRec),
-      long("id"), lit(0L))
     val es = rec(edges.filter(long("src").isNotNull),
       when(long("dst").isNull, NullDstRec).otherwise(EdgeRec), long("src"), long("dst"))
+    val vs = vertices.map(rec(_, when(long("id").isNull, NullVertexRec).otherwise(VertexRec),
+      long("id"), lit(0L)))
     val ss = seeds.map(df => rec(df.filter(long("id").isNotNull && long("label").isNotNull),
       lit(SeedRec), long("id"), long("label")))
-    (Seq(vs, es) ++ ss).reduce(_.unionByName(_))
+    (Seq(es) ++ vs ++ ss).reduce(_.unionByName(_))
   }
 
-  /** Run `kernel` over every record of `recs` in one task and checkpoint its
-    * rows as columns `cols`, in one job labelled `graft <op> local-solve`.
-    * The records reach the task through a coalesce, not an exchange. */
-  def solve[T: Encoder](arena: CheckpointArena, op: String, recs: DataFrame, cols: String*)(
-      kernel: Graph => Iterator[T]): Checkpoint = {
-    val spark = recs.sparkSession
-    import spark.implicits._
-    JobLabel(spark, op, "local-solve") {
-      arena.checkpoint(recs.as[(Int, Long, Long)].coalesce(1)
-        .mapPartitions(it => kernel(Graph(it))).toDF(cols: _*))
+  /** One capped attempt at a one-task solve, in one job labelled
+    * `graft <op> local-solve`: a `coalesce(1)` task reads `recs` into a
+    * [[Graph]] and stops at edge record `threshold + 1` ([[Graph.read]]).
+    * If the edges fit, `kernel` runs and its rows are checkpointed as
+    * columns `cols`, riding `rides`. If they do not, the task emits no row
+    * and counts the overflow in an accumulator of that job's result task,
+    * which Spark applies exactly once per partition (see
+    * [[org.apache.spark.sql.GraftShims.checkpoint]]); the empty checkpoint
+    * is released, and None tells the caller to run its distributed path. A
+    * threshold of 0 or less starts no job and returns None. The records
+    * reach the task through a coalesce, not an exchange. */
+  def attempt[T: Encoder](arena: CheckpointArena, op: String, recs: DataFrame, threshold: Long,
+      cols: Seq[String], rides: Ride*)(kernel: Graph => Iterator[T]): Option[Checkpoint] =
+    if (threshold <= 0) None
+    else {
+      val spark = recs.sparkSession
+      import spark.implicits._
+      val overflow = spark.sparkContext.longAccumulator(s"graft.$op.overflow")
+      val ck = JobLabel(spark, op, "local-solve") {
+        arena.checkpoint(recs.as[(Int, Long, Long)].coalesce(1)
+          .mapPartitions { it =>
+            Graph.read(it, threshold) match {
+              case Some(g) => kernel(g)
+              case None => overflow.add(1L); Iterator.empty
+            }
+          }.toDF(cols: _*), rides: _*)
+      }
+      if (overflow.value == 0L) Some(ck)
+      else {
+        graft.Log.v(s"$op: more than $threshold edge records — distributed path")
+        arena.release(ck.df)
+        None
+      }
     }
-  }
 
   /** Compressed adjacency over dense indexes: the neighbours of `v` are
     * `adj(off(v) until off(v + 1))`, in record order. */
@@ -128,7 +153,6 @@ object LocalGraph {
       val seedLabel: Array[Long]) {
     /** The id of index `v`; None for a null id. */
     def id(v: Int): Option[Long] = if (v < ids.length) Some(ids(v)) else None
-    lazy val out: Csr = Csr(size, src, dst)
     lazy val in: Csr = Csr(size, dst, src)
     /** Vertex records per index: 0 for an id only an edge names. */
     lazy val mult: Array[Int] = {
@@ -139,7 +163,13 @@ object LocalGraph {
   }
 
   object Graph {
-    def apply(recs: Iterator[(Int, Long, Long)]): Graph = {
+    /** The graph of every record of `recs`. */
+    def apply(recs: Iterator[(Int, Long, Long)]): Graph = read(recs, Long.MaxValue).get
+
+    /** The graph of `recs` if they hold at most `cap` edge records (an edge
+      * with a null dst is one too); None as soon as edge record `cap + 1`
+      * is read, the last record consumed. */
+    def read(recs: Iterator[(Int, Long, Long)], cap: Long): Option[Graph] = {
       val vs = new scala.collection.mutable.ArrayBuilder.ofLong
       val es = new scala.collection.mutable.ArrayBuilder.ofLong
       val ed = new scala.collection.mutable.ArrayBuilder.ofLong
@@ -147,45 +177,54 @@ object LocalGraph {
       val sl = new scala.collection.mutable.ArrayBuilder.ofLong
       val nullDstSrc = new scala.collection.mutable.ArrayBuilder.ofLong
       var nullVertices = 0
-      recs.foreach { case (k, a, b) =>
+      var edgeRecs = 0L
+      while (edgeRecs <= cap && recs.hasNext) {
+        val (k, a, b) = recs.next()
         if (k == VertexRec) vs += a
-        else if (k == EdgeRec) { es += a; ed += b }
+        else if (k == EdgeRec) { es += a; ed += b; edgeRecs += 1 }
         else if (k == SeedRec) { ss += a; sl += b }
         else if (k == NullVertexRec) nullVertices += 1
-        else nullDstSrc += a
+        else { nullDstSrc += a; edgeRecs += 1 }
       }
-      val (v, s, d, ns) = (vs.result(), es.result(), ed.result(), nullDstSrc.result())
-      val all = Array.concat(v, s, d, ns)
-      java.util.Arrays.sort(all)
-      var n = 0
-      var i = 0
-      while (i < all.length) {
-        if (n == 0 || all(n - 1) != all(i)) { all(n) = all(i); n += 1 }
-        i += 1
+      if (edgeRecs > cap) None
+      else {
+        val (v, s, d, ns) = (vs.result(), es.result(), ed.result(), nullDstSrc.result())
+        val all = Array.concat(v, s, d, ns)
+        java.util.Arrays.sort(all)
+        var n = 0
+        var i = 0
+        while (i < all.length) {
+          if (n == 0 || all(n - 1) != all(i)) { all(n) = all(i); n += 1 }
+          i += 1
+        }
+        val ids = java.util.Arrays.copyOf(all, n)
+        val size = n + nullVertices + ns.length
+        def index(xs: Array[Long]): Array[Int] = xs.map(java.util.Arrays.binarySearch(ids, _))
+        val vIdx = Array.concat(index(v), Array.range(n, n + nullVertices))
+        val isVertex = new Array[Boolean](size)
+        vIdx.foreach(isVertex(_) = true)
+        // a seed whose id is no vertex is dropped, as the vertex ⟕ seeds join drops it
+        val sIdx = index(ss.result())
+        val keep = sIdx.indices.filter(j => sIdx(j) >= 0 && isVertex(sIdx(j))).toArray
+        val labels = sl.result()
+        Some(new Graph(ids, size, vIdx, Array.concat(index(s), index(ns)),
+          Array.concat(index(d), Array.range(n + nullVertices, size)), keep.map(sIdx), keep.map(labels)))
       }
-      val ids = java.util.Arrays.copyOf(all, n)
-      val size = n + nullVertices + ns.length
-      def index(xs: Array[Long]): Array[Int] = xs.map(java.util.Arrays.binarySearch(ids, _))
-      val vIdx = Array.concat(index(v), Array.range(n, n + nullVertices))
-      val isVertex = new Array[Boolean](size)
-      vIdx.foreach(isVertex(_) = true)
-      // a seed whose id is no vertex is dropped, as the vertex ⟕ seeds join drops it
-      val sIdx = index(ss.result())
-      val keep = sIdx.indices.filter(j => sIdx(j) >= 0 && isVertex(sIdx(j))).toArray
-      val labels = sl.result()
-      new Graph(ids, size, vIdx, Array.concat(index(s), index(ns)),
-        Array.concat(index(d), Array.range(n + nullVertices, size)), keep.map(sIdx), keep.map(labels))
     }
   }
 
   // ------------------------------------------------------------- kernels
 
-  /** Iterative Tarjan over `g.out` (explicit call stack: a partition can be
-    * one long chain). Returns each index's SCC labelled by its minimum
-    * member index, which is the minimum member id. */
+  /** Iterative Tarjan over the edges between vertex records (explicit call
+    * stack: a partition can be one long chain); an edge that names an id
+    * outside the vertices closes no cycle, as the distributed path's
+    * endpoint semi-joins drop it. Returns each index's SCC labelled by its
+    * minimum member index, which is the minimum member id. */
   def scc(g: Graph): Array[Int] = {
     val n = g.size
-    val out = g.out
+    val mult = g.mult
+    val within = g.src.indices.filter(e => mult(g.src(e)) > 0 && mult(g.dst(e)) > 0).toArray
+    val out = Csr(n, within.map(g.src(_)), within.map(g.dst(_)))
     val order = Array.fill(n)(-1)
     val low = new Array[Int](n)
     val onStack = new Array[Boolean](n)
@@ -377,5 +416,48 @@ object LocalGraph {
       label = next
     }
     g.vertices.iterator.map(v => (g.id(v), if (has(v)) label(v) else -1L))
+  }
+
+  /** Triangles of the undirected simple graph over `g`'s edges (self-loops
+    * dropped, duplicated and reversed edges collapsed), counted as
+    * [[Triangles]] counts them: each edge is oriented from its (degree,
+    * id)-smaller endpoint to the larger, N⁺(v) is v's ascending list of
+    * higher-ranked neighbours, and the count is Σ_{u→v} |N⁺(u) ∩ N⁺(v)|,
+    * one sorted merge intersection per oriented edge. */
+  def triangles(g: Graph): Long = {
+    // every non-loop edge as (smaller index, larger index) packed in one
+    // Long, sorted, so that repeats and reversals sit side by side
+    val keys = new Array[Long](g.src.length)
+    var m = 0
+    for (e <- g.src.indices if g.src(e) != g.dst(e)) {
+      keys(m) = math.min(g.src(e), g.dst(e)).toLong << 32 | math.max(g.src(e), g.dst(e))
+      m += 1
+    }
+    java.util.Arrays.sort(keys, 0, m)
+    var k = 0
+    for (e <- 0 until m if k == 0 || keys(k - 1) != keys(e)) { keys(k) = keys(e); k += 1 }
+    val deg = new Array[Int](g.size)
+    for (i <- 0 until k) { deg((keys(i) >>> 32).toInt) += 1; deg(keys(i).toInt) += 1 }
+    val (from, to) = (new Array[Int](k), new Array[Int](k))
+    for (i <- 0 until k) {
+      val (a, b) = ((keys(i) >>> 32).toInt, keys(i).toInt)
+      val up = deg(a) < deg(b) || (deg(a) == deg(b) && a < b)
+      from(i) = if (up) a else b
+      to(i) = if (up) b else a
+    }
+    val nUp = Csr(g.size, from, to)
+    for (v <- 0 until g.size) java.util.Arrays.sort(nUp.adj, nUp.off(v), nUp.off(v + 1))
+    var total = 0L
+    for (v <- 0 until g.size; i <- nUp.off(v) until nUp.off(v + 1)) {
+      val w = nUp.adj(i)
+      var x = nUp.off(v)
+      var y = nUp.off(w)
+      while (x < nUp.off(v + 1) && y < nUp.off(w + 1)) {
+        if (nUp.adj(x) < nUp.adj(y)) x += 1
+        else if (nUp.adj(x) > nUp.adj(y)) y += 1
+        else { total += 1; x += 1; y += 1 }
+      }
+    }
+    total
   }
 }

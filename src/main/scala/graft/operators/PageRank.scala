@@ -32,19 +32,20 @@ final class PageRankRun(
   * Ranks sum to 1 every iteration; convergence = max |Δrank| < tol
   * (north_star: allclose 1e-6 at convergence).
   *
-  * Scale shape: the edge table is checkpointed hash-partitioned on `src`
-  * first, and its exact row count routes the call. Up to
-  * [[LocalGraph.EdgeThreshold]] edges, one task runs the same power
-  * iteration over arrays ([[LocalGraph.pageRank]]): two jobs in all, with
-  * each iteration's exact changed count (and its wall time in the task)
-  * coming back in `metrics` through an accumulator of that job's result
-  * task. Above it, the superstep path: the contributions aggregate is a
-  * map-side-combinable hash agg on `dst`, the rank⨝edges join reuses the
-  * `src` partitioning as a co-partitioned shuffle-hash join at every size
-  * (the SHUFFLE_HASH hints in `update`): no edge broadcast, and the
-  * dangling mass of step i rides step i's checkpoint into step i+1's plan,
-  * so an iteration is one job. Its setup is three jobs: the edge table,
-  * the vertex out-degrees (whose row count is n) and the first state.
+  * Scale shape: one capped attempt ([[LocalGraph.attempt]]) first reads
+  * the edges in one task and stops past [[LocalGraph.EdgeThreshold]]. An
+  * edge table that fits is solved in that job by the same power iteration
+  * over arrays ([[LocalGraph.pageRank]]), with each iteration's exact
+  * changed count (and its wall time in the task) coming back in `metrics`
+  * through an accumulator of that job's result task. Above it, the
+  * superstep path: the edge table is checkpointed hash-partitioned on
+  * `src`, the contributions aggregate is a map-side-combinable hash agg on
+  * `dst`, the rank⨝edges join reuses the `src` partitioning as a
+  * co-partitioned shuffle-hash join at every size (the SHUFFLE_HASH hints
+  * in `update`): no edge broadcast, and the dangling mass of step i rides
+  * step i's checkpoint into step i+1's plan, so an iteration is one job.
+  * Its setup is three jobs: the edge table, the vertex out-degrees (whose
+  * row count is n) and the first state.
   *
   * Every edge row counts in its source's out-degree (duplicates,
   * self-loops and edges to ids outside `vertices` alike); an edge from an
@@ -69,7 +70,11 @@ object PageRank {
       snapshotDir: Option[String] = None): PageRankRun =
     run(spark, edges, vertices, alpha, tol, maxIter, snapshotDir, LocalGraph.EdgeThreshold)
 
-  /** [[run]] routed by `localSolveEdgeThreshold` (see [[LocalGraph.fits]]). */
+  /** [[run]] with the one-task attempt capped at `localSolveEdgeThreshold`
+    * edges (see [[LocalGraph.attempt]]; 0 runs the superstep path alone).
+    * The attempt's result task hands back each iteration's (changed, wall
+    * ms), which Spark applies exactly once per partition (see
+    * [[org.apache.spark.sql.GraftShims.checkpoint]]). */
   private[graft] def run(
       spark: SparkSession,
       edges: DataFrame,
@@ -79,31 +84,24 @@ object PageRank {
       maxIter: Int,
       snapshotDir: Option[String],
       localSolveEdgeThreshold: Long): PageRankRun = JobLabel(spark, "pagerank", "setup") {
-    val arena = new CheckpointArena
-    val edgesBySrc = arena.checkpoint(edges.select("src", "dst").repartition(col("src")))
-    if (LocalGraph.fits(edgesBySrc.rows, localSolveEdgeThreshold))
-      localSolve(spark, arena, edgesBySrc.df, vertices, alpha, tol, maxIter)
-    else supersteps(spark, arena, edgesBySrc.df, vertices, alpha, tol, maxIter, snapshotDir)
-  }
-
-  /** The whole edge table fits one task: power iteration over arrays in
-    * one job. Its result task hands back each iteration's (changed, wall
-    * ms), which Spark applies exactly once per partition (see
-    * [[org.apache.spark.sql.GraftShims.checkpoint]]). */
-  private def localSolve(spark: SparkSession, arena: CheckpointArena, edgesBySrc: DataFrame,
-      vertices: DataFrame, alpha: Double, tol: Double, maxIter: Int): PageRankRun = {
     import spark.implicits._
+    val arena = new CheckpointArena
     val steps = spark.sparkContext.collectionAccumulator[(Long, Long)]("graft.pagerank.steps")
-    val solved = LocalGraph.solve(arena, "pagerank",
-      LocalGraph.records(vertices, edgesBySrc), "id", "rank") { g =>
+    LocalGraph.attempt(arena, "pagerank", LocalGraph.records(edges, Some(vertices)),
+        localSolveEdgeThreshold, Seq("id", "rank")) { g =>
       val rank = LocalGraph.pageRank(g, alpha, tol, maxIter, (c, ms) => steps.add((c, ms)))
       g.vertices.iterator.map(v => (g.id(v), rank(v)))
+    } match {
+      case Some(solved) =>
+        val metrics = steps.value.asScala.toVector.zipWithIndex
+          .map { case ((changed, ms), i) => StepMetrics(i, changed, ms) }
+        graft.Log.v(s"pagerank: local solve of ${solved.rows} vertices, ${metrics.size} iterations")
+        arena.closeExcept(solved.df)
+        new PageRankRun(solved.df, metrics, () => arena.closeExcept())
+      case None =>
+        val edgesBySrc = arena.checkpoint(edges.select("src", "dst").repartition(col("src")))
+        supersteps(spark, arena, edgesBySrc.df, vertices, alpha, tol, maxIter, snapshotDir)
     }
-    val metrics = steps.value.asScala.toVector.zipWithIndex
-      .map { case ((changed, ms), i) => StepMetrics(i, changed, ms) }
-    graft.Log.v(s"pagerank: local solve of ${solved.rows} vertices, ${metrics.size} iterations")
-    arena.closeExcept(solved.df)
-    new PageRankRun(solved.df, metrics, () => arena.closeExcept())
   }
 
   private def supersteps(spark: SparkSession, arena: CheckpointArena, edgesBySrc: DataFrame,

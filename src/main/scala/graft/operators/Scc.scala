@@ -285,13 +285,12 @@ object Scc {
     }
   }
 
-  /** Edge layout: only edges internal to the vertex set matter for SCCs.
-    * Self-loops and duplicates are dropped, and the rest is ONE hash(src)
-    * checkpoint whose row count is the edge total that routes the
-    * whole-graph local solve. The dedup folds into the src repartition
-    * (hash(src) co-locates equal (src,dst) pairs, so the distinct
-    * aggregation adds no exchange), and the defensive endpoint semi-joins
-    * are skipped when the caller guarantees closure
+  /** Edge layout of the distributed path: only edges internal to the
+    * vertex set matter for SCCs. Self-loops and duplicates are dropped, and
+    * the rest is ONE hash(src) checkpoint. The dedup folds into the src
+    * repartition (hash(src) co-locates equal (src,dst) pairs, so the
+    * distinct aggregation adds no exchange), and the defensive endpoint
+    * semi-joins are skipped when the caller guarantees closure
     * (`edgesWithinVertices` — generated graphs, `% m n` files whose ids are
     * dense by format). A checkpoint, not a persist: a persisted plan is
     * cached through AQE, whose exchange runs as a query-stage job of its
@@ -311,16 +310,20 @@ object Scc {
   /** Full SCC decomposition. Returns (id, comp) for every vertex, with
     * comp = min member id (canonical), plus per-round metrics.
     *
-    * Hybrid execution (see [[LocalGraph]]): a graph whose whole edge set
-    * fits one task (`localSolveEdgeThreshold`) is solved by one array
-    * Tarjan in one job; otherwise every round, partitions whose internal
-    * edge count fits one task are finished by a per-group sequential
-    * Tarjan in a single shuffle, so only partitions too big for any single
-    * machine pay the superstep loop. At 100 TB that means the giant
-    * component runs distributed FW-BW while the million-small-component
-    * tail costs O(1) jobs total. Set the threshold to 0 to force the pure
-    * distributed path (used by tests to cover it); the WCC refinement of a
-    * remainder routes by the same threshold.
+    * Hybrid execution (see [[LocalGraph]]): one capped attempt first reads
+    * every non-loop edge in one task and stops past
+    * `localSolveEdgeThreshold` edge records. A graph that fits is solved by
+    * one array Tarjan in that job, which keeps only the edges between
+    * vertex records, so it needs neither the edge layout's semi-joins nor
+    * its dedup, whatever `edgesWithinVertices` says. Otherwise every
+    * round, partitions whose internal edge count fits one task are
+    * finished by a per-group sequential Tarjan in a single shuffle, so
+    * only partitions too big for any single machine pay the superstep
+    * loop. At 100 TB that means the giant component runs distributed FW-BW
+    * while the million-small-component tail costs O(1) jobs total. Set
+    * the threshold to 0 to force the pure distributed path, with no
+    * attempt (used by tests to cover it); the WCC refinement of a
+    * remainder always runs WCC's superstep path.
     *
     * Per-round job budget (the sandbox superstep-latency floor is the
     * binding constraint; see BASELINE.md): the live partition-internal edge
@@ -333,7 +336,8 @@ object Scc {
     *
     * When `snapshotDir` is set the outer loop is durable and resumable
     * (see [[Snapshots]]); a fresh call with the same directory continues
-    * after the last completed round.
+    * after the last completed round. Like `PageRank.run` and `Wcc.run`, a
+    * graph solved in one task writes no round manifest there.
     */
   def components(
       spark: SparkSession,
@@ -350,42 +354,53 @@ object Scc {
       fragmentCompactionThreshold: Int = 64): SccRun = {
     val arena = new CheckpointArena
     val verts = vertices.select("id")
-    val (d, start) = JobLabel(spark, "scc", "setup") {
-      val eBySrc = layoutEdges(arena, edges, verts, edgesWithinVertices)
-      graft.Log.v(s"scc: edges materialized (${eBySrc.rows})")
-      val d = new Decomposition(spark, arena, verts, eBySrc.df, maxTrimSweeps,
-        localSolveEdgeThreshold, hubDegreeThreshold, snapshotDir, trimCapFraction,
-        trimCapMinRemaining, fragmentCompactionThreshold)
-      (d, d.resumed().getOrElse(
-        if (LocalGraph.fits(eBySrc.rows, localSolveEdgeThreshold)) d.localSolveAll(eBySrc.rows)
-        else d.electPivot(d.preTrim())))
+    val solved = {
+      import spark.implicits._
+      LocalGraph.attempt(arena, "scc",
+        LocalGraph.records(edges.select("src", "dst").filter(col("src") =!= col("dst")), Some(verts)),
+        localSolveEdgeThreshold, Seq("id", "comp"))(LocalGraph.sccRows)
     }
-    // every vertex is now either in a finished fragment or live
-    val expectedTotal = start.frags.assigned + start.liveCount
-    val end = Iterator.iterate(start)(d.nextRound)
-      .find(s => s.liveCount == 0 || s.round >= maxOuter).get
-    require(end.liveCount == 0, s"SCC did not converge in $maxOuter rounds (${end.liveCount} live)")
-    // Exactness guarantee for assignedCount: every vertex ended up in
-    // exactly one fragment, with all counts ridden on materialization
-    // actions — a union re-count would scan the same cached blocks to
-    // learn the same number.
-    require(end.frags.assigned == expectedTotal,
-      s"fragment tally ${end.frags.assigned} != vertex total $expectedTotal — assignment bug")
+    solved.map { ck =>
+      // one row per vertex record by construction: the one fragment
+      graft.Log.v(s"scc: whole-graph local solve of ${ck.rows} vertices")
+      arena.closeExcept(ck.df)
+      new SccRun(ck.df, Vector(roundStart(0).copy(localSolved = ck.rows)), ck.rows,
+        () => arena.closeExcept())
+    }.getOrElse {
+      val (d, start) = JobLabel(spark, "scc", "setup") {
+        val eBySrc = layoutEdges(arena, edges, verts, edgesWithinVertices)
+        graft.Log.v(s"scc: edges materialized (${eBySrc.rows})")
+        val d = new Decomposition(spark, arena, verts, eBySrc.df, maxTrimSweeps,
+          localSolveEdgeThreshold, hubDegreeThreshold, snapshotDir, trimCapFraction,
+          trimCapMinRemaining, fragmentCompactionThreshold)
+        (d, d.resumed().getOrElse(d.electPivot(d.preTrim())))
+      }
+      // every vertex is now either in a finished fragment or live
+      val expectedTotal = start.frags.assigned + start.liveCount
+      val end = Iterator.iterate(start)(d.nextRound)
+        .find(s => s.liveCount == 0 || s.round >= maxOuter).get
+      require(end.liveCount == 0, s"SCC did not converge in $maxOuter rounds (${end.liveCount} live)")
+      // Exactness guarantee for assignedCount: every vertex ended up in
+      // exactly one fragment, with all counts ridden on materialization
+      // actions — a union re-count would scan the same cached blocks to
+      // learn the same number.
+      require(end.frags.assigned == expectedTotal,
+        s"fragment tally ${end.frags.assigned} != vertex total $expectedTotal — assignment bug")
 
-    // The parts are already materialized; the result is their lazy union —
-    // re-checkpointing it here would be one more full O(V) pass for nothing.
-    val parts = end.frags.all
-    val result =
-      if (parts.isEmpty) verts.select(col("id"), col("id").as("comp")).limit(0)
-      else parts.reduce(_.unionByName(_))
-    arena.closeExcept(parts ++ end.frags.backing: _*)
-    new SccRun(result, end.done, end.frags.assigned, () => arena.closeExcept())
+      // The parts are already materialized; the result is their lazy union —
+      // re-checkpointing it here would be one more full O(V) pass for nothing.
+      val parts = end.frags.all
+      val result =
+        if (parts.isEmpty) verts.select(col("id"), col("id").as("comp")).limit(0)
+        else parts.reduce(_.unionByName(_))
+      arena.closeExcept(parts ++ end.frags.backing: _*)
+      new SccRun(result, end.done, end.frags.assigned, () => arena.closeExcept())
+    }
   }
 
-  /** The phases of one [[Scc.components]] call over its hash(src) edge
-    * checkpoint `eBySrc`: setup either solves a graph whose whole edge set
-    * fits one task in one Tarjan, or runs the global trim and elects the
-    * round-0 pivot; each round then refines its partitions by WCC,
+  /** The phases of one distributed [[Scc.components]] call over its
+    * hash(src) edge checkpoint `eBySrc`: setup runs the global trim and
+    * elects the round-0 pivot; each round then refines its partitions by WCC,
     * local-solves the small ones, runs trim-1 and trim-2, reaches forward
     * and backward from every pivot and retires the settled SCCs,
     * recoloring the rest. Each phase takes the [[SccState]] the previous
@@ -449,20 +464,6 @@ object Scc {
         Fragments(pending = parts.toVector,
           assigned = if (parts.isEmpty) 0L else parts.map(_.select()).reduce(_.union(_)).count()),
         roundStart(r + 1))
-    }
-
-    /** Whole-graph local solve: the ENTIRE edge set fits one task, so one
-      * array Tarjan ([[LocalGraph.scc]]) over every vertex and edge finishes
-      * the job — no degree pass, pre-trim, pivot, live-edge table or
-      * routing. Its output, one row per vertex record, is the one fragment:
-      * one job after the edge checkpoint. */
-    def localSolveAll(numEdges: Long): SccState = {
-      graft.Log.v(s"scc: $numEdges edges <= localSolveEdgeThreshold — whole-graph local solve")
-      val Checkpoint(solved, _, solvedCnt, _) = LocalGraph.solve(arena, "scc",
-        LocalGraph.records(verts, eBySrc), "id", "comp")(LocalGraph.sccRows)
-      closeRound(SccState(verts.select(col("id"), col("id").as("pivot")).limit(0), 0L,
-        onePivot = false, idPart = false, trimDone = true, salted = false,
-        Fragments().add(solved, solvedCnt), roundStart(0).copy(localSolved = solvedCnt)))
     }
 
     /** Round -1: GLOBAL trim-1 before anything else (main.cpp:172 does the
@@ -564,9 +565,10 @@ object Scc {
         val le = s.le.get
         if (s.leCount.get <= localSolveEdgeThreshold) s
         else {
-          // one WCC row per live id: its label is the row's new pivot
+          // one WCC row per live id: its label is the row's new pivot. The
+          // superstep path directly: the remainder is known not to fit one task
           val wccRun = Wcc.run(spark, le.select("src", "dst"), s.live.select("id"),
-            maxIter = 50, snapshotDir = None, localSolveEdgeThreshold)
+            maxIter = 50, snapshotDir = None, localSolveEdgeThreshold = 0L)
           val live = arena.checkpoint(
             wccRun.components.select(col("id"), col("comp").as("pivot"))
               .repartition(col("id"))).df
@@ -601,9 +603,8 @@ object Scc {
             .join(groupEdgeCounts, Seq("pivot"), "left")
             .filter(coalesce(col("ec"), lit(0L)) <= localSolveEdgeThreshold)
             .select("pivot")).df
-        val recs = LocalGraph.records(
-          s.live.join(smallPivots, Seq("pivot"), "left_semi"),
-          le.join(smallPivots, Seq("pivot"), "left_semi"), group = Some("pivot"))
+        val recs = LocalGraph.records(le.join(smallPivots, Seq("pivot"), "left_semi"),
+          Some(s.live.join(smallPivots, Seq("pivot"), "left_semi")), group = Some("pivot"))
         val Checkpoint(solved, _, solvedCnt, _) = arena.checkpoint(
           recs.as[(Long, Int, Long, Long)]
             .groupByKey(_._1)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.expr.SortedIntersect
-import graft.plans.JobLabel
+import graft.plans.{CheckpointArena, JobLabel}
 
 /** Triangle counting on the undirected view of a directed edge table
   * (north-star capability, SURVEY.md §2.3 — absent from the reference), by
@@ -23,6 +23,13 @@ import graft.plans.JobLabel
   * The whole plan is one checkpoint job (see [[neighbourPairs]] for its
   * stages); [[total]] reads its count from a ridden sum and hands back a
   * driver-side frame, so the caller's `collect` starts no job.
+  *
+  * Hybrid execution: [[total]] first makes one capped attempt
+  * ([[LocalGraph.attempt]]) that reads the non-loop edges in one task and
+  * stops past [[LocalGraph.EdgeThreshold]]. An edge table that fits is
+  * counted there by the same orientation and merge intersection over
+  * arrays ([[LocalGraph.triangles]]), its count riding that one job; above
+  * it, the distributed plan runs after the attempt.
   */
 object Triangles {
 
@@ -73,14 +80,27 @@ object Triangles {
 
   /** Total triangle count (1-row DataFrame: triangles: long), held on the
     * driver. */
-  def total(spark: SparkSession, edges: DataFrame): DataFrame = JobLabel(spark, "triangles", "total") {
-    val ck = GraftShims.checkpoint(
-      neighbourPairs(spark, edges)
-        .select(size(corners).cast(LongType).as("t"))
-        .filter(col("t") > 0),
-      Seq(Sum("t")))
-    ck.handle.unpersist(false)
-    spark.createDataFrame(java.util.List.of(Row(ck.rides(0))),
+  def total(spark: SparkSession, edges: DataFrame): DataFrame =
+    total(spark, edges, LocalGraph.EdgeThreshold)
+
+  /** [[total]] with the one-task attempt capped at `localSolveEdgeThreshold`
+    * edges (0 runs the distributed plan alone). An edge with a null
+    * endpoint is in no triangle on either path. */
+  private[graft] def total(spark: SparkSession, edges: DataFrame,
+      localSolveEdgeThreshold: Long): DataFrame = JobLabel(spark, "triangles", "total") {
+    import spark.implicits._
+    val arena = new CheckpointArena
+    val (a, b) = (col("src").cast(LongType), col("dst").cast(LongType))
+    val t = LocalGraph.attempt(arena, "triangles", LocalGraph.records(edges.filter(a =!= b), None),
+        localSolveEdgeThreshold, Seq("t"), Sum("t"))(g => Iterator.single(LocalGraph.triangles(g)))
+      .map(_.rides(0))
+      .getOrElse(arena.checkpoint(
+        neighbourPairs(spark, edges)
+          .select(size(corners).cast(LongType).as("t"))
+          .filter(col("t") > 0),
+        Sum("t")).rides(0))
+    arena.closeExcept()
+    spark.createDataFrame(java.util.List.of(Row(t)),
       StructType(Seq(StructField("triangles", LongType, nullable = false))))
   }
 

@@ -43,11 +43,12 @@ final class WccRun(
   * (xor of row hashes + count) going stable — ridden on each round's
   * checkpoint, so it costs no extra job.
   *
-  * Scale shape: the link set is checkpointed first, and its exact row
-  * count routes the call. Up to [[LocalGraph.EdgeThreshold]] links, one
-  * union-find task ([[LocalGraph]]) solves the whole graph: two jobs, one
-  * reported round with `changed = 0`. Above it, the star rounds run one
-  * checkpoint job each, plus the exact confirmation and the finish.
+  * Scale shape: one capped attempt ([[LocalGraph.attempt]]) first reads
+  * the links in one task and stops past [[LocalGraph.EdgeThreshold]]. A
+  * link set that fits is solved by union-find in that job, reported as
+  * one round with `changed = 0`. Above it, the star rounds run one
+  * checkpoint job each, after the link checkpoint and before the exact
+  * confirmation and the finish.
   */
 object Wcc {
 
@@ -63,7 +64,8 @@ object Wcc {
       snapshotDir: Option[String] = None): WccRun =
     run(spark, edges, vertices, maxIter, snapshotDir, LocalGraph.EdgeThreshold)
 
-  /** [[run]] routed by `localSolveEdgeThreshold` (see [[LocalGraph.fits]]). */
+  /** [[run]] with the one-task attempt capped at `localSolveEdgeThreshold`
+    * links (see [[LocalGraph.attempt]]; 0 runs the superstep path alone). */
   private[graft] def run(
       spark: SparkSession,
       edges: DataFrame,
@@ -71,30 +73,24 @@ object Wcc {
       maxIter: Int,
       snapshotDir: Option[String],
       localSolveEdgeThreshold: Long): WccRun = JobLabel(spark, "wcc", "setup") {
-    val arena = new CheckpointArena
-    // smallStar's distinct dedupes the first round anyway; an input
-    // distinct here would be one more full shuffle of the edge table.
-    val links0 = arena.checkpoint(edges
-      .filter(col("src") =!= col("dst"))
-      .select(col("src").as("u"), col("dst").as("v")))
-    if (LocalGraph.fits(links0.rows, localSolveEdgeThreshold))
-      localSolve(spark, arena, links0.df, vertices)
-    else supersteps(spark, arena, links0.df, vertices, maxIter, snapshotDir)
-  }
-
-  /** The whole link set fits one task: union-find over it in one job,
-    * reported as one round that changed nothing. */
-  private def localSolve(spark: SparkSession, arena: CheckpointArena, links0: DataFrame,
-      vertices: DataFrame): WccRun = {
     import spark.implicits._
+    val arena = new CheckpointArena
+    val links = edges.filter(col("src") =!= col("dst"))
     val t0 = System.nanoTime()
-    val solved = LocalGraph.solve(arena, "wcc",
-      LocalGraph.records(vertices, links0.select(col("u").as("src"), col("v").as("dst"))),
-      "id", "comp")(LocalGraph.wccRows)
-    graft.Log.v(s"wcc: local solve of ${solved.rows} vertices")
-    arena.closeExcept(solved.df)
-    new WccRun(solved.df, Vector(StepMetrics(0, 0L, (System.nanoTime() - t0) / 1000000)),
-      () => arena.closeExcept())
+    LocalGraph.attempt(arena, "wcc", LocalGraph.records(links.select("src", "dst"), Some(vertices)),
+        localSolveEdgeThreshold, Seq("id", "comp"))(LocalGraph.wccRows) match {
+      case Some(solved) =>
+        // one reported round that changed nothing
+        graft.Log.v(s"wcc: local solve of ${solved.rows} vertices")
+        arena.closeExcept(solved.df)
+        new WccRun(solved.df, Vector(StepMetrics(0, 0L, (System.nanoTime() - t0) / 1000000)),
+          () => arena.closeExcept())
+      case None =>
+        // smallStar's distinct dedupes the first round anyway; an input
+        // distinct here would be one more full shuffle of the edge table.
+        val links0 = arena.checkpoint(links.select(col("src").as("u"), col("dst").as("v")))
+        supersteps(spark, arena, links0.df, vertices, maxIter, snapshotDir)
+    }
   }
 
   private def supersteps(spark: SparkSession, arena: CheckpointArena, links0: DataFrame,

@@ -47,11 +47,11 @@ class WccSpec extends SparkTest {
     Wcc.run(spark, edges, vertices, maxIter = 50, snapshotDir = None, localSolveEdgeThreshold = 0L)
 
   /** The `linkgraph` benchmark's graph (6,000 vertices, 18,465 edges) fits
-    * one task: the link checkpoint and one union-find job, one round that
-    * changed nothing. Its five large-star/small-star rounds took 9 jobs:
-    * the link checkpoint, a job per round, the exact confirmation and the
-    * finish. */
-  test("wcc on a graph that fits one task runs 2 jobs and reports one round") {
+    * one task: one union-find job, one round that changed nothing. Routed
+    * by a link checkpoint's row count, it took 2 jobs (that checkpoint and
+    * the solve); its five large-star/small-star rounds took 9: the link
+    * checkpoint, a job per round, the exact confirmation and the finish. */
+  test("wcc on a graph that fits one task runs 1 job and reports one round") {
     val spec = GraphSpec(numCycles = 1000, maxCycleLen = 6, extraArcsPerVertex = 2.4, seed = 42L)
     val edges = GraphGen.edges(spark, spec).persist()
     val local = edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -60,8 +60,24 @@ class WccSpec extends SparkTest {
     val got = labels(run)
     edges.unpersist()
     assert(got == Oracle.wcc(0L until spec.numVertices, local))
-    assert(jobs.map(_._1) == Vector("graft wcc setup", "graft wcc local-solve"), jobs.toString)
+    assert(jobs.map(_._1) == Vector("graft wcc local-solve"), jobs.toString)
     assert(metrics == Vector(graft.plans.StepMetrics(0, 0L, metrics.head.wallMs)), metrics.toString)
+  }
+
+  /** Over the cap (threshold 1) the attempt stops at its second link
+    * record and emits nothing, and the superstep path then runs exactly as
+    * it runs alone (threshold 0). */
+  test("wcc over the one-task cap runs one attempt job, then the superstep path's jobs") {
+    val (edges, n, _) = fixture("sample_graph")
+    def at(threshold: Long): (Seq[(Long, Long)], Vector[(String, Int)]) = {
+      val (run, jobs) = jobsOf(Wcc.run(spark, edgesDf(edges), vertsDf(0L until n), maxIter = 50,
+        snapshotDir = None, localSolveEdgeThreshold = threshold))
+      (rows(run).sorted, jobs.map(j => (j._1, j._2.size)))
+    }
+    val (over, overJobs) = at(1L)
+    val (dist, distJobs) = at(0L)
+    assert(over.toMap == Oracle.wcc(0L until n, edges) && over == dist)
+    assert(overJobs == ("graft wcc local-solve", 1) +: distJobs, s"$overJobs vs $distJobs")
   }
 
   /** Stages of each round's checkpoint job: the first job under each
@@ -191,10 +207,12 @@ class PageRankSpec extends SparkTest {
     }
   }
 
-  /** The `linkgraph` benchmark's graph fits one task: the edge checkpoint
-    * and one power-iteration job, with every iteration's metrics. Its four
-    * steps took 7 jobs: three setup checkpoints and one per step. */
-  test("pagerank on a graph that fits one task runs 2 jobs and reports every iteration") {
+  /** The `linkgraph` benchmark's graph fits one task: one power-iteration
+    * job, with every iteration's metrics. Routed by the `src`-partitioned
+    * edge checkpoint's row count, it took 2 jobs (that checkpoint and the
+    * solve); its four steps took 7: three setup checkpoints and one per
+    * step. */
+  test("pagerank on a graph that fits one task runs 1 job and reports every iteration") {
     val spec = GraphSpec(numCycles = 1000, maxCycleLen = 6, extraArcsPerVertex = 2.4, seed = 42L)
     val edges = GraphGen.edges(spark, spec).persist()
     val local = edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -203,11 +221,30 @@ class PageRankSpec extends SparkTest {
     val metrics = run.metrics
     val got = ranks(run)
     edges.unpersist()
-    assert(jobs.map(_._1) == Vector("graft pagerank setup", "graft pagerank local-solve"),
-      jobs.toString)
+    assert(jobs.map(_._1) == Vector("graft pagerank local-solve"), jobs.toString)
     assert(metrics.map(_.iter) == (0 until 4), metrics.toString)
     val want = Oracle.pagerank(0L until spec.numVertices, local, tol = 0.0, maxIter = 4)
     assert(got.keySet == want.keySet && got.forall { case (v, r) => math.abs(r - want(v)) < 1e-10 })
+  }
+
+  /** Over the cap (threshold 1) the attempt stops at its second edge
+    * record and emits nothing, and the superstep path then runs exactly as
+    * it runs alone (threshold 0). */
+  test("pagerank over the one-task cap runs one attempt job, then the superstep path's jobs") {
+    val (edges, n, _) = fixture("sample_graph")
+    def at(threshold: Long): (Map[Long, Double], Int, Vector[(String, Int)]) = {
+      val (run, jobs) = jobsOf(PageRank.run(spark, edgesDf(edges), vertsDf(0L until n),
+        alpha = 0.85, tol = 0.0, maxIter = 4, snapshotDir = None, localSolveEdgeThreshold = threshold))
+      val iters = run.metrics.size
+      (ranks(run), iters, jobs.map(j => (j._1, j._2.size)))
+    }
+    val (over, overIters, overJobs) = at(1L)
+    val (dist, distIters, distJobs) = at(0L)
+    val want = Oracle.pagerank(0L until n, edges, tol = 0.0, maxIter = 4)
+    assert(overIters == 4 && distIters == 4)
+    assert(over.keySet == want.keySet && over.forall { case (v, r) =>
+      math.abs(r - want(v)) < 1e-10 && math.abs(r - dist(v)) < 1e-12 })
+    assert(overJobs == ("graft pagerank local-solve", 1) +: distJobs, s"$overJobs vs $distJobs")
   }
 
   /** Both paths stop on the same rule and report the same iterations, each
@@ -288,12 +325,15 @@ class SharedSessionSpec extends SparkTest {
 }
 
 class TrianglesSpec extends SparkTest {
+  /** `total` on the one-task route and on the distributed plan alone. */
+  private def totals(edges: DataFrame): Seq[Long] =
+    Seq(LocalGraph.EdgeThreshold, 0L).map(Triangles.total(spark, edges, _).head().getLong(0))
+
   test("triangle count matches brute force on fixtures") {
     for (name <- Seq("sample_graph", "sample_graph5", "sample_graph8")) {
       val (edges, _, _) = fixture(name)
       val expected = Oracle.triangles(edges)
-      val got = Triangles.total(spark, edgesDf(edges)).head().getLong(0)
-      assert(got == expected, name)
+      assert(totals(edgesDf(edges)) == Seq(expected, expected), name)
     }
   }
 
@@ -301,8 +341,22 @@ class TrianglesSpec extends SparkTest {
     val spec = GraphSpec(numCycles = 25, maxCycleLen = 6, extraArcsPerVertex = 1.5, seed = 9L)
     val edges = GraphGen.edges(spark, spec).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val expected = Oracle.triangles(edges)
-    val got = Triangles.total(spark, GraphGen.edges(spark, spec)).head().getLong(0)
-    assert(got == expected)
+    assert(totals(GraphGen.edges(spark, spec)) == Seq(expected, expected))
+  }
+
+  /** Over the cap (threshold 1) the attempt stops at its second edge
+    * record and emits nothing, and the distributed plan then runs exactly
+    * as it runs alone (threshold 0). */
+  test("triangles over the one-task cap run one attempt job, then the distributed plan's job") {
+    val (edges, _, _) = fixture("sample_graph5")
+    def at(threshold: Long): (Long, Vector[(String, Int)]) = {
+      val (t, jobs) = jobsOf(Triangles.total(spark, edgesDf(edges), threshold).head().getLong(0))
+      (t, jobs.map(j => (j._1, j._2.size)))
+    }
+    val (over, overJobs) = at(1L)
+    val (dist, distJobs) = at(0L)
+    assert(over == Oracle.triangles(edges) && over == dist)
+    assert(overJobs == ("graft triangles local-solve", 1) +: distJobs, s"$overJobs vs $distJobs")
   }
 
   test("per-vertex triangle counts sum to 3x total") {
@@ -348,9 +402,9 @@ class TrianglesSpec extends SparkTest {
   }
 
   /** Triangles on the benchmark graph (6,000 vertices, 18,465 edges) is
-    * one checkpoint job: `total` hands back a driver-side frame, so its
-    * `collect` starts none, and `perVertex`'s result is the checkpoint, so
-    * one caller action is one more. The wedge plan ended in
+    * one job: `total` counts them in one task and hands back a driver-side
+    * frame, so its `collect` starts none, and `perVertex`'s result is a
+    * checkpoint, so one caller action is one more. The wedge plan ended in
     * `Dataset.localCheckpoint`, which ran through AQE with a query-stage
     * job per exchange: `total(…).collect()` took 15 jobs, and so did
     * `perVertex` with one `collect`.
@@ -364,20 +418,22 @@ class TrianglesSpec extends SparkTest {
     edges.unpersist()
     assert(total == Oracle.triangles(local))
     assert(per.map(_.getLong(1)).sum == 3 * total)
-    assert(totalJobs.size <= 2, s"total: ${totalJobs.size} jobs: ${totalJobs.map(_._1)}")
+    assert(totalJobs.map(_._1) == Vector("graft triangles local-solve"), s"total: $totalJobs")
     assert(perJobs.size <= 2, s"perVertex: ${perJobs.size} jobs: ${perJobs.map(_._1)}")
   }
 
-  /** Random graphs, seeded, against brute force for both `total` and
-    * `perVertex`. Each case mixes hub stars (one vertex in most edges),
-    * cliques, self-loops, duplicated and reversed edges, any of which may
-    * be empty, split over 1, 4 or 8 input partitions.
+  /** Random graphs, seeded, against brute force for `total` on both paths
+    * and `perVertex`. Each case mixes hub stars (one vertex in most edges),
+    * cliques, self-loops, duplicated and reversed edges and edges with a
+    * null endpoint (in no triangle), any of which may be empty, split over
+    * 1, 4 or 8 input partitions.
     */
   test("triangles equal brute force on seeded random graphs (ScalaCheck)") {
     import org.scalacheck.{Gen, Prop, Shrink, Test}
     import org.scalacheck.rng.Seed
 
-    final case class Case(edges: Vector[(Long, Long)], parts: Int)
+    final case class Case(edges: Vector[(Long, Long)], parts: Int,
+        nullEnds: Vector[(Option[Long], Option[Long])] = Vector.empty)
     def vertex(n: Int): Gen[Long] = Gen.choose(0L, n - 1L)
     def star(n: Int): Gen[Vector[(Long, Long)]] = for {
       hub <- vertex(n)
@@ -395,9 +451,12 @@ class TrianglesSpec extends SparkTest {
       rand <- Gen.listOf(Gen.zip(vertex(n), vertex(n)))
       loops <- Gen.listOf(vertex(n).map(v => (v, v)))
       dups <- Gen.listOf(Gen.oneOf(stars.flatten ++ cliques.flatten ++ rand :+ ((0L, 0L))))
+      k <- Gen.choose(0, 3)
+      nullEnds <- Gen.listOfN(k, Gen.oneOf(vertex(n).map(v => (Option(v), None)),
+        vertex(n).map(v => (None, Option(v))), Gen.const((None, None))))
       parts <- Gen.oneOf(1, 4, 8)
     } yield Case((stars.flatten ++ cliques.flatten ++ rand ++ loops ++ dups ++ dups.map(_.swap))
-      .toVector, parts)
+      .toVector, parts, nullEnds.toVector)
     implicit val shrinkCase: Shrink[Case] = Shrink { c =>
       Shrink.shrinkContainer[Vector, (Long, Long)].shrink(c.edges).map(es => c.copy(edges = es))
     }
@@ -413,10 +472,13 @@ class TrianglesSpec extends SparkTest {
     val seen = scala.collection.mutable.Set.empty[Int]
     def check(c: Case): Boolean = {
       seen += c.parts
-      val e = edgesDf(c.edges).repartition(c.parts)
-      val total = Triangles.total(spark, e).collect()(0).getLong(0)
+      val e = {
+        import spark.implicits._
+        (c.edges.map { case (a, b) => (Option(a), Option(b)) } ++ c.nullEnds).toDF("src", "dst")
+          .repartition(c.parts)
+      }
       val per = Triangles.perVertex(spark, e).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      total == Oracle.triangles(c.edges) && per == perVertexOracle(c.edges)
+      totals(e).forall(_ == Oracle.triangles(c.edges)) && per == perVertexOracle(c.edges)
     }
     val prop = Prop.forAll(caseGen)(check)
     val params = Test.Parameters.default.withMinSuccessfulTests(12).withWorkers(1)
@@ -425,10 +487,13 @@ class TrianglesSpec extends SparkTest {
     assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
     assert(seen == Set(1, 4, 8), s"partition counts drawn: $seen")
 
-    // no edges at all, and only self-loops, at every partition count
+    // no edges at all, only self-loops, and a triangle whose corners each
+    // also meet a null, at every partition count
+    val nulls = Vector((Option(1L), None), (None, Option(2L)), (Option(3L), None), (None, None))
     for (p <- Seq(1, 4, 8)) {
       assert(check(Case(Vector.empty, p)), s"empty edges, $p partitions")
       assert(check(Case(Vector((3L, 3L), (3L, 3L)), p)), s"self-loops only, $p partitions")
+      assert(check(Case(Vector((1L, 2L), (2L, 3L), (3L, 1L)), p, nulls)), s"null endpoints, $p partitions")
     }
   }
 }
@@ -550,11 +615,12 @@ class LabelPropSpec extends SparkTest {
     assert(perStep.size == 3 && perStep.forall(_._2 == 2), s"stages per step: $perStep")
   }
 
-  /** The `linkgraph` benchmark's graph fits one task: the edge checkpoint
-    * and the solve, then one caller action on the result. Its two rounds
-    * took 4 jobs before that action: the edge table, the first state and
-    * one per round. */
-  test("labelprop on a graph that fits one task runs 2 jobs") {
+  /** The `linkgraph` benchmark's graph fits one task: the solve, then one
+    * caller action on the result. Routed by the `src`-partitioned edge
+    * checkpoint's row count, it took 2 jobs before that action (that
+    * checkpoint and the solve); its two rounds took 4: the edge table, the
+    * first state and one per round. */
+  test("labelprop on a graph that fits one task runs 1 job") {
     val spec = GraphSpec(numCycles = 1000, maxCycleLen = 6, extraArcsPerVertex = 2.4, seed = 42L)
     val edges = GraphGen.edges(spark, spec).persist()
     val local = edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
@@ -563,10 +629,26 @@ class LabelPropSpec extends SparkTest {
     val (run, jobs) = jobsOf(LabelProp.run(spark, edges, verts, seeds, iterations = 2))
     val got = labels(run)
     edges.unpersist()
-    assert(jobs.map(_._1) == Vector("graft labelprop setup", "graft labelprop local-solve"),
-      jobs.toString)
+    assert(jobs.map(_._1) == Vector("graft labelprop local-solve"), jobs.toString)
     val ids = 0L until spec.numVertices
     assert(got == Oracle.labelProp(ids, local, ids.filter(_ % 10 == 0).map(v => v -> v % 4), 2))
+  }
+
+  /** Over the cap (threshold 1) the attempt stops at its second edge
+    * record and emits nothing, and the superstep path then runs exactly as
+    * it runs alone (threshold 0). */
+  test("labelprop over the one-task cap runs one attempt job, then the superstep path's jobs") {
+    val (edges, n, _) = fixture("sample_graph")
+    val seeds = (0L until n).filter(_ % 3 == 0).map(v => v -> v % 2)
+    def at(threshold: Long): (Seq[(Long, Long)], Vector[(String, Int)]) = {
+      val (run, jobs) = jobsOf(LabelProp.run(spark, edgesDf(edges), vertsDf(0L until n),
+        seedsDf(seeds), 3, localSolveEdgeThreshold = threshold))
+      (rows(run).sorted, jobs.map(j => (j._1, j._2.size)))
+    }
+    val (over, overJobs) = at(1L)
+    val (dist, distJobs) = at(0L)
+    assert(over.toMap == Oracle.labelProp(0L until n, edges, seeds, 3) && over == dist)
+    assert(overJobs == ("graft labelprop local-solve", 1) +: distJobs, s"$overJobs vs $distJobs")
   }
 
   /** Random graphs, seeded, against the sequential recurrence on both

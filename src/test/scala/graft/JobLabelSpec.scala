@@ -35,6 +35,7 @@ class JobLabelSpec extends SparkTest {
       "labelprop distributed" -> (() => LabelProp.run(spark, edges, verts, seeds, iterations = 2,
         localSolveEdgeThreshold = 0L).release()),
       "triangles total" -> (() => Triangles.total(spark, edges)),
+      "triangles total distributed" -> (() => Triangles.total(spark, edges, 0L)),
       "triangles perVertex" -> (() => Triangles.perVertex(spark, edges)))
     try {
       for ((name, call) <- calls) {

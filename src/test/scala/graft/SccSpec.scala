@@ -148,24 +148,76 @@ class SccSpec extends SparkTest {
   }
 
   /** Jobs of one whole-graph local solve on the `linkgraph` benchmark's
-    * graph (6,000 vertices): the degree checkpoint that counts the edges,
-    * then one Tarjan over the whole graph in one task. When the local solve
-    * ran the round machinery with every vertex on pivot 0 (the live-edge
-    * table's two broadcast joins, the small-pivot set, semi-joined records,
-    * the solve and an anti-join of the live state), the same run took 13
-    * jobs, 24 before checkpoints were planned without AQE.
+    * graph (6,000 vertices): one Tarjan over the whole graph in one task,
+    * with or without the caller's promise that every edge stays within the
+    * vertices (the kernel keeps only edges between vertex records, so the
+    * route needs no semi-join). Routed by the row count of the deduplicated
+    * `src`-partitioned edge checkpoint, it took 2 jobs. When the local
+    * solve ran the round machinery with every vertex on pivot 0 (the
+    * live-edge table's two broadcast joins, the small-pivot set,
+    * semi-joined records, the solve and an anti-join of the live state),
+    * the same run took 13 jobs, 24 before checkpoints were planned without
+    * AQE.
     */
   test("whole-graph local solve on the benchmark graph runs at most 3 jobs") {
     val spec = GraphSpec(numCycles = 1000, maxCycleLen = 6, extraArcsPerVertex = 2.4, seed = 42L)
     val edges = GraphGen.edges(spark, spec).persist()
-    edges.count()
-    val (run, jobs) = jobsOf(Scc.components(spark, edges, GraphGen.vertices(spark, spec),
-      edgesWithinVertices = true))
-    val rounds = run.metrics.size
-    run.release()
+    val want = Oracle.tarjan(0L until spec.numVertices,
+      edges.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
+    for (within <- Seq(true, false)) {
+      val (run, jobs) = jobsOf(Scc.components(spark, edges, GraphGen.vertices(spark, spec),
+        edgesWithinVertices = within))
+      val rounds = run.metrics.size
+      val got = run.components.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      run.release()
+      assert(rounds == 1 && got == want, s"edgesWithinVertices = $within")
+      assert(jobs.map(_._1) == Vector("graft scc local-solve"), s"edgesWithinVertices = $within: $jobs")
+    }
     edges.unpersist()
-    assert(rounds == 1)
-    assert(jobs.size <= 3, s"${jobs.size} jobs: ${jobs.map(_._1)}")
+  }
+
+  /** SCCs are a property of the edges between vertices: a cycle closed
+    * only through an id outside `vertices` merges nothing. The one-task
+    * route reads every edge (no semi-join) and its Tarjan keeps only those
+    * between vertex records; the distributed path semi-joins the edges
+    * first; threshold 1 overflows the attempt into the distributed path. */
+  test("a cycle closed only through an id outside the vertices merges no SCCs") {
+    val edges = Seq((0L, 1L), (1L, 99L), (99L, 0L), (2L, 3L), (3L, 2L), (3L, 98L), (98L, 4L),
+      (4L, 3L), (-5L, 2L), (2L, -5L))
+    val vertices = 0L to 5L
+    val expected = Oracle.tarjan(vertices,
+      edges.filter { case (a, b) => vertices.contains(a) && vertices.contains(b) })
+    assert(expected(0L) != expected(1L) && expected(3L) != expected(4L))
+    for (threshold <- Seq(250000L, 1L, 0L)) {
+      val run = Scc.components(spark, edgesDf(edges), vertsDf(vertices),
+        localSolveEdgeThreshold = threshold)
+      val got = run.components.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      run.release()
+      assert(got == expected, s"threshold $threshold")
+    }
+  }
+
+  /** Over the cap (threshold 1) the attempt stops at its second edge
+    * record and emits nothing, and the distributed path then runs exactly
+    * as it runs alone (threshold 0). The graph is one cycle with a tail the
+    * pre-trim peels, so round 0 settles everything: in a later round,
+    * threshold 1 routes partitions with at most one edge to a per-group
+    * Tarjan, which threshold 0 never runs. */
+  test("scc over the one-task cap runs one attempt job, then the distributed path's jobs") {
+    val edges = (0L until 30L).map(i => (i, (i + 1) % 30)) ++ Seq((3L, 17L), (21L, 8L)) ++
+      (30L until 36L).map(i => (i, i - 30))
+    val vertices = 0L until 36L
+    def at(threshold: Long): (Map[Long, Long], Vector[(String, Int)]) = {
+      val (run, jobs) = jobsOf(Scc.components(spark, edgesDf(edges), vertsDf(vertices),
+        localSolveEdgeThreshold = threshold))
+      val got = run.components.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      run.release()
+      (got, jobs.map(j => (j._1, j._2.size)))
+    }
+    val (over, overJobs) = at(1L)
+    val (dist, distJobs) = at(0L)
+    assert(over == Oracle.tarjan(vertices, edges) && over == dist)
+    assert(overJobs == ("graft scc local-solve", 1) +: distJobs, s"$overJobs vs $distJobs")
   }
 
   /** Stages per BFS step on the distributed path the benchmark never
