@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
   * shuffle / skew handled explicitly"; SURVEY.md §4(b)).
   *
   * Layered defense:
-  *   1. AQE skew-join splitting is ON session-wide ([[graft.Sessions]]) —
-  *      it re-splits oversized sort-merge partitions at runtime and covers
-  *      most frontier⨝edges joins for free.
+  *   1. AQE skew-join splitting (ON session-wide, [[graft.Sessions]])
+  *      re-splits oversized sort-merge partitions in one-shot queries only:
+  *      superstep steps are planned without AQE inside `GraftShims.checkpoint`
+  *      and the BFS hop joins are `shuffle_hash`, so loops rely on 2 and 3.
   *   2. Map-side partial aggregation makes sum/min/count groupBys
   *      hub-tolerant without help (Spark hash aggregates combine before the
   *      shuffle), so degree counting, PageRank contribution sums, and the

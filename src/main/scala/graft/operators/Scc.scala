@@ -846,7 +846,7 @@ object Scc {
         }
       val bfs0 = seeded.withColumn("st",
         when(col("id") === col("pivot"), lit(15)).otherwise(lit(0)))
-      val harness = new Superstep(spark, s"scc_bfs_${s.round}", snapshotDir, arena = arena)
+      val harness = new Superstep(spark, s"scc_bfs_${s.round}", arena = arena)
       val (reached, steps) = harness.run(bfs0, Int.MaxValue, rides = Seq(CountIf("st", 12)))(
         (st, _) => hop(st.filter(col("st") =!= 3), byDst, s))(_.rides(0))
       s.copy(reached = Some(reached), tally = s.tally.copy(bfsSteps = steps.size))

@@ -88,13 +88,10 @@ object CodeTable {
     * (PushedFilters). A real Iceberg catalog layers snapshot/manifest
     * metadata on top of exactly this file layout; the pruning and pushdown
     * behavior the engine depends on at 100 TB is the same and is gated in
-    * PlanSpec.
+    * PlanSpec. Read it back with plain `spark.read.parquet(path)`.
     */
   def writePartitioned(files: DataFrame, path: String): Unit =
     files.write.mode("overwrite").partitionBy("lang").parquet(path)
-
-  def readPartitioned(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** Empty frame with the code-table read schema (partition column last,
     * as a partitioned read produces it) — for empty catalog scans. */

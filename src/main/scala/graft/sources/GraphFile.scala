@@ -27,13 +27,13 @@ object GraphFile {
       .select(split(trim(col("value")), "\\s+").as("toks"))
       .filter(size(col("toks")) > 0 && col("toks").getItem(0) =!= "")
 
-    val header = lines
-      .filter(col("toks").getItem(0) === "%")
-      .select(
-        col("toks").getItem(1).cast("long").as("m"),
-        col("toks").getItem(2).cast("long").as("n"))
-      .head()
-    val (m, n) = (header.getLong(0), header.getLong(1))
+    val header = lines.filter(col("toks").getItem(0) === "%").select("toks")
+      .take(1).headOption.map(_.getSeq[String](0))
+    val counts = header.collect { case Seq(_, m, n, _*) => m.toLongOption.zip(n.toLongOption) }
+      .flatten.filter { case (m, n) => m >= 0 && n >= 0 }
+    require(counts.isDefined, s"graph file $path: expected a '% <num_edges> <num_nodes>' header, found " +
+      header.fold("no '%' line")(toks => s"'${toks.mkString(" ")}'"))
+    val (m, n) = counts.get
 
     val edges = lines
       .filter(col("toks").getItem(0) =!= "%" && size(col("toks")) >= 2)
@@ -52,21 +52,5 @@ object GraphFile {
       .select(col("id"), coalesce(col("u"), lit(false)).as("isU"))
 
     Graph(edges, vertices, n, m)
-  }
-
-  /** Driver-side parse of the same format, for small test fixtures and the
-    * in-test Tarjan oracle. Kept semantically identical to [[read]].
-    */
-  def parseLocal(content: String): (Seq[(Long, Long)], Long, Set[Long]) = {
-    var n = 0L
-    val edges = Seq.newBuilder[(Long, Long)]
-    val u = Set.newBuilder[Long]
-    content.linesIterator.map(_.trim).filter(_.nonEmpty).foreach { line =>
-      val toks = line.split("\\s+")
-      if (toks(0) == "%") n = toks(2).toLong
-      else if (toks.length >= 2) edges += ((toks(0).toLong, toks(1).toLong))
-      else u += toks(0).toLong
-    }
-    (edges.result(), n, u.result())
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.functions.{Dedup, Similarity, TextAnalysis}
 import graft.sources.{CodeTable, GraphGen, GraphSpec}
 
 class CodeTableSpec extends SparkTest {
@@ -424,43 +424,6 @@ class SimilaritySpec extends SparkTest {
     val recall = (exact & approx).size.toDouble / exact.size
     assert(recall > 0.8, s"recall=$recall")
   }
-}
-
-class MultimodalSpec extends SparkTest {
-  test("PPM codec round-trips and resizes real pixels") {
-    val px = Array.tabulate(10 * 6 * 3)(i => ((i * 7) % 256).toByte)
-    val img = Multimodal.Ppm.Image(10, 6, px)
-    val back = Multimodal.Ppm.decode(Multimodal.Ppm.encode(img))
-    assert(back.width == 10 && back.height == 6 && back.pixels.sameElements(px))
-    // comments + extra whitespace in the header must parse
-    val commented = "P6\n# a comment\n 10  6\n255\n".getBytes("US-ASCII") ++ px
-    val back2 = Multimodal.Ppm.decode(commented)
-    assert(back2.width == 10 && back2.pixels.sameElements(px))
-    val small = Multimodal.Ppm.resize(img, 5)
-    assert(small.width == 5 && small.height == 3 && small.pixels.length == 5 * 3 * 3)
-    // nearest-neighbor: every output pixel exists somewhere in the source
-    assert(small.pixels.toSet.subsetOf(px.toSet))
-  }
-
-  test("truncated P6 raster is rejected, never zero-padded into black pixels") {
-    val px = Array.tabulate(10 * 6 * 3)(i => ((i * 7) % 256).toByte)
-    val full = Multimodal.Ppm.encode(Multimodal.Ppm.Image(10, 6, px))
-    // header claims 10x6 but half the raster is missing: copyOfRange would
-    // silently fabricate a black bottom half for downstream features/dedup
-    val truncated = full.take(full.length - 10 * 3 * 3)
-    val ex = intercept[IllegalArgumentException](Multimodal.Ppm.decode(truncated))
-    assert(ex.getMessage.contains("truncated"), ex.getMessage)
-  }
-
-  test("zero-frame video: sampleFrames emits no rows instead of crashing the task") {
-    val s = spark; import s.implicits._
-    val empty = Multimodal.Avi.encode(
-      Multimodal.Avi.Video(4, 4, 10, Vector.empty))
-    assert(Multimodal.Avi.decode(empty).frames.isEmpty) // valid empty movi
-    val decoded = Seq(
-      Multimodal.DecodedAsset(1L, "video", 4, 4, 0, empty)).toDS()
-    assert(Multimodal.sampleFrames(decoded, k = 4).count() == 0)
-  }
 
   test("VectorDot: mismatched vector lengths yield null, not a partial dot") {
     val s = spark; import s.implicits._
@@ -473,191 +436,6 @@ class MultimodalSpec extends SparkTest {
       .toMap
     assert(df(1L).contains(6.0))
     assert(df(2L).isEmpty, s"short row produced a plausible-but-wrong ${df(2L)}")
-  }
-
-  test("WAV codec round-trips PCM16 and survives unknown chunks") {
-    val samples = Array.tabulate(400)(i => (math.sin(i * 0.1) * 9000).toShort)
-    val bytes = Multimodal.Wav.encode(Multimodal.Wav.Audio(1, 8000, samples))
-    val back = Multimodal.Wav.decode(bytes)
-    assert(back.channels == 1 && back.sampleRate == 8000 &&
-      back.samples.sameElements(samples))
-    // splice an unknown chunk between fmt and data: chunk walk must skip it
-    val junk = "LIST".getBytes("US-ASCII") ++ Array[Byte](4, 0, 0, 0) ++
-      Array[Byte](9, 9, 9, 9)
-    val spliced = bytes.take(36) ++ junk ++ bytes.drop(36)
-    // fix RIFF size
-    val riffLen = spliced.length - 8
-    spliced(4) = riffLen.toByte; spliced(5) = (riffLen >> 8).toByte
-    spliced(6) = (riffLen >> 16).toByte; spliced(7) = (riffLen >> 24).toByte
-    assert(Multimodal.Wav.decode(spliced).samples.sameElements(samples))
-  }
-
-  test("AVI codec: round-trip with row padding; junk chunks skipped") {
-    // w=21 → row 63 bytes → stride 64: exercises the 4-byte row alignment
-    val w = 21; val h = 14
-    val frames = Vector.tabulate(5)(t =>
-      Array.tabulate(w * h * 3)(i => ((i * 3 + t * 11) % 256).toByte))
-    val bytes = Multimodal.Avi.encode(Multimodal.Avi.Video(w, h, 10, frames))
-    val v = Multimodal.Avi.decode(bytes)
-    assert(v.width == w && v.height == h && v.fps == 10 && v.frames.length == 5)
-    assert(v.frames.zip(frames).forall { case (a, b) => a.sameElements(b) })
-    // container walk skips unknown chunks (idx1/JUNK appear in real files):
-    // splice a JUNK chunk between hdrl and movi and fix the RIFF size
-    val hdrlLen = 8 + java.nio.ByteBuffer.wrap(bytes, 16, 4)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
-    val at = 12 + hdrlLen
-    val junk = "JUNK".getBytes("US-ASCII") ++ Array[Byte](4, 0, 0, 0, 9, 9, 9, 9)
-    val spliced = bytes.take(at) ++ junk ++ bytes.drop(at)
-    val riffLen = spliced.length - 8
-    spliced(4) = riffLen.toByte; spliced(5) = (riffLen >> 8).toByte
-    spliced(6) = (riffLen >> 16).toByte; spliced(7) = (riffLen >> 24).toByte
-    val v2 = Multimodal.Avi.decode(spliced)
-    assert(v2.frames.length == 5 && v2.frames.head.sameElements(frames.head))
-  }
-
-  test("AVI chunk ids follow VfW: DIB frames '00db', MJPG frames '00dc'") {
-    def chunkIds(bytes: Array[Byte]): Set[String] = {
-      // collect every frame-chunk fourcc in the byte stream
-      (0 until bytes.length - 4).collect {
-        case i if bytes(i) == '0' && bytes(i + 1) == '0' &&
-          (bytes(i + 3) == 'b' || bytes(i + 3) == 'c') && bytes(i + 2) == 'd' =>
-          new String(bytes.slice(i, i + 4), "US-ASCII")
-      }.toSet
-    }
-    val w = 8; val h = 8
-    val frames = Vector.tabulate(2)(t => Array.tabulate(w * h * 3)(i => (i + t).toByte))
-    val dib = Multimodal.Avi.encode(Multimodal.Avi.Video(w, h, 5, frames))
-    assert(chunkIds(dib) == Set("00db"), s"DIB stream chunks: ${chunkIds(dib)}")
-    val mjpg = Multimodal.Avi.encodeMjpeg(Multimodal.Avi.Video(w, h, 5, frames))
-    assert(chunkIds(mjpg) == Set("00dc"), s"MJPG stream chunks: ${chunkIds(mjpg)}")
-    // a frame chunk arriving before any strf is a structural error with a
-    // structural message, not a codec error
-    val noStrf = dib.indexOfSlice("strf".getBytes("US-ASCII"))
-    val broken = dib.clone()
-    broken(noStrf) = 'J'; broken(noStrf + 1) = 'U'
-    broken(noStrf + 2) = 'N'; broken(noStrf + 3) = 'K'
-    val e = intercept[IllegalArgumentException](Multimodal.Avi.decode(broken))
-    assert(e.getMessage.contains("strf"), e.getMessage)
-  }
-
-  test("AVI MJPG: JDK-imageio frames decode to header dims, pixels close") {
-    val w = 32; val h = 24
-    // smooth gray gradient — JPEG-friendly, so the lossy round-trip error
-    // stays small and the assertion is meaningful
-    val frames = Vector.tabulate(3)(t =>
-      Array.tabulate(w * h * 3)(i => (((i / 3) / w + t * 40) % 200 + 20).toByte))
-    val bytes = Multimodal.Avi.encodeMjpeg(Multimodal.Avi.Video(w, h, 10, frames))
-    val v = Multimodal.Avi.decode(bytes)
-    assert(v.width == w && v.height == h && v.frames.length == 3)
-    val meanAbsErr = v.frames.zip(frames).map { case (a, b) =>
-      a.zip(b).map { case (x, y) => math.abs((x & 0xff) - (y & 0xff)) }.sum.toDouble / a.length
-    }
-    assert(meanAbsErr.forall(_ < 8.0), meanAbsErr.toString)
-    // unknown codecs are rejected with a clear message, not garbage pixels
-    val bogus = bytes.clone()
-    // strf's biCompression sits 16 bytes into the strf payload; patch it
-    val strfAt = {
-      val s = new String(bogus, "US-ASCII"); s.indexOf("strf")
-    }
-    bogus(strfAt + 8 + 16) = 0x58 // 'X…' fourcc
-    val e = intercept[IllegalArgumentException](Multimodal.Avi.decode(bogus))
-    assert(e.getMessage.contains("unsupported video codec"))
-  }
-
-  test("decode/features/frames/resize over mixed assets — all real codecs") {
-    val assets = Multimodal.syntheticAssets(spark, 30)
-    val dec = Multimodal.decode(assets)
-    val d = dec.collect()
-    assert(d.length == 30)
-    assert(d.filter(_.kind == "image").forall(a =>
-      a.width >= 64 && a.height >= 64 && a.frames == 1))
-    assert(d.filter(_.kind == "audio").forall(a =>
-      a.width == 8000 && a.height == 1 && a.frames >= 1600))
-    assert(d.filter(_.kind == "video").forall(a => a.frames >= 1))
-
-    val feats = Multimodal.features(dec).collect()
-    assert(feats.forall(f => f.features.length == 16 &&
-      math.abs(f.features.sum - 1.0f) < 1e-3))
-    // sine audio: |amplitude| means are roughly uniform across time bins —
-    // no bin should hold more than half the mass
-    assert(feats.filter(_.kind == "audio").forall(_.features.max < 0.5f))
-
-    // video metadata comes from the real demuxer: frames = 2 + id%12
-    assert(d.filter(_.kind == "video").forall(a => a.frames == 2 + (a.assetId % 12)))
-
-    val frames = Multimodal.sampleFrames(dec, 3)
-    val perAsset = frames.groupBy("assetId").count().collect()
-    assert(perAsset.nonEmpty && perAsset.forall(_.getLong(1) <= 3))
-    // sampled frames are REAL decoded pixels re-encoded as P6: each one
-    // re-decodes to the video's frame dimensions
-    val byId = d.filter(_.kind == "video").map(a => a.assetId -> a).toMap
-    frames.collect().foreach { r =>
-      val img = Multimodal.Ppm.decode(r.getAs[Array[Byte]]("frameBytes"))
-      val src = byId(r.getLong(0))
-      assert(img.width == src.width && img.height == src.height)
-    }
-
-    val resized = Multimodal.resize(dec, 32).collect()
-    val images = resized.filter(_.kind == "image")
-    assert(images.forall(a => math.max(a.width, a.height) <= 32))
-    // resized payload is a valid PPM that re-decodes to the new dimensions
-    assert(images.forall { a =>
-      val img = Multimodal.Ppm.decode(a.bytes)
-      img.width == a.width && img.height == a.height
-    })
-  }
-
-  test("standalone JPEG/PNG: sniffed decode, round-trips, pipeline composition") {
-    val s = spark; import s.implicits._
-    val w = 48; val h = 36
-    // smooth gradient — JPEG-friendly so the lossy bound is meaningful
-    val px = Array.tabulate(w * h * 3)(i => (((i / 3) % w * 4) % 200 + 20).toByte)
-    val src = Multimodal.Ppm.Image(w, h, px)
-
-    // PNG is lossless: exact pixel round-trip through imageio
-    val png = Multimodal.StillImage.encode(src, "png")
-    assert(Multimodal.StillImage.format(png).contains("png"))
-    val backPng = Multimodal.StillImage.decodeAny(png)
-    assert(backPng.width == w && backPng.height == h)
-    assert(backPng.pixels.sameElements(px))
-
-    // JPEG is lossy: dims exact, pixels close
-    val jpg = Multimodal.StillImage.encode(src, "jpg")
-    assert(Multimodal.StillImage.format(jpg).contains("jpeg"))
-    val backJpg = Multimodal.StillImage.decodeAny(jpg)
-    assert(backJpg.width == w && backJpg.height == h)
-    val meanAbsErr = backJpg.pixels.zip(px)
-      .map { case (a, b) => math.abs((a & 0xff) - (b & 0xff)) }.sum.toDouble / px.length
-    assert(meanAbsErr < 8.0, meanAbsErr.toString)
-
-    // P6 sniffs as ppm; garbage is refused with a clear message
-    assert(Multimodal.StillImage.format(Multimodal.Ppm.encode(src)).contains("ppm"))
-    val e = intercept[IllegalArgumentException](
-      Multimodal.StillImage.decodeAny(Array[Byte](1, 2, 3, 4)))
-    assert(e.getMessage.contains("unrecognized image format"))
-
-    // one image column mixing all three formats flows through the SAME
-    // decode/features/resize operators (the Spark-side plumbing is format-
-    // agnostic via the sniff)
-    val mixed = Seq(
-      Multimodal.Asset(0L, "image", Multimodal.Ppm.encode(src), "synth://ppm"),
-      Multimodal.Asset(1L, "image", jpg, "synth://jpg"),
-      Multimodal.Asset(2L, "image", png, "synth://png")).toDS()
-    val dec = Multimodal.decode(mixed).collect()
-    assert(dec.length == 3 && dec.forall(a => a.width == w && a.height == h && a.frames == 1))
-    val feats = Multimodal.features(Multimodal.decode(mixed)).collect()
-    assert(feats.length == 3 &&
-      feats.forall(f => math.abs(f.features.sum - 1.0f) < 1e-3))
-    // PNG and P6 encode identical pixels → identical histograms; JPEG close
-    val byId = feats.map(f => f.assetId -> f.features).toMap
-    assert(byId(0L).sameElements(byId(2L)))
-    assert(byId(0L).zip(byId(1L)).map { case (a, b) => math.abs(a - b) }.max < 0.05f)
-    // resize normalizes every format to P6 at the new dims
-    val rz = Multimodal.resize(Multimodal.decode(mixed), 24).collect()
-    assert(rz.forall { a =>
-      val img = Multimodal.Ppm.decode(a.bytes)
-      math.max(img.width, img.height) <= 24 && img.width == a.width
-    })
   }
 }
 

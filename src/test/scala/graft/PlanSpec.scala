@@ -55,7 +55,7 @@ class PlanSpec extends SparkTest {
       graft.sources.GraphSpec(numCycles = 8, maxCycleLen = 6, extraArcsPerVertex = 0.3, seed = 9L))
     val path = java.nio.file.Files.createTempDirectory("codetbl_").toString + "/files"
     graft.sources.CodeTable.writePartitioned(files, path)
-    val df = graft.sources.CodeTable.readPartitioned(spark, path)
+    val df = spark.read.parquet(path)
       .filter(col("lang") === "py")
       .select("fileId", "path")
     val plan = planOf(df)

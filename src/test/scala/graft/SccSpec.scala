@@ -264,7 +264,9 @@ class SccSpec extends SparkTest {
     * 80-vertex two-cycle graph setup (10, 15), round 0 (10, 12), round 1
     * (24, 29), steps (81, 246); killed after round 0 with snapshots, setup
     * (10, 15), round 0 (13, 15), steps (46, 131), and resumed, setup
-    * (13, 21), round 1 (26, 31), steps (45, 125).
+    * (13, 21), round 1 (26, 31), steps (45, 125). Until the BFS stopped
+    * writing per-step snapshots that no resume reads (resume is per round),
+    * the killed and resumed runs' steps were (46, 87) and (45, 85).
     */
   test("distributed path: jobs and stages per phase stay within their budget") {
     val spec = GraphSpec(numCycles = 40, maxCycleLen = 8, extraArcsPerVertex = 0.3, seed = 7L)
@@ -291,12 +293,12 @@ class SccSpec extends SparkTest {
         localSolveEdgeThreshold = 0, snapshotDir = Some(dir))
     })
     assertWithin(sccJobs(killed), Map("setup" -> (6, 10), "round 0" -> (11, 14),
-      "steps" -> (46, 87)))
+      "steps" -> (41, 82)))
     val (run3, resumed) = jobsOf(Scc.components(spark, edgesDf(edges), vertsDf(0L until 80L),
       localSolveEdgeThreshold = 0, snapshotDir = Some(dir)))
     run3.release()
     assertWithin(sccJobs(resumed), Map("setup" -> (10, 16), "round 1" -> (25, 31),
-      "steps" -> (45, 85)))
+      "steps" -> (40, 80)))
   }
 
   /** Random graphs, seeded, against Tarjan and the acceptance oracles. Each
@@ -408,14 +410,14 @@ class SccSpec extends SparkTest {
     // FIXTURES.md §3: the reference's generate.py:76-153 construction at the
     // published parameter shape, sized to the mid_tests regime (the four
     // published graphs are 37k-86k edges / ~47k nodes).
-    val spec = graft.sources.MidTestSpec(numCycles = 1000, lenLo = 16, lenHi = 33)
-    val (eDf, n) = GraphGen.midTestEdges(spark, spec)
+    val spec = GraphFixtures.MidTestSpec(numCycles = 1000, lenLo = 16, lenHi = 33)
+    val (eDf, n) = GraphFixtures.midTestEdges(spark, spec)
     val edges = eDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(edges.size > 30000 && edges.size < 60000, s"edge count ${edges.size}")
     val vertices = 0L until n
     val expected = Oracle.tarjan(vertices, edges)
     val run7 = Scc.components(spark, eDf,
-      GraphGen.midTestVertices(spark, spec, n).select("id"))
+      GraphFixtures.midTestVertices(spark, spec, n).select("id"))
     val got = run7.components
     assert(got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == expected)
 
@@ -458,7 +460,7 @@ class SccSpec extends SparkTest {
 
   test("Spark-native GraphFile.read == parseLocal, end-to-end through the engine") {
     val text = scala.io.Source.fromResource("graphs/sample_graph8").mkString
-    val (edges, n, u) = graft.sources.GraphFile.parseLocal(text)
+    val (edges, n, u) = GraphFixtures.parseLocal(text)
     val tmp = java.nio.file.Files.createTempFile("graph_", ".txt")
     java.nio.file.Files.writeString(tmp, text)
     val g = graft.sources.GraphFile.read(spark, tmp.toString)
@@ -472,6 +474,19 @@ class SccSpec extends SparkTest {
     val got = run10.components
     assert(got.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       Oracle.tarjan(0L until n, edges))
+  }
+
+  test("GraphFile.read rejects a missing or malformed header, naming the file") {
+    for ((text, found) <- Seq(
+        ("0 1\n1 0\n", "no '%' line"),
+        ("% 2\n0 1\n1 0\n", "'% 2'"),
+        ("% two 2\n0 1\n1 0\n", "'% two 2'"))) {
+      val tmp = java.nio.file.Files.createTempFile("graph_bad_", ".txt")
+      java.nio.file.Files.writeString(tmp, text)
+      val e = intercept[IllegalArgumentException](graft.sources.GraphFile.read(spark, tmp.toString))
+      assert(e.getMessage.contains(tmp.toString) && e.getMessage.contains("% <num_edges> <num_nodes>") &&
+        e.getMessage.contains(found), e.getMessage)
+    }
   }
 
   test("SccCli prints the reference binary's answer on sample_graph (induced)") {
@@ -627,6 +642,10 @@ class SccSpec extends SparkTest {
     assert(resumed.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == expected)
     // and it genuinely resumed (first recorded round is > 0), not restarted
     assert(resumedMetrics.head.round > 0, resumedMetrics.toString)
+    // only the round-level state is durable: the BFS steps inside a round
+    // leave nothing behind, since resume never restarts mid-round
+    val bfsEntries = new java.io.File(dir).list().filter(_.startsWith("scc_bfs_"))
+    assert(bfsEntries.isEmpty, bfsEntries.mkString(", "))
   }
 
   test("corrupt round manifest fails resume loudly, never a silent restart") {

@@ -49,6 +49,6 @@ trait SparkTest extends AnyFunSuite {
   /** Load a reference-format graph fixture from test resources. */
   def fixture(name: String): (Seq[(Long, Long)], Long, Set[Long]) = {
     val text = scala.io.Source.fromResource(s"graphs/$name").mkString
-    graft.sources.GraphFile.parseLocal(text)
+    GraphFixtures.parseLocal(text)
   }
 }
