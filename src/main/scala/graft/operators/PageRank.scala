@@ -45,7 +45,8 @@ final class PageRankRun(
   * in `update`): no edge broadcast, and the dangling mass of step i rides
   * step i's checkpoint into step i+1's plan, so an iteration is one job.
   * Its setup is three jobs: the edge table, the vertex out-degrees (whose
-  * row count is n) and the first state.
+  * row count is n) and the first state, which a resumed run reads back
+  * from its newest snapshot instead.
   *
   * Every edge row counts in its source's out-degree (duplicates,
   * self-loops and edges to ids outside `vertices` alike); an edge from an
@@ -56,7 +57,10 @@ object PageRank {
   /** One rank update per superstep; `maxIter` bounds the iterations
     * exactly (q_pagerank_topk's oracle depends on exactly-20), and `tol`
     * stops earlier once no rank moves by more than it.
-    * @param snapshotDir per-step state snapshots of the superstep path; a
+    * @param snapshotDir per-step state snapshots of the superstep path,
+    *   which a later call with the same directory resumes from (see
+    *   [[graft.plans.Superstep]]); a directory belongs to one input, and a
+    *   resumed state whose row count is not the vertex count throws. A
     *   graph that fits one task ([[LocalGraph.EdgeThreshold]] edges or
     *   fewer) is solved in one job and writes none
     */
@@ -127,13 +131,12 @@ object PageRank {
     // checkpoint is the cheaper carrier at any scale where the join build
     // isn't free.
     // Every state checkpoint rides its changed count and its dangling mass
-    // Σ rank over outDeg = 0, which the next update reads.
+    // Σ rank over outDeg = 0, which the next update reads: the first
+    // state's too, fresh or resumed.
     val rides = Seq(CountIf("changed"), SumDouble("rank", Some("outDeg")))
-    val state0 = arena.checkpoint(
-      verts.df.select(col("id"), col("outDeg"), lit(1.0 / n).as("rank"), lit(true).as("changed")),
-      rides: _*)
-    arena.release(verts.df)
-    var danglingMass = state0.double(1)
+    val state0 =
+      verts.df.select(col("id"), col("outDeg"), lit(1.0 / n).as("rank"), lit(true).as("changed"))
+    var danglingMass = 0.0
 
     // One rank update. The dangling mass enters the plan as a DoubleParam:
     // the generated code reads it from its references, so every step runs
@@ -172,9 +175,13 @@ object PageRank {
     }
 
     val harness = new Superstep(spark, "pagerank", snapshotDir, arena = arena)
-    val (converged, metrics) = harness.run(state0.df, maxIter, rides = rides) {
+    val (converged, metrics) = harness.run(state0, maxIter, rides = rides) {
       (state, _) => update(state)
     } { ck =>
+      arena.release(verts.df) // backs only the first state
+      // every state holds one row per vertex; a snapshot of another input may not
+      if (ck.rows != verts.rows) throw new IllegalStateException(s"pagerank: a state of " +
+        s"${ck.rows} rows for ${verts.rows} vertices; ${snapshotDir.mkString} holds another input")
       danglingMass = ck.double(1)
       ck.rides(0)
     }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.GraftShims.{Checkpoint, CountIf, Max}
 import org.apache.spark.sql.functions._
 
-import graft.plans.{CheckpointArena, JobLabel, Superstep}
+import graft.plans.{CheckpointArena, JobLabel, Jsonl, Superstep}
 
 /** Result handle for [[Scc.components]]:
   *   - [[release]]: unpersist every cached block backing [[components]]
@@ -227,8 +227,6 @@ object Scc {
     private val fileIdx = new java.util.IdentityHashMap[DataFrame, Integer]()
     private var nextIdx = 0
 
-    private def jstr(s: String): String = graft.plans.Jsonl.jstr(s)
-
     def writeRound(round: Int, live: DataFrame, liveCount: Long,
         parts: Seq[DataFrame]): Unit = {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
@@ -243,37 +241,16 @@ object Scc {
       val livePath = s"$dir/scc.live_$round"
       live.write.mode("overwrite").parquet(livePath)
       java.nio.file.Files.writeString(manifest,
-        s"""{"round":$round,"liveCount":$liveCount,"parts":[${idxs.mkString(",")}],"live":${jstr(livePath)}}""" + "\n",
+        s"""{"round":$round,"liveCount":$liveCount,"parts":[${idxs.mkString(",")}],"live":${Jsonl.jstr(livePath)}}""" + "\n",
         java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
     }
 
-    /** Newest durable round, if any: (live, fragments, round, liveCount). */
-    def resume(): Option[(DataFrame, Seq[DataFrame], Int, Long)] = {
-      if (!java.nio.file.Files.exists(manifest)) return None
-      // live path written jstr-escaped ⇒ captured with the escaped-string
-      // pattern and unescaped below (same asymmetry fix as Superstep.resume)
-      val re =
-        """"round":(\d+),"liveCount":(\d+),"parts":\[([0-9,]*)\],"live":"((?:[^"\\]|\\.)+)"""".r.unanchored
-      // A torn FINAL line is the expected crash-mid-append artifact —
-      // truncated off (WAL-style) so this resume AND every later one see a
-      // clean manifest. Every OTHER parse failure means corruption or a
-      // manifest from an incompatible release, where a silent skip would
-      // resume from the wrong round: fail with the recovery step.
-      val lines = graft.plans.Jsonl.repairTornTail(manifest,
-        l => l.isBlank || re.findFirstIn(l).isDefined)
-      lines
-        .flatMap {
-          case re(r, lc, idxs, lp) =>
-            Some((r.toInt, lc.toLong, idxs, graft.plans.Jsonl.junstr(lp)))
-          case l if l.isBlank => None
-          case l => throw new IllegalStateException(
-            s"unparseable SCC round manifest line in $manifest: $l " +
-              "(corrupt, or written by an incompatible engine version — " +
-              "delete the snapshot directory to restart from scratch)")
-        }
-        .lastOption
-        .map { case (r, lc, idxs, lp) =>
-          val ids = if (idxs.isEmpty) Seq.empty else idxs.split(',').toSeq.map(_.toInt)
+    /** Newest durable round, if any: (live, fragments, round, liveCount).
+      * A torn final manifest line is truncated off, any other unparseable
+      * one throws (see [[Jsonl.readLog]]). */
+    def resume(): Option[(DataFrame, Seq[DataFrame], Int, Long)] =
+      Jsonl.readLog(manifest, "SCC round manifest")(roundOf).lastOption.map {
+        case (r, lc, ids, lp) =>
           val parts = ids.map { i =>
             val df = spark.read.parquet(s"$dir/scc.part_$i")
             fileIdx.put(df, i)
@@ -281,9 +258,12 @@ object Scc {
           }
           nextIdx = (ids :+ -1).max + 1
           (spark.read.parquet(lp), parts, r, lc)
-        }
-    }
+      }
   }
+
+  /** A round manifest line: (round, liveCount, part file indices, live path). */
+  private[graft] def roundOf(l: Jsonl.Obj): (Int, Long, Seq[Int], String) =
+    (l.int("round"), l.long("liveCount"), l.ints("parts"), l.str("live"))
 
   /** Edge layout of the distributed path: only edges internal to the
     * vertex set matter for SCCs. Self-loops and duplicates are dropped, and
@@ -336,8 +316,9 @@ object Scc {
     *
     * When `snapshotDir` is set the outer loop is durable and resumable
     * (see [[Snapshots]]); a fresh call with the same directory continues
-    * after the last completed round. Like `PageRank.run` and `Wcc.run`, a
-    * graph solved in one task writes no round manifest there.
+    * after the last completed round, so a directory belongs to one input.
+    * Like `PageRank.run` and `Wcc.run`, a graph solved in one task writes
+    * no round manifest there.
     */
   def components(
       spark: SparkSession,

@@ -52,7 +52,9 @@ final class WccRun(
   */
 object Wcc {
 
-  /** @param snapshotDir per-round state snapshots of the superstep path; a
+  /** @param snapshotDir per-round state snapshots of the superstep path,
+    *   which a later call with the same directory resumes from (see
+    *   [[graft.plans.Superstep]]); a directory belongs to one input. A
     *   graph that fits one task ([[LocalGraph.EdgeThreshold]] links or
     *   fewer) is solved in one job and writes none
     */
@@ -125,7 +127,8 @@ object Wcc {
     var prevSig: Option[(Long, Long)] = None
     var prevState: DataFrame = null
     // The (xor-hash, count) signature rides the checkpoint materialization
-    // — no separate full-scan signature aggregate job per round.
+    // — no separate full-scan signature aggregate job per round. A resumed
+    // link set is checkpointed with it too, so the test restarts from it.
     val (links, metrics) = harness.run(links0, maxIter, rides = Seq(XorSig(Seq("u", "v")))) {
       (st, _) =>
       prevState = st

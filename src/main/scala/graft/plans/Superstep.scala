@@ -28,37 +28,52 @@ final case class StepMetrics(iter: Int, changed: Long, wallMs: Long)
   *     are picked from those true statistics; the loop sets no session
   *     conf, so concurrent callers of one session cannot see its choices.
   *   - **Resumability** (north_rule): when `snapshotDir` is set, every
-  *     `snapshotEvery` iterations the state is written as parquet (one file
-  *     per partition = per-partition lineage) together with a JSON manifest
-  *     line (iteration, changed count, wall ms). `resume` restarts from the
-  *     newest snapshot.
+  *     tenth iteration's state, the last one's and a converged one's are
+  *     written as parquet (one file per partition = per-partition lineage);
+  *     every iteration appends a JSON manifest line (iteration, changed
+  *     count, wall ms, snapshot path or null). [[run]] resumes on its own:
+  *     when the manifest names a snapshot, the loop restarts after the
+  *     newest one instead of from `state0`. A directory belongs to one
+  *     input; the caller checks what it can (PageRank its row count).
   */
 final class Superstep(
     spark: SparkSession,
     name: String,
     snapshotDir: Option[String] = None,
-    snapshotEvery: Int = 10,
     arena: CheckpointArena = new CheckpointArena) {
 
   private def manifestPath = snapshotDir.map(d => Paths.get(d, s"$name.manifest.jsonl"))
 
-  private def jstr(s: String): String = Jsonl.jstr(s)
-
-  /** Run `step` from `state0` until `changed` returns 0 or `maxIter`
-    * supersteps have run. Each next state is checkpointed with `rides`
-    * folded into the same materialization job; `changed` reads the
+  /** Run `step` until `changed` returns 0 or the step about to run would
+    * be iteration `maxIter`. The first state is the newest snapshot in
+    * `snapshotDir`'s manifest, if it names one (the loop then continues
+    * with the iteration after it), and `state0` otherwise. A first state
+    * that is already one of the arena's checkpoints is used as it is; any
+    * other is checkpointed with `rides`, under the caller's job label, and
+    * `changed` reads that checkpoint too (its count is not used), so a
+    * ridden value the next step needs comes from one reader whichever
+    * state the loop starts from. Each next state is checkpointed with
+    * `rides` folded into the same materialization job; `changed` reads the
     * resulting [[Checkpoint]] (its row count, ridden values or the frame
-    * itself) before the previous state is released. A `state0` that is
-    * already one of the arena's checkpoints is used as it is; any other is
-    * checkpointed first, under the caller's job label. Returns the final
+    * itself) before the previous state is released. Returns the final
     * state and per-iteration metrics.
     */
-  def run(state0: DataFrame, maxIter: Int, startIter: Int = 0, rides: Seq[Ride] = Nil)(
+  def run(state0: => DataFrame, maxIter: Int, rides: Seq[Ride] = Nil)(
       step: (DataFrame, Int) => DataFrame)(
       changed: Checkpoint => Long): (DataFrame, Vector[StepMetrics]) = {
-    var state = if (arena.holds(state0)) state0 else arena.checkpoint(state0).df
+    val resumed = newestSnapshot()
+    resumed.foreach { case (path, i) =>
+      graft.Log.v(s"superstep $name: resuming after iter $i from $path")
+    }
+    var state = resumed.fold(state0)(r => spark.read.parquet(r._1)) match {
+      case s if arena.holds(s) => s
+      case s =>
+        val ck = arena.checkpoint(s, rides: _*)
+        changed(ck)
+        ck.df
+    }
     val metrics = Vector.newBuilder[StepMetrics]
-    var iter = startIter
+    var iter = resumed.fold(0)(_._2 + 1)
     var delta = 1L
     while (delta > 0 && iter < maxIter) {
       JobLabel(spark, name, s"step $iter") {
@@ -73,14 +88,14 @@ final class Superstep(
         graft.Log.v(s"superstep $name iter=$iter changed=$delta wallMs=$wallMs " +
           s"compiled=${Superstep.classesCompiled - compiled0}")
         snapshotDir.foreach { dir =>
-          val snap = iter % snapshotEvery == 0 || delta == 0
+          val snap = iter % Superstep.SnapshotEvery == 0 || delta == 0 || iter == maxIter - 1
           val snapPath = if (snap) {
             val p = s"$dir/$name.state_$iter"
             state.write.mode("overwrite").parquet(p)
-            jstr(p)
+            Jsonl.jstr(p)
           } else "null"
           val line =
-            s"""{"name":${jstr(name)},"iter":$iter,"changed":$delta,"wallMs":$wallMs,"snapshot":$snapPath}\n"""
+            s"""{"name":${Jsonl.jstr(name)},"iter":$iter,"changed":$delta,"wallMs":$wallMs,"snapshot":$snapPath}\n"""
           Files.writeString(
             manifestPath.get, line,
             StandardOpenOption.CREATE, StandardOpenOption.APPEND)
@@ -91,42 +106,21 @@ final class Superstep(
     (state, metrics.result())
   }
 
-  /** Newest durable snapshot, if any: (state, next iteration to run). */
-  def resume(): Option[(DataFrame, Int)] =
-    manifestPath.filter(Files.exists(_)).flatMap { p =>
-      // the snapshot path was written jstr-escaped, so it must be captured
-      // with the escaped-string pattern and UNESCAPED on the way out — the
-      // old [^"]+ capture returned still-escaped text (or truncated at an
-      // escaped quote) for exactly the paths the escaping protects
-      val snapRe = """"iter":(\d+).*"snapshot":"((?:[^"\\]|\\.)+)"""".r.unanchored
-      // No-snapshot iterations are legitimately snapshot-less; anything else
-      // that fails to parse is a corrupt manifest and must fail loudly — a
-      // silent skip would resume from an OLDER iteration and redo work
-      // against state the newer iterations already mutated durably. The ONE
-      // exception is a torn FINAL line: a crash mid-append leaves exactly
-      // that artifact, it carries no more durable state than a no-snapshot
-      // line, and resume already redoes the tail iterations — so crash
-      // recovery (this method's whole purpose) must tolerate it.
-      val noSnapRe = """"iter":\d+.*"snapshot":null""".r.unanchored
-      def parses(l: String): Boolean =
-        l.isBlank || snapRe.findFirstIn(l).isDefined || noSnapRe.findFirstIn(l).isDefined
-      val lines = Jsonl.repairTornTail(p, parses)
-      lines
-        .flatMap {
-          case snapRe(i, path) => Some((i.toInt, Jsonl.junstr(path)))
-          case noSnapRe() => None
-          case l if l.isBlank => None
-          case l => throw new IllegalStateException(
-            s"unparseable superstep manifest line in $p: $l " +
-              "(corrupt, or written by an incompatible engine version — " +
-              "delete the snapshot directory to restart from scratch)")
-        }
-        .lastOption
-        .map { case (i, path) => (spark.read.parquet(path), i + 1) }
-    }
+  /** The newest snapshot the manifest names, if any: (path, iteration).
+    * Lines without one (iterations that wrote no snapshot) are skipped. */
+  private def newestSnapshot(): Option[(String, Int)] = manifestPath.flatMap(p =>
+    Jsonl.readLog(p, "superstep manifest")(Superstep.snapshotOf).flatten.lastOption)
 }
 
 object Superstep {
+  /** Iterations between snapshots (the last and a converged one are
+    * written too). */
+  private val SnapshotEvery = 10
+
+  /** A manifest line's snapshot, if it names one: (path, iteration). */
+  private[graft] def snapshotOf(l: Jsonl.Obj): Option[(String, Int)] =
+    l.strOrNull("snapshot").map(_ -> l.int("iter"))
+
   /** Classes Spark's code generator has compiled in this JVM so far (one per
     * miss of its compiled-class cache, see [[graft.Sessions]]). A step that
     * compiles more than a handful is thrashing that cache. */

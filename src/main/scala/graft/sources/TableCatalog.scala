@@ -4,9 +4,12 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.plans.Jsonl
 
 /** Minimal Iceberg-style table format over the partitioned parquet layout
   * (the north-star input names an Iceberg source; no table-format runtime
@@ -154,8 +157,7 @@ object TableCatalog {
   private def manifestFile(table: String, id: Int): Path =
     metaDir(table).resolve(s"snap-$id.json")
 
-  private def jstr(s: String): String = graft.plans.Jsonl.jstr(s)
-  private def junstr(s: String): String = graft.plans.Jsonl.junstr(s)
+  private def jstr(s: String): String = Jsonl.jstr(s)
 
   private def jOptStr(v: Option[String]): String = v.fold("null")(jstr)
 
@@ -187,30 +189,22 @@ object TableCatalog {
     s"""{"currentSchemaId":$currentSchemaId,"schemas":$ss}"""
   }
 
-  // path/lang are written jstr-escaped, so they must be parsed with the
-  // escaped-string pattern (the old [^"]+ form silently dropped any entry
-  // whose path or lang contained '"' or '\' — a scan would then MISS
-  // committed files with no error; ADVICE r4) and unescaped via junstr.
-  private val lineRe =
-    """\{"path":"((?:[^"\\]|\\.)+)","lang":"((?:[^"\\]|\\.)+)"(?:,"sid":(\d+))?(?:,"stats":\[(.*)\])?\}""".r
-  private val boundsRe =
-    """\{"col":"([^"]+)","type":"(long|string)","lo":(null|"(?:[^"\\]|\\.)*"),"hi":(null|"(?:[^"\\]|\\.)*")\}""".r
-  private val headerRe =
-    """\{"currentSchemaId":(\d+),"schemas":\[(.*)\]\}""".r
-  private val schemaRe =
-    """\{"id":(\d+),"fields":\[(.*?)\]\}""".r
-  private val fieldRe =
-    """\{"fid":(\d+),"name":"((?:[^"\\]|\\.)+)","type":"((?:[^"\\]|\\.)+)"\}""".r
+  /** A manifest header line: (schemas, current schema id). */
+  private[graft] def headerOf(l: Jsonl.Obj): (Seq[TableSchema], Int) =
+    (l.objs("schemas").map(s => TableSchema(s.int("id"),
+      s.objs("fields").map(f => Field(f.int("fid"), f.str("name"), f.str("type"))))),
+      l.int("currentSchemaId"))
 
-  private def parseBound(v: String): Option[String] =
-    if (v == "null") None else Some(junstr(v.substring(1, v.length - 1)))
+  /** A manifest entry line; `sid` and `stats` are optional. */
+  private[graft] def entryOf(l: Jsonl.Obj): ManifestEntry =
+    ManifestEntry(l.str("path"), l.str("lang"),
+      if (!l.has("stats")) Map.empty
+      else l.objs("stats").map(b => b.str("col") -> ColBounds(b.strOrNull("lo"),
+        b.strOrNull("hi"), isLong = b.str("type", "long", "string") == "long")).toMap,
+      if (l.has("sid")) l.int("sid") else -1)
 
-  /** Close java.nio directory streams deterministically — each unclosed
-    * `Files.list`/`Files.walk` holds a directory fd until finalization, and
-    * a long-lived driver running maintenance over many tables would leak
-    * its way to the process ulimit. */
-  private def using[A <: AutoCloseable, B](a: A)(f: A => B): B =
-    try f(a) finally a.close()
+  /** Manifest file names: `snap-<id>.json`. */
+  private val snapName = """snap-(\d+)\.json""".r
 
   /** Commit-time schema enforcement: names AND types. A names-only check
     * would let a type-mismatched commit through, and [[projectTo]]'s cast
@@ -262,12 +256,11 @@ object TableCatalog {
     // the data tree); a genuinely-empty table (id == -1, no snap-0) takes
     // the fallback too and short-circuits on the isDirectory test inside.
     if (!Files.exists(manifestFile(table, math.max(id, 0)))) {
-      val snapRe = """snap-(\d+)\.json""".r
       val dir = metaDir(table)
       id =
         if (!Files.isDirectory(dir)) -1
-        else using(Files.list(dir))(_.iterator().asScala
-          .flatMap(p => snapRe.unapplySeq(p.getFileName.toString).map(_.head.toInt))
+        else Using.resource(Files.list(dir))(_.iterator().asScala
+          .flatMap(p => snapName.unapplySeq(p.getFileName.toString).map(_.head.toInt))
           .foldLeft(-1)(math.max))
     }
     id
@@ -288,33 +281,15 @@ object TableCatalog {
     val lines =
       try Files.readAllLines(f).asScala.toSeq.filter(_.nonEmpty)
       catch { case _: java.nio.file.NoSuchFileException => return None }
-    val (schemas, curSchema, entryLines) = lines.headOption match {
-      case Some(headerRe(cur, blob)) =>
-        val ss = schemaRe.findAllMatchIn(blob).map { m =>
-          TableSchema(m.group(1).toInt,
-            fieldRe.findAllMatchIn(m.group(2)).map(fm =>
-              Field(fm.group(1).toInt, junstr(fm.group(2)), junstr(fm.group(3))))
-              .toSeq)
-        }.toSeq
-        (ss, cur.toInt, lines.tail)
-      case _ => (Nil, -1, lines) // legacy manifest: entries only
-    }
-    Some(Snapshot(id, entryLines.map {
-      case lineRe(p, l, sid, statsBlob) =>
-        val stats = Option(statsBlob).toSeq.flatMap { blob =>
-          boundsRe.findAllMatchIn(blob).map { m =>
-            m.group(1) -> ColBounds(
-              parseBound(m.group(3)), parseBound(m.group(4)),
-              isLong = m.group(2) == "long")
-          }
-        }.toMap
-        ManifestEntry(junstr(p), junstr(l), stats,
-          Option(sid).map(_.toInt).getOrElse(-1))
+    // an entry line has no header keys: a manifest without a header is a
+    // legacy one, entries only
+    val header = lines.headOption.flatMap(Jsonl.read(_)(headerOf))
+    val (schemas, curSchema) = header.getOrElse((Nil, -1))
+    Some(Snapshot(id, lines.drop(header.size).map(l => Jsonl.read(l)(entryOf).getOrElse(
       // a manifest line this reader can't parse means missing FILES, not a
       // smaller table — fail loudly, never silently scan a subset
-      case bad => throw new IllegalStateException(
-        s"unparsable manifest entry in $f: $bad")
-    }, schemas, curSchema))
+      throw new IllegalStateException(s"unparsable manifest entry in $f: $l"))),
+      schemas, curSchema))
   }
 
   /** Append `files` (CodeTable schema) as a new snapshot: new data files
@@ -417,7 +392,7 @@ object TableCatalog {
             p -> bounds
           }.toMap
       }
-    val written = using(Files.walk(dataDir))(_.iterator().asScala
+    val written = Using.resource(Files.walk(dataDir))(_.iterator().asScala
       .filter(p => p.toString.endsWith(".parquet"))
       .map { p =>
         val lang = p.getParent.getFileName.toString.stripPrefix("lang=")
@@ -514,10 +489,11 @@ object TableCatalog {
   // renames via the field id; a dropped-then-re-added name gets a FRESH
   // fid, so data written under the dropped column never resurrects.
 
-  /** The schema header is line-oriented JSON parsed with delimiter-anchored
-    * regexes; names containing the delimiters (or raw quotes/escapes/control
-    * chars) would be jstr-escaped on write but split wrongly on reload,
-    * silently dropping later fields. Refuse them at evolution time. */
+  /** Column names are outside input that every later manifest header
+    * carries. Refuse quotes, backslashes, control characters and the JSON
+    * delimiters `]` and `}` at evolution time: such a name reads back
+    * through [[Jsonl.read]], but manifests holding it would be misread by
+    * earlier releases, whose header reader split on those characters. */
   private def validateColName(name: String): Unit =
     require(name.nonEmpty &&
       !name.exists(c => c < ' ' || c == '"' || c == '\\' || c == ']' || c == '}'),
@@ -765,12 +741,11 @@ object TableCatalog {
   def removeOrphans(table: String, olderThanMillis: Long = 24L * 3600 * 1000): Int = {
     val dataDir = Paths.get(table, "data")
     if (!Files.isDirectory(dataDir)) return 0
-    val snapRe = """snap-(\d+)\.json""".r
     val md = metaDir(table)
     val ids =
       if (!Files.isDirectory(md)) Seq.empty[Int]
-      else using(Files.list(md))(_.iterator().asScala
-        .flatMap(p => snapRe.unapplySeq(p.getFileName.toString).map(_.head.toInt))
+      else Using.resource(Files.list(md))(_.iterator().asScala
+        .flatMap(p => snapName.unapplySeq(p.getFileName.toString).map(_.head.toInt))
         .toSeq)
     // a concurrent expireSnapshots may delete a manifest between the
     // listing above and this read; its references were either re-carried
@@ -778,7 +753,7 @@ object TableCatalog {
     val referenced = ids.flatMap(entriesIfPresent(table, _)).map(e =>
       Paths.get(e.path).toAbsolutePath.normalize.toString).toSet
     val cutoff = System.currentTimeMillis() - olderThanMillis
-    val all = using(Files.walk(dataDir))(_.iterator().asScala
+    val all = Using.resource(Files.walk(dataDir))(_.iterator().asScala
       .filter(p => Files.isRegularFile(p)).toSeq) // materialize before mutating
     val byPrefix = all.groupBy { p =>
       // group by the w-<uuid> commit prefix (files directly under data/

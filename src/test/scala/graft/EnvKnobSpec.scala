@@ -65,6 +65,24 @@ class EnvKnobSpec extends AnyFunSuite {
     assert(callers.isEmpty, s"persist( or new Thread in: ${callers.mkString(", ")}")
   }
 
+  /** Manifests have one reader, `plans/Jsonl`, on Jackson's tree model: a
+    * regex that reads JSON keys is a second grammar that drifts from the
+    * writers (one such reader skipped entries whose path held an escaped
+    * quote; another split schema names on `]}`).
+    */
+  test("src/main/scala reads JSON through plans/Jsonl alone") {
+    // a triple-quoted literal holds no """; a plain one ends at its first unescaped "
+    val regexLiteral = """("{3}(?:(?!"{3})[\s\S])*"{3,}|"(?:[^"\\\n]|\\.)*")\s*\.r\b""".r
+    val keyRegexes = sources.flatMap { case (f, src) =>
+      regexLiteral.findAllMatchIn(src).map(_.group(1)).filter(_.contains("\":")).map(f -> _)
+    }
+    assert(keyRegexes.isEmpty, s"regex literals reading JSON keys: ${keyRegexes.mkString(", ")}")
+    val jackson = sources.filter { case (f, src) =>
+      src.contains("com.fasterxml.jackson") && !f.endsWith(Paths.get("graft/plans/Jsonl.scala"))
+    }.map(_._1)
+    assert(jackson.isEmpty, s"com.fasterxml.jackson used outside plans/Jsonl: ${jackson.mkString(", ")}")
+  }
+
   /** The library shares its caller's session, and other threads plan in it
     * concurrently: a save-set-restore of session conf races them (a run
     * restoring its saved value after another run changed it leaves the

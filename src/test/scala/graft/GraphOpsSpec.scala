@@ -135,6 +135,21 @@ class WccSpec extends SparkTest {
         GraphCases.matches(c, rows(distributed(e, v)), want)()
     }
   }
+
+  /** A run stopped at `maxIter` leaves its last round's link set in
+    * `snapshotDir`; the same call again resumes there and ends with the
+    * uninterrupted run's components. */
+  test("kill-between-steps resume: wcc continues from its last snapshot") {
+    val edges = (0L until 200L).map(i => (i, i + 1))
+    val (e, v) = (edgesDf(edges), vertsDf(0L to 200L))
+    val dir = java.nio.file.Files.createTempDirectory("wcc_resume_").toString
+    def run(maxIter: Int): WccRun =
+      Wcc.run(spark, e, v, maxIter, snapshotDir = Some(dir), localSolveEdgeThreshold = 0L)
+    intercept[IllegalArgumentException](run(maxIter = 2))
+    val resumed = run(maxIter = 50)
+    assert(resumed.metrics.head.iter > 0, resumed.metrics.toString)
+    assert(labels(resumed) == labels(distributed(e, v)))
+  }
 }
 
 class PageRankSpec extends SparkTest {
@@ -168,6 +183,36 @@ class PageRankSpec extends SparkTest {
     assert(perStep.size == 4, s"step labels: $perStep")
     assert(perStep.values.forall(_ <= 1), s"jobs per step: $perStep")
     assert(jobs.size <= 8, s"${jobs.size} jobs: ${jobs.map(_._1)}")
+  }
+
+  /** A run stopped at `maxIter` leaves its last state in `snapshotDir`;
+    * the same call with a larger `maxIter` resumes there, reading the
+    * dangling mass off the resumed state, and ends where the uninterrupted
+    * run does. The sums run in another order after the read back, hence
+    * 1e-12 and not equality. */
+  test("kill-between-steps resume: pagerank continues from its last snapshot") {
+    val (edges, n, _) = fixture("sample_graph")
+    val (e, v) = (edgesDf(edges), vertsDf(0L until n))
+    val dir = java.nio.file.Files.createTempDirectory("pagerank_resume_").toString
+    def run(maxIter: Int): PageRankRun = PageRank.run(spark, e, v, alpha = 0.85, tol = 0.0,
+      maxIter = maxIter, snapshotDir = Some(dir), localSolveEdgeThreshold = 0L)
+    run(maxIter = 3).release()
+    val resumed = run(maxIter = 6)
+    assert(resumed.metrics.map(_.iter) == (3 until 6), resumed.metrics.toString)
+    val got = ranks(resumed)
+    val want = ranks(distributed(e, v, tol = 0.0, maxIter = 6))
+    assert(got.keySet == want.keySet && got.forall { case (id, r) => math.abs(r - want(id)) < 1e-12 })
+  }
+
+  test("a resumed pagerank state of another vertex count fails loudly, naming the directory") {
+    val (edges, n, _) = fixture("sample_graph")
+    val dir = java.nio.file.Files.createTempDirectory("pagerank_other_").toString
+    def run(vertices: Long): PageRankRun = PageRank.run(spark, edgesDf(edges),
+      vertsDf(0L until vertices), alpha = 0.85, tol = 0.0, maxIter = 4, snapshotDir = Some(dir),
+      localSolveEdgeThreshold = 0L)
+    run(n).release()
+    val err = intercept[IllegalStateException](run(n + 5))
+    assert(err.getMessage.contains(dir), err.getMessage)
   }
 
   test("pagerank matches power iteration within 1e-6 and sums to 1") {

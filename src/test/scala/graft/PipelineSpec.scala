@@ -529,15 +529,15 @@ class SuperstepResumeSpec extends SparkTest {
     def changed(ck: org.apache.spark.sql.GraftShims.Checkpoint) =
       ck.df.filter(col("value") > 0).count()
 
-    // run 1: stop after 3 iterations (simulated failure)
-    val h1 = new graft.plans.Superstep(spark, "toy", Some(dir), snapshotEvery = 1)
+    // run 1: stop after 3 iterations (simulated failure); the last one
+    // is snapshotted
+    val h1 = new graft.plans.Superstep(spark, "toy", Some(dir))
     h1.run(state0, maxIter = 3)(step)(changed)
 
-    // run 2: resume and finish
-    val h2 = new graft.plans.Superstep(spark, "toy", Some(dir), snapshotEvery = 1)
-    val Some((resumed, startIter)) = h2.resume()
-    assert(startIter == 3)
-    val (fin, _) = h2.run(resumed, maxIter = 100, startIter = startIter)(step)(changed)
+    // run 2: the same call resumes after the snapshot and finishes
+    val h2 = new graft.plans.Superstep(spark, "toy", Some(dir))
+    val (fin, resumedMetrics) = h2.run(state0, maxIter = 100)(step)(changed)
+    assert(resumedMetrics.head.iter == 3)
 
     // oracle: full uninterrupted run
     val h3 = new graft.plans.Superstep(spark, "toy2", None)
@@ -555,25 +555,36 @@ class SuperstepResumeSpec extends SparkTest {
     def changed(ck: org.apache.spark.sql.GraftShims.Checkpoint) =
       ck.df.filter(col("value") > 0).count()
 
-    val h = new graft.plans.Superstep(spark, "toy", Some(dir), snapshotEvery = 1)
+    val h = new graft.plans.Superstep(spark, "toy", Some(dir))
     h.run(state0, maxIter = 2)(step)(changed)
     val manifest = java.nio.file.Paths.get(dir, "toy.manifest.jsonl")
+    // The first iteration a run resumed from `dir` takes. The run appends
+    // its own manifest line, so with `copy` it runs on a copy of the
+    // manifest in a fresh directory and `manifest` stays as written.
+    def resumedFirstIter(copy: Boolean): Int = {
+      val d = if (!copy) dir else {
+        val d = java.nio.file.Files.createTempDirectory("graft_resume_copy")
+        java.nio.file.Files.copy(manifest, d.resolve("toy.manifest.jsonl"))
+        d.toString
+      }
+      new graft.plans.Superstep(spark, "toy", Some(d))
+        .run(state0, maxIter = 100)(step)(changed)._2.head.iter
+    }
 
-    // A snapshot-less metrics line (snapshotEvery not hit) and blank lines
-    // are tolerated: resume still lands on the newest real snapshot.
+    // A snapshot-less metrics line (an iteration that wrote no snapshot)
+    // and blank lines are tolerated: resume still lands on the newest real
+    // snapshot.
     java.nio.file.Files.writeString(manifest,
       "\n{\"name\":\"toy\",\"iter\":7,\"changed\":3,\"wallMs\":1,\"snapshot\":null}\n",
       java.nio.file.StandardOpenOption.APPEND)
-    val h2 = new graft.plans.Superstep(spark, "toy", Some(dir), snapshotEvery = 1)
-    val Some((_, startIter)) = h2.resume()
+    val startIter = resumedFirstIter(copy = true)
     assert(startIter == 2)
 
     // A torn FINAL line is the crash-mid-append artifact resume exists to
     // recover from: tolerated, resume lands on the previous intact snapshot.
     java.nio.file.Files.writeString(manifest, "{\"name\":\"toy\",\"iter\":9,\"chan",
       java.nio.file.StandardOpenOption.APPEND)
-    val h3 = new graft.plans.Superstep(spark, "toy", Some(dir), snapshotEvery = 1)
-    val Some((_, startIter3)) = h3.resume()
+    val startIter3 = resumedFirstIter(copy = false)
     assert(startIter3 == 2)
 
     // Any other unparseable line (non-final — real corruption or a
@@ -582,8 +593,8 @@ class SuperstepResumeSpec extends SparkTest {
     java.nio.file.Files.writeString(manifest,
       "not json at all\n{\"name\":\"toy\",\"iter\":8,\"changed\":1,\"wallMs\":1,\"snapshot\":null}\n",
       java.nio.file.StandardOpenOption.APPEND)
-    val h4 = new graft.plans.Superstep(spark, "toy", Some(dir), snapshotEvery = 1)
-    assertThrows[IllegalStateException](h4.resume())
+    val h4 = new graft.plans.Superstep(spark, "toy", Some(dir))
+    assertThrows[IllegalStateException](h4.run(state0, maxIter = 100)(step)(changed))
   }
 
   test("superstep jobs carry a step label; call-site properties restored, also on throw") {
@@ -618,13 +629,14 @@ class SuperstepResumeSpec extends SparkTest {
     val s = spark; import s.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_resume_tmp").toString
     val state0 = (0L until 10L).map(v => (v, v)).toDF("id", "value")
-    val h = new graft.plans.Superstep(spark, "toy", Some(dir), snapshotEvery = 1)
+    val h = new graft.plans.Superstep(spark, "toy", Some(dir))
     h.run(state0, maxIter = 2)((st, _) => st)(_.rows)
     // left by a repair killed between its temp write and the atomic move
     val stale = java.nio.file.Paths.get(dir, "toy.manifest.jsonl.repair-x")
     java.nio.file.Files.writeString(stale, "partial")
-    val Some((_, startIter)) =
-      new graft.plans.Superstep(spark, "toy", Some(dir), snapshotEvery = 1).resume()
+    val (_, metrics) =
+      new graft.plans.Superstep(spark, "toy", Some(dir)).run(state0, maxIter = 3)((st, _) => st)(_.rows)
+    val startIter = metrics.head.iter
     assert(startIter == 2)
     assert(!java.nio.file.Files.exists(stale))
   }
